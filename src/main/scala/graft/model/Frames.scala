@@ -78,7 +78,10 @@ object FrameCodec {
   /** Inverse for 8-bit unsigned layouts: channels → CV_8UCn type code. */
   def matTypeOf(channels: Int): Int = (channels - 1) << 3
 
-  /** Raw pixel payload length validation (MotionDetector.java:101-104). */
-  def expectedBytes(rows: Int, cols: Int, matType: Int): Int =
-    rows * cols * channelsOf(matType)
+  /** Raw pixel payload length validation (MotionDetector.java:101-104).
+    * Computed in Long: wire geometry is untrusted, and an Int product can
+    * wrap onto a tiny payload's length.
+    */
+  def expectedBytes(rows: Int, cols: Int, matType: Int): Long =
+    rows.toLong * cols * channelsOf(matType)
 }

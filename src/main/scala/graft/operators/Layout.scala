@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * most partitions by footer stats; a single-column sort gives pruning on
   * that column only. Reference scope: the reference writes row-at-a-time
   * to Cassandra and never controls file layout; this belongs to the
-  * 100-TB extension surface next to [[graft.streaming.Compaction]].
+  * 100-TB extension surface next to [[TableCompaction]].
   *
   * Everything is codegen'd column arithmetic — the bit interleave is a
   * fold of shift/mask expressions (no UDF in the write path) — plus ONE

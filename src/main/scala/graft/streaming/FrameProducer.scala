@@ -172,7 +172,7 @@ object FrameProducer {
       .option("checkpointLocation", checkpointDir)
       .start()
 
-  /** Offline sink: JSON-lines files that [[MotionPipeline.framesStreamFromJson]]
+  /** Offline sink: JSON-lines files that [[MotionPipeline.runStream]]
     * consumes — closes the producer→processor loop without a broker.
     */
   def writeToJsonDir(wire: DataFrame, dir: String, checkpointDir: String,

@@ -18,9 +18,11 @@ import graft.model.{FrameCodec, ProcessingResult, VideoFrameData}
   * filter (:83-84) → keyBy(camId) (:86-87) → KeyedProcessFunction with
   * ValueState<previous frame> (:155-205) → Cassandra + PNG sinks.
   *
-  * Spark shape: `readStream` → `from_json` → `filter` → `groupByKey(_.camId)`
-  * → `flatMapGroupsWithState` → `foreachBatch` parquet partitioned by
-  * (camera_id, day) — the Cassandra PK analog (CassandraService.java:139-140).
+  * Deployed chain ([[runStream]]): `readStream.text` → [[decodeWire]] (parse
+  * + drop malformed) → [[detectBin]] (`groupByKey(_.camId)` →
+  * `flatMapGroupsWithState`) → [[writeResults]] (`foreachBatch` parquet
+  * partitioned by (camera_id, day) — the Cassandra PK analog,
+  * CassandraService.java:139-140). [[runBatch]] runs the same chain once.
   *
   * Scale design:
   *  - the only shuffle is the keyBy; frame payloads never enter a second
@@ -40,8 +42,8 @@ object MotionPipeline {
   final case class PrevPlane(grayBlur: Array[Byte], rows: Int, cols: Int)
 
   /** Internal post-decode frame: pixels as binary, not base64 text. Decoding
-    * happens BEFORE the keyBy shuffle (codegen'd `try_to_binary`, parallel
-    * across all input partitions) so the per-camera sequential path never
+    * happens BEFORE the keyBy shuffle ([[decodeWire]], parallel across all
+    * input partitions) so the per-camera sequential path never
     * touches base64 and the shuffle moves 3/4 of the bytes.
     */
   final case class BinFrame(
@@ -50,28 +52,18 @@ object MotionPipeline {
 
   // ------------------------------------------------------------- sources
 
-  /** Batch JSON-lines frame source (fixtures / replay). */
-  def framesFromJson(spark: SparkSession, path: String): Dataset[VideoFrameData] =
-    parseFrames(spark.read.text(path).toDF("value"))
-
-  /** Streaming JSON-lines frame source over a directory (the offline
-    * stand-in for the Kafka value stream; same downstream plan).
-    */
-  def framesStreamFromJson(spark: SparkSession, dir: String): Dataset[VideoFrameData] =
-    parseFrames(spark.readStream.schema("value STRING").text(dir).toDF("value"))
-
   /** Kafka pattern-subscribe source — wire parity with the reference's
     * `setTopicPattern("video-events-.*")` + earliest offsets
     * (VideoProcessor.java:106-141). Not runnable in the offline test env
-    * (no broker), but the produced plan is identical to the JSON path after
-    * the value projection.
+    * (no broker); above the value projection it feeds the same
+    * [[decodeWire]] chain as the directory source of [[runStream]].
     */
   def framesStreamFromKafka(
       spark: SparkSession,
       bootstrapServers: String,
       topicPattern: String = "video-events-.*",
-      startingOffsets: String = "earliest"): Dataset[VideoFrameData] =
-    parseFrames(
+      startingOffsets: String = "earliest"): Dataset[BinFrame] =
+    decodeWire(
       spark.readStream
         .format("kafka")
         .option("kafka.bootstrap.servers", bootstrapServers)
@@ -85,8 +77,8 @@ object MotionPipeline {
     * with Jackson's streaming API. `getBinaryValue()` base64-decodes the
     * pixel payload straight out of the token buffer — no 1.2 MB
     * String/UnsafeRow intermediates, which makes this ~20× faster per row
-    * than `from_json` on frame-sized records (the generic path keeps
-    * [[parseFrames]] for SQL-surface parity). Malformed rows are dropped,
+    * than `from_json` on frame-sized records ([[parseFrames]] is the
+    * `from_json` reference it is spec'd against). Malformed rows are dropped,
     * matching the reference's parse-null-then-filter
     * (VideoProcessor.java:143-153 + :83-84).
     */
@@ -140,8 +132,10 @@ object MotionPipeline {
     } catch { case _: Exception => None }
   }
 
-  /** JSON string column → typed frames; unparseable rows → null struct →
-    * dropped (PERMISSIVE-with-drop, VideoProcessor.java:143-153 + :83-84).
+  /** JSON string column → typed frames via `from_json`; unparseable rows →
+    * null struct → dropped (PERMISSIVE-with-drop, VideoProcessor.java:143-153
+    * + :83-84). The SQL-surface reference for [[decodeWire]]: it keeps and
+    * drops the same rows, with the payload still base64 text.
     */
   def parseFrames(raw: DataFrame): Dataset[VideoFrameData] = {
     val spark = raw.sparkSession
@@ -166,24 +160,11 @@ object MotionPipeline {
 
   // ------------------------------------------------------------- operator
 
-  /** keyBy(camId) + stateful motion detection. Works on both batch and
-    * streaming Datasets (flatMapGroupsWithState is identical in batch mode
-    * with empty initial state).
+  /** keyBy(camId) + stateful motion detection over [[decodeWire]] output —
+    * the deployed operator. Works on both batch and streaming Datasets
+    * (flatMapGroupsWithState is identical in batch mode with empty initial
+    * state).
     */
-  def detect(frames: Dataset[VideoFrameData], imageOutputDir: String): Dataset[ProcessingResult] = {
-    val spark = frames.sparkSession
-    import spark.implicits._
-    detectBin(
-      frames
-        // base64 → binary pre-shuffle; undecodable payloads → null px, skipped
-        // in the group body (the reference's exception→skip path)
-        .withColumn("px", expr("try_to_binary(data, 'base64')"))
-        .drop("data")
-        .as[BinFrame],
-      imageOutputDir)
-  }
-
-  /** Same operator over pre-decoded frames (fast path from [[decodeWire]]). */
   def detectBin(frames: Dataset[BinFrame], imageOutputDir: String): Dataset[ProcessingResult] = {
     val spark = frames.sparkSession
     import spark.implicits._
@@ -308,8 +289,7 @@ object MotionPipeline {
       if (prevPlane eq blurA) blurB else blurA
   }
 
-  /** The state-API-agnostic core transition, shared by the
-    * flatMapGroupsWithState path and the Spark 4 transformWithState path:
+  /** The core transition, shared by [[detectBin]] and [[detectBinExpiring]]:
     * fold frames (event-time order) over the previous plane, return the
     * emitted rows and the new plane (null ⇒ unchanged).
     *
@@ -378,62 +358,6 @@ object MotionPipeline {
     (out.result(), prev)
   }
 
-  /** Spark 4 `transformWithState` variant of [[detectBin]] — same
-    * semantics via the same [[processFrames]] core, on the new arbitrary
-    * stateful API (requires the RocksDB state store provider in streaming,
-    * which [[graft.GraftSession]] pins by default).
-    *
-    * Deliberately NOT the default (r15 verdict #7 considered the
-    * promotion): the two operators write INCOMPATIBLE state-store
-    * formats, so flipping [[detectBin]]'s implementation would silently
-    * break every existing deployment's checkpoint on upgrade — a
-    * restarted query would fail (or worse, cold-start its planes) where
-    * yesterday's run left off. New pipelines opt in by calling this
-    * directly; the shared [[processFrames]] core plus the output-parity
-    * spec (MotionPipelineSpec "identical results on the same fixture
-    * stream") guarantee the choice is operational, never semantic.
-    */
-  def detectTws(frames: Dataset[BinFrame], imageOutputDir: String): Dataset[ProcessingResult] = {
-    import org.apache.spark.sql.{Encoders, streaming}
-    val spark = frames.sparkSession
-    import spark.implicits._
-    frames
-      .groupByKey(_.camId)
-      .transformWithState(
-        new MotionStatefulProcessor(imageOutputDir),
-        streaming.TimeMode.None(),
-        OutputMode.Append(),
-        Encoders.product[ProcessingResult])
-  }
-
-  /** Per-camera processor on the transformWithState API (ValueState of the
-    * previous plane — the literal Spark-4 analog of the reference's Flink
-    * ValueState<VideoFrameData>, VideoProcessor.java:155-205).
-    */
-  class MotionStatefulProcessor(imageOutputDir: String)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, BinFrame, ProcessingResult] {
-
-    @transient private var prev: org.apache.spark.sql.streaming.ValueState[PrevPlane] = _
-
-    override def init(
-        outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      prev = getHandle.getValueState[PrevPlane](
-        "prevPlane",
-        org.apache.spark.sql.Encoders.product[PrevPlane],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[BinFrame],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[ProcessingResult] = {
-      val p0 = if (prev.exists()) prev.get() else null
-      val (out, p1) = processFrames(key, rows, p0, imageOutputDir)
-      if (p1 != null) prev.update(p1)
-      out.iterator
-    }
-  }
-
   // ------------------------------------------------------------- sinks
 
   /** Snake-case the result columns and derive the `day` partition column —
@@ -459,6 +383,13 @@ object MotionPipeline {
     * one-camera-one-day point reads (CassandraService.java:139-140).
     * Exactly-once state via checkpointLocation; at-least-once rows (random
     * UUID ids), same delivery contract as the reference's Cassandra sink.
+    *
+    * Each micro-batch appends about one file per live (camera_id, day).
+    * Fold those small files between drains with
+    * [[graft.operators.TableCompaction.compactLanded]] on `tableDir`, or on
+    * a `camera_id=…/day=…` subtree to scope the run: it is crash-safe
+    * (journaled, heals forward) and leaves the checkpoint untouched, so the
+    * next drain appends as before.
     */
   def writeResults(
       results: Dataset[ProcessingResult],

@@ -188,8 +188,8 @@ object StreamOps {
     * the superseded timer and re-arms at lastSeen + `silence`; the expired
     * timer fires when the WATERMARK passes the deadline, emits the alert
     * row and clears the state, so a returning camera starts a fresh cycle.
-    * Requires the RocksDB state-store provider (as [[MotionPipeline
-    * .detectTws]] does); restart-spec'd alongside the FMGWS twin.
+    * Requires the RocksDB state-store provider; restart-spec'd alongside
+    * the FMGWS twin.
     */
   def cameraOfflineAlertsTws(
       frames: Dataset[VideoFrameData],

@@ -1,6 +1,8 @@
 package graft.streaming
 
-/** Package-private bridge for [[graft.tools.ProfileStreaming]]. */
+/** Public bridge to the package-private per-record wire decoder that
+  * [[MotionPipeline.decodeWire]] runs; the perfbench harness times it.
+  */
 object WireCodecAccess {
   def decode(factory: com.fasterxml.jackson.core.JsonFactory,
       s: String): Option[MotionPipeline.BinFrame] =

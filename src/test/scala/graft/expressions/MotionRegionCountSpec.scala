@@ -56,6 +56,11 @@ class MotionRegionCountSpec extends AnyFunSuite with SparkTestSession {
       s"motion_region_count(prev, cur, ${FrameFixtures.Rows}, ${FrameFixtures.Cols}, ${FrameFixtures.MatTypeC3}) AS n")
       .collect()
     assert(rows.forall(_.isNullAt(0)))
+    // geometry whose Int product (2·715827883·3) wraps onto the payload length
+    val two = Array[Byte](1, 2)
+    val wrapped = Seq((two, two)).toDF("prev", "cur")
+      .selectExpr("motion_region_count(prev, cur, 2, 715827883, 16) AS n").collect()
+    assert(wrapped.forall(_.isNullAt(0)))
   }
 
   test("window-lag batch form reproduces the stateful pipeline's decisions") {

@@ -14,6 +14,9 @@ class FrameCodecSpec extends AnyFunSuite {
   test("expectedBytes = rows * cols * channels") {
     assert(FrameCodec.expectedBytes(480, 640, 16) == 480 * 640 * 3)
     assert(FrameCodec.expectedBytes(2, 3, 0) == 6)
+    // untrusted wire geometry: in Int this product wraps to 2, the length
+    // of the overflow fixture's 2-byte payload
+    assert(FrameCodec.expectedBytes(2, 715827883, 16) == 4294967298L)
   }
 
   test("wire schema matches the reference JSON field set") {

@@ -29,6 +29,15 @@ object FrameFixtures {
     s"""{"camId":"$camId","timestamp":"$iso","rows":$Rows,"cols":$Cols,"type":$MatTypeC3,"data":"$b64"}"""
   }
 
+  /** A well-formed record whose geometry overflows Int: 2·715827883·3 =
+    * 4294967298 wraps to 2, the length of its 2-byte payload ("AAA=").
+    * The size check must reject it before any rows×cols buffer exists.
+    */
+  def overflowJson(camId: String, epochMillis: Long): String = {
+    val iso = java.time.Instant.ofEpochMilli(epochMillis).toString
+    s"""{"camId":"$camId","timestamp":"$iso","rows":2,"cols":715827883,"type":$MatTypeC3,"data":"AAA="}"""
+  }
+
   /** Position A and a disjoint position B: a 20×20 square jumping between
     * them produces two clean 400-px diff components, comfortably over the
     * 300 min-area (small shifts leave only thin bands under it).

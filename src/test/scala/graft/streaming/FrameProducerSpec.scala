@@ -75,7 +75,8 @@ class FrameProducerSpec extends AnyFunSuite with SparkTestSession {
       spark, nCameras = 2, rowsPerBatch = 4, startMillis = t0)
     assert(frames.isStreaming)
     val sink = s"sink_${System.nanoTime()}"
-    val q = MotionPipeline.detect(frames, img)
+    val wire = FrameProducer.toWire(frames, nCameras = 2).select("value")
+    val q = MotionPipeline.detectBin(MotionPipeline.decodeWire(wire), img)
       .writeStream.format("memory").queryName(sink)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -98,8 +99,8 @@ class FrameProducerSpec extends AnyFunSuite with SparkTestSession {
     // square teleports every frame → motion on every frame after the first
     val frames = FrameProducer.framesBatch(spark, 2, 4, t0, fps = 1.0)
     val wire = FrameProducer.toWire(frames, 2)
-    val results = MotionPipeline.detect(
-      MotionPipeline.parseFrames(wire.select("value")), img).collect()
+    val results = MotionPipeline.detectBin(
+      MotionPipeline.decodeWire(wire.select("value")), img).collect()
     assert(results.length == 8) // one per frame
     val saved = new java.io.File(img).list().toSeq
     assert(saved.length == 6) // 3 motion frames per camera

@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,36 +28,43 @@ class MotionPipelineSpec extends AnyFunSuite with SparkTestSession {
   test("Kafka plan parity, pinned structurally: the frame-parse chain " +
       "above the source leaf is source-invariant, and the Kafka builder's " +
       "offline failure is the CONNECTOR boundary, never a plan mismatch") {
-    // r15 verdict #4: framesStreamFromKafka's doc claims "the produced
-    // plan is identical to the JSON path after the value projection".
-    // The Kafka leaf itself cannot be constructed here (no
-    // spark-sql-kafka connector jar in the offline image — load() fails
-    // resolving the data source, before any plan exists), so the claim
-    // is pinned at its actual content: parseFrames builds ONE downstream
-    // operator chain over ANY (value STRING) relation — batch file,
-    // streaming file, or an arbitrary local relation standing in for the
-    // Kafka value projection — with identical node structure and schema.
+    // framesStreamFromKafka feeds its value projection into the same
+    // decodeWire chain as the directory sources. The Kafka leaf itself
+    // cannot be constructed here (no spark-sql-kafka connector jar in the
+    // offline image — load() fails resolving the data source, before any
+    // plan exists), so the claim is pinned at its actual content: the
+    // operator chain decodeWire adds above ANY (value STRING) relation —
+    // batch file, streaming file, or a binary value cast to string as
+    // framesStreamFromKafka does — has identical node structure and schema.
     import org.apache.spark.sql.catalyst.plans.logical.LeafNode
-    def chain(ds: org.apache.spark.sql.Dataset[_]): Seq[String] =
+    def nodes(ds: org.apache.spark.sql.Dataset[_]): Seq[String] =
       ds.queryExecution.analyzed.collect {
         case n if !n.isInstanceOf[LeafNode] => n.nodeName
       }
+    def chain(raw: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val all = nodes(MotionPipeline.decodeWire(raw))
+      val below = nodes(raw)
+      assert(all.takeRight(below.length) == below, s"$all does not end in $below")
+      all.dropRight(below.length)
+    }
     val in = tmp("kafka-parity")
     val lines = FrameFixtures.sequence("camA", 1700000000000L, 2,
       moving = false)
     Files.write(Paths.get(in, "wire.jsonl"),
       String.join("\n", lines: _*).getBytes)
-    val batch = MotionPipeline.framesFromJson(spark, in)
-    val stream = MotionPipeline.framesStreamFromJson(spark, in)
-    // the stand-in for Kafka's `CAST(value AS STRING) AS value` output
     import spark.implicits._
-    val generic = MotionPipeline.parseFrames(
-      Seq("not json").toDF("value"))
+    val batch = spark.read.text(in).toDF("value")
+    val stream = spark.readStream.schema("value STRING").text(in).toDF("value")
+    // the stand-in for Kafka's binary `value` and its string projection
+    val kafkaLike = Seq("not json".getBytes).toDF("value")
+      .selectExpr("CAST(value AS STRING) AS value")
+    assert(chain(batch).nonEmpty)
     assert(chain(batch) == chain(stream),
       s"batch=${chain(batch)} stream=${chain(stream)}")
-    assert(chain(generic) == chain(stream),
-      s"generic=${chain(generic)} stream=${chain(stream)}")
-    assert(batch.schema == stream.schema && generic.schema == stream.schema)
+    assert(chain(kafkaLike) == chain(stream),
+      s"kafka=${chain(kafkaLike)} stream=${chain(stream)}")
+    val schemas = Seq(batch, stream, kafkaLike).map(MotionPipeline.decodeWire(_).schema)
+    assert(schemas.distinct.length == 1)
     // the offline boundary is the missing connector, surfaced while
     // resolving the source — not a divergent downstream plan
     val e = intercept[Exception] {
@@ -95,8 +103,8 @@ class MotionPipelineSpec extends AnyFunSuite with SparkTestSession {
       FrameFixtures.frameJson("camS", t0 + i * 1000L,
         squareX = if (i % 2 == 1) FrameFixtures.PosB else FrameFixtures.PosA))
     import spark.implicits._
-    val results = MotionPipeline.detect(
-      MotionPipeline.parseFrames(shuffled.toDF("value")), img).collect()
+    val results = MotionPipeline.detectBin(
+      MotionPipeline.decodeWire(shuffled.toDF("value")), img).collect()
     assert(results.length == 4)
     // processed 0,1,2,3 in time order → motion PNGs for frames 1..3 exactly
     assert(pngs(img) == (1 to 3).map(i => s"camS-T-${t0 + i * 1000L}.png"))
@@ -128,7 +136,12 @@ class MotionPipelineSpec extends AnyFunSuite with SparkTestSession {
     val imgA = tmp("wire-a"); val imgB = tmp("wire-b")
     val viaFast = MotionPipeline.detectBin(MotionPipeline.decodeWire(raw), imgA)
       .collect().map(r => (r.cameraId, r.frameTimestamp, r.detectionCount)).sortBy(_.toString)
-    val viaSlow = MotionPipeline.detect(MotionPipeline.parseFrames(raw), imgB)
+    // the from_json reference decodes base64 pre-shuffle in SQL; undecodable
+    // payloads become null px, which the operator skips
+    val slowBin = MotionPipeline.parseFrames(raw)
+      .withColumn("px", expr("try_to_binary(data, 'base64')")).drop("data")
+      .as[MotionPipeline.BinFrame]
+    val viaSlow = MotionPipeline.detectBin(slowBin, imgB)
       .collect().map(r => (r.cameraId, r.frameTimestamp, r.detectionCount)).sortBy(_.toString)
     assert(viaFast.toSeq == viaSlow.toSeq)
     assert(pngs(imgA) == pngs(imgB))
@@ -158,10 +171,11 @@ class MotionPipelineSpec extends AnyFunSuite with SparkTestSession {
     val lines = Seq(
       FrameFixtures.frameJson("camC", t0, FrameFixtures.PosA),
       bad, // wrong payload length → skipped
+      FrameFixtures.overflowJson("camC", t0 + 1500), // wrapped size check → skipped
       FrameFixtures.frameJson("camC", t0 + 2000, FrameFixtures.PosB))
     import spark.implicits._
-    val results = MotionPipeline.detect(
-      MotionPipeline.parseFrames(lines.toDF("value")), img).collect()
+    val results = MotionPipeline.detectBin(
+      MotionPipeline.decodeWire(lines.toDF("value")), img).collect()
     // 2 valid frames → 2 rows; diff runs frame1 vs frame3 (skip didn't clear state)
     assert(results.length == 2)
     assert(pngs(img) == Seq(s"camC-T-${t0 + 2000}.png"))
@@ -174,10 +188,10 @@ class MotionPipelineSpec extends AnyFunSuite with SparkTestSession {
     import spark.implicits._
 
     val source = MemoryStream[String]
-    val frames = MotionPipeline.parseFrames(source.toDF().toDF("value"))
+    val frames = MotionPipeline.decodeWire(source.toDF().toDF("value"))
     def runOnce(): Unit = {
       val q = MotionPipeline.writeResults(
-        MotionPipeline.detect(frames, img), table, ckpt, Trigger.AvailableNow())
+        MotionPipeline.detectBin(frames, img), table, ckpt, Trigger.AvailableNow())
       q.awaitTermination()
     }
 
@@ -225,6 +239,45 @@ class MotionPipelineSpec extends AnyFunSuite with SparkTestSession {
     assert(pngs(img).length == 2) // frame 3 moved vs frame 2 from the old file
   }
 
+  test("runStream drops malformed wire rows and keeps the query and its state alive") {
+    val in = tmp("bad-in"); val table = tmp("bad-out")
+    val img = tmp("bad-img"); val ckpt = tmp("bad-ckpt")
+    val t0 = 1700970000000L
+    def iso(ms: Long) = java.time.Instant.ofEpochMilli(ms).toString
+    val malformed = Seq(
+      """{"camId":"camV","timestamp":"""", // truncated JSON
+      s"""{"camId":"camV","rows":48,"cols":48,"type":16,"data":"AAAA"}""", // no timestamp
+      s"""{"camId":"camV","timestamp":"${iso(t0 + 200)}","type":16,"data":"AAAA"}""", // no geometry
+      s"""{"camId":"camV","timestamp":"${iso(t0 + 300)}","rows":48,"cols":48,"type":16,"data":"!!not base64!!"}""",
+      s"""{"camId":"camV","timestamp":"${iso(t0 + 400)}","rows":48,"cols":48,"type":16,"data":"AAAA"}""", // wrong length
+      FrameFixtures.overflowJson("camV", t0 + 500))
+    Files.write(Paths.get(in, "a.jsonl"), String.join("\n",
+      (FrameFixtures.frameJson("camV", t0, FrameFixtures.PosA) +: malformed :+
+        FrameFixtures.frameJson("camV", t0 + 1000, FrameFixtures.PosB)): _*).getBytes)
+
+    def drain(): Unit = {
+      val q = MotionPipeline.runStream(spark, in, table, img, ckpt)
+      q.awaitTermination()
+      assert(q.exception.isEmpty)
+    }
+    def landed(): Seq[(String, Long)] =
+      spark.read.parquet(table).select("camera_id", "frame_timestamp").collect()
+        .map(r => (r.getString(0), r.getTimestamp(1).getTime)).sorted.toSeq
+
+    drain()
+    assert(landed() == Seq(("camV", t0), ("camV", t0 + 1000)))
+    assert(pngs(img) == Seq(s"camV-T-${t0 + 1000}.png"))
+
+    // a second drain from the same checkpoint: the PosB plane is restored,
+    // so the PosA frame diffs against it and saves a motion PNG
+    Files.write(Paths.get(in, "b.jsonl"), String.join("\n",
+      FrameFixtures.overflowJson("camV", t0 + 1500),
+      FrameFixtures.frameJson("camV", t0 + 2000, FrameFixtures.PosA)).getBytes)
+    drain()
+    assert(landed() == Seq(("camV", t0), ("camV", t0 + 1000), ("camV", t0 + 2000)))
+    assert(pngs(img) == Seq(s"camV-T-${t0 + 1000}.png", s"camV-T-${t0 + 2000}.png"))
+  }
+
   test("detectBinExpiring degrades to plain detect on batch inputs") {
     import spark.implicits._
     val t0 = 1700995000000L
@@ -269,106 +322,6 @@ class MotionPipelineSpec extends AnyFunSuite with SparkTestSession {
     val results = spark.table(sink).collect()
     assert(results.length == 4) // every frame still emits its row
     assert(pngs(img).isEmpty) // eviction prevented the would-be motion diff
-  }
-
-  test("DIRECT output parity: detectTws and detectBin emit identical " +
-      "rows and PNGs when driven over the same fixture stream") {
-    // r15 verdict #7: the promotion-parity pin. The restart spec below
-    // asserts each path against ABSOLUTE expectations; this one runs the
-    // SAME two-wave fixture (two cameras, moving + static, restart
-    // between waves) through BOTH operators and diffs their outputs
-    // directly — id (UUID) and processing_timestamp (wall clock) are the
-    // only columns excluded, and image_path is compared by file name
-    // (the dir prefix differs per run by construction).
-    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prevConf = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val t0 = 1700995000000L
-      def drive(tag: String,
-          detect: (org.apache.spark.sql.Dataset[MotionPipeline.BinFrame], String) =>
-            org.apache.spark.sql.Dataset[graft.model.ProcessingResult])
-          : (Seq[String], Seq[String]) = {
-        val img = tmp(s"par-$tag-img"); val table = tmp(s"par-$tag-out")
-        val ckpt = tmp(s"par-$tag-ckpt")
-        val stream =
-          org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
-        def runOnce(): Unit = {
-          val q = MotionPipeline.toStorageLayout(
-            detect(MotionPipeline.decodeWire(stream.toDF().toDF("value")), img))
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              b.write.mode("append").partitionBy("camera_id", "day").parquet(table)
-            }.start()
-          q.awaitTermination()
-        }
-        stream.addData(FrameFixtures.sequence("camA", t0, 3, moving = true) ++
-          FrameFixtures.sequence("camB", t0, 2, moving = false): _*)
-        runOnce()
-        // wave 2 from the same checkpoint: state restored in both APIs
-        stream.addData(
-          FrameFixtures.frameJson("camA", t0 + 3000, FrameFixtures.PosA),
-          FrameFixtures.frameJson("camB", t0 + 2000, FrameFixtures.PosB))
-        runOnce()
-        val rows = spark.read.parquet(table)
-          .select("camera_id", "day", "frame_timestamp", "detection_type",
-            "detection_count", "frame_rows", "frame_cols", "image_path")
-          .collect()
-          .map(r => r.toSeq.updated(7, r.getString(7).split("/").last)
-            .mkString("|"))
-          .sorted.toSeq
-        (rows, pngs(img))
-      }
-      val (rowsF, pngsF) = drive("fmgws", MotionPipeline.detectBin)
-      val (rowsT, pngsT) = drive("tws", MotionPipeline.detectTws)
-      assert(rowsF.nonEmpty && pngsF.nonEmpty, "fixture must exercise both sinks")
-      assert(rowsT == rowsF,
-        s"row divergence:\n fmgws=$rowsF\n tws=$rowsT")
-      assert(pngsT == pngsF, s"png divergence: fmgws=$pngsF tws=$pngsT")
-    } finally prevConf.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
-  test("transformWithState path matches the flatMapGroupsWithState path") {
-    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prevConf = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val t0 = 1700970000000L
-      val img = tmp("tws-img"); val table = tmp("tws-out"); val ckpt = tmp("tws-ckpt")
-      val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
-      def runOnce(): Unit = {
-        val q = MotionPipeline.toStorageLayout(
-          MotionPipeline.detectTws(
-            MotionPipeline.decodeWire(stream.toDF().toDF("value")), img))
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            b.write.mode("append").partitionBy("camera_id", "day").parquet(table)
-          }.start()
-        q.awaitTermination()
-      }
-      stream.addData(
-        FrameFixtures.frameJson("camT", t0, FrameFixtures.PosA),
-        FrameFixtures.frameJson("camT", t0 + 1000, FrameFixtures.PosB))
-      runOnce()
-      assert(spark.read.parquet(table).count() == 2)
-      assert(pngs(img) == Seq(s"camT-T-${t0 + 1000}.png"))
-      // second batch via a new query from the same checkpoint: ValueState
-      // restored, frame 3 diffs against frame 2
-      stream.addData(FrameFixtures.frameJson("camT", t0 + 2000, FrameFixtures.PosA))
-      runOnce()
-      assert(spark.read.parquet(table).count() == 3)
-      assert(pngs(img).length == 2)
-    } finally prevConf.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("LoadReportListener captures per-batch rates and observed rows") {
@@ -426,8 +379,8 @@ class MotionPipelineSpec extends AnyFunSuite with SparkTestSession {
       FrameFixtures.frameJson("camQ", t0 + 500, 30),
       FrameFixtures.frameJson("camP", t0 + 1000, 4))
     import spark.implicits._
-    val results = MotionPipeline.detect(
-      MotionPipeline.parseFrames(lines.toDF("value")), img).collect()
+    val results = MotionPipeline.detectBin(
+      MotionPipeline.decodeWire(lines.toDF("value")), img).collect()
     assert(results.length == 3)
     assert(pngs(img).isEmpty) // camP static; camQ has no previous frame
   }
