@@ -482,8 +482,7 @@ object Bench {
         None
       } else {
         import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.adaptive.enabled", "false")
+        val s2 = ScaleScope.sibling(spark, "spark.sql.adaptive.enabled" -> "false")
         val e0 = graft.sources.Tables.lineitem(s2, staged)
           .join(graft.sources.Tables.orders(s2, staged),
             col("l_orderkey") === col("o_orderkey"))

@@ -37,7 +37,12 @@ import org.apache.spark.sql.functions._
 object Centrality {
 
   /** Target directed-edge rows per shuffle partition for the iteration
-    * rounds. Smaller than [[Dedup.clusterPairs]]'s 1M-row target — a
+    * rounds: pageRank, hits and triangleStats run in
+    * `ScaleScope.forRows(caller, edges, EdgeRowsPerPartition)` and hand
+    * their result back bound to the caller. The iterates are
+    * partitioning-independent (exact decimal sums are associative and
+    * commutative), so results are bit-identical at any partition count.
+    * Smaller than [[Dedup.clusterPairs]]'s 1M-row target — a
     * centrality round's join probes the full edge list and does per-row
     * DECIMAL arithmetic (exact-sum contract), so per-row CPU shares the
     * partition-sizing constraint with the per-STAGE scheduling floor
@@ -89,86 +94,20 @@ object Centrality {
       case None => build.localCheckpoint(false)
     }
 
-  /** SCALE-ADAPTIVE iteration partitioning (r17, guide §2.2/§2.5 — derive
-    * the partition count from the data, never inherit a constant tuned for
-    * either local mode or the cluster): an iterative fixed-point pays the
-    * per-task scheduling floor `rounds × joins-per-round` times, so running
-    * a graph of E edges at the session's shuffle partitioning when
-    * E/partition is far below [[EdgeRowsPerPartition]] is pure overhead
-    * (measured: 24 near-empty 32-task stages for ext94 at sf0.1). The edge
-    * count is read with one `count()` — both catalog callers pass the
-    * MaterializedPairs-persisted trade graph, so the count is a cache read
-    * — and the rounds run in a sibling session whose shuffle partitioning
-    * is ceil(E / EdgeRowsPerPartition) clamped to the caller's setting: at
-    * production scale the derivation saturates at the caller's own
-    * configuration and the sibling is never created. The sibling inherits
-    * the caller's AQE setting explicitly (`newSession()` re-reads context
-    * defaults, not the parent's SQLConf).
-    *
-    * Returns (session to iterate in, edges bound to it). Iteration math is
-    * partitioning-independent (exact decimal sums are associative and
-    * commutative), so results are bit-identical either way; [[rebound]]
-    * hands the final frame back to the caller's session so downstream
-    * actions run at the CALLER's configuration.
-    */
-  /** The sibling iteration sessions, cached per (caller session,
-    * targetParts) so REPEATED iterates over the same context (ext94 then
-    * ext96; Verify's 4-way concurrent catalog) land in ONE sibling and
-    * the [[invariant]] memo — keyed on the session identity — actually
-    * shares the graph layout between them (a fresh sibling per call
-    * would orphan every memo entry). Entries die with their context
-    * (the key embeds the applicationId via sessionKey). */
-  private val siblingSessions = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.SparkSession]()
-
-  private def iterationScope(edges: DataFrame)
-      : (org.apache.spark.sql.SparkSession, DataFrame) = {
-    val s0 = edges.sparkSession
-    val sessParts = s0.conf.get("spark.sql.shuffle.partitions").toInt
-    val nEdges = edges.count()
-    val targetParts = math.max(1L, math.min(sessParts.toLong,
-      math.ceil(nEdges.toDouble / EdgeRowsPerPartition).toLong)).toInt
-    if (targetParts >= sessParts) (s0, edges)
-    else {
-      val key = s"${MaterializedPairs.sessionKey(s0)}|$targetParts"
-      val s2 = siblingSessions.compute(key, (_, cached) => {
-        if (cached != null && !cached.sparkContext.isStopped) cached
-        else {
-          val s = s0.newSession()
-          s.conf.set("spark.sql.adaptive.enabled",
-            s0.conf.get("spark.sql.adaptive.enabled"))
-          s.conf.set("spark.sql.shuffle.partitions", targetParts.toString)
-          s
-        }
-      })
-      (s2, s2.createDataFrame(edges.rdd, edges.schema))
-    }
-  }
-
-  /** Re-bind the iterate's output to the caller's session when
-    * [[iterationScope]] forked a sibling — without this, any action a
-    * caller invokes on the returned frame silently runs at the sibling's
-    * reduced partitioning (the Dedup.clusterPairs r16-ADVICE lesson). The
-    * frames are O(|nodes|) checkpoint-backed outputs, so the per-row Row
-    * conversion is cheap relative to the iterate. */
-  private def rebound(s0: org.apache.spark.sql.SparkSession,
-      df: DataFrame): DataFrame =
-    if (df.sparkSession eq s0) df
-    else s0.createDataFrame(df.rdd, df.schema)
-
   /** `iters` rounds of damped PageRank over `edges(src, dst)` (assumed
     * distinct pairs). Nodes = src ∪ dst; dangling mass is redistributed
     * uniformly. Returns (node, r DECIMAL(28,12)) summing to ~1.
     *
-    * Callers should pass a persisted/checkpointed edge frame — the
-    * scale-adaptive partitioning derivation counts it once
-    * ([[iterationScope]]).
+    * Callers should pass a persisted/checkpointed edge frame: it is
+    * counted once to size the rounds' partitioning
+    * ([[EdgeRowsPerPartition]]).
     */
   def pageRank(edges: DataFrame, damping: Double = 0.85, iters: Int = 8,
       memoKey: Option[String] = None): DataFrame = {
     import scala.concurrent.{Await, Future}
     val s0 = edges.sparkSession
-    val (sess, edgesIn) = iterationScope(edges)
+    val sess = graft.ScaleScope.forRows(s0, edges.count(), EdgeRowsPerPartition)
+    val edgesIn = graft.ScaleScope.bind(sess, edges)
     // The graph is consumed in EVERY iteration (edges by the contribution
     // join, nodes/outd up to 3× per round) — materialize all of it once
     // ([[invariant]]: session-memoized under a caller key, so the catalog
@@ -241,7 +180,7 @@ object Centrality {
       r = rankUpdate(nodes, contrib, nVal, dang, damping)
         .localCheckpoint(false)
     }
-    rebound(s0, r)
+    graft.ScaleScope.bind(s0, r)
   }
 
   /** The per-round contribution shuffle — the one irreducible exchange of
@@ -303,7 +242,8 @@ object Centrality {
     // shuffles per half-step. The src-clustered copy and the node list
     // are SHARED with pageRank under the caller's memo key ([[invariant]]).
     val s0 = edges.sparkSession
-    val (sess, edgesIn) = iterationScope(edges)
+    val sess = graft.ScaleScope.forRows(s0, edges.count(), EdgeRowsPerPartition)
+    val edgesIn = graft.ScaleScope.bind(sess, edges)
     val eSrc = invariant(sess, memoKey, "layout-esrc")(
       edgesIn.repartition(col("src")))
     val eDst = invariant(sess, memoKey, "layout-edst")(
@@ -328,7 +268,7 @@ object Centrality {
       a = halfStep(h, "h", eSrc, outDeg, col("src"), col("dst"), "a")
       h = halfStep(a, "a", eDst, inDeg, col("dst"), col("src"), "h")
     }
-    rebound(s0,
+    graft.ScaleScope.bind(s0,
       nodes.join(a.hint("shuffle_hash"), Seq("node"), "left")
         .join(h.hint("shuffle_hash"), Seq("node"), "left")
         .select(col("node"),
@@ -357,16 +297,14 @@ object Centrality {
     * output is oracle-checkable.
     */
   def triangleStats(edges: DataFrame): DataFrame = {
-    // Same scale-adaptive scoping as the iterative operators (guide
-    // §2.2/§2.5): the wedge pipeline is 5 joins/aggs deep, and running a
-    // small graph at the session's 32-way shuffle partitioning pays the
-    // per-stage scheduling floor ~10 times over near-empty tasks; at
-    // production scale the derivation saturates to the caller's setting
-    // and the sibling is never created. Results are exact integer counts —
-    // partitioning-independent — and [[rebound]] hands the output back to
-    // the caller's session.
+    // Scoped like the iterative operators: the wedge pipeline is 5
+    // joins/aggs deep, so a small graph at the session's 32-way shuffle
+    // partitioning pays the per-stage scheduling floor ~10 times over
+    // near-empty tasks. Results are exact integer counts, independent of
+    // the partitioning.
     val s0 = edges.sparkSession
-    val (sess, edgesIn) = iterationScope(edges)
+    val sess = graft.ScaleScope.forRows(s0, edges.count(), EdgeRowsPerPartition)
+    val edgesIn = graft.ScaleScope.bind(sess, edges)
     // und/deg/oriented are each referenced 2-3 times downstream (deg by
     // both orientation joins and the final completion join, oriented by
     // both wedge sides and the closing edge probe) — materialize each
@@ -400,7 +338,7 @@ object Centrality {
     val perNode = tris
       .select(explode(array(col("u"), col("x"), col("y"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("tri"))
-    rebound(s0, deg.join(perNode, Seq("node"), "left")
+    graft.ScaleScope.bind(s0, deg.join(perNode, Seq("node"), "left")
       .select(col("node"), col("degree"),
         coalesce(col("tri"), lit(0)).cast("long").as("triangles"),
         when(col("degree") >= 2,

@@ -340,6 +340,12 @@ object Dedup {
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("jaccard"))
   }
 
+  /** Target directed-edge rows per shuffle partition for the BSP rounds
+    * (`ScaleScope.forRows`) — ~1M rows of two ids is tens of MB, inside
+    * the guide §2.2 window. At the catalog's 32 partitions a 10k-edge dup
+    * graph paid 2-4 s per call in dozens of 8-row tasks per round. */
+  private val EdgeRowsPerPartition = 1L << 20
+
   /** Transitive closure of near-dup PAIRS into CLUSTERS — the step that
     * turns pairwise candidates into per-document keep/drop decisions
     * (pairs alone can't: a≈b and b≈c must collapse to one survivor even
@@ -368,50 +374,23 @@ object Dedup {
     * log-diameter-bounded, not data-bounded, which is the adjudicated
     * exception to "no driver-side loops". Throws if `maxIters` rounds
     * don't converge rather than returning silently-partial clusters.
+    * The rounds run in `ScaleScope.forRows` over the directed edge count
+    * ([[EdgeRowsPerPartition]]); the result is bound to the caller's
+    * session.
     *
     * Input: a (doc_a, doc_b) pair frame (extra columns ignored). Output:
     * (doc_id, cluster_id) for every document appearing in a pair, with
     * cluster_id = the component's minimum doc id.
     */
-  /** Target directed-edge rows per shuffle partition for the BSP rounds —
-    * ~1M rows of two ids is tens of MB, inside the guide §2.2 window. */
-  private val EdgeRowsPerPartition = 1L << 20
-
   def clusterPairs(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
-    // SCALE-ADAPTIVE round partitioning (r16, guide §2.5: derive the
-    // partitioning from the input, don't inherit a constant tuned for
-    // either local mode or the cluster): every round's joins/aggs run at
-    // spark.sql.shuffle.partitions, which for a dup graph far below
-    // ~[[EdgeRowsPerPartition]] edges per partition is pure
-    // task-scheduling overhead (measured 2-4 s/call on a 10k-edge graph
-    // at the catalog's 32 partitions — dozens of 8-row tasks per round).
-    // The edge count is measured with one counting pass (the e-union
-    // below was already paying a second pass over the pair plan; the
-    // small-graph branch converts that second pass into a checkpoint)
-    // and the iteration runs in a sibling session whose shuffle
-    // partitioning is ceil(2·pairs / EdgeRowsPerPartition) clamped to
-    // the caller's setting — at production scale the derivation
-    // saturates at the caller's own configuration and this is exactly
-    // the previous code path.
     val s0 = pairs.sparkSession
-    val sessParts = s0.conf.get("spark.sql.shuffle.partitions").toInt
-    // Checkpoint the (doc_a, doc_b) projection FIRST, unconditionally, and
-    // take the count from the checkpointed frame (r16 ADVICE): the raw
-    // pair plan (MinHash/banded joins — among the most expensive in the
-    // repo) then executes exactly ONCE, where counting it separately and
-    // referencing it twice in the e-union below re-ran it three times on
-    // the large-graph branch.
+    // Checkpoint the (doc_a, doc_b) projection FIRST and count the
+    // checkpoint: the raw pair plan (MinHash/banded joins — among the most
+    // expensive in the repo) then executes exactly ONCE, however many
+    // times the e-union below references it.
     val p0 = pairs.select(col("doc_a"), col("doc_b")).localCheckpoint(false)
-    val nPairs = p0.count()
-    val targetParts = math.max(1L, math.min(sessParts.toLong,
-      math.ceil(2.0 * nPairs / EdgeRowsPerPartition).toLong)).toInt
-    val pIn =
-      if (targetParts >= sessParts) p0
-      else {
-        val s2 = s0.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", targetParts.toString)
-        s2.createDataFrame(p0.rdd, p0.schema)
-      }
+    val pIn = graft.ScaleScope.bind(
+      graft.ScaleScope.forRows(s0, 2 * p0.count(), EdgeRowsPerPartition), p0)
     // pre-partition the (persisted) edge frame on its per-round join key —
     // the cached InMemoryRelation then carries hash(dst) partitioning into
     // EVERY round's neighbor join, so only the label frame reshuffles per
@@ -453,21 +432,13 @@ object Dedup {
       labels = next
       it += 1
     }
-    // fanout visibility (VERDICT r6): edge count + rounds, once per call —
-    // e is persisted so the count reads the cache, not the pair join
-    System.err.println(s"[graft] clusterPairs: edges=${e.count()} rounds=$it")
     e.unpersist()
     require(converged,
       s"clusterPairs did not converge in $maxIters rounds — component diameter exceeds 2^maxIters")
-    val out = labels.select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
-    // Re-bind the final label frame into the CALLER's session when the
-    // rounds ran in the reduced-partitioning sibling (r16 ADVICE): without
-    // this, any action a caller invokes directly on the returned frame
-    // (count, orderBy, write) silently runs at the sibling's shuffle
-    // partitioning instead of the caller's configuration. `labels` is
-    // checkpoint-backed, so the conversion reads materialized blocks.
-    if (out.sparkSession eq s0) out
-    else s0.createDataFrame(out.rdd, out.schema)
+    // `labels` is checkpoint-backed, so binding back to the caller reads
+    // materialized blocks
+    graft.ScaleScope.bind(s0,
+      labels.select(col("node").as("doc_id"), col("lbl").as("cluster_id")))
   }
 
   /** Embedding-cosine near-duplicate pairs, blocked by `blockCol` (e.g. a

@@ -86,8 +86,9 @@ object MaterializedPairs {
   /** The session component of every memo key: applicationId (changes when
     * a context stops and a new one starts, so a recycled identityHashCode
     * after GC can never alias a dead session's entry) plus the session's
-    * identity hash (distinguishes `newSession()` siblings sharing one
-    * context — each owns its SQLConf, so their frames must not be shared).
+    * identity hash (distinguishes [[graft.ScaleScope]] siblings sharing
+    * one context — each owns its SQLConf, so their frames must not be
+    * shared).
     */
   private[operators] def sessionKey(s: org.apache.spark.sql.SparkSession): String =
     s"${s.sparkContext.applicationId}#${System.identityHashCode(s)}"

@@ -150,31 +150,18 @@ object Retention {
     // `source=01` dir inferred int would be rewritten `source=1`), so
     // for the partitioned rewrite the inference is pinned OFF —
     // partition values stay the exact dir strings and the staged write
-    // re-renders them byte-identically. The pin rides a FRESH session
-    // (own SQLConf, shared SparkContext — r14 ADVICE), so it cannot
-    // leak to unrelated partitioned reads concurrently resolving on the
-    // caller's session; the read, the observed staging write and the
-    // counts below all bind to that throwaway session
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    // re-renders them byte-identically. The pin rides a sibling session
+    // (own SQLConf, shared SparkContext), so it cannot leak to unrelated
+    // partitioned reads concurrently resolving on the caller's session;
+    // the sibling carries the caller's runtime conf (session timeZone
+    // feeding the keep predicate's casts, parquet writer options, shuffle
+    // partitions), and the read, the observed staging write and the
+    // counts below all bind to it
     val before =
       if (partitionBy.isEmpty) spark.read.parquet(root.toString)
-      else {
-        // newSession() initializes SQLConf from the CONTEXT's conf, not
-        // the caller session's runtime conf (r15 ADVICE) — so carry the
-        // caller's session-level settings (session timeZone feeding the
-        // keep predicate's casts, parquet writer options, shuffle
-        // partitions) onto the pinned session first, THEN pin inference
-        // off; without the copy the partitioned branch silently ran on
-        // defaults while the non-partitioned branch honored the caller
-        val pinned = spark.newSession()
-        spark.conf.getAll.foreach { case (k, v) =>
-          if (k != inferKey)
-            try pinned.conf.set(k, v)
-            catch { case _: org.apache.spark.sql.AnalysisException => () }
-        }
-        pinned.conf.set(inferKey, "false")
-        pinned.read.parquet(root.toString)
-      }
+      else graft.ScaleScope.sibling(spark,
+          "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false")
+        .read.parquet(root.toString)
     // BOTH counts observed on the single staging pass — no separate
     // count() scan of a forever-growing table, and no read-back of the
     // staged dir (whose zero-kept partitioned form has no inferable

@@ -454,58 +454,18 @@ object ExtensionQueries {
         .repartition(col("id"))
     }
 
-  /** A conf-isolated sibling session with AQE disabled, for the iterative
-    * graph fixed-points (ext94/ext96): AQE inserts a materialization +
-    * re-optimization barrier at EVERY shuffle, which costs ~1.4 s/round on
-    * rank frames of a few thousand rows (measured at sf0.1: PageRank 8
-    * iters 17.7 s with AQE, 7.2 s without) while having nothing to adapt —
-    * the iteration's stage sizes are known and tiny. `newSession()` shares
-    * the SparkContext but owns its SQLConf, so concurrently-running
-    * catalog queries keep their AQE. This is the standard production
-    * setting for iterative Spark jobs, not a local-mode hack.
+  /** The shuffle partitioning of the FIXTURE-SCALE streaming lifecycle
+    * arcs (ext121, ext132–ext134, ext136–ext138), each run in
+    * `ScaleScope.sibling(s0, ArcShufflePartitions)`. These entries stream
+    * a handful of items per wave through stateful operators to assert a
+    * PROTOCOL (fold cadence, retention, ack) — at the catalog default of
+    * 32 every wave opens, loads and commits 32 RocksDB state-store
+    * instances for a one-image micro-batch, a fixed cost that measures the
+    * state-store count, not the protocol. The throughput-bearing ingest
+    * lanes ([[graft.Bench.ingestDocsPerSec]] / `ingestImagesPerSec`) keep
+    * the session default so their dials stay comparable across rounds.
     */
-  private def noAqeSession(
-      s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession = {
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
-    s2
-  }
-
-  /** Sibling session for the FIXTURE-SCALE streaming lifecycle arcs
-    * (ext132/ext134): same context, own SQLConf with
-    * `spark.sql.shuffle.partitions` sized to the arc's fixture. These
-    * entries stream a handful of items per wave through stateful
-    * operators to assert a PROTOCOL (fold cadence, retention, ack) — at
-    * the catalog default of 32 every wave opens, loads and commits 32
-    * RocksDB state-store instances for a one-image micro-batch, a fixed
-    * cost that measures the state-store count, not the protocol. Sizing
-    * state partitions to the data volume is what a production deployment
-    * does (guide §2: partitioning should be scale-adaptive, not a
-    * constant tuned for either local mode or the cluster); the
-    * throughput-bearing ingest lanes ([[graft.Bench.ingestDocsPerSec]] /
-    * `ingestImagesPerSec`) keep the session default so their dials stay
-    * comparable across rounds. Overridable via
-    * SPARK_GRAFT_ARC_SHUFFLE_PARTITIONS.
-    */
-  private def arcSession(
-      s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession = {
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_ARC_SHUFFLE_PARTITIONS", "4"))
-    s2
-  }
-
-  /** Re-bind a (small, persisted/checkpointed) frame built in one session
-    * into another session of the same context, through its RDD: the
-    * source session paid the build once (e.g. the shared fingerprint
-    * memo) and the target session's jobs over it run under the TARGET's
-    * SQLConf — without this, any plan whose terminal Dataset belongs to
-    * the source session silently executes at the source's shuffle
-    * partitioning, defeating [[arcSession]]. Row conversion cost is
-    * per-row and the callers pass fingerprint-sized frames only. */
-  private def rebind(s: org.apache.spark.sql.SparkSession,
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    s.createDataFrame(df.rdd, df.schema).localCheckpoint(false)
+  private val ArcShufflePartitions = "spark.sql.shuffle.partitions" -> "4"
 
   /** Small dedicated thread pool for OVERLAPPED independent driver actions
     * (guide §2.6): a Spark action blocks its submitting thread for the
@@ -541,8 +501,12 @@ object ExtensionQueries {
     * ONCE per (context, dir) inside an AQE-off sibling session and shared
     * by ext94 (PageRank) and ext96 (HITS) — the edge derivation is a
     * fact-table join + distinct that neither iterative consumer should
-    * re-pay. The returned frame is bound to the AQE-off session, so every
-    * query built on it executes with static plans (see [[noAqeSession]]).
+    * re-pay. The returned frame is bound to an AQE-off sibling, so every
+    * query built on it executes with static plans: AQE inserts a
+    * materialization + re-optimization barrier at EVERY shuffle, which
+    * costs ~1.4 s/round on rank frames of a few thousand rows (measured at
+    * sf0.1: PageRank 8 iters 17.7 s with AQE, 7.2 s without) while having
+    * nothing to adapt — the iteration's stage sizes are known and tiny.
     *
     * Nodes are carried as LONGS inside the iterate (r16, guide §2.3
     * narrower types): supplier s → 2s, customer c → 2c+1 — a bijection
@@ -560,7 +524,7 @@ object ExtensionQueries {
     graft.operators.MaterializedPairs.frame(
       s"${s0.sparkContext.applicationId}#" +
         s"${System.identityHashCode(s0.sparkContext)}|tradegraph|$dir") {
-      val s = noAqeSession(s0)
+      val s = graft.ScaleScope.sibling(s0, "spark.sql.adaptive.enabled" -> "false")
       Tables.lineitem(s, dir)
         .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
         .select(shiftleft(col("l_suppkey").cast("long"), 1).as("src"),
@@ -5465,10 +5429,11 @@ object ExtensionQueries {
       "ext121_fingerprint_store",
       (s0, dir) => {
         // fixture-scale shuffle partitioning for the two delivery probes
-        // (see [[arcSession]]); the shared hash memo re-binds into the
-        // sibling session like ext133's
-        val s = arcSession(s0)
-        val hashes = rebind(s, sharedImageHashes(s0, dir))
+        // (see [[ArcShufflePartitions]]); the shared hash memo re-binds
+        // into the sibling session like ext133's
+        val s = graft.ScaleScope.sibling(s0, ArcShufflePartitions)
+        val hashes = graft.ScaleScope.bind(s, sharedImageHashes(s0, dir))
+          .localCheckpoint(false)
         val n = hashes.count()
         val (c1, c2) = (n * 3 / 5, n * 4 / 5)
         val storeDir = s"${System.getProperty("java.io.tmpdir")}/graft-fpstore-ext121-" +
@@ -6283,8 +6248,8 @@ object ExtensionQueries {
         import graft.operators.ContaminationGuard
         import graft.streaming.CorpusIngest
         // fixture-scale state partitioning for the two streamed funnels —
-        // see [[arcSession]]
-        val s = arcSession(s0)
+        // see [[ArcShufflePartitions]]
+        val s = graft.ScaleScope.sibling(s0, ArcShufflePartitions)
         val docs = Tables.documents(s, dir)
         val benchPred = col("doc_id") % 10 === 0
         val bench = docs.filter(benchPred).localCheckpoint(true)
@@ -6400,15 +6365,16 @@ object ExtensionQueries {
       (s0, dir) => withScratch("fpstore-ext133") { storeDir =>
         import graft.operators.FingerprintStore
         // fixture-scale shuffle partitioning for the delivery/compact
-        // protocol jobs (see [[arcSession]]): measured 16.6 s at the
-        // catalog's 32 partitions vs ~13 s at fixture scale — the delta
+        // protocol jobs (see [[ArcShufflePartitions]]): measured 16.6 s at
+        // the catalog's 32 partitions vs ~13 s at fixture scale — the delta
         // is 32 tasks per tiny anti-join/manifest stage, not protocol
         // work. The session's SHARED hash memo is re-bound into the
         // sibling session through its (fingerprint-sized) RDD so the
         // decode pass is still paid once per session while every
         // downstream job runs at arc scale.
-        val s = arcSession(s0)
-        val hashes = rebind(s, sharedImageHashes(s0, dir))
+        val s = graft.ScaleScope.sibling(s0, ArcShufflePartitions)
+        val hashes = graft.ScaleScope.bind(s, sharedImageHashes(s0, dir))
+          .localCheckpoint(false)
         val n = hashes.count()
         val (c1, c2, c3) = (n * 2 / 5, n * 3 / 5, n * 4 / 5)
         def snap(step: Long, phase: String): (Long, String, Long, Long) =
@@ -6492,8 +6458,8 @@ object ExtensionQueries {
       (s0, dir) => withScratch("wbcompact-ext134") { base =>
         import graft.operators.FingerprintStore
         // fixture-scale state partitioning for the six one-image waves —
-        // see [[arcSession]]
-        val s = arcSession(s0)
+        // see [[ArcShufflePartitions]]
+        val s = graft.ScaleScope.sibling(s0, ArcShufflePartitions)
         // six mutually-far images (families doc_id/3 = 0,10,…,50 —
         // Hamming ≈ 32 apart), keyed off the documents table so the
         // entry reads its corpus ids from `dir` like every sibling
@@ -6681,8 +6647,8 @@ object ExtensionQueries {
       (s0, dir) => withScratch("landcompact-ext136") { table =>
         import graft.operators.TableCompaction
         // fixture-scale shuffle partitioning for the bin-rewrite jobs —
-        // see [[arcSession]]
-        val s = arcSession(s0)
+        // see [[ArcShufflePartitions]]
+        val s = graft.ScaleScope.sibling(s0, ArcShufflePartitions)
         val docs = Tables.documents(s, dir)
           .select("doc_id", "text", "source").localCheckpoint(false)
         def snap(step: Long, phase: String,
@@ -6752,8 +6718,8 @@ object ExtensionQueries {
         import graft.operators.{ContaminationGuard, Retention}
         import graft.streaming.CorpusIngest
         // fixture-scale state partitioning for the one-batch funnel and
-        // the staged retention rewrites — see [[arcSession]]
-        val s = arcSession(s0)
+        // the staged retention rewrites — see [[ArcShufflePartitions]]
+        val s = graft.ScaleScope.sibling(s0, ArcShufflePartitions)
         val docs = Tables.documents(s, dir)
         val bench = docs.filter(col("doc_id") % 10 === 0)
           .localCheckpoint(true)
@@ -6836,8 +6802,8 @@ object ExtensionQueries {
       (s0, dir) => withScratch("backlog-ext138") { base =>
         import graft.operators.TableCompaction
         // fixture-scale shuffle partitioning for the six scoped bin
-        // rewrites — see [[arcSession]]
-        val s = arcSession(s0)
+        // rewrites — see [[ArcShufflePartitions]]
+        val s = graft.ScaleScope.sibling(s0, ArcShufflePartitions)
         val table = s"$base/landed"
         val seedDir = s"$base/seed"
         // the seed row comes from the documents table so the entry

@@ -440,8 +440,7 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestSession {
     import org.apache.spark.sql.functions._
     import graft.operators.Centrality
     // AQE-off sibling session, matching the catalog's iteration session
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    val s2 = graft.ScaleScope.sibling(spark, "spark.sql.adaptive.enabled" -> "false")
     val sq = s2.sqlContext
     import sq.implicits._
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"))
@@ -489,8 +488,7 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestSession {
     // partitioning, rank frame partitioned by node — all localCheckpoint'd
     // (which preserves outputPartitioning). The r9 shuffle-halving contract:
     // the only per-round hash exchange left is the contribution groupBy.
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    val s2 = graft.ScaleScope.sibling(spark, "spark.sql.adaptive.enabled" -> "false")
     val sq = s2.sqlContext
     import sq.implicits._
     val e = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a"))

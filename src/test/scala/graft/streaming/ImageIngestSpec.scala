@@ -24,12 +24,9 @@ class ImageIngestSpec extends AnyFunSuite with SparkTestSession {
     // (GraftSession's default provider) in a conf-isolated sibling session —
     // at 100 TB ingest the HDFS-backed store's in-heap state is the
     // bottleneck, so both providers need green restart coverage
-    val s = if (!rocksDb) spark else {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
+    val s = if (!rocksDb) spark else graft.ScaleScope.sibling(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s2
-    }
     implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
     import s.implicits._
     val stream = MemoryStream[(Long, String, java.sql.Timestamp, Array[Byte])]

@@ -25,12 +25,9 @@ class NearDupIngestSpec extends AnyFunSuite with SparkTestSession {
       batches: Seq[Seq[String]]): Unit = {
     // rocksDb = true: conf-isolated sibling session on the production
     // provider (see ImageIngestSpec.runBatches)
-    val s = if (!rocksDb) spark else {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
+    val s = if (!rocksDb) spark else graft.ScaleScope.sibling(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s2
-    }
     implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
     import s.implicits._
     val stream = MemoryStream[String]

@@ -24,12 +24,9 @@ class VideoIngestSpec extends AnyFunSuite with SparkTestSession {
       batches: Seq[Seq[(Long, String, java.sql.Timestamp, Array[Byte])]]): Unit = {
     // rocksDb = true: conf-isolated sibling session on the production
     // provider (see ImageIngestSpec.runBatches)
-    val s = if (!rocksDb) spark else {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
+    val s = if (!rocksDb) spark else graft.ScaleScope.sibling(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s2
-    }
     implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
     import s.implicits._
     val stream = MemoryStream[(Long, String, java.sql.Timestamp, Array[Byte])]
