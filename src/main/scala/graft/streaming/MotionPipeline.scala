@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -34,7 +35,12 @@ import graft.model.{FrameCodec, ProcessingResult, VideoFrameData}
   *  - per-key event-time ordering is restored by sorting each group iterator
   *    (sanctioned by the reference's own sort, MotionDetector.java:41-43);
   *  - PNG side-writes use deterministic names ({camId}-T-{millis}.png,
-  *    MotionDetector.java:147) so at-least-once replays are idempotent.
+  *    MotionDetector.java:147) so at-least-once replays are idempotent;
+  *  - state is bounded exactly when the input's `timestamp` is watermarked:
+  *    a camera's deadline is the newest frame of its latest batch, and the
+  *    watermark passing it evicts the plane. [[runStream]] passes
+  *    unwatermarked input, so it keeps every camera's plane (see
+  *    [[detectBin]]).
   */
 object MotionPipeline {
 
@@ -161,93 +167,61 @@ object MotionPipeline {
   // ------------------------------------------------------------- operator
 
   /** keyBy(camId) + stateful motion detection over [[decodeWire]] output —
-    * the deployed operator. Works on both batch and streaming Datasets
-    * (flatMapGroupsWithState is identical in batch mode with empty initial
-    * state).
+    * the one detect operator, on batch and streaming Datasets alike
+    * (flatMapGroupsWithState in batch mode starts from empty state).
+    *
+    * State is bounded exactly when the input's `timestamp` is watermarked
+    * (`frames.withWatermark("timestamp", delay)` on a streaming Dataset):
+    * a camera's deadline is the newest frame of its latest batch, and its
+    * plane is evicted once the watermark passes it, so `delay` is the one
+    * horizon for both late frames (dropped before the operator: no row, no
+    * PNG) and idle cameras. A camera that returns after eviction starts
+    * over: its first frame emits a row but runs no diff, as in the
+    * reference after a restart without a checkpoint.
+    *
+    * Unwatermarked input (what [[runStream]] and [[runBatch]] pass) keeps
+    * every camera's plane forever, the reference's never-cleared ValueState,
+    * and accepts frames of any age. A watermark on a batch Dataset is
+    * ignored.
     */
   def detectBin(frames: Dataset[BinFrame], imageOutputDir: String): Dataset[ProcessingResult] = {
     val spark = frames.sparkSession
     import spark.implicits._
+    val evicting = frames.isStreaming &&
+      frames.schema("timestamp").metadata.contains(EventTimeWatermark.delayKey)
     frames
       .groupByKey(_.camId)
       .flatMapGroupsWithState[PrevPlane, ProcessingResult](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        processGroup(imageOutputDir) _)
+        OutputMode.Append(),
+        if (evicting) GroupStateTimeout.EventTimeTimeout() else GroupStateTimeout.NoTimeout())(
+        transition(imageOutputDir, evicting) _)
   }
 
-  /** [[detectBin]] with bounded state: cameras idle past `idleTimeout` of
-    * event time (measured against the watermark) have their plane evicted.
-    * Without this, every camera that ever existed pins rows×cols bytes of
-    * state forever — the reference has the same leak (its ValueState is
-    * never cleared); at fleet scale eviction is mandatory. A camera that
-    * returns after eviction is treated as new (first frame emits a row, no
-    * diff) — identical to how the reference behaves after a restart with no
-    * checkpoint.
-    *
-    * TRADE-OFF vs [[detectBin]]: bounding state requires a watermark, and
-    * Spark drops input rows older than it before the state function runs —
-    * frames later than `watermarkDelay` are discarded (no row, no PNG).
-    * Choose the delay to cover the worst expected disorder. On a batch
-    * Dataset (no watermark machinery) this degrades to plain [[detectBin]].
+  /** The per-key state transition (KeyedProcessFunction analog,
+    * VideoProcessor.java:177-204): [[processFrames]] over the stored plane,
+    * then, when `evicting`, re-arm the camera's event-time deadline at the
+    * newest frame of this batch, clamped past the current watermark
+    * (Spark rejects a deadline behind it). A timed-out call only drops the
+    * plane.
     */
-  def detectBinExpiring(
-      frames: Dataset[BinFrame], imageOutputDir: String,
-      watermarkDelay: String = "10 seconds",
-      idleTimeoutMillis: Long = 3600L * 1000): Dataset[ProcessingResult] = {
-    if (!frames.isStreaming) return detectBin(frames, imageOutputDir)
-    val spark = frames.sparkSession
-    import spark.implicits._
-    frames
-      .withWatermark("timestamp", watermarkDelay)
-      .groupByKey(_.camId)
-      .flatMapGroupsWithState[PrevPlane, ProcessingResult](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        processGroupExpiring(imageOutputDir, idleTimeoutMillis) _)
-  }
-
-  private[streaming] def processGroupExpiring(imageOutputDir: String, idleTimeoutMillis: Long)(
+  private def transition(imageOutputDir: String, evicting: Boolean)(
       camId: String,
       frames: Iterator[BinFrame],
-      state: GroupState[PrevPlane]): Iterator[ProcessingResult] = {
+      state: GroupState[PrevPlane]): Iterator[ProcessingResult] =
     if (state.hasTimedOut) {
       state.remove()
       Iterator.empty
     } else {
-      val materialized = frames.toArray
-      val (out, newPrev) =
-        processFrames(camId, materialized.iterator, state.getOption.orNull, imageOutputDir)
+      val batch = frames.toArray
+      val (out, newPrev) = processFrames(camId, batch, state.getOption.orNull, imageOutputDir)
       if (newPrev != null) state.update(newPrev)
-      if (state.exists) {
-        var maxEvent = 0L
-        materialized.foreach { f =>
-          if (f.timestamp != null && f.timestamp.getTime > maxEvent)
-            maxEvent = f.timestamp.getTime
-        }
-        // timeout must sit strictly beyond the current watermark
-        state.setTimeoutTimestamp(
-          math.max(maxEvent + idleTimeoutMillis, state.getCurrentWatermarkMs() + 1))
+      if (evicting && state.exists) {
+        val newest = batch.foldLeft(0L)((m, f) =>
+          if (f.timestamp == null) m else math.max(m, f.timestamp.getTime))
+        state.setTimeoutTimestamp(math.max(newest, state.getCurrentWatermarkMs() + 1))
       }
       out.iterator
     }
-  }
-
-  /** The per-key state transition (KeyedProcessFunction analog,
-    * VideoProcessor.java:177-204 + MotionDetector.java:23-92):
-    * for each frame in event-time order — detect motion against the previous
-    * plane, save an annotated PNG iff regions were found, emit exactly one
-    * result row (first frame of a key included, detectionCount hardcoded 1,
-    * imagePath always populated — faithful to the reference's quirks),
-    * advance state. A frame that fails to decode is skipped without
-    * advancing state (FrameProcessorHelper.java:13-30's exception→null path).
-    */
-  def processGroup(imageOutputDir: String)(
-      camId: String,
-      frames: Iterator[BinFrame],
-      state: GroupState[PrevPlane]): Iterator[ProcessingResult] = {
-    val (out, newPrev) = processFrames(camId, frames, state.getOption.orNull, imageOutputDir)
-    if (newPrev != null) state.update(newPrev)
-    out.iterator
-  }
 
   /** Per-invocation scratch planes for the kernel chain. The naive chain
     * allocates ~5 full planes per frame (gray, blur tmp int[], blur out,
@@ -289,21 +263,26 @@ object MotionPipeline {
       if (prevPlane eq blurA) blurB else blurA
   }
 
-  /** The core transition, shared by [[detectBin]] and [[detectBinExpiring]]:
-    * fold frames (event-time order) over the previous plane, return the
+  /** The core transition (MotionDetector.java:23-92): fold frames in
+    * event-time order over the previous plane — detect motion against it,
+    * save an annotated PNG iff regions were found, emit exactly one result
+    * row per frame (first frame of a key included, detectionCount hardcoded
+    * 1, imagePath always populated — faithful to the reference's quirks).
+    * A frame that fails to decode is skipped without advancing state
+    * (FrameProcessorHelper.java:13-30's exception→null path). Returns the
     * emitted rows and the new plane (null ⇒ unchanged).
     *
     * The returned plane may alias a scratch buffer: callers must treat it as
     * immutable (they do — it is either encoded into the state store or
     * dropped) and it is never touched again after this call returns.
     */
-  private[streaming] def processFrames(
+  private def processFrames(
       camId: String,
-      frames: Iterator[BinFrame],
+      frames: Array[BinFrame],
       prev0: PrevPlane,
       imageOutputDir: String): (Seq[ProcessingResult], PrevPlane) = {
 
-    val sorted = frames.toArray.sortBy(f => Option(f.timestamp).map(_.getTime).getOrElse(0L))
+    val sorted = frames.sortBy(f => Option(f.timestamp).map(_.getTime).getOrElse(0L))
     var prev = prev0
     val out = Seq.newBuilder[ProcessingResult]
     val scratch = new Scratch

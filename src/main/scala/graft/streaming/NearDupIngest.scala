@@ -198,10 +198,7 @@ object NearDupIngest {
       shingleN: Int = 3, perms: Int = 64, bands: Int = 16,
       maxPerBucket: Int = 256,
       qualityGate: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-      org.apache.spark.unsafe.types.UTF8String.fromString(watermarkDelay))
-    require(iv.months == 0, "watermarkDelay must not use month units")
-    val ttlMillis = iv.days * 86400000L + iv.microseconds / 1000L
+    val ttlMillis = PerceptualIngest.ttlMillisOf(watermarkDelay)
     val spark = docs.sparkSession
     import spark.implicits._
     val (pass, qualityRejects) =

@@ -29,13 +29,13 @@ import graft.operators.ImageDedup
   */
 object PerceptualIngest {
 
-  /** Watermark-delay string → state TTL in millis (day-time intervals only —
-    * month units have no fixed millis). Shared by every adapter's
-    * writeDeduped. */
-  private[streaming] def ttlMillisOf(watermarkDelay: String): Long = {
+  /** Interval string ("10 minutes") → millis (day-time intervals only —
+    * month units have no fixed millis): every adapter's watermark-delay
+    * state TTL and [[StreamOps.cameraOfflineAlerts]]' silence. */
+  private[streaming] def ttlMillisOf(interval: String): Long = {
     val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-      org.apache.spark.unsafe.types.UTF8String.fromString(watermarkDelay))
-    require(iv.months == 0, "watermarkDelay must not use month units")
+      org.apache.spark.unsafe.types.UTF8String.fromString(interval))
+    require(iv.months == 0, s"interval '$interval' must not use month units")
     iv.days * 86400000L + iv.microseconds / 1000L
   }
 

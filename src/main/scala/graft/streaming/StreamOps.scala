@@ -143,14 +143,6 @@ object StreamOps {
     * returning camera starts a fresh liveness cycle and can alert again.
     * State is one timestamp per camera — bounded by the fleet size.
     */
-  /** Parse an interval string ("30 seconds") to milliseconds. */
-  private def intervalMs(s: String): Long = {
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-      org.apache.spark.unsafe.types.UTF8String.fromString(s))
-    require(iv.months == 0, "interval must not use month units")
-    iv.days * 86400000L + iv.microseconds / 1000L
-  }
-
   def cameraOfflineAlerts(
       frames: Dataset[VideoFrameData],
       silence: String = "30 seconds",
@@ -158,7 +150,7 @@ object StreamOps {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = frames.sparkSession
     import spark.implicits._
-    val silenceMs = intervalMs(silence)
+    val silenceMs = PerceptualIngest.ttlMillisOf(silence)
     def transition(cam: String, rows: Iterator[VideoFrameData],
         state: GroupState[CamSeen]): Iterator[(String, java.sql.Timestamp, Long)] =
       if (state.hasTimedOut) {
@@ -178,81 +170,6 @@ object StreamOps {
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
         transition)
       .toDF("camera_id", "last_seen", "silence_ms")
-  }
-
-  /** Spark-4 `transformWithState` variant of [[cameraOfflineAlerts]] —
-    * identical timer-driven semantics on the new arbitrary-stateful API,
-    * which makes the timer EXPLICIT (`registerTimer`/`handleExpiredTimer`,
-    * the literal Flink `onTimer` shape) instead of the single implicit
-    * timeout `flatMapGroupsWithState` allows per key: each frame deletes
-    * the superseded timer and re-arms at lastSeen + `silence`; the expired
-    * timer fires when the WATERMARK passes the deadline, emits the alert
-    * row and clears the state, so a returning camera starts a fresh cycle.
-    * Requires the RocksDB state-store provider; restart-spec'd alongside
-    * the FMGWS twin.
-    */
-  def cameraOfflineAlertsTws(
-      frames: Dataset[VideoFrameData],
-      silence: String = "30 seconds",
-      watermarkDelay: String = "5 seconds"): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = frames.sparkSession
-    import spark.implicits._
-    frames
-      .withWatermark("timestamp", watermarkDelay)
-      .groupByKey(_.camId)
-      .transformWithState(
-        new OfflineAlertProcessor(intervalMs(silence)),
-        TimeMode.EventTime(),
-        OutputMode.Append(),
-        org.apache.spark.sql.Encoders.product[(String, java.sql.Timestamp, Long)])
-      .toDF("camera_id", "last_seen", "silence_ms")
-  }
-
-  /** Per-camera liveness processor on the transformWithState API: one
-    * [[CamSeen]] ValueState + one armed event-time timer per camera.
-    */
-  class OfflineAlertProcessor(silenceMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, VideoFrameData, (String, java.sql.Timestamp, Long)] {
-
-    @transient private var seen: org.apache.spark.sql.streaming.ValueState[CamSeen] = _
-
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      seen = getHandle.getValueState[CamSeen](
-        "camSeen",
-        org.apache.spark.sql.Encoders.product[CamSeen],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[VideoFrameData],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(String, java.sql.Timestamp, Long)] = {
-      val newest = rows.map(_.timestamp.getTime).max
-      val prev = if (seen.exists()) Some(seen.get().lastSeenMs) else None
-      val last = prev.fold(newest)(_ max newest)
-      // re-arm: drop the superseded deadline (if any) before registering
-      // the new one — leaving both would fire a stale early alert
-      prev.filter(_ != last).foreach(p => getHandle.deleteTimer(p + silenceMs))
-      seen.update(CamSeen(last))
-      if (!prev.contains(last)) getHandle.registerTimer(last + silenceMs)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(
-        key: String,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-        : Iterator[(String, java.sql.Timestamp, Long)] =
-      if (seen.exists() &&
-          expiredTimerInfo.getExpiryTimeInMs == seen.get().lastSeenMs + silenceMs) {
-        val lastSeen = seen.get().lastSeenMs
-        seen.clear()
-        Iterator((key, new java.sql.Timestamp(lastSeen), silenceMs))
-      } else Iterator.empty // stale timer for a superseded deadline
   }
 
   /** Watermark-bounded streaming dedup on (camId, timestamp) — the remedy

@@ -278,50 +278,174 @@ class MotionPipelineSpec extends AnyFunSuite with SparkTestSession {
     assert(pngs(img) == Seq(s"camV-T-${t0 + 1000}.png", s"camV-T-${t0 + 2000}.png"))
   }
 
-  test("detectBinExpiring degrades to plain detect on batch inputs") {
-    import spark.implicits._
-    val t0 = 1700995000000L
-    val img = tmp("ttlb-img")
-    val lines = Seq(
-      FrameFixtures.frameJson("camQ", t0, FrameFixtures.PosA),
-      FrameFixtures.frameJson("camQ", t0 + 1000, FrameFixtures.PosB))
-    val res = MotionPipeline.detectBinExpiring(
-      MotionPipeline.decodeWire(lines.toDF("value")), img).collect()
-    assert(res.length == 2) // no watermark machinery in batch — no crash
-    assert(pngs(img).length == 1)
-  }
+  private val Hour = 3600_000L
 
-  test("detectBinExpiring evicts idle-camera state past the watermark") {
+  /** detectBin over a MemoryStream into a memory sink; `delay` watermarks
+    * the decoded `timestamp`. Each batch is drained before the next one is
+    * added, so the no-data batch that applies an advanced watermark runs in
+    * between. Returns the sink's (camera, millis) rows, sorted. */
+  private def streamDetect(img: String, delay: Option[String])(
+      batches: Seq[String]*): Seq[(String, Long)] = {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val t0 = 1700990000000L
-    val img = tmp("ttl-img")
-    val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
+    val stream = MemoryStream[String]
+    val decoded = MotionPipeline.decodeWire(stream.toDF().toDF("value"))
     val sink = s"sink_${System.nanoTime()}"
-    val q = MotionPipeline.detectBinExpiring(
-      MotionPipeline.decodeWire(stream.toDF().toDF("value")), img,
-      watermarkDelay = "1 second", idleTimeoutMillis = 60_000L)
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("append").start()
+    val q = MotionPipeline.detectBin(delay.fold(decoded)(decoded.withWatermark("timestamp", _)), img)
+      .writeStream.format("memory").queryName(sink).outputMode("append").start()
+    try batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    spark.table(sink).collect().toSeq
+      .map(r => (r.getAs[String]("cameraId"), r.getAs[java.sql.Timestamp]("frameTimestamp").getTime))
+      .sorted
+  }
 
-    // batch 1: camA frame — state created, timeout armed at t0+60s
-    stream.addData(FrameFixtures.frameJson("camA", t0, FrameFixtures.PosA))
-    q.processAllAvailable()
-    // batch 2: camB an hour later pushes the watermark far past camA's
-    // timeout; batch 3 lets the expired timer fire and evict camA
-    stream.addData(FrameFixtures.frameJson("camB", t0 + 3600_000L, FrameFixtures.PosA))
-    q.processAllAvailable()
-    stream.addData(FrameFixtures.frameJson("camB", t0 + 3610_000L, FrameFixtures.PosA))
-    q.processAllAvailable()
-    // batch 4: camA returns MOVED — with its plane evicted this is a fresh
-    // first frame: a row is emitted but no diff runs, so NO motion PNG
-    stream.addData(FrameFixtures.frameJson("camA", t0 + 3620_000L, FrameFixtures.PosB))
-    q.processAllAvailable()
-    q.stop()
-
-    val results = spark.table(sink).collect()
-    assert(results.length == 4) // every frame still emits its row
+  test("watermarked detectBin evicts an idle camera; its return is a first frame") {
+    val t0 = 1700990000000L
+    val img = tmp("wm-evict-img")
+    val rows = streamDetect(img, Some("1 second"))(
+      // camA's deadline is t0; camB an hour later moves the watermark past
+      // it, and the no-data batch that follows evicts camA's plane
+      Seq(FrameFixtures.frameJson("camA", t0, FrameFixtures.PosA)),
+      Seq(FrameFixtures.frameJson("camB", t0 + Hour, FrameFixtures.PosA)),
+      Seq(FrameFixtures.frameJson("camB", t0 + Hour + 10_000L, FrameFixtures.PosA)),
+      // camA returns MOVED: with its plane gone no diff runs, so no PNG
+      Seq(FrameFixtures.frameJson("camA", t0 + Hour + 20_000L, FrameFixtures.PosB)))
+    assert(rows.length == 4) // every frame still emits its row
     assert(pngs(img).isEmpty) // eviction prevented the would-be motion diff
+  }
+
+  test("watermarked detectBin drops a frame older than the watermark: no row, no PNG") {
+    val t0 = 1700991000000L
+    val img = tmp("wm-late-img")
+    val rows = streamDetect(img, Some("1 second"))(
+      Seq(FrameFixtures.frameJson("camA", t0 + Hour, FrameFixtures.PosA)),
+      // an hour late and moved: it would diff and save a PNG if it landed
+      Seq(FrameFixtures.frameJson("camA", t0, FrameFixtures.PosB)))
+    assert(rows == Seq(("camA", t0 + Hour)))
+    assert(pngs(img).isEmpty)
+  }
+
+  test("watermarked detectBin bounds state: 64 cameras shrink to the one past the horizon") {
+    val t0 = 1700992000000L
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val stream = MemoryStream[String]
+    val q = MotionPipeline.detectBin(
+        MotionPipeline.decodeWire(stream.toDF().toDF("value")).withWatermark("timestamp", "1 second"),
+        tmp("wm-64-img"))
+      .writeStream.format("noop").start()
+    try {
+      def stateRows(): Long = q.lastProgress.stateOperators(0).numRowsTotal
+      stream.addData((0 until 64).map(i => FrameFixtures.frameJson(f"cam$i%02d", t0, FrameFixtures.PosA)): _*)
+      q.processAllAvailable()
+      assert(stateRows() == 64)
+      stream.addData(FrameFixtures.frameJson("cam00", t0 + Hour, FrameFixtures.PosA))
+      q.processAllAvailable()
+      assert(stateRows() == 1)
+    } finally q.stop()
+  }
+
+  test("watermarked detectBin evicts across AvailableNow restarts on one checkpoint") {
+    val t0 = 1700993000000L
+    val img = tmp("wm-restart-img"); val table = tmp("wm-restart-out")
+    val ckpt = tmp("wm-restart-ckpt")
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val stream = MemoryStream[String]
+    // a NEW query per batch: the plane, the armed deadline and the
+    // watermark all come back from the checkpoint
+    def runOnce(frame: String): Unit = {
+      stream.addData(frame)
+      MotionPipeline.writeResults(
+        MotionPipeline.detectBin(
+          MotionPipeline.decodeWire(stream.toDF().toDF("value")).withWatermark("timestamp", "1 second"),
+          img),
+        table, ckpt, Trigger.AvailableNow()).awaitTermination()
+    }
+    runOnce(FrameFixtures.frameJson("camA", t0, FrameFixtures.PosA))
+    runOnce(FrameFixtures.frameJson("camB", t0 + Hour, FrameFixtures.PosA))
+    runOnce(FrameFixtures.frameJson("camA", t0 + Hour + 10_000L, FrameFixtures.PosB))
+    assert(spark.read.parquet(table).count() == 3)
+    assert(pngs(img).isEmpty) // camA was evicted before it returned moved
+  }
+
+  test("a watermark on a batch Dataset is ignored: output equals unwatermarked detectBin") {
+    import spark.implicits._
+    val t0 = 1700994000000L
+    // out of event-time order and spread over hours: a live watermark
+    // would evict camQ and drop the late frames
+    val raw = Seq(
+      FrameFixtures.frameJson("camQ", t0 + 2 * Hour, FrameFixtures.PosB),
+      FrameFixtures.frameJson("camQ", t0, FrameFixtures.PosB),
+      FrameFixtures.frameJson("camQ", t0 + Hour, FrameFixtures.PosA),
+      FrameFixtures.frameJson("camR", t0 + 3 * Hour, FrameFixtures.PosB)).toDF("value")
+    def run(img: String, watermark: Boolean): Seq[(String, Long)] = {
+      val frames = MotionPipeline.decodeWire(raw)
+      MotionPipeline.detectBin(
+          if (watermark) frames.withWatermark("timestamp", "1 second") else frames, img)
+        .collect().map(r => (r.cameraId, r.frameTimestamp.getTime)).sorted.toSeq
+    }
+    val imgW = tmp("wm-batch-w"); val imgU = tmp("wm-batch-u")
+    val withWm = run(imgW, watermark = true)
+    assert(withWm == run(imgU, watermark = false))
+    assert(withWm.length == 4)
+    assert(pngs(imgW) == pngs(imgU))
+    assert(pngs(imgW) == Seq(s"camQ-T-${t0 + Hour}.png", s"camQ-T-${t0 + 2 * Hour}.png"))
+  }
+
+  test("unwatermarked detectBin keeps an idle camera's plane past an hour of event time") {
+    val t0 = 1700995000000L
+    val img = tmp("nowm-idle-img")
+    val rows = streamDetect(img, None)(
+      Seq(FrameFixtures.frameJson("camA", t0, FrameFixtures.PosA)),
+      Seq(FrameFixtures.frameJson("camB", t0 + 2 * Hour, FrameFixtures.PosA)),
+      // camA returns moved after two hours: it diffs against its kept plane
+      Seq(FrameFixtures.frameJson("camA", t0 + 2 * Hour + 1000L, FrameFixtures.PosB)))
+    assert(rows.length == 3)
+    assert(pngs(img) == Seq(s"camA-T-${t0 + 2 * Hour + 1000L}.png"))
+  }
+
+  test("unwatermarked detectBin lands a frame an hour older than the fleet's newest") {
+    val t0 = 1700996000000L
+    val img = tmp("nowm-late-img")
+    val rows = streamDetect(img, None)(
+      Seq(FrameFixtures.frameJson("camA", t0 + Hour, FrameFixtures.PosA),
+        FrameFixtures.frameJson("camB", t0 + Hour, FrameFixtures.PosA)),
+      Seq(FrameFixtures.frameJson("camB", t0, FrameFixtures.PosB)))
+    assert(rows == Seq(("camA", t0 + Hour), ("camB", t0), ("camB", t0 + Hour)))
+    // camB's old frame diffs against its kept (newer) plane
+    assert(pngs(img) == Seq(s"camB-T-$t0.png"))
+  }
+
+  test("runStream restarted at every batch boundary lands what a single drain lands") {
+    val t0 = 1700997000000L
+    // 3 cameras × 6 moving frames; file i carries every camera's frame i
+    val files = (0 until 6).map { i =>
+      Seq("camX", "camY", "camZ").map(c =>
+        FrameFixtures.frameJson(c, t0 + i * 1000L,
+          if (i % 2 == 1) FrameFixtures.PosB else FrameFixtures.PosA))
+    }
+    def drain(tag: String, perQuery: Seq[Seq[Int]]): (Seq[(String, Long)], Seq[String]) = {
+      val in = tmp(s"$tag-in"); val table = tmp(s"$tag-out")
+      val img = tmp(s"$tag-img"); val ckpt = tmp(s"$tag-ckpt")
+      perQuery.foreach { ids =>
+        ids.foreach(i => Files.write(Paths.get(in, s"f$i.jsonl"),
+          String.join("\n", files(i): _*).getBytes))
+        val q = MotionPipeline.runStream(spark, in, table, img, ckpt)
+        q.awaitTermination()
+        assert(q.exception.isEmpty)
+      }
+      val landed = spark.read.parquet(table).select("camera_id", "frame_timestamp").collect()
+        .map(r => (r.getString(0), r.getTimestamp(1).getTime)).sorted.toSeq
+      (landed, pngs(img))
+    }
+    val (once, oncePngs) = drain("rs-once", Seq(0 until 6))
+    val (restarted, restartedPngs) = drain("rs-restart", (0 until 6).map(Seq(_)))
+    assert(once.length == 18)
+    assert(restarted == once)
+    assert(oncePngs.length == 15) // every frame after each camera's first moved
+    assert(restartedPngs == oncePngs)
   }
 
   test("LoadReportListener captures per-batch rates and observed rows") {

@@ -216,125 +216,83 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestSession {
       s"returning camera must re-arm and alert again (got $a2)")
   }
 
-  test("cameraOfflineAlertsTws: the registerTimer variant fires, clears, and re-arms identically") {
-    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+  test("interval parameters reject month units") {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prevConf = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = MemoryStream[String]
-      val sink = s"sink_${System.nanoTime()}"
-      val q = StreamOps.cameraOfflineAlertsTws(
-          MotionPipeline.parseFrames(stream.toDF().toDF("value")),
-          silence = "30 seconds", watermarkDelay = "5 seconds")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append()).start()
-      def alerts() = spark.table(sink).collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).getTime)).toSeq
-
-      stream.addData(frame("camA", t0), frame("camA", t0 + 2000), frame("camB", t0 + 1000))
-      q.processAllAvailable()
-      assert(alerts().isEmpty, "no alert while the watermark is before lastSeen + silence")
-      stream.addData(frame("camB", t0 + 60000))
-      q.processAllAvailable()
-      stream.addData(frame("camB", t0 + 61000))
-      q.processAllAvailable()
-      val a1 = alerts()
-      assert(a1 == Seq(("camA", t0 + 2000)),
-        s"exactly one offline alert for camA with its true last_seen (got $a1)")
-
-      stream.addData(frame("camA", t0 + 70000))
-      q.processAllAvailable()
-      stream.addData(frame("camB", t0 + 120000))
-      q.processAllAvailable()
-      stream.addData(frame("camB", t0 + 121000))
-      q.processAllAvailable()
-      q.stop()
-      val a2 = alerts()
-      assert(a2.toSet == Set(("camA", t0 + 2000L), ("camA", t0 + 70000L)),
-        s"returning camera must re-arm and alert again (got $a2)")
-    } finally prevConf.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val frames = MotionPipeline.parseFrames(Seq(frame("camA", t0)).toDF("value"))
+    val e = intercept[IllegalArgumentException](
+      StreamOps.cameraOfflineAlerts(frames, silence = "1 month"))
+    assert(e.getMessage.contains("month units"), e.getMessage)
+    val docs = Seq((1L, "src", new java.sql.Timestamp(t0), "text"))
+      .toDF("doc_id", "source", "ingest_ts", "text")
+    intercept[IllegalArgumentException](
+      NearDupIngest.writeNearDeduped(docs, graft.ScratchDir.dir("nd-month"),
+        graft.ScratchDir.dir("nd-month-ckpt"), watermarkDelay = "2 months"))
+    assert(PerceptualIngest.ttlMillisOf("1 day 2 seconds") == 86402000L)
   }
 
-  for ((label, build) <- Seq[(String,
-      org.apache.spark.sql.Dataset[graft.model.VideoFrameData] =>
-        org.apache.spark.sql.DataFrame)](
-    "flatMapGroupsWithState" ->
-      (f => StreamOps.cameraOfflineAlerts(f, "30 seconds", "5 seconds")),
-    "transformWithState" ->
-      (f => StreamOps.cameraOfflineAlertsTws(f, "30 seconds", "5 seconds"))))
-  test(s"camera-offline alerts survive a checkpoint restart ($label)") {
-    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prevConf = spark.conf.getOption(key)
-    spark.conf.set(key,
+  private def rocksDb = graft.ScaleScope.sibling(spark,
+    "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val table = graft.ScratchDir.dir(s"oa-$label-out")
-      val ckpt = graft.ScratchDir.dir(s"oa-$label-ckpt")
-      val stream = MemoryStream[String]
-      // a NEW query per run, recovered from the same checkpoint: liveness
-      // state, the armed timer AND the watermark must all carry over
-      def runOnce(): Unit =
-        build(MotionPipeline.parseFrames(stream.toDF().toDF("value")))
-          .writeStream.format("parquet").option("path", table)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .start().awaitTermination()
-      def alerts() = spark.read.parquet(table).collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).getTime)).toSeq
 
-      stream.addData(frame("camA", t0), frame("camA", t0 + 2000), frame("camB", t0 + 1000))
-      runOnce()
-      assert(alerts().isEmpty, "no alert before the deadline")
-      stream.addData(frame("camB", t0 + 60000)) // advances the watermark…
-      runOnce()
-      stream.addData(frame("camB", t0 + 61000)) // …which this run applies
-      runOnce()
-      val a1 = alerts()
-      assert(a1 == Seq(("camA", t0 + 2000)),
-        s"$label: the restored timer must fire across restarts (got $a1)")
+  test("camera-offline alerts survive a checkpoint restart (flatMapGroupsWithState)") {
+    val s = rocksDb
+    implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
+    import s.implicits._
+    val table = graft.ScratchDir.dir("oa-flatMapGroupsWithState-out")
+    val ckpt = graft.ScratchDir.dir("oa-flatMapGroupsWithState-ckpt")
+    val stream = MemoryStream[String]
+    // a NEW query per run, recovered from the same checkpoint: liveness
+    // state, the armed timer AND the watermark must all carry over
+    def runOnce(): Unit =
+      StreamOps.cameraOfflineAlerts(
+          MotionPipeline.parseFrames(stream.toDF().toDF("value")), "30 seconds", "5 seconds")
+        .writeStream.format("parquet").option("path", table)
+        .option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow())
+        .start().awaitTermination()
+    def alerts() = spark.read.parquet(table).collect()
+      .map(r => (r.getString(0), r.getTimestamp(1).getTime)).toSeq
 
-      stream.addData(frame("camA", t0 + 70000)) // camA returns, re-arms
-      runOnce()
-      stream.addData(frame("camB", t0 + 120000))
-      runOnce()
-      stream.addData(frame("camB", t0 + 121000))
-      runOnce()
-      val a2 = alerts()
-      assert(a2.toSet == Set(("camA", t0 + 2000L), ("camA", t0 + 70000L)),
-        s"$label: fresh cycle after return must alert again across restarts (got $a2)")
-    } finally prevConf.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    stream.addData(frame("camA", t0), frame("camA", t0 + 2000), frame("camB", t0 + 1000))
+    runOnce()
+    assert(alerts().isEmpty, "no alert before the deadline")
+    stream.addData(frame("camB", t0 + 60000)) // advances the watermark…
+    runOnce()
+    stream.addData(frame("camB", t0 + 61000)) // …which this run applies
+    runOnce()
+    val a1 = alerts()
+    assert(a1 == Seq(("camA", t0 + 2000)),
+      s"the restored timer must fire across restarts (got $a1)")
+
+    stream.addData(frame("camA", t0 + 70000)) // camA returns, re-arms
+    runOnce()
+    stream.addData(frame("camB", t0 + 120000))
+    runOnce()
+    stream.addData(frame("camB", t0 + 121000))
+    runOnce()
+    val a2 = alerts()
+    assert(a2.toSet == Set(("camA", t0 + 2000L), ("camA", t0 + 70000L)),
+      s"fresh cycle after return must alert again across restarts (got $a2)")
   }
 
   test("stateful ops run on the RocksDB state store (the at-scale provider)") {
-    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = MemoryStream[String]
-      val sink = s"sink_${System.nanoTime()}"
-      val q = StreamOps.dedupFrames(
-        MotionPipeline.parseFrames(stream.toDF().toDF("value")), "5 seconds")
-        .select("camId", "timestamp")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append()).start()
-      stream.addData(frame("camK", t0), frame("camK", t0))
-      q.processAllAvailable()
-      stream.addData(frame("camK", t0), frame("camK", t0 + 1000))
-      q.processAllAvailable()
-      q.stop()
-      assert(spark.table(sink).count() == 2) // dedup state lived in RocksDB
-    } finally {
-      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    }
+    val s = rocksDb
+    implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
+    import s.implicits._
+    val stream = MemoryStream[String]
+    val sink = s"sink_${System.nanoTime()}"
+    val q = StreamOps.dedupFrames(
+      MotionPipeline.parseFrames(stream.toDF().toDF("value")), "5 seconds")
+      .select("camId", "timestamp")
+      .writeStream.format("memory").queryName(sink)
+      .outputMode(OutputMode.Append()).start()
+    stream.addData(frame("camK", t0), frame("camK", t0))
+    q.processAllAvailable()
+    stream.addData(frame("camK", t0), frame("camK", t0 + 1000))
+    q.processAllAvailable()
+    q.stop()
+    assert(s.table(sink).count() == 2) // dedup state lived in RocksDB
   }
 
   test("update output mode emits partial window counts before finalization") {
