@@ -31,6 +31,9 @@ object Verify {
         nameFilter.forall(_.findFirstIn(name).isDefined) }
       .map { case (name, fn) =>
       scala.concurrent.Future {
+        // an entry that throws leaves no output behind, never an earlier
+        // run's rows for the oracle compare to pass on
+        graft.util.LocalFs.deleteRecursively(s"$outDir/$name")
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>

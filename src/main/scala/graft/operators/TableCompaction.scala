@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.util.CommittedTable
+
 /** Small-file compaction for the LANDED corpus tables — the last table in
   * the ingest estate with no maintenance story: the audited landing sinks
   * ([[graft.streaming.CorpusIngest.writeAudited]] and siblings) append one
@@ -84,7 +86,7 @@ import org.apache.spark.sql.functions._
   * staging and heal are all per-root, so runs over disjoint subtrees
   * compose — each heals only its own protocol state — while the
   * single-writer contract shrinks to the subtree each run owns.
-  * [[compactBacklog]] (r14 verdict #6) applies that bound
+  * [[compactBacklog]] applies that bound
   * automatically: it probes the file count with an EARLY-EXIT listing
   * (never more than `budgetFiles`+1 entries held), and a subtree over
   * budget recurses into its visible child directories — healing any
@@ -136,32 +138,10 @@ object TableCompaction {
     (fs, fs.makeQualified(p))
   }
 
-  /** A committed, visible data file: parquet, not a `_`/`.` marker, not
-    * under a committer's `_temporary/` staging, not under any hidden
-    * (dot-prefixed) directory such as our own staging. Same predicate
-    * family as [[graft.util.CommittedTable.hasData]] — including the
-    * hidden-ancestor walk, since r14 ADVICE (the two must agree inside
-    * a compaction crash window). */
-  private def isCommittedDataFile(root: Path, f: FileStatus): Boolean = {
-    val n = f.getPath.getName
-    def hiddenAncestor(p: Path): Boolean = {
-      var cur = p.getParent
-      while (cur != null && cur.toUri.getPath != root.toUri.getPath) {
-        val cn = cur.getName
-        if (cn.startsWith(".") || cn.startsWith("_")) return true
-        cur = cur.getParent
-      }
-      false
-    }
-    f.isFile && n.endsWith(".parquet") &&
-      !n.startsWith("_") && !n.startsWith(".") &&
-      !hiddenAncestor(f.getPath)
-  }
-
   /** Committed data files grouped by their immediate parent dir (the
     * partition leaf for `partitionBy` layouts; the root itself for flat
     * tables), PLUS every `.compact_journal` found strictly BELOW the
-    * root (r15 ADVICE: a crashed CHILD-scoped run — a [[compactBacklog]]
+    * root (a crashed CHILD-scoped run — a [[compactBacklog]]
     * shard, or a user's own per-subtree maintenance — leaves its journal
     * at the child, where a later run scoped at THIS root would neither
     * heal it nor see that the child's published bins and stale undeleted
@@ -169,12 +149,12 @@ object TableCompaction {
     * the duplicates as data, permanently). ONE recursive listing — the
     * run's only full walk of a table whose motivating problem is file
     * count. The listing ALSO refuses a `_spark_metadata` file-sink log
-    * found BELOW the root (r15): the ancestor walk at the public entries
+    * found BELOW the root: the ancestor walk at the public entries
     * only looks UP, so a sink table nested inside the given root would
     * otherwise have its part files rewritten — same desync, opposite
     * direction. The log's own files surface it here (its dir holds batch
     * files the recursive listing visits), one O(depth) walk per listed
-    * file, the walk [[isCommittedDataFile]] pays anyway. */
+    * file, the walk [[CommittedTable.isCommittedDataFile]] pays anyway. */
   private def listCommitted(
       fs: FileSystem, root: Path): (Map[Path, Seq[FileStatus]], Seq[Path]) = {
     val it = fs.listFiles(root, true)
@@ -194,7 +174,7 @@ object TableCompaction {
       if (f.getPath.getName == JournalName &&
           f.getPath.getParent.toUri.getPath != root.toUri.getPath)
         journals += f.getPath
-      if (isCommittedDataFile(root, f)) buf += f
+      if (CommittedTable.isCommittedDataFile(root, f)) buf += f
     }
     (buf.toSeq.groupBy(_.getPath.getParent), journals.toSeq)
   }
@@ -325,8 +305,8 @@ object TableCompaction {
     compactScoped(spark, fs, root, targetBytes, minBinFiles)
   }
 
-  /** [[compactLanded]] with an automatic driver-memory bound (r14
-    * verdict #6, class doc): when the committed-file count under `table`
+  /** [[compactLanded]] with an automatic driver-memory bound (class
+    * doc): when the committed-file count under `table`
     * exceeds `budgetFiles` (probed with an early-exit listing that never
     * holds more than `budgetFiles`+1 entries), the run recurses per
     * visible child directory — partition subtrees in a `partitionBy`
@@ -384,7 +364,7 @@ object TableCompaction {
         budgetFiles)
     }
     val direct = fs.listStatus(root)
-      .filter(st => isCommittedDataFile(root, st)).toSeq
+      .filter(st => CommittedTable.isCommittedDataFile(root, st)).toSeq
     val fromDirect =
       if (direct.isEmpty) CompactStats(0L, 0L, 0L, 0L, 0L)
       else compactFrom(spark, fs, root, Map(root -> direct), targetBytes,
@@ -406,7 +386,7 @@ object TableCompaction {
     val it = fs.listFiles(root, true)
     var n = 0
     while (it.hasNext) {
-      if (isCommittedDataFile(root, it.next())) {
+      if (CommittedTable.isCommittedDataFile(root, it.next())) {
         n += 1
         if (n > budgetFiles) return true
       }
@@ -419,7 +399,7 @@ object TableCompaction {
     * recommends per-partition-subtree runs, and a subtree of a sink
     * table carries the log at an ANCESTOR, so a root-only probe would
     * wave the subtree through and desync the log's exactly-once readers
-    * all the same. The walk errs in the SAFE direction (r14 ADVICE): an
+    * all the same. The walk errs in the SAFE direction: an
     * unrelated sink cohabiting a shared ancestor (a _spark_metadata
     * directly under /tmp or a bucket root) refuses unrelated tables
     * beneath it too — a false-positive DENIAL, named in the message so
@@ -449,7 +429,7 @@ object TableCompaction {
     * heal each at ITS OWN root first — deepest first, each heal is
     * confined to its subtree — and re-list, so half-swapped child state
     * (published bin + stale sources + live journal) is never planned
-    * over as committed data (r15 ADVICE: re-binning both halves
+    * over as committed data (re-binning both halves
     * duplicates the rows permanently, and the surviving stale journal
     * resurrects them again at the next child-scoped heal). */
   private def compactScoped(

@@ -1,16 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 import graft.operators.{ImageDedup, VideoDedup}
 
-/** Streaming VIDEO near-duplicate suppression — the third modality adapter
-  * over the [[PerceptualIngest]] core, completing the streaming triad
-  * (text [[NearDupIngest]], image [[ImageIngest]], audio [[AudioIngest]],
-  * video here). A video is not one hash but a BAG of sampled frame hashes,
-  * so the adapter fans each arriving clip into per-frame band rows
+/** Streaming VIDEO near-duplicate suppression — the video adapter over
+  * the [[PerceptualIngest]] core (beside text [[NearDupIngest]], image
+  * [[ImageIngest]] and audio [[AudioIngest]]). A video is not one hash
+  * but a BAG of sampled frame hashes, so the adapter fans each arriving
+  * clip into per-frame band rows
   * (mirror-canonical dHash on every `everyNth` decoded frame, the EXACT
   * arithmetic of the batch pair join ext104 — sampling stride,
   * low-information filter band [[VideoDedup.LowInfoMinBits]] and banding
@@ -47,62 +46,16 @@ object VideoIngest {
   val FrameBits = 20
   private val FrameMask = (1L << FrameBits) - 1
 
-  /** gvid bytes → surviving sampled (frame_idx, mirror-canonical dHash):
-    * [[VideoDedup.sampleFrameHashes]] — the batch path's sampler, shared so
-    * stride/hash arithmetic cannot drift — plus the shared low-info filter;
-    * one map-side pass, None when undecodable, empty when nothing
-    * informative survives. */
+  /** gvid bytes → every sampled (frame_idx, mirror-canonical dHash), None
+    * when undecodable: [[VideoDedup.sampleFrameHashes]] — the batch path's
+    * sampler, shared so stride/hash arithmetic cannot drift. The
+    * low-information filter is an array expression over its output, so
+    * the gate's ratio rule and the band rows share one decode. Fenced
+    * like every decode UDF: unfenced, the optimizer copies it into each
+    * consumer and the clip decodes once per copy. */
   private def sampleUdf(everyNth: Int) = udf { bytes: Array[Byte] =>
     VideoDedup.sampleFrameHashes(bytes, everyNth)
-      .map(_.filter { case (_, h) => VideoDedup.informativeHash(h) })
-  }
-
-  /** The UNFILTERED sampler — the gated path needs the pre-filter count
-    * for its low-info ratio, so it samples once and filters with an
-    * array expression instead of decoding twice. Same optimizer-fence
-    * rationale as every decode UDF. */
-  private def sampleAllUdf(everyNth: Int) = udf { bytes: Array[Byte] =>
-    VideoDedup.sampleFrameHashes(bytes, everyNth)
   }.asNondeterministic()
-
-  /** (`idCol`, source, ingest_ts, `videoCol`) stream → watermarked per-frame
-    * band rows under the packed composite id. The gvid payload rides exactly
-    * ONCE per clip (its first surviving frame's band-0 row), so neither the
-    * frame fan-out nor the band explode multiplies the blob.
-    */
-  def frameBandRows(videos: DataFrame, idCol: String, videoCol: String,
-      watermarkDelay: String, everyNth: Int = 2,
-      maxDist: Int = 3): Dataset[PerceptualIngest.BandRow] =
-    frameBandRowsFromSampled(
-      videos.select(col(idCol).as("vid"), col("source"), col("ingest_ts"),
-        sampleUdf(everyNth)(col(videoCol)).as("fs"), col(videoCol).as("blob")),
-      watermarkDelay, maxDist)
-
-  /** [[frameBandRows]] over an already-sampled frame — (vid, source,
-    * ingest_ts, fs = surviving (frame_idx, hash) array, blob) — so the
-    * quality-gated path ([[writeDeduped]]) derives reason AND band rows
-    * from ONE sampler evaluation instead of decoding the clip twice. */
-  private def frameBandRowsFromSampled(sampled: DataFrame,
-      watermarkDelay: String, maxDist: Int): Dataset[PerceptualIngest.BandRow] = {
-    val spark = sampled.sparkSession
-    import spark.implicits._
-    sampled
-      .filter(col("fs").isNotNull && size(col("fs")) > 0)
-      .withWatermark("ingest_ts", watermarkDelay)
-      .select(col("vid"), col("source"), col("ingest_ts"), col("blob"),
-        lit(null).cast("string").as("reason"),
-        posexplode(col("fs")).as(Seq("p", "f")))
-      .withColumn("fid", packedId(col("vid"), col("f._1")))
-      .select(explode(ImageDedup.bandSlices(col("f._2"), maxDist)).as("s"),
-        col("fid"), col("source"), col("ingest_ts"), col("f._2").as("phash"),
-        col("p"), col("blob"), col("reason"))
-      .select(col("s.b").as("band"), col("s.v").as("key"),
-        col("fid").as("itemId"), col("source"),
-        col("ingest_ts").as("ts"), col("phash"),
-        when(col("s.b") === 0 && col("p") === 0, col("blob")).as("payload"),
-        col("reason"))
-      .as[PerceptualIngest.BandRow]
-  }
 
   /** vid + frame_idx → packed composite id, range-checked at pack time. */
   private def packedId(vid: Column, frameIdx: Column): Column =
@@ -120,9 +73,9 @@ object VideoIngest {
     * aligned support, and the clip keeps iff its best support over ALL
     * retained videos stays below `minOverlap` of its surviving frames.
     * Output: (vid_id, source, ingest_ts, gvid, n_frames, matched_vid,
-    * overlap_ratio, keep).
+    * overlap_ratio, keep, reason).
     */
-  def rollup(batch: DataFrame, maxDist: Int, everyNth: Int,
+  private def rollup(batch: DataFrame, maxDist: Int, everyNth: Int,
       minOverlap: Double): DataFrame = {
     val v = batch
       .withColumn("vid_id", shiftright(col("item_id"), FrameBits))
@@ -136,7 +89,7 @@ object VideoIngest {
         // quality row (gated clips skip the frame fan-out entirely)
         first(col("reason"), ignoreNulls = true).as("quality_reason"))
     val perOffset = v
-      .filter(col("dist") <= maxDist && col("matched_item") >= 0)
+      .filter(col("score") <= maxDist && col("matched_item") >= 0)
       .withColumn("matched_vid", shiftright(col("matched_item"), FrameBits))
       .withColumn("off",
         col("own_f") - col("matched_item").bitwiseAND(lit(FrameMask)))
@@ -154,32 +107,32 @@ object VideoIngest {
       .agg(max(struct(col("aligned"), (-col("matched_vid")).as("nm"))).as("b"))
       .select(col("vid_id"), col("b.aligned").as("aligned_frames"),
         (-col("b.nm")).as("matched_vid"))
-    base.join(best, Seq("vid_id"), "left")
-      .withColumn("overlap_ratio",
-        least(lit(1.0), round(coalesce(col("aligned_frames"), lit(0L))
-          .cast("double") / col("n_frames"), 6)))
-      .withColumn("keep",
-        col("quality_reason").isNull && col("overlap_ratio") < minOverlap)
-      .select(col("vid_id"), col("source"), col("ingest_ts"), col("gvid"),
-        col("n_frames"), col("matched_vid"), col("overlap_ratio"),
-        col("keep"),
-        coalesce(col("quality_reason"),
-          when(!col("keep"), lit("near_duplicate"))).as("reason"))
+    PerceptualIngest.decide(base.join(best, Seq("vid_id"), "left")
+        .withColumn("overlap_ratio",
+          least(lit(1.0), round(coalesce(col("aligned_frames"), lit(0L))
+            .cast("double") / col("n_frames"), 6))),
+        col("overlap_ratio") < minOverlap)
+      .select("vid_id", "source", "ingest_ts", "gvid", "n_frames",
+        "matched_vid", "overlap_ratio", "keep", "reason")
   }
 
   /** End-to-end: (vid_id, source, ingest_ts, gvid) stream → near-deduped
     * landing table (kept clips, partitioned by source) + `<table>_rejects`
     * with (matched_vid, overlap_ratio, n_frames, reason) match evidence.
+    * Each clip is sampled ONCE per micro-batch; its surviving frames fan
+    * out into per-frame band rows (the gvid payload rides on the first
+    * surviving frame only), and a clip with no surviving frame is dropped.
     *
-    * `qualityGate` (the video flavor of the r10 ingest gates): reasons
-    * derive from the SAME single sampler evaluation that feeds banding —
-    * no second decode — entirely as expression-level array ops over the
-    * sampled (frame_idx, hash) list: "undecodable" (decode failed),
-    * "no_informative_frames" (every sampled frame inside the low-info
-    * band — previously a silent drop, now audited), "mostly_low_info"
-    * (surviving fraction < `minInfoRatio` — ext115's low_info_ratio rule
-    * evaluated on the sampled grid). Failing clips never fan out into
-    * frame band state and land in rejects with their rule. */
+    * `qualityGate`: reasons derive from the SAME single sampler
+    * evaluation that feeds banding, entirely as expression-level array
+    * ops over the sampled (frame_idx, hash) list: "undecodable" (decode
+    * failed), "no_informative_frames" (every sampled frame inside the
+    * low-info band — a silent drop when ungated, an audited reject here),
+    * "mostly_low_info" (surviving fraction < `minInfoRatio` — ext115's
+    * low_info_ratio rule evaluated on the sampled grid). A failing clip
+    * rides one placeholder frame into a single
+    * [[PerceptualIngest.QualityBand]] row, never fans out into frame band
+    * state, and lands in rejects with its rule. */
   def writeDeduped(
       videos: DataFrame, table: String, checkpoint: String,
       everyNth: Int = 2, maxDist: Int = 3, minOverlap: Double = 0.6,
@@ -187,83 +140,35 @@ object VideoIngest {
       maxPerBucket: Int = 256,
       qualityGate: Boolean = false,
       minInfoRatio: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery = {
-    val ttlMillis = PerceptualIngest.ttlMillisOf(watermarkDelay)
-    val spark = videos.sparkSession
-    import spark.implicits._
-    val bandRows =
-      if (!qualityGate)
-        frameBandRows(videos, "vid_id", "gvid", watermarkDelay, everyNth,
-          maxDist)
-      else {
-        // ONE sampler evaluation (unfiltered), reason + surviving frames
-        // both derived from it with built-in array expressions — and ONE
-        // branch off it: failing clips become a single stateless
-        // QualityBand row instead of a separate union branch, which would
-        // re-evaluate the nondeterministic sampler per branch and decode
-        // every clip twice per micro-batch (r10 ADVICE)
-        val tagged = videos
-          .select(col("vid_id").as("vid"), col("source"), col("ingest_ts"),
-            sampleAllUdf(everyNth)(col("gvid")).as("fs_all"),
-            col("gvid").as("blob"))
-          .withColumn("fs", filter(col("fs_all"), f =>
-            graft.operators.TemporalAlignment.informative(f.getField("_2"),
-              VideoDedup.LowInfoMinBits, VideoDedup.LowInfoMaxBits)))
-          .withColumn("reason",
-            when(col("fs_all").isNull, "undecodable")
-              .when(size(col("fs")) === 0, "no_informative_frames")
-              .when(size(col("fs")).cast("double") / size(col("fs_all"))
-                < minInfoRatio, "mostly_low_info"))
-        tagged
-          .filter(col("reason").isNotNull || size(col("fs")) > 0)
-          .withWatermark("ingest_ts", watermarkDelay)
-          // a failing clip rides one placeholder frame so both verdict
-          // classes share the single explode pipeline below
-          .withColumn("fx", when(col("reason").isNull, col("fs"))
-            .otherwise(array(struct(lit(0).as("_1"), lit(0L).as("_2")))))
-          .select(col("vid"), col("source"), col("ingest_ts"), col("blob"),
-            col("reason"), posexplode(col("fx")).as(Seq("p", "f")))
-          .withColumn("fid", packedId(col("vid"), col("f._1")))
-          .select(explode(when(col("reason").isNull,
-              ImageDedup.bandSlices(col("f._2"), maxDist))
-            .otherwise(array(struct(
-              lit(PerceptualIngest.QualityBand).as("b"),
-              col("vid").cast("long").as("v"))))).as("s"),
-            col("fid"), col("source"), col("ingest_ts"),
-            col("f._2").as("phash"), col("p"), col("blob"), col("reason"))
-          .select(col("s.b").as("band"), col("s.v").as("key"),
-            col("fid").as("itemId"), col("source"),
-            col("ingest_ts").as("ts"), col("phash"),
-            when((col("s.b") === 0 && col("p") === 0) ||
-              col("s.b") === PerceptualIngest.QualityBand,
-              col("blob")).as("payload"),
-            col("reason"))
-          .as[PerceptualIngest.BandRow]
-      }
-    val deduped = PerceptualIngest.verdicts(bandRows, ttlMillis, maxPerBucket,
-      sameGroup = (a, b) => (a >> FrameBits) == (b >> FrameBits))
-    startQuery(deduped, table, checkpoint, maxDist, everyNth, minOverlap)
+    val sampled = videos
+      .select(col("vid_id").as("vid"), col("source"), col("ingest_ts"),
+        sampleUdf(everyNth)(col("gvid")).as("fs_all"), col("gvid").as("blob"))
+      .withColumn("fs", filter(col("fs_all"), f =>
+        graft.operators.TemporalAlignment.informative(f.getField("_2"),
+          VideoDedup.LowInfoMinBits, VideoDedup.LowInfoMaxBits)))
+      .withColumn("reason",
+        if (!qualityGate) lit(null).cast("string")
+        else when(col("fs_all").isNull, "undecodable")
+          .when(size(col("fs")) === 0, "no_informative_frames")
+          .when(size(col("fs")).cast("double") / size(col("fs_all"))
+            < minInfoRatio, "mostly_low_info"))
+    val frames = sampled
+      .select(col("vid"), col("source"), col("ingest_ts"), col("blob"),
+        col("reason"),
+        posexplode(when(col("reason").isNull, col("fs"))
+          .otherwise(array(struct(lit(0).as("_1"), lit(0L).as("_2")))))
+          .as(Seq("p", "f")))
+      .select(packedId(col("vid"), col("f._1")).as("itemId"), col("source"),
+        col("ingest_ts"), col("reason"), col("f._2").as("fp"),
+        when(col("p") === 0, col("blob")).as("payload"))
+    val bandRows = PerceptualIngest.bandRows[Long, Array[Byte]](frames,
+      ImageDedup.bandSlices(_, maxDist), watermarkDelay)
+    PerceptualIngest.landAndReject(
+      PerceptualIngest.verdicts(bandRows, PerceptualIngest.Hamming,
+        PerceptualIngest.ttlMillisOf(watermarkDelay), maxPerBucket,
+        sameGroup = (a, b) => (a >> FrameBits) == (b >> FrameBits)),
+      table, checkpoint, rollup(_, maxDist, everyNth, minOverlap),
+      landDrop = Seq("matched_vid", "overlap_ratio"),
+      rejectDrop = Seq("gvid"))
   }
-
-  private def startQuery(
-      verdicts: Dataset[PerceptualIngest.BandVerdict],
-      table: String, checkpoint: String, maxDist: Int, everyNth: Int,
-      minOverlap: Double): org.apache.spark.sql.streaming.StreamingQuery =
-    verdicts
-      .toDF()
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val r = rollup(batch, maxDist, everyNth, minOverlap).cache()
-        try {
-          r.filter(col("keep"))
-            .drop("keep", "matched_vid", "overlap_ratio", "reason")
-            .repartition(col("source"))
-            .write.mode("append").partitionBy("source").parquet(table)
-          r.filter(!col("keep")).drop("keep", "gvid")
-            .write.mode("append").parquet(s"${table}_rejects")
-        } finally { r.unpersist(); () }
-      }
-      .start()
 }

@@ -1,14 +1,14 @@
 package graft.util
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 /** "Does this table structurally hold committed parquet data?" — decided
   * from the filesystem, never by swallowing a read failure (the
-  * [[graft.streaming.WatchlistMonitor]] sweep's discipline, extracted in
-  * r14 because [[graft.streaming.CorpusIngest.compactGraduated]] had
-  * re-grown the Try-as-removed shape): a `scala.util.Try` around
-  * `spark.read` folds a transient IO error into "table gone", and for
+  * [[graft.streaming.WatchlistMonitor]] sweep's discipline, shared with
+  * [[graft.streaming.CorpusIngest.compactGraduated]]): a
+  * `scala.util.Try` around `spark.read` folds a transient IO error into
+  * "table gone", and for
   * callers whose gone-branch is destructive (wipe the graduated markers,
   * re-sweep the whole watched set) that misread silently redoes — or
   * undoes — corpus-scale work. Structurally: a dir that is missing, or
@@ -23,41 +23,42 @@ import org.apache.spark.sql.SparkSession
   */
 object CommittedTable {
 
-  /** True iff `path` exists and holds at least one committed parquet
-    * data file — recursive (partitioned layouts), skipping `_`/`.`
-    * markers and anything under a HIDDEN (`_`/`.`-prefixed) ancestor
-    * dir below the queried root: `_temporary/` committer staging and a
-    * crash-orphaned `.compact_staging_*` dir alike (r14 ADVICE — this
-    * is the same ancestor rule as
-    * [[graft.operators.TableCompaction]]'s committed-file predicate, so
-    * the two emptiness views cannot diverge inside a compaction crash
-    * window; plain Spark readers also skip both shapes). */
+  /** True iff `path` exists and holds at least one committed data file
+    * ([[isCommittedDataFile]], recursive for partitioned layouts). */
   def hasData(spark: SparkSession, path: String): Boolean = {
     val p0 = new Path(path)
     val fs = p0.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = fs.makeQualified(p0)
     if (!fs.exists(p)) false
     else {
-      val rootPath = p.toUri.getPath
-      def hiddenAncestor(f: Path): Boolean = {
-        var cur = f.getParent
-        while (cur != null && cur.toUri.getPath != rootPath) {
-          val n = cur.getName
-          if (n.startsWith(".") || n.startsWith("_")) return true
-          cur = cur.getParent
-        }
-        false
-      }
       val it = fs.listFiles(p, true)
       var found = false
-      while (!found && it.hasNext) {
-        val f = it.next()
-        val n = f.getPath.getName
-        found = f.isFile && n.endsWith(".parquet") &&
-          !n.startsWith("_") && !n.startsWith(".") &&
-          !hiddenAncestor(f.getPath)
-      }
+      while (!found && it.hasNext) found = isCommittedDataFile(p, it.next())
       found
     }
+  }
+
+  /** A committed, visible data file of the table at the QUALIFIED `root`:
+    * a `.parquet` file, not a `_`/`.` marker, and not under a HIDDEN
+    * (`_`/`.`-prefixed) ancestor dir below `root` — `_temporary/`
+    * committer staging and a crash-orphaned `.compact_staging_*` dir
+    * alike (plain Spark readers skip both shapes too). The one rule
+    * behind [[hasData]] and every [[graft.operators.TableCompaction]]
+    * listing, so their emptiness views cannot diverge inside a
+    * compaction crash window. */
+  def isCommittedDataFile(root: Path, f: FileStatus): Boolean = {
+    val n = f.getPath.getName
+    val rootPath = root.toUri.getPath
+    def hiddenAncestor: Boolean = {
+      var cur = f.getPath.getParent
+      while (cur != null && cur.toUri.getPath != rootPath) {
+        val cn = cur.getName
+        if (cn.startsWith(".") || cn.startsWith("_")) return true
+        cur = cur.getParent
+      }
+      false
+    }
+    f.isFile && n.endsWith(".parquet") &&
+      !n.startsWith("_") && !n.startsWith(".") && !hiddenAncestor
   }
 }

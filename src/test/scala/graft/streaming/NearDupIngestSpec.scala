@@ -132,6 +132,38 @@ class NearDupIngestSpec extends AnyFunSuite with SparkTestSession {
       rej.head.getAs[Double]("max_est") >= 0.9)
   }
 
+  test("quality gate: a gate-failing doc later than the watermark is dropped, not audited") {
+    // gate failures ride the watermarked single branch, like every
+    // modality's gate: once the watermark has passed a doc's ingest_ts
+    // the doc is dropped whether it would pass or fail the gate. The
+    // on-time spam doc of the same batch is still audited.
+    val spamText = Seq.fill(40)("spam").mkString(" ")
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val base = graft.ScratchDir.dir("neardup-gate-late")
+    val t0 = 1701000000L
+    val stream = MemoryStream[String]
+    def run(): Unit =
+      NearDupIngest.writeNearDeduped(
+        CorpusIngest.parse(stream.toDF().toDF("value")),
+        s"$base/t", s"$base/c", threshold = 0.9,
+        watermarkDelay = "10 minutes", qualityGate = true)
+        .awaitTermination()
+    stream.addData(jsonl(30, body, t0 + 3600)) // watermark → t0 + 50 min
+    run()
+    stream.addData(
+      jsonl(31, spamText, t0),               // 50 min behind: late
+      jsonl(32, spamText, t0 + 3600 + 60))   // on time
+    run()
+    val kept = spark.read.parquet(s"$base/t").select("doc_id")
+      .collect().map(_.getLong(0)).toSeq
+    assert(kept == Seq(30L), s"kept: $kept")
+    val rej = spark.read.parquet(s"$base/t_rejects").collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("reason")).toMap
+    assert(rej == Map(32L -> "repetitive"),
+      s"the late gate-failing doc must be dropped, not audited: $rej")
+  }
+
   test("edited redelivery drops across a restart ON THE ROCKSDB STATE STORE") {
     val base = graft.ScratchDir.dir("neardup-rocks")
     val t0 = 1700500000L
@@ -164,7 +196,7 @@ class NearDupIngestSpec extends AnyFunSuite with SparkTestSession {
     // the batch-local self-skip must not blind the suppressor to a state
     // entry of the SAME id from an earlier batch: that entry proves the
     // doc already landed, so the retry routes to rejects (see
-    // PerceptualIngest.processBucket)
+    // PerceptualIngest.transition)
     val base = graft.ScratchDir.dir("neardup-crossbatch")
     val t0 = 1700800000L
     runBatches(s"$base/t", s"$base/c", threshold = 0.9, delay = "10 minutes")(Seq(

@@ -126,11 +126,13 @@ class VideoIngestSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("gated path decodes each clip exactly ONCE per micro-batch — single branch, no per-branch re-decode") {
-    // the r10 two-branch design re-evaluated the nondeterministic sampler
-    // per branch, decoding every clip twice (r10 ADVICE); pin one decode
-    // per clip at the codec boundary (Video.decodeCalls — suites run
-    // sequentially in the forked test JVM, so the JVM-global counter is
-    // interference-free inside this test body)
+    // a two-branch plan re-evaluates the nondeterministic sampler per
+    // branch, and an unfenced sampler is copied into each consumer (the
+    // frame filter and the fan-out): either way every clip decodes more
+    // than once. Pin one decode per clip at the codec boundary, gated and
+    // ungated (Video.decodeCalls — suites run sequentially in the forked
+    // test JVM, so the JVM-global counter is interference-free inside
+    // this test body)
     val base = graft.ScratchDir.dir("vidingest-deccount")
     val t0 = 1711200000L
     val clips = Seq(
@@ -143,6 +145,13 @@ class VideoIngestSpec extends AnyFunSuite with SparkTestSession {
       s"${clips.length} clips must decode exactly ${clips.length} times in " +
         s"the gated stream, got $delta")
     assert(spark.read.parquet(s"$base/t").count() == 2L)
+    val beforeUngated = Video.decodeCalls.get
+    runBatches(s"$base/u", s"$base/uc", delay = "10 minutes")(Seq(clips))
+    val ungated = Video.decodeCalls.get - beforeUngated
+    assert(ungated == clips.length,
+      s"${clips.length} clips must decode exactly ${clips.length} times in " +
+        s"the ungated stream, got $ungated")
+    assert(spark.read.parquet(s"$base/u").count() == 2L)
   }
 
   test("variant redelivery drops across a restart ON THE ROCKSDB STATE STORE") {
@@ -167,7 +176,7 @@ class VideoIngestSpec extends AnyFunSuite with SparkTestSession {
     // the montage places the retained clip's sampled (even) frames at even
     // positions in scrambled order: every sampled frame MATCHES something
     // in state, but no ±2 offset window collects more than 3 of the 6 —
-    // the alignment vote (ext104 r9) is what separates it from a re-upload
+    // the alignment vote (ext104) is what separates it from a re-upload
     val base = graft.ScratchDir.dir("vidingest-montage")
     val t0 = 1710100000L
     val scramble = Seq(4, 1, 8, 3, 0, 5, 10, 7, 2, 9, 6, 11)
