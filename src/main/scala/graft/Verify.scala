@@ -2,7 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Exits non-zero,
+  * after writing oracle_sql.json, when any entry throws. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -19,6 +20,19 @@ object Verify {
     // DuckDB side to brute-force-recompute the downstream math against —
     // Verify-only, so bench/spec invocations pay nothing
     System.setProperty(graft.util.OracleAux.EnableProp, "1")
+    val failed = try run(spark, sfDir, outDir, nameFilter) finally spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} entries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Write each entry `nameFilter` selects to `outDir/<name>` and the
+    * oracle SQL to `outDir/oracle_sql.json`; returns the names of the
+    * entries that threw, sorted. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      nameFilter: Option[scala.util.matching.Regex]): Seq[String] = {
     new java.io.File(outDir).mkdirs()
     // run the catalog 4 queries at a time: Spark's scheduler interleaves the
     // jobs across the local cores, roughly halving gate wall-clock (queries
@@ -34,17 +48,20 @@ object Verify {
         // an entry that throws leaves no output behind, never an earlier
         // run's rows for the oracle compare to pass on
         graft.util.LocalFs.deleteRecursively(s"$outDir/$name")
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
         }
       }
     }
-    scala.concurrent.Await.result(
+    val failed = try scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(futures),
-      scala.concurrent.duration.Duration.Inf)
-    pool.shutdown()
+      scala.concurrent.duration.Duration.Inf).flatten.sorted
+    finally pool.shutdown()
     // JSON string escape (shared helper): a tab or CR in builder-authored
     // SQL would otherwise make the driver's json.load fail and silently
     // zero the round's correctness.
@@ -52,6 +69,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    failed
   }
 }

@@ -1,6 +1,6 @@
 package graft.cv
 
-import graft.model.MotionRegion
+import graft.model.{FrameCodec, MotionRegion}
 
 /** Pure-JVM computer-vision kernels replacing the reference's OpenCV calls
   * (no native deps in this environment). Semantics mirror
@@ -230,32 +230,20 @@ object Kernels {
     while (r <= y2) { set(r, x1); set(r, x2); r += 1 }
   }
 
-  /** Full motion-detection step between two frames' raw pixels:
-    * gray → blur → absdiff → threshold → boxes. Returns detected regions.
-    */
-  def detectMotion(
-      prev: Array[Byte], cur: Array[Byte], rows: Int, cols: Int, channels: Int,
-      thresh: Int = 20, minArea: Int = 300): Seq[MotionRegion] = {
-    val g0 = gaussianBlur3x3(grayscale(prev, rows, cols, channels), rows, cols)
-    val g1 = gaussianBlur3x3(grayscale(cur, rows, cols, channels), rows, cols)
-    boundingBoxes(threshold(absDiff(g0, g1), thresh), rows, cols, minArea)
-  }
-
   /** Codegen-friendly entry point for
-    * [[graft.expressions.MotionRegionCount]]: region count between two raw
-    * frames, or -1 when a payload doesn't match rows×cols×channels (the
-    * caller maps -1 to SQL NULL). `matType` is the OpenCV type code.
+    * [[graft.expressions.MotionRegionCount]]: the [[Motion.Step]] region
+    * count between two raw frames, or -1 (SQL NULL) when either payload
+    * fails [[graft.model.FrameCodec.readable]]. `matType` is the OpenCV
+    * type code.
     */
   def motionRegionCount(
-      prev: Array[Byte], cur: Array[Byte], rows: Int, cols: Int, matType: Int): Int = {
-    val channels = graft.model.FrameCodec.channelsOf(matType)
-    val expected = rows.toLong * cols * channels
-    // grayscale reads 3 interleaved samples per pixel for multi-channel
-    // input, so only 1/3/4-channel layouts are valid — anything else (e.g.
-    // CV_8UC2) maps to NULL rather than an out-of-bounds read
-    if (prev == null || cur == null || rows <= 0 || cols <= 0 ||
-      (channels != 1 && channels != 3 && channels != 4) ||
-      prev.length != expected || cur.length != expected) -1
-    else detectMotion(prev, cur, rows, cols, channels).size
-  }
+      prev: Array[Byte], cur: Array[Byte], rows: Int, cols: Int, matType: Int): Int =
+    if (!FrameCodec.readable(prev, rows, cols, matType) ||
+      !FrameCodec.readable(cur, rows, cols, matType)) -1
+    else {
+      val (step, channels) = (new Motion.Step, FrameCodec.channelsOf(matType))
+      step.detect(prev, rows, cols, channels)
+      step.commit()
+      step.detect(cur, rows, cols, channels).size
+    }
 }

@@ -3,6 +3,7 @@ package graft.cv
 import java.awt.image.BufferedImage
 import java.io.File
 import javax.imageio.ImageIO
+import javax.imageio.stream.MemoryCacheImageOutputStream
 
 /** PNG side-output, replacing the reference's Imgcodecs.imwrite
   * (/root/reference/dvaf/processor/.../MotionDetector.java:133-177).
@@ -36,31 +37,36 @@ object Png {
   }
 
   /** Interleaved bytes → encoded PNG bytes (the binary-column form a
-    * multimodal pipeline carries through parquet / binaryFile sources).
-    * Lossless, so decode(encodeBytes(px)) round-trips the pixels exactly.
+    * multimodal pipeline carries through parquet / binaryFile sources, and
+    * what [[saveFrame]] writes). Lossless, so decode(encodeBytes(px))
+    * round-trips the pixels exactly.
     */
   def encodeBytes(px: Array[Byte], rows: Int, cols: Int, channels: Int): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
-    ImageIO.write(toImage(px, rows, cols, channels), "png", bos)
+    // an in-memory stream: ImageIO's default for a plain OutputStream
+    // caches through a temp file; the bytes are the same either way
+    val ios = new MemoryCacheImageOutputStream(bos)
+    try ImageIO.write(toImage(px, rows, cols, channels), "png", ios)
+    finally ios.close()
     bos.toByteArray
   }
 
-  /** camId comes off the untrusted wire; keep it a flat filename component
-    * (no separators / traversal) before it reaches the filesystem.
+  /** A frame's file name, `{camId}-T-{epochMillis}.png` (:147), with the
+    * camId from the untrusted wire made a flat filename component (no
+    * separators or traversal).
     */
-  def sanitizeCamId(camId: String): String = {
+  def frameName(camId: String, epochMillis: Long): String = {
     val s = Option(camId).getOrElse("null").replaceAll("[^A-Za-z0-9._-]", "_")
-    if (s.isEmpty || s.forall(_ == '.')) "_" else s
+    s"${if (s.isEmpty || s.forall(_ == '.')) "_" else s}-T-$epochMillis.png"
   }
 
-  /** Write `{camId}-T-{epochMillis}.png` under outputDir (mkdir -p). */
+  /** Write [[encodeBytes]] to [[frameName]] under outputDir (mkdir -p). */
   def saveFrame(
       px: Array[Byte], rows: Int, cols: Int, channels: Int,
       camId: String, epochMillis: Long, outputDir: String): String = {
-    val dir = new File(outputDir)
-    if (!dir.exists()) dir.mkdirs()
-    val path = new File(dir, s"${sanitizeCamId(camId)}-T-$epochMillis.png")
-    ImageIO.write(toImage(px, rows, cols, channels), "png", path)
+    new File(outputDir).mkdirs()
+    val path = new File(outputDir, frameName(camId, epochMillis))
+    java.nio.file.Files.write(path.toPath, encodeBytes(px, rows, cols, channels))
     path.getAbsolutePath
   }
 }

@@ -11,14 +11,13 @@ import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType}
   *
   * `motion_region_count(prev_px, cur_px, rows, cols, mat_type) → INT`
   *
-  * counts detected motion regions between two raw frames (grayscale → 3×3
-  * Gaussian → absdiff → threshold 20 → connected components strictly
-  * > 300 px, matching the reference's `contourArea(contour) > 300` —
-  * the chain of /root/reference/dvaf/processor/.../
-  * MotionDetector.java:33-70). Versus a UDF: inputs stay primitive
-  * `byte[]`/`int` inside whole-stage codegen with no Scala-function
-  * serialization or Row boxing; NULL propagates for null inputs AND for
-  * payloads whose length doesn't match rows×cols×channels.
+  * counts detected motion regions between two raw frames with
+  * [[graft.cv.Motion.Step]], the live detector's one motion step
+  * (grayscale → 3×3 Gaussian → absdiff → threshold → connected components
+  * above the min area, MotionDetector.java:33-70). Versus a UDF: inputs
+  * stay primitive `byte[]`/`int` inside whole-stage codegen with no
+  * Scala-function serialization or Row boxing; NULL propagates for null
+  * inputs AND for any layout [[graft.model.FrameCodec.readable]] rejects.
   *
   * Batch usage (the window-lag restatement of the stateful pipeline):
   * {{{

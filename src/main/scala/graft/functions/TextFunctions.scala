@@ -359,8 +359,14 @@ object TextFunctions {
     * dominates LSH dedup; this path is ~50× cheaper with identical values
     * (cross-checked in SketchExpressionsSpec).
     */
-  def minHashFromText(text: Column, shingleN: Int = 3, perms: Int = 64): Column = {
-    val f = udf((t: String) => {
+  def minHashFromText(text: Column, shingleN: Int = 3, perms: Int = 64): Column =
+    minHashUdf(shingleN, perms)(text)
+
+  /** [[minHashFromText]]'s UDF, for a call site that must fence it with
+    * `asNondeterministic()`. */
+  private[graft] def minHashUdf(shingleN: Int, perms: Int)
+      : org.apache.spark.sql.expressions.UserDefinedFunction =
+    udf((t: String) => {
       if (t == null) null.asInstanceOf[Array[Long]]
       else {
         val P = 2147483647L
@@ -377,8 +383,6 @@ object TextFunctions {
         mins
       }
     })
-    f(text)
-  }
 
   /** Fused text → 64-bit SimHash (tokenize → xxhash64 → one voting pass);
     * same values as [[simHash64]] ∘ [[tokens]].

@@ -58,18 +58,6 @@ object FrameCodec {
     StructField("type", IntegerType),
     StructField("data", StringType)))
 
-  val resultSchema: StructType = StructType(Seq(
-    StructField("id", StringType, nullable = false),
-    StructField("cameraId", StringType),
-    StructField("frameTimestamp", TimestampType),
-    StructField("processingTimestamp", TimestampType),
-    StructField("detectionType", StringType),
-    StructField("detectionCount", IntegerType),
-    StructField("frameRows", IntegerType),
-    StructField("frameCols", IntegerType),
-    StructField("imagePath", StringType),
-    StructField("metadata", StringType)))
-
   /** OpenCV type-code → channel count: CV_MAT_CN(t) = ((t >> 3) & 0x1ff) + 1
     * (MotionDetector.java:97-99). CV_8UC1=0, CV_8UC3=16, CV_8UC4=24.
     */
@@ -84,4 +72,15 @@ object FrameCodec {
     */
   def expectedBytes(rows: Int, cols: Int, matType: Int): Long =
     rows.toLong * cols * channelsOf(matType)
+
+  /** The layouts the CV kernels read: gray, BGR, BGRA. Grayscale reads
+    * three samples per pixel of multi-channel input, so 2 channels would
+    * read past the payload and 5 would be misread. */
+  def readableChannels(channels: Int): Boolean =
+    channels == 1 || channels == 3 || channels == 4
+
+  /** The frame-layout predicate every motion path applies first. */
+  def readable(px: Array[Byte], rows: Int, cols: Int, matType: Int): Boolean =
+    px != null && rows > 0 && cols > 0 && readableChannels(channelsOf(matType)) &&
+      px.length == expectedBytes(rows, cols, matType)
 }

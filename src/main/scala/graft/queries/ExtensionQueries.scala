@@ -4828,12 +4828,12 @@ object ExtensionQueries {
     // ------------------------------------------------------------ EXT111
     // BATCH MOTION BACKFILL — the reference's LIVE motion pipeline
     // (A5/A6: gray → 3×3 Gaussian → absdiff → threshold 20 → connected
-    // components ≥ 300 px) run over STORED video columns: the
+    // components > 300 px) run over STORED video columns: the
     // reprocess-the-archive job every video platform runs when detection
-    // logic or thresholds change, sharing the EXACT kernel entry point
-    // (Kernels.motionRegionCount via Video.withMotion) with the streaming
-    // path, so a backfill and the live detector can never disagree on
-    // what counts as motion. Reads the SAME materialized decoded-frame
+    // logic or thresholds change, running the live detector's one motion
+    // step (cv.Motion.Step, via Video.withMotion and
+    // Kernels.motionRegionCount), so a backfill and the live detector can
+    // never disagree on what counts as motion. Reads the SAME materialized decoded-frame
     // table as ext110 (zero extra decodes); one per-video lag window +
     // one rollup: (video_id, n_frames, frames_with_motion, motion_ratio,
     // total_regions). On the scene corpus the expected output is exact:

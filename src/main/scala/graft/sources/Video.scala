@@ -53,13 +53,11 @@ object Video {
       if (buf.getInt != Magic) return None
       val rows = buf.getInt; val cols = buf.getInt
       val channels = buf.getInt; val fps = buf.getInt; val n = buf.getInt
-      // header fields are untrusted: validate sign and compute the frame
-      // length in Long space so rows*cols*channels can't wrap past the
-      // bounds check
-      // channels restricted to the layouts the CV kernels can read
-      // (interleaved gray/BGR/BGRA) — 2-channel data would read OOB there
+      // header fields are untrusted: validate sign, keep to the layouts
+      // the CV kernels read, and compute the frame length in Long space so
+      // rows*cols*channels can't wrap past the bounds check
       if (rows <= 0 || cols <= 0 || n < 0 ||
-        (channels != 1 && channels != 3 && channels != 4)) return None
+        !graft.model.FrameCodec.readableChannels(channels)) return None
       val frameLenL = rows.toLong * cols * channels
       if (frameLenL > Int.MaxValue ||
         bytes.length.toLong < 24L + frameLenL * n) return None
@@ -89,18 +87,7 @@ object Video {
     * 100 TB corpus fans out by file, then by frame.
     */
   def frames(videos: DataFrame): DataFrame =
-    videos
-      .withColumn("fs", explodeUdf(col("content")))
-      .filter(col("fs").isNotNull)
-      .select(col("path"), explode(col("fs")).as("f"))
-      .select(
-        col("path"),
-        col("f._1").as("frame_idx"),
-        col("f._2").as("rows"),
-        col("f._3").as("cols"),
-        col("f._4").as("channels"),
-        col("f._5").as("fps"),
-        col("f._6").as("px"))
+    explodeFrames(videos.select(col("path"), col("content").as("blob")), "path")
 
   /** [[frames]] for an id-keyed video COLUMN (doc-table corpora) instead
     * of a binaryFile directory: one row per decoded frame, keyed by
@@ -108,17 +95,15 @@ object Video {
     * then by frame).
     */
   def framesById(videos: DataFrame, videoCol: String, idCol: String): DataFrame =
-    videos
-      .select(col(idCol).as("video_id"), explodeUdf(col(videoCol)).as("fs"))
+    explodeFrames(videos.select(col(idCol).as("video_id"), col(videoCol).as("blob")), "video_id")
+
+  private def explodeFrames(keyed: DataFrame, key: String): DataFrame =
+    keyed
+      .select(col(key), explodeUdf(col("blob")).as("fs"))
       .filter(col("fs").isNotNull)
-      .select(col("video_id"), explode(col("fs")).as("f"))
-      .select(
-        col("video_id"),
-        col("f._1").as("frame_idx"),
-        col("f._2").as("rows"),
-        col("f._3").as("cols"),
-        col("f._4").as("channels"),
-        col("f._5").as("fps"),
+      .select(col(key), explode(col("fs")).as("f"))
+      .select(col(key), col("f._1").as("frame_idx"), col("f._2").as("rows"),
+        col("f._3").as("cols"), col("f._4").as("channels"), col("f._5").as("fps"),
         col("f._6").as("px"))
 
   /** Keep every nth frame (temporal subsampling before expensive work). */
@@ -127,8 +112,8 @@ object Video {
 
   private val motionUdf = udf(
     (prev: Array[Byte], cur: Array[Byte], rows: Int, cols: Int, ch: Int) => {
-      // NULL (not a sentinel) for the first frame or anything the guarded
-      // kernel entry point rejects — same contract as motion_region_count
+      // NULL (not a sentinel) for the first frame or any layout the
+      // entry point rejects — same contract as motion_region_count
       val n = Kernels.motionRegionCount(prev, cur, rows, cols,
         graft.model.FrameCodec.matTypeOf(ch))
       if (n < 0) null.asInstanceOf[java.lang.Integer] else java.lang.Integer.valueOf(n)
@@ -137,9 +122,10 @@ object Video {
   /** Per-frame motion vs the previous frame of the same video — the batch
     * window-lag form of the streaming pipeline, applied to decoded files
     * (`keyCol` = "path") or to id-keyed corpora ([[framesById]],
-    * `keyCol` = "video_id"). Same kernel entry point and constants as the
-    * live pipeline, so a backfill over archived footage and the streaming
-    * detector can never disagree.
+    * `keyCol` = "video_id"). Each pair runs [[graft.cv.Motion.Step]], the
+    * live detector's step, through [[Kernels.motionRegionCount]], so a
+    * backfill over archived footage and the streaming detector can never
+    * disagree.
     */
   def withMotion(frameRows: DataFrame, keyCol: String = "path"): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window

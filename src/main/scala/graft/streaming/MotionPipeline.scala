@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import graft.cv.{Kernels, Png}
+import graft.cv.{Kernels, Motion, Png}
 import graft.model.{FrameCodec, ProcessingResult, VideoFrameData}
 
 /** The reference's entire Flink job (source → parse → filter → keyBy →
@@ -21,9 +21,11 @@ import graft.model.{FrameCodec, ProcessingResult, VideoFrameData}
   *
   * Deployed chain ([[runStream]]): `readStream.text` → [[decodeWire]] (parse
   * + drop malformed) → [[detectBin]] (`groupByKey(_.camId)` →
-  * `flatMapGroupsWithState`) → [[writeResults]] (`foreachBatch` parquet
-  * partitioned by (camera_id, day) — the Cassandra PK analog,
-  * CassandraService.java:139-140). [[runBatch]] runs the same chain once.
+  * `flatMapGroupsWithState` over [[graft.cv.Motion.Step]], the one motion
+  * step `motion_region_count` and the batch backfill also run) →
+  * [[writeResults]] (`foreachBatch` parquet partitioned by (camera_id, day)
+  * — the Cassandra PK analog, CassandraService.java:139-140). [[runBatch]]
+  * runs the same chain once.
   *
   * Scale design:
   *  - the only shuffle is the keyBy; frame payloads never enter a second
@@ -34,7 +36,7 @@ import graft.model.{FrameCodec, ProcessingResult, VideoFrameData}
   *    frame each call, MotionDetector.java:33-37);
   *  - per-key event-time ordering is restored by sorting each group iterator
   *    (sanctioned by the reference's own sort, MotionDetector.java:41-43);
-  *  - PNG side-writes use deterministic names ({camId}-T-{millis}.png,
+  *  - PNG side-writes use deterministic names ([[graft.cv.Png.frameName]],
   *    MotionDetector.java:147) so at-least-once replays are idempotent;
   *  - state is bounded exactly when the input's `timestamp` is watermarked:
   *    a camera's deadline is the newest frame of its latest batch, and the
@@ -198,11 +200,21 @@ object MotionPipeline {
   }
 
   /** The per-key state transition (KeyedProcessFunction analog,
-    * VideoProcessor.java:177-204): [[processFrames]] over the stored plane,
-    * then, when `evicting`, re-arm the camera's event-time deadline at the
-    * newest frame of this batch, clamped past the current watermark
-    * (Spark rejects a deadline behind it). A timed-out call only drops the
-    * plane.
+    * VideoProcessor.java:177-204, over MotionDetector.java:23-92): fold
+    * the batch's frames in event-time order through one [[Motion.Step]]
+    * resumed from the stored plane — save an annotated PNG iff it finds
+    * regions, emit exactly one result row per frame (first frame of a key
+    * included, detectionCount hardcoded 1, imagePath always populated —
+    * faithful to the reference's quirks). A frame whose layout fails
+    * [[FrameCodec.readable]], or whose PNG write fails, is skipped without
+    * advancing state (FrameProcessorHelper.java:13-30's exception→null
+    * path). Then store the step's plane and, when `evicting`, re-arm the
+    * camera's event-time deadline at the newest frame of this batch,
+    * clamped past the current watermark (Spark rejects a deadline behind
+    * it). A timed-out call only drops the plane.
+    *
+    * The step is this call's alone: the stored plane may alias its
+    * scratch, and no other key's frames can overwrite it.
     */
   private def transition(imageOutputDir: String, evicting: Boolean)(
       camId: String,
@@ -212,9 +224,39 @@ object MotionPipeline {
       state.remove()
       Iterator.empty
     } else {
-      val batch = frames.toArray
-      val (out, newPrev) = processFrames(camId, batch, state.getOption.orNull, imageOutputDir)
-      if (newPrev != null) state.update(newPrev)
+      val batch = frames.toArray.sortBy(f => Option(f.timestamp).map(_.getTime).getOrElse(0L))
+      val step = new Motion.Step
+      state.getOption.foreach(p => step.resume(p.grayBlur, p.rows, p.cols))
+      val out = batch.flatMap { f =>
+        if (!FrameCodec.readable(f.px, f.rows, f.cols, f.matType)) None
+        else try {
+          val channels = FrameCodec.channelsOf(f.matType)
+          val millis = f.timestamp.getTime
+          val regions = step.detect(f.px, f.rows, f.cols, channels)
+          if (regions.nonEmpty) {
+            val annotated = f.px.clone()
+            regions.foreach(Kernels.drawRect(annotated, f.rows, f.cols, channels, _))
+            Png.saveFrame(annotated, f.rows, f.cols, channels, camId, millis, imageOutputDir)
+          }
+          step.commit()
+          Some(ProcessingResult(
+            id = UUID.randomUUID().toString,
+            cameraId = camId,
+            frameTimestamp = f.timestamp,
+            processingTimestamp = new Timestamp(System.currentTimeMillis()),
+            detectionType = "motion",
+            detectionCount = 1,
+            frameRows = f.rows,
+            frameCols = f.cols,
+            imagePath = s"$imageOutputDir/${Png.frameName(camId, millis)}",
+            metadata = null))
+        } catch {
+          // a null field that slipped the parse filter or I/O on the PNG
+          // write skips the frame (the reference helper's exception→null)
+          case scala.util.control.NonFatal(_) => None
+        }
+      }
+      if (out.nonEmpty) state.update(PrevPlane(step.plane, step.rows, step.cols))
       if (evicting && state.exists) {
         val newest = batch.foldLeft(0L)((m, f) =>
           if (f.timestamp == null) m else math.max(m, f.timestamp.getTime))
@@ -222,120 +264,6 @@ object MotionPipeline {
       }
       out.iterator
     }
-
-  /** Per-invocation scratch planes for the kernel chain. The naive chain
-    * allocates ~5 full planes per frame (gray, blur tmp int[], blur out,
-    * absdiff, threshold ≈ 2.7 MB at 640×480) — at 30 FPS/camera that is pure
-    * allocator/GC pressure on the only sequential path in the pipeline. One
-    * Scratch per state-function call amortizes every buffer across the
-    * micro-batch; the blur output double-buffers because the previous
-    * frame's plane is still live (it IS the diff operand) while the current
-    * one is written.
-    */
-  private final class Scratch {
-    private var n = -1
-    var gray: Array[Byte] = _
-    var tmp: Array[Int] = _
-    var bin: Array[Byte] = _
-    var labels: Array[Boolean] = _
-    val stack = new java.util.ArrayDeque[Int]()
-    private var blurA: Array[Byte] = _
-    private var blurB: Array[Byte] = _
-
-    def ensure(rows: Int, cols: Int): Unit = {
-      val m = rows * cols
-      if (m != n) {
-        n = m
-        gray = new Array[Byte](m)
-        tmp = new Array[Int](m)
-        bin = new Array[Byte](m)
-        labels = new Array[Boolean](m)
-        blurA = new Array[Byte](m)
-        blurB = new Array[Byte](m)
-      }
-    }
-
-    /** Blur target: whichever buffer the still-live previous plane does NOT
-      * alias (robust even when a frame fails mid-step — selection depends
-      * only on what `prev` references, not on a flip counter).
-      */
-    def blurTarget(prevPlane: Array[Byte]): Array[Byte] =
-      if (prevPlane eq blurA) blurB else blurA
-  }
-
-  /** The core transition (MotionDetector.java:23-92): fold frames in
-    * event-time order over the previous plane — detect motion against it,
-    * save an annotated PNG iff regions were found, emit exactly one result
-    * row per frame (first frame of a key included, detectionCount hardcoded
-    * 1, imagePath always populated — faithful to the reference's quirks).
-    * A frame that fails to decode is skipped without advancing state
-    * (FrameProcessorHelper.java:13-30's exception→null path). Returns the
-    * emitted rows and the new plane (null ⇒ unchanged).
-    *
-    * The returned plane may alias a scratch buffer: callers must treat it as
-    * immutable (they do — it is either encoded into the state store or
-    * dropped) and it is never touched again after this call returns.
-    */
-  private def processFrames(
-      camId: String,
-      frames: Array[BinFrame],
-      prev0: PrevPlane,
-      imageOutputDir: String): (Seq[ProcessingResult], PrevPlane) = {
-
-    val sorted = frames.sortBy(f => Option(f.timestamp).map(_.getTime).getOrElse(0L))
-    var prev = prev0
-    val out = Seq.newBuilder[ProcessingResult]
-    val scratch = new Scratch
-
-    sorted.foreach { f =>
-      try {
-        val channels = FrameCodec.channelsOf(f.matType)
-        val px = f.px
-        require(px != null &&
-          px.length == FrameCodec.expectedBytes(f.rows, f.cols, f.matType),
-          s"decoded payload != ${f.rows}x${f.cols}x$channels")
-
-        scratch.ensure(f.rows, f.cols)
-        Kernels.grayscaleInto(px, f.rows, f.cols, channels, scratch.gray)
-        val grayBlur = scratch.blurTarget(if (prev == null) null else prev.grayBlur)
-        Kernels.gaussianBlur3x3Into(scratch.gray, f.rows, f.cols, scratch.tmp, grayBlur)
-
-        if (prev != null && prev.rows == f.rows && prev.cols == f.cols) {
-          Kernels.absDiffThresholdInto(prev.grayBlur, grayBlur, 20, scratch.bin)
-          val regions = Kernels.boundingBoxesReuse(
-            scratch.bin, f.rows, f.cols, 300, scratch.labels, scratch.stack)
-          if (regions.nonEmpty) {
-            val annotated = px.clone()
-            regions.foreach(Kernels.drawRect(annotated, f.rows, f.cols, channels, _))
-            Png.saveFrame(annotated, f.rows, f.cols, channels,
-              camId, f.timestamp.getTime, imageOutputDir)
-          }
-        }
-
-        out += ProcessingResult(
-          id = UUID.randomUUID().toString,
-          cameraId = camId,
-          frameTimestamp = f.timestamp,
-          processingTimestamp = new Timestamp(System.currentTimeMillis()),
-          detectionType = "motion",
-          detectionCount = 1,
-          frameRows = f.rows,
-          frameCols = f.cols,
-          imagePath = s"$imageOutputDir/${Png.sanitizeCamId(camId)}-T-${f.timestamp.getTime}.png",
-          metadata = null)
-
-        prev = PrevPlane(grayBlur, f.rows, f.cols)
-      } catch {
-        // any per-frame failure (bad payload size, null field that slipped
-        // the parse filter, I/O on the PNG write) skips the frame without
-        // advancing state — the reference helper's exception→null contract
-        // (FrameProcessorHelper.java:13-30)
-        case scala.util.control.NonFatal(_) =>
-      }
-    }
-
-    (out.result(), prev)
-  }
 
   // ------------------------------------------------------------- sinks
 
@@ -386,18 +314,19 @@ object MotionPipeline {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // cluster on the partition columns before the dynamic-partition
-        // write: without it every state task writes its own file per
-        // (camera_id, day) — tasks × live partitions small files per
-        // micro-batch, the classic dynamic-partition-append trap at fleet
-        // scale. The extra shuffle is tiny (metadata rows, images already
-        // offloaded to the PNG sink) and AQE sizes it; measured it's also
-        // faster locally (2.55 → 2.09 s per 600-frame batch).
-        batch.repartition(col("camera_id"), col("day"))
-          .write.mode("append").partitionBy("camera_id", "day").parquet(tableDir)
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => appendPartitioned(batch, tableDir) }
       .start()
+
+  /** Append storage-layout rows to the results table, partitioned by
+    * (camera_id, day). Clustering on the partition columns first keeps it
+    * to one file per live partition: without it every state task writes
+    * its own file per (camera_id, day), tasks × live partitions small
+    * files per write. The extra shuffle is tiny (metadata rows; the pixels
+    * went to the PNG sink) and AQE sizes it.
+    */
+  private def appendPartitioned(rows: DataFrame, tableDir: String): Unit =
+    rows.repartition(col("camera_id"), col("day"))
+      .write.mode("append").partitionBy("camera_id", "day").parquet(tableDir)
 
   /** Whole pipeline, batch mode: fixtures dir → results parquet + PNGs.
     * Uses the [[decodeWire]] fast path end-to-end.
@@ -407,9 +336,7 @@ object MotionPipeline {
       tableDir: String, imageDir: String): Unit = {
     val results = detectBin(
       decodeWire(spark.read.text(inputJsonDir).toDF("value")), imageDir)
-    toStorageLayout(results)
-      .repartition(col("camera_id"), col("day")) // same small-files guard as the streaming sink
-      .write.mode("append").partitionBy("camera_id", "day").parquet(tableDir)
+    appendPartitioned(toStorageLayout(results), tableDir)
   }
 
   /** Whole pipeline, streaming mode over a watched directory. */

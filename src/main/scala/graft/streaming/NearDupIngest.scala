@@ -86,9 +86,12 @@ object NearDupIngest {
     val signed = docs
       .select(col("doc_id").as("itemId"), col("source"), col("ingest_ts"),
         reason.as("reason"), col("text").as("payload"))
-      // null/short text has no signature: nothing to band
+      // null/short text has no signature: nothing to band. Fenced like the
+      // decode UDFs: unfenced, the banding's not-null filter is pushed
+      // below this projection with a copy of the UDF, so each doc would
+      // be signed twice
       .withColumn("fp", when(col("reason").isNull,
-        TextFunctions.minHashFromText(col("payload"), shingleN, perms)))
+        TextFunctions.minHashUdf(shingleN, perms).asNondeterministic()(col("payload"))))
     val banded = PerceptualIngest.bandRows[Seq[Long], String](signed,
       sig => transform(TextFunctions.lshBands(sig, bands, perms / bands),
         s => struct(s("band").as("b"), s("key").as("v"))),

@@ -6,9 +6,9 @@ import graft.model.MotionRegion
 /** Golden + property tests for the pure-JVM CV kernels (SURVEY.md §5.2 item 1).
   * Semantics under test mirror /root/reference/dvaf/processor/.../MotionDetector.java:
   * grayscale+blur (33-36, 50-52), absdiff (56), threshold 20→255 (58-59),
-  * external regions with min area (111-131). Properties are exercised over
-  * deterministic parameter sweeps (offline cache has no scalatest-scalacheck
-  * bridge).
+  * external regions with min area (111-131), composed by [[Motion.Step]].
+  * Properties are exercised over deterministic parameter sweeps (offline
+  * cache has no scalatest-scalacheck bridge).
   */
 class KernelsSpec extends AnyFunSuite {
 
@@ -101,14 +101,26 @@ class KernelsSpec extends AnyFunSuite {
     assert(Kernels.boundingBoxes(bin, 4, 4, 1) == Seq(MotionRegion(0, 0, 2, 2)))
   }
 
+  // ------------------------------------------------------------- motion step
+
+  /** Regions of `cur` against `prev` through one [[Motion.Step]], at the
+    * deployed threshold and min area. */
+  private def detect(prev: Array[Byte], cur: Array[Byte],
+      rows: Int, cols: Int, ch: Int): Seq[MotionRegion] = {
+    val step = new Motion.Step
+    step.detect(prev, rows, cols, ch)
+    step.commit()
+    step.detect(cur, rows, cols, ch)
+  }
+
   test("zero diff yields no regions (property)") {
-    for (n <- 4 to 16) {
+    for (n <- 4 to 40 by 4) {
       val frame = Array.tabulate(n * n * 3)(i => (i % 251).toByte)
-      assert(Kernels.detectMotion(frame, frame, n, n, 3, minArea = 1).isEmpty)
+      assert(detect(frame, frame, n, n, 3).isEmpty)
     }
   }
 
-  test("detectMotion end-to-end: a moved bright square is detected with a tight box") {
+  test("motion step end-to-end: a moved bright square is detected with a tight box") {
     val rows = 64; val cols = 64; val ch = 3
     def frameWithSquare(x0: Int, y0: Int): Array[Byte] = {
       val px = Array.fill(rows * cols * ch)(10.toByte)
@@ -116,34 +128,51 @@ class KernelsSpec extends AnyFunSuite {
         px((r * cols + c) * ch + k) = 230.toByte
       px
     }
-    val boxes = Kernels.detectMotion(
-      frameWithSquare(4, 4), frameWithSquare(30, 30), rows, cols, ch)
+    val boxes = detect(frameWithSquare(4, 4), frameWithSquare(30, 30), rows, cols, ch)
     assert(boxes.nonEmpty)
     // all motion is inside the union of the two squares (+1 px blur halo)
     boxes.foreach { b =>
       assert(b.x >= 3 && b.y >= 3 && b.x + b.w <= 55 && b.y + b.h <= 55)
-      assert(b.w * b.h >= 300)
+      assert(b.w * b.h >= Motion.MinArea)
     }
   }
 
   test("detection is translation-covariant (property)") {
-    val rows = 48; val cols = 48
+    // two disjoint 20×20 squares: each diff component is 400 px (> MinArea)
+    val rows = 48; val cols = 96
     def squares(dx: Int): (Array[Byte], Array[Byte]) = {
       def f(x0: Int): Array[Byte] = {
         val px = Array.fill(rows * cols)(0.toByte)
         for (r <- 2 until 22; c <- x0 until x0 + 20) px(r * cols + c) = -1
         px
       }
-      (f(2 + dx), f(4 + dx))
+      (f(2 + dx), f(26 + dx))
     }
+    val (a0, b0) = squares(0)
+    val ref = detect(a0, b0, rows, cols, 1)
+    assert(ref.size == 2)
     for (dx <- 0 to 20) {
       val (a, b) = squares(dx)
-      val base = Kernels.detectMotion(a, b, rows, cols, 1, minArea = 10)
-      val (a2, b2) = squares(0)
-      val ref = Kernels.detectMotion(a2, b2, rows, cols, 1, minArea = 10)
+      val base = detect(a, b, rows, cols, 1)
       assert(base.map(r => (r.x - dx, r.y, r.w, r.h)) ==
         ref.map(r => (r.x, r.y, r.w, r.h)))
     }
+  }
+
+  test("the step diffs only against a committed plane of the same geometry") {
+    val a = Array.fill(8 * 40)(0.toByte)
+    val b = Array.fill(8 * 40)(-1.toByte)
+    val step = new Motion.Step
+    assert(step.detect(a, 8, 40, 1).isEmpty) // no plane yet
+    step.commit()
+    // uncommitted frames leave the plane where it was
+    assert(step.detect(b, 8, 40, 1).size == 1)
+    assert(step.detect(b, 8, 40, 1).size == 1)
+    // same pixel count, other geometry: no diff, and it becomes the plane
+    assert(step.detect(b, 40, 8, 1).isEmpty)
+    step.commit()
+    assert(step.rows == 40 && step.cols == 8)
+    assert(step.detect(a, 40, 8, 1).size == 1)
   }
 
   test("drawRect paints a green 1px border (OpenCV default thickness) inside the box") {

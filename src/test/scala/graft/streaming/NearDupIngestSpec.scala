@@ -237,4 +237,33 @@ class NearDupIngestSpec extends AnyFunSuite with SparkTestSession {
     assert(kept == Seq(20L, 21L, 22L),
       "doc 22 must pass once the watermark evicted doc 20's signatures")
   }
+
+  test("each doc is signed once per micro-batch: one MinHash UDF in the executed plan") {
+    // unfenced, the banding's not-null filter is pushed below the signing
+    // projection with a copy of the UDF (two signatures per doc)
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val base = graft.ScratchDir.dir("neardup-signonce")
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val stream = MemoryStream[String]
+    // event time inside the first watermark delay: the watermark stays
+    // put, so the drain's last batch is the data batch, not a no-data one
+    stream.addData(jsonl(30, body, 60L), jsonl(31, "too short", 60L))
+    for (gate <- Seq(false, true)) {
+      val q = NearDupIngest.writeNearDeduped(
+        CorpusIngest.parse(stream.toDF().toDF("value")),
+        s"$base/t-$gate", s"$base/c-$gate", qualityGate = gate)
+      q.awaitTermination()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.optimizedPlan
+      val signers = plan.flatMap(_.expressions.flatMap(_.collect {
+        case u: ScalaUDF if u.dataType.isInstanceOf[ArrayType] &&
+          u.dataType.asInstanceOf[ArrayType].elementType == LongType => u
+      }))
+      assert(signers.size == 1, s"gate=$gate: ${signers.size} MinHash UDFs in\n$plan")
+      assert(spark.read.parquet(s"$base/t-$gate").count() == (if (gate) 1L else 2L))
+    }
+  }
 }
