@@ -1,9 +1,11 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{count, lit}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. Exits non-zero,
-  * after writing oracle_sql.json, when any entry throws. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * verify_status.json (each entry's outcome) and oracle_sql.json, for the
+  * DuckDB compare in tools/verify_local.py. Exits non-zero, after writing
+  * both files, when any entry throws. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -28,9 +30,15 @@ object Verify {
     }
   }
 
-  /** Write each entry `nameFilter` selects to `outDir/<name>` and the
-    * oracle SQL to `outDir/oracle_sql.json`; returns the names of the
-    * entries that threw, sorted. */
+  /** One entry's record in `verify_status.json`: "ok" with the rows it
+    * wrote, or "failed" with its error class (a Spark error condition, else
+    * the exception's class name). */
+  private final case class Status(status: String, rows: Long, wallS: Double, errorClass: Option[String])
+
+  /** Write each entry `nameFilter` selects to `outDir/<name>`, its record to
+    * `outDir/verify_status.json` and the oracle SQL to
+    * `outDir/oracle_sql.json`; returns the names of the entries that threw,
+    * sorted. */
   def run(spark: SparkSession, sfDir: String, outDir: String,
       nameFilter: Option[scala.util.matching.Regex]): Seq[String] = {
     new java.io.File(outDir).mkdirs()
@@ -48,27 +56,41 @@ object Verify {
         // an entry that throws leaves no output behind, never an earlier
         // run's rows for the oracle compare to pass on
         graft.util.LocalFs.deleteRecursively(s"$outDir/$name")
+        val t0 = System.nanoTime()
+        def wall = (System.nanoTime() - t0) / 1e9
         try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          None
+          // the row count rides the write as an observed metric: no extra job
+          val rows = org.apache.spark.sql.Observation(s"verify-$name")
+          fn(spark, sfDir).observe(rows, count(lit(1)).as("rows"))
+            .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          name -> Status("ok", rows.get("rows").asInstanceOf[Long], wall, None)
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          Some(name)
+          val cls = e match {
+            case st: org.apache.spark.SparkThrowable if st.getCondition != null => st.getCondition
+            case _ => e.getClass.getName
+          }
+          name -> Status("failed", 0L, wall, Some(cls))
         }
       }
     }
-    val failed = try scala.concurrent.Await.result(
+    val statuses = try scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(futures),
-      scala.concurrent.duration.Duration.Inf).flatten.sorted
+      scala.concurrent.duration.Duration.Inf).sortBy(_._1)
     finally pool.shutdown()
     // JSON string escape (shared helper): a tab or CR in builder-authored
     // SQL would otherwise make the driver's json.load fail and silently
     // zero the round's correctness.
     def q(s: String): String = graft.util.Json.quote(s)
+    Files.writeString(Paths.get(s"$outDir/verify_status.json"), statuses.map {
+      case (k, st) =>
+        s"""${q(k)}: {"status": ${q(st.status)}, "rows": ${st.rows}, """ +
+          s""""wall_s": ${"%.3f".formatLocal(java.util.Locale.ROOT, st.wallS)}, """ +
+          s""""error_class": ${st.errorClass.map(q).getOrElse("null")}}"""
+    }.mkString("{\n", ",\n", "\n}\n"))
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    failed
+    statuses.collect { case (k, st) if st.status == "failed" => k }
   }
 }

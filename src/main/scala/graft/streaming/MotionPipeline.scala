@@ -86,8 +86,9 @@ object MotionPipeline {
     * pixel payload straight out of the token buffer — no 1.2 MB
     * String/UnsafeRow intermediates, which makes this ~20× faster per row
     * than `from_json` on frame-sized records ([[parseFrames]] is the
-    * `from_json` reference it is spec'd against). Malformed rows are dropped,
-    * matching the reference's parse-null-then-filter
+    * `from_json` reference it is spec'd against). Malformed rows, and frames
+    * whose layout fails [[FrameCodec.readable]], are dropped here, before
+    * the keyBy shuffle — the reference's parse-null-then-filter
     * (VideoProcessor.java:143-153 + :83-84).
     */
   def decodeWire(raw: DataFrame): Dataset[BinFrame] = {
@@ -134,7 +135,7 @@ object MotionPipeline {
             case _ => p.skipChildren()
           }
         }
-        if (camId == null || ts == null || rows <= 0 || cols <= 0) None
+        if (camId == null || ts == null || !FrameCodec.readable(px, rows, cols, matType)) None
         else Some(BinFrame(camId, ts, rows, cols, matType, px))
       } finally p.close()
     } catch { case _: Exception => None }
@@ -142,8 +143,9 @@ object MotionPipeline {
 
   /** JSON string column → typed frames via `from_json`; unparseable rows →
     * null struct → dropped (PERMISSIVE-with-drop, VideoProcessor.java:143-153
-    * + :83-84). The SQL-surface reference for [[decodeWire]]: it keeps and
-    * drops the same rows, with the payload still base64 text.
+    * + :83-84). The SQL-surface reference for [[decodeWire]]: with the
+    * payload still base64 text, it keeps the rows `decodeWire` keeps before
+    * its layout check.
     */
   def parseFrames(raw: DataFrame): Dataset[VideoFrameData] = {
     val spark = raw.sparkSession
@@ -206,12 +208,13 @@ object MotionPipeline {
     * regions, emit exactly one result row per frame (first frame of a key
     * included, detectionCount hardcoded 1, imagePath always populated —
     * faithful to the reference's quirks). A frame whose layout fails
-    * [[FrameCodec.readable]], or whose PNG write fails, is skipped without
-    * advancing state (FrameProcessorHelper.java:13-30's exception→null
-    * path). Then store the step's plane and, when `evicting`, re-arm the
-    * camera's event-time deadline at the newest frame of this batch,
-    * clamped past the current watermark (Spark rejects a deadline behind
-    * it). A timed-out call only drops the plane.
+    * [[FrameCodec.readable]] (which [[decodeWire]] has already dropped;
+    * [[detectBin]] takes any Dataset), or whose PNG write fails, is skipped
+    * without advancing state (FrameProcessorHelper.java:13-30's
+    * exception→null path). Then store the step's plane and, when
+    * `evicting`, re-arm the camera's event-time deadline at the newest frame
+    * of this batch, clamped past the current watermark (Spark rejects a
+    * deadline behind it). A timed-out call only drops the plane.
     *
     * The step is this call's alone: the stored plane may alias its
     * scratch, and no other key's frames can overwrite it.

@@ -33,6 +33,34 @@ class CorpusIngestSpec extends AnyFunSuite with SparkTestSession {
     assert(parsed.select("doc_id").head().getLong(0) == 1L)
   }
 
+  test("each line is parsed once per micro-batch: one JsonToStructs in the executed plan") {
+    // with the fields projected out of the parsed struct, the not-null
+    // filter is pushed below the parse with one pruned from_json per field
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val table = tmp("parse-once-table"); val ckpt = tmp("parse-once-ckpt")
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val source = MemoryStream[String]
+    // event time inside the first watermark delay: the watermark stays
+    // put, so the drain's last batch is the data batch, not a no-data one
+    source.addData(
+      doc(1, "alpha beta gamma delta epsilon zeta", "srcA", "1970-01-01 00:01:00"),
+      doc(2, "one two three four five six seven", "srcB", "1970-01-01 00:01:01"),
+      """{"doc_id":3,"text":"no source or ts"}""",
+      "not json at all")
+    val q = CorpusIngest.writeCorpus(
+      CorpusIngest.prepare(CorpusIngest.parse(source.toDF().toDF("value")),
+        minTokens = 5, minDistinctRatio = 0.2, watermarkDelay = "10 minutes"),
+      table, ckpt)
+    q.awaitTermination()
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    val parses = plan.collect { case n => n.expressions.flatMap(_.collect {
+      case j: JsonToStructs => j }) }.flatten
+    assert(parses.size == 1, s"${parses.size} JsonToStructs in\n$plan")
+    assert(spark.read.parquet(table).select("doc_id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L))
+  }
+
   test("streaming ingest: gate + digest dedup across micro-batches and restarts") {
     val table = tmp("table"); val ckpt = tmp("ckpt")
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext

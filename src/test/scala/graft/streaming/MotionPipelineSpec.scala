@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.model.FrameCodec
 
 /** SURVEY.md §5.2 items 2–3: stateful operator + end-to-end pipeline tests
   * on deterministic fixtures. Covers per-frame result emission (first frame
@@ -118,18 +119,37 @@ class MotionPipelineSpec extends AnyFunSuite with SparkTestSession {
       FrameFixtures.frameJson("camW", t0 + 1000, FrameFixtures.PosB))
     val junk = Seq("""{"not json""", """{"camId":null,"rows":1}""", "", "42",
       """{"timestamp":"2024-01-01T00:00:00Z","rows":2}""")
-    val raw = (good ++ junk).toDF("value")
+    // well-formed records whose layout FrameCodec.readable rejects: a short
+    // payload, a geometry overflowing Int, 2 and 5 channels
+    def layout(cam: String, ms: Long, matType: Int, n: Int): String = {
+      val iso = java.time.Instant.ofEpochMilli(ms).toString
+      val b64 = java.util.Base64.getEncoder.encodeToString(Array.fill(n)(9.toByte))
+      val (r, c) = (FrameFixtures.Rows, FrameFixtures.Cols)
+      s"""{"camId":"$cam","timestamp":"$iso","rows":$r,"cols":$c,"type":$matType,"data":"$b64"}"""
+    }
+    val px = FrameFixtures.Rows * FrameFixtures.Cols
+    val unreadable = Seq(
+      layout("camShort", t0 + 2000, FrameFixtures.MatTypeC3, px * 3 - 1),
+      FrameFixtures.overflowJson("camOverflow", t0 + 3000),
+      layout("camC2", t0 + 4000, FrameCodec.matTypeOf(2), px * 2),
+      layout("camC5", t0 + 5000, FrameCodec.matTypeOf(5), px * 5))
+    val raw = (good ++ junk ++ unreadable).toDF("value")
 
     val fast = MotionPipeline.decodeWire(raw).collect()
       .sortBy(_.timestamp.getTime)
+    // the from_json reference keeps the unreadable layouts until its
+    // base64 decode lets the layout predicate see the payload
     val slow = MotionPipeline.parseFrames(raw).collect()
-      .sortBy(_.timestamp.getTime)
+      .map(s => (s, java.util.Base64.getDecoder.decode(s.data)))
+      .filter { case (s, p) => FrameCodec.readable(p, s.rows, s.cols, s.matType) }
+      .sortBy(_._1.timestamp.getTime)
     assert(fast.length == 2 && slow.length == 2)
-    fast.zip(slow).foreach { case (f, s) =>
+    assert(fast.map(_.camId).toSet == Set("camW"), "unreadable layouts crossed the decoder")
+    fast.zip(slow).foreach { case (f, (s, p)) =>
       assert(f.camId == s.camId)
       assert(f.timestamp == s.timestamp)
       assert((f.rows, f.cols, f.matType) == (s.rows, s.cols, s.matType))
-      assert(f.px.toSeq == java.util.Base64.getDecoder.decode(s.data).toSeq)
+      assert(f.px.toSeq == p.toSeq)
     }
 
     // identical detection results through either path
@@ -137,10 +157,12 @@ class MotionPipelineSpec extends AnyFunSuite with SparkTestSession {
     val viaFast = MotionPipeline.detectBin(MotionPipeline.decodeWire(raw), imgA)
       .collect().map(r => (r.cameraId, r.frameTimestamp, r.detectionCount)).sortBy(_.toString)
     // the from_json reference decodes base64 pre-shuffle in SQL; undecodable
-    // payloads become null px, which the operator skips
+    // payloads become null px, and the layout filter drops them with the
+    // unreadable layouts
     val slowBin = MotionPipeline.parseFrames(raw)
       .withColumn("px", expr("try_to_binary(data, 'base64')")).drop("data")
       .as[MotionPipeline.BinFrame]
+      .filter(f => FrameCodec.readable(f.px, f.rows, f.cols, f.matType))
     val viaSlow = MotionPipeline.detectBin(slowBin, imgB)
       .collect().map(r => (r.cameraId, r.frameTimestamp, r.detectionCount)).sortBy(_.toString)
     assert(viaFast.toSeq == viaSlow.toSeq)

@@ -3,9 +3,11 @@
 
 Usage: python3 tools/verify_local.py <sfDir> <verifyOutDir>
 
-Reads each <name>.parquet the Spark Verify main wrote, runs the matching
-oracle SQL from oracle_sql.json in DuckDB (views over the sfDir tables), and
-compares: columns sorted by name, rows sorted, values canonicalized.
+Reads verify_status.json first: an entry the Spark Verify main recorded as
+failed reports its error class. For the others it reads each <name>.parquet
+Verify wrote, runs the matching oracle SQL from oracle_sql.json in DuckDB
+(views over the sfDir tables), and compares: columns sorted by name, rows
+sorted, values canonicalized.
 """
 import sys, json, glob, os
 from decimal import Decimal
@@ -42,8 +44,13 @@ def main(sf_dir, out_dir):
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
-    results = {}
+    status_path = os.path.join(out_dir, "verify_status.json")
+    status = json.load(open(status_path)) if os.path.exists(status_path) else {}
+    results = {name: f"SPARK_FAIL: {st['error_class']}"
+               for name, st in status.items() if st["status"] != "ok"}
     for name in sorted(oracle):
+        if name in results:
+            continue
         spark_dir = os.path.join(out_dir, name)
         if not os.path.isdir(spark_dir):
             results[name] = "MISSING_SPARK_OUTPUT"
@@ -78,7 +85,7 @@ def main(sf_dir, out_dir):
     # rows-only queries (no oracle): report row counts
     for spark_dir in sorted(glob.glob(os.path.join(out_dir, "*"))):
         name = os.path.basename(spark_dir)
-        if name in oracle or not os.path.isdir(spark_dir):
+        if name in oracle or name in results or not os.path.isdir(spark_dir):
             continue
         files = glob.glob(os.path.join(spark_dir, "*.parquet"))
         try:
