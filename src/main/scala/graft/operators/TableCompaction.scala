@@ -1,102 +1,79 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.util.CommittedTable
 
-/** Small-file compaction for the LANDED corpus tables — the last table in
-  * the ingest estate with no maintenance story: the audited landing sinks
-  * ([[graft.streaming.CorpusIngest.writeAudited]] and siblings) append one
-  * parquet file per source-partition per micro-batch, which at ingest
-  * cadence is the classic small-files trajectory (a year of 30-second
-  * micro-batches is ~10⁶ files per source dir; every downstream scan pays
-  * a task per file and the namenode pays an entry). The fingerprint store
-  * (manifest fold), the graduated markers (rewrite), the sweep watermark
-  * (fold-compact) and the ANN index (generation swap) all already compact;
-  * this closes the set for the plain-parquet landing table WITHOUT giving
-  * it a manifest — the landing table's value is that any engine (the
-  * DuckDB oracle included) reads it as a plain partitioned dir, so the
-  * protocol must leave it a plain partitioned dir at every committed
-  * state.
+/** The one way the engine rewrites a committed plain-parquet table in
+  * place: stage → journal → swap → heal. The table stays a plain
+  * partitioned dir at every committed state, so any engine (the DuckDB
+  * oracle included) reads it without a manifest. Two planners feed the
+  * protocol:
   *
-  * What it does: per partition directory, first-fit-decreasing bin-packs
-  * the committed data files SMALLER than `targetBytes` into bins of at
-  * most `targetBytes` total, rewrites each bin of ≥ `minBinFiles` files
-  * into ONE fresh-named file in the same directory, and deletes the bin's
-  * sources. Files already ≥ `targetBytes` are never read, never rewritten,
-  * never moved — byte-identical after every run (the ext73 untouched-
-  * partition discipline), so the rewrite cost is bounded by the small-file
-  * bytes, never the table. Bins are rewritten by one Spark job per
-  * distinct PER-DIRECTORY schema — one job total for a fixed-schema
-  * landing table, and never a job that unions schemas across partition
-  * dirs (a dir whose files don't carry some optional column must not gain
-  * a null-filled copy of it from a sibling dir's bin riding the same
-  * write). Within a job the binned files are read as an explicit file
-  * list (`recursiveFileLookup` so no hive-partition inference re-adds the
-  * dir-encoded columns into the data files), each row routed to its bin
-  * map-side by matching `input_file_name()` against a broadcast literal
-  * map keyed by the scan's own path rendering
-  * (`SparkPath.fromFileStatus(_).urlEncoded` — exact on every filesystem,
-  * authority and percent-encoding included; an unmapped file ⇒
-  * `raise_error`, never a silently mis-binned row), then ONE shuffle
-  * partitioned by bin id writes one file per bin (dynamic `partitionBy`
-  * under a dot-prefixed staging dir that plain readers cannot see,
-  * `maxRecordsPerFile` pinned off so a session default cannot split a
-  * bin). The shuffle moves only the small-file bytes.
+  *  - [[compactLanded]] / [[compactBacklog]] bin-pack small files. Per
+  *    partition directory, first-fit-decreasing packs the committed data
+  *    files SMALLER than `targetBytes` into bins of at most `targetBytes`
+  *    total, rewrites each bin of ≥ `minBinFiles` files into ONE
+  *    fresh-named file in the same directory, and deletes the bin's
+  *    sources. Files already ≥ `targetBytes` are never read, rewritten or
+  *    moved, so the rewrite cost is bounded by the small-file bytes. Bins
+  *    are rewritten by one Spark job per distinct PER-DIRECTORY schema,
+  *    never a job that unions schemas across partition dirs. Within a job
+  *    the binned files are read as an explicit file list
+  *    (`recursiveFileLookup`, so no partition inference re-adds the
+  *    dir-encoded columns into the data files), each row routed to its
+  *    bin map-side by matching `input_file_name()` against a literal map
+  *    keyed by the scan's own path rendering (an unmapped file ⇒
+  *    `raise_error`), then ONE shuffle partitioned by bin id writes one
+  *    file per bin.
+  *  - [[rewrite]] stages `f(rows in scope)`, where the scope is the whole
+  *    table or a set of its partition dirs, and journals the move of every
+  *    staged file into the scope followed by the deletion of every source
+  *    file in it. Retention's filter, the graduated-marker semi-join, the
+  *    sweep watermark's fold and the IVF delete's anti-join all run here.
+  *
+  * Protocol: the planner stages its output under a dot-prefixed staging
+  * dir that plain readers cannot see. Then a journal naming every
+  * (target, staged, sources) move is atomically published
+  * ([[graft.util.AtomicPublish.file]]). Only then does the swap apply the
+  * moves in journal order: rename the staged file to its target, then
+  * delete that move's sources. A [[rewrite]] journals its publishes first
+  * and one delete-only move last, so no source is deleted before every
+  * staged file of the run is published.
   *
   * Crash contract — heal FORWARD, never lose, duplicate only inside the
-  * crash window: after ALL bins are staged, a journal naming every
-  * (target, staged, sources) triple is atomically published
-  * ([[graft.util.AtomicPublish.file]]); only then does the swap run, per
-  * bin: rename the staged file to its fresh target name, THEN delete that
-  * bin's sources. Every [[compactLanded]] call heals a leftover journal
-  * first: target already published → delete the bin's remaining sources;
-  * staged still present → finish the rename, then delete; neither (the
-  * journal's write raced a crash impossibly early) → verify every source
-  * still present and skip, sources intact. A crash before the journal
-  * orphans only the dot-invisible staging dir (reclaimed by the next
-  * heal); a crash between a bin's rename and its source deletes leaves
-  * that bin transiently DUPLICATED — never missing — until the next run
-  * heals it: the at-least-once posture every landing-side component here
-  * chooses (the sweep watermark's "a crash can only re-sweep, never
-  * silently skip"). Rewriting row-to-file identity is safe for THESE
-  * tables because the landing path's idempotence is content-based (the
-  * digest anti-join in the graduation, the k:/r: dedup keys at the
-  * stream), never file-based; a table whose exactly-once story PINS file
-  * names — a streaming file-sink output with a `_spark_metadata` log,
-  * where readers resolve the file list through the log — must NOT be
-  * compacted underneath its log, and this operator REFUSES it loudly.
+  * crash window. Every run heals a leftover journal first, through the
+  * same move application: target present → delete the remaining sources;
+  * staged present → finish the rename, then delete; neither → legal only
+  * for a bin whose sources all survive (skipped, sources intact), while a
+  * move with NO sources (a rewrite's publish) fails loudly before any
+  * later move deletes a source. A crash before the journal orphans only
+  * the staging dir (reclaimed by the next heal). A crash between a
+  * rename and the deletes leaves those rows transiently DUPLICATED, never
+  * missing: a reader may see a rewritten row twice during the swap, and
+  * never sees it missing. Rewriting row-to-file identity is safe for these
+  * tables because none pins file names; a table whose exactly-once story
+  * does — a streaming file-sink output with a `_spark_metadata` log — is
+  * REFUSED loudly.
   *
-  * Concurrency contract: single-writer maintenance window, the same class
-  * contract as [[graft.streaming.CorpusIngest.compactGraduated]] — run
-  * between micro-batches (or in foreachBatch's exclusive window); a plain
-  * reader concurrent with the swap can observe a bin's rows twice for the
-  * instants between its rename and its deletes (documented above), and a
-  * reader concurrent with nothing (the normal case) sees only committed
-  * plain-parquet states.
+  * Concurrency contract: single-writer maintenance window. Run between
+  * micro-batches (or in foreachBatch's exclusive window); a reader
+  * concurrent with nothing sees only committed plain-parquet states.
   *
   * Driver-memory bound at extreme file counts: the plan (one recursive
-  * listing, the FFD bins, the file→bin literal map) is driver-side
-  * metadata sized by the files THIS run touches — fine at maintenance
-  * cadence, but a years-neglected table's 10⁶-small-file backlog would
-  * make one run's listing and bin-route literal driver-heavy. The
-  * bound is structural: `table` may be ANY directory, and the journal,
-  * staging and heal are all per-root, so runs over disjoint subtrees
-  * compose — each heals only its own protocol state — while the
-  * single-writer contract shrinks to the subtree each run owns.
-  * [[compactBacklog]] applies that bound
-  * automatically: it probes the file count with an EARLY-EXIT listing
-  * (never more than `budgetFiles`+1 entries held), and a subtree over
-  * budget recurses into its visible child directories — healing any
-  * journal a prior differently-sharded run left at the intermediate
-  * root, then compacting the root's own direct files as one scoped
-  * leaf — so a 10⁶-file backlog becomes many bounded per-subtree runs
-  * inside one call, driver metadata never exceeding one leaf's share.
-  * (A single FLAT directory over budget cannot shard below its own
-  * file count — it compacts as one leaf, the same cost as
-  * [[compactLanded]] today.)
+  * listing, the bins, the file→bin literal map) is driver-side metadata
+  * sized by the files one run touches. `table` may be ANY directory, and
+  * the journal, staging and heal are all per-root, so runs over disjoint
+  * subtrees compose. [[compactBacklog]] applies that bound automatically:
+  * it probes the file count with an EARLY-EXIT listing (never more than
+  * `budgetFiles`+1 entries held), and a subtree over budget recurses into
+  * its visible child directories — healing any journal a prior
+  * differently-sharded run left at the intermediate root, then compacting
+  * the root's own direct files as one scoped leaf. A single FLAT
+  * directory over budget cannot shard below its own file count and
+  * compacts as one leaf.
   */
 object TableCompaction {
 
@@ -120,11 +97,36 @@ object TableCompaction {
   private val StagingPrefix = ".compact_staging_"
   private val BinCol = "__graft_bin"
 
-  /** target == "" marks a DELETE-ONLY bin: every source was verified
+  /** One journaled move, paths relative to the table root. target == ""
+    * marks a DELETE-ONLY move: a bin whose every source was verified
     * zero-row before journaling (dynamic partitionBy writes no file for
-    * an empty bin), so the heal/swap just removes the empty files. */
+    * an empty bin), or a [[rewrite]]'s closing deletion of its scope.
+    * A move with no sources is a [[rewrite]]'s publish. */
   private final case class Move(
       target: String, staged: String, sources: Seq[String])
+
+  /** Thrown by the crash seam in place of a process death. */
+  private final class SimulatedCrash extends RuntimeException
+
+  private val crashAfterRenames = new ThreadLocal[Option[Int]] {
+    override def initialValue(): Option[Int] = None
+  }
+
+  private def crashPoint(renames: Int): Unit =
+    if (crashAfterRenames.get.contains(renames)) throw new SimulatedCrash
+
+  /** The one crash-injection seam every in-place rewrite shares: run
+    * `body` on this thread with the swap stopping, as a crash would, once
+    * the journal is published and `renames` staged files are renamed in
+    * (0 = right after the journal's publish; the k-th rename's own
+    * source deletes have not run). True iff the run reached that point.
+    * Production code never calls this. */
+  private[graft] def crashingAfter(renames: Int)(body: => Any): Boolean = {
+    crashAfterRenames.set(Some(renames))
+    try { body; false }
+    catch { case _: SimulatedCrash => true }
+    finally crashAfterRenames.remove()
+  }
 
   /** Filesystem + QUALIFIED root for `table`, resolved once at every
     * public entry: a relative table path would otherwise make the
@@ -179,15 +181,12 @@ object TableCompaction {
     (buf.toSeq.groupBy(_.getPath.getParent), journals.toSeq)
   }
 
-  private def dataFilesByDir(
-      fs: FileSystem, root: Path): Map[Path, Seq[FileStatus]] =
-    listCommitted(fs, root)._1
-
-  /** Count of committed data files — the dial the lifecycle entry emits. */
+  /** Count of committed data files: the one committed-file predicate
+    * the lifecycle entries and the sweep watermark's fold trigger read. */
   def committedDataFiles(spark: SparkSession, table: String): Long = {
     val (fs, root) = fsAndRoot(spark, table)
     if (!fs.exists(root)) 0L
-    else dataFilesByDir(fs, root).valuesIterator.map(_.size.toLong).sum
+    else listCommitted(fs, root)._1.valuesIterator.map(_.size.toLong).sum
   }
 
   /** First-fit-decreasing over the files smaller than `targetBytes`:
@@ -237,45 +236,90 @@ object TableCompaction {
       }
     }
 
+  /** Apply journaled moves in order — the one swap, run right after the
+    * journal's publish and again by every heal (class doc). The journal
+    * is written only after every file is staged, so "neither staged nor
+    * published" is unreachable by the protocol; it is still defended:
+    * a bin whose sources all survive is skipped, anything else surfaces,
+    * and the throw stops the run before a later move deletes a source. */
+  private def applyMoves(fs: FileSystem, root: Path, moves: Seq[Move]): Unit = {
+    var renamed = 0
+    for (m <- moves) {
+      val sources = m.sources.map(new Path(root, _))
+      val published = m.target.isEmpty || {
+        val target = new Path(root, m.target)
+        val staged = new Path(root, m.staged)
+        if (fs.exists(target)) true
+        else if (fs.exists(staged)) {
+          fs.mkdirs(target.getParent): Unit
+          require(fs.rename(staged, target),
+            s"in-place rewrite: failed to publish $staged -> $target")
+          renamed += 1
+          crashPoint(renamed)
+          true
+        } else {
+          require(sources.nonEmpty && sources.forall(fs.exists),
+            s"in-place rewrite: the move to $target has neither staged " +
+              "nor published file and its sources do not all survive — " +
+              "manual recovery required")
+          false
+        }
+      }
+      if (published) sources.foreach(s => fs.delete(s, false): Unit)
+      // a partition dir a delete-only move emptied (an IVF list whose
+      // every id was tombstoned) goes too: no reader lists a rowless dir
+      if (m.target.isEmpty)
+        sources.map(_.getParent).distinct.foreach { d =>
+          var dir = d
+          while (dir.toUri.getPath != root.toUri.getPath &&
+              fs.exists(dir) && fs.listStatus(dir).isEmpty) {
+            fs.delete(dir, true): Unit
+            dir = dir.getParent
+          }
+        }
+    }
+  }
+
+  /** Publish the journal, then swap (class doc). On return the table
+    * holds the planner's output and no protocol state. */
+  private def publishAndSwap(
+      spark: SparkSession, root: Path, moves: Seq[Move], staging: Path): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = root.getFileSystem(conf)
+    graft.util.AtomicPublish.file(conf, new Path(root, JournalName),
+      Some(JournalMagic)) { out =>
+      out.writeInt(moves.size)
+      moves.foreach { m =>
+        out.writeUTF(m.target); out.writeUTF(m.staged)
+        out.writeInt(m.sources.size); m.sources.foreach(out.writeUTF)
+      }
+    }
+    crashPoint(0)
+    applyMoves(fs, root, moves)
+    fs.delete(new Path(root, JournalName), false): Unit
+    fs.delete(staging, true): Unit
+  }
+
   /** Heal a leftover journal FORWARD (class doc), then reclaim orphaned
-    * staging dirs. Returns the number of journal bins processed; 0 when
-    * no journal existed. Runs first in every [[compactLanded]]. */
+    * staging dirs. Returns the number of journaled moves processed; 0
+    * when no journal existed. Runs first in every run over `table`. */
   private[graft] def healJournal(
       spark: SparkSession, table: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
     val (fs, root) = fsAndRoot(spark, table)
     if (!fs.exists(root)) return 0L
     val journal = new Path(root, JournalName)
+    // a hard kill inside the journal's own publish leaves a young
+    // dot-temp that confirmedAbsent counts as in flight; under the
+    // single-writer window nothing else can be publishing, so a read
+    // that still ends in FileNotFound IS that pre-journal crash (the
+    // publish lands whole or not at all)
     val moves: Seq[Move] =
       if (graft.util.AtomicPublish.confirmedAbsent(fs, journal)) Seq.empty
-      else readMoves(conf, journal)
-    for (m <- moves) {
-      val sources = m.sources.map(new Path(root, _))
-      if (m.target.isEmpty) {
-        // delete-only bin: sources were verified zero-row pre-journal
-        sources.foreach(s => fs.delete(s, false): Unit)
-      } else {
-        val target = new Path(root, m.target)
-        val staged = new Path(root, m.staged)
-        if (fs.exists(target)) ()            // published; finish the deletes
-        else if (fs.exists(staged))
-          require(fs.rename(staged, target), // finish the swap first
-            s"compaction heal: failed to publish $staged -> $target")
-        else {
-          // the journal is written only after ALL bins are staged, so
-          // this state is unreachable by the protocol — defend anyway:
-          // with every source still present, skipping loses nothing;
-          // with a source missing, rows may be gone — surface, never
-          // guess
-          require(sources.forall(fs.exists),
-            s"compaction heal: bin for ${m.target} has neither staged " +
-              "nor published file and some sources are missing — " +
-              "manual recovery required")
-        }
-        if (fs.exists(target))
-          sources.foreach(s => fs.delete(s, false): Unit)
-      }
-    }
+      else
+        try readMoves(conf, journal)
+        catch { case _: java.io.FileNotFoundException => Seq.empty }
+    applyMoves(fs, root, moves)
     if (moves.nonEmpty) fs.delete(journal, false): Unit
     // any staging dir is now an orphan (single-writer window): a crash
     // before its journal left sources intact; after, the heal above
@@ -421,38 +465,40 @@ object TableCompaction {
     }
   }
 
+  /** Heal `root`, then list its committed data files by dir. Any
+    * `.compact_journal` the listing finds BELOW the root is a crashed
+    * NARROWER-scoped run's protocol state (a backlog shard, a per-subtree
+    * maintenance run): heal each at ITS OWN root first — deepest first,
+    * each heal is confined to its subtree — and re-list, so half-swapped
+    * child state (published file + stale sources + live journal) is never
+    * planned over as committed data (rewriting both halves duplicates the
+    * rows permanently). Returns the moves healed and the listing. */
+  private def healAndList(spark: SparkSession, fs: FileSystem,
+      root: Path): (Long, Map[Path, Seq[FileStatus]]) = {
+    var healed = healJournal(spark, root.toString)
+    if (!fs.exists(root)) return (healed, Map.empty)
+    val (byDir, nested) = listCommitted(fs, root)
+    if (nested.isEmpty) return (healed, byDir)
+    nested.sortBy(-_.toUri.getPath.length)
+      .foreach(j => healed += healJournal(spark, j.getParent.toString))
+    val again = listCommitted(fs, root)
+    // healJournal deletes every journal it processes, so a survivor
+    // means an unreadable/empty journal — surface it, never plan over
+    // a subtree whose protocol state can't be resolved
+    require(again._2.isEmpty,
+      s"compaction: nested journal(s) survive healing under $root: " +
+        s"${again._2.mkString(", ")} — manual recovery required")
+    (healed, again._1)
+  }
+
   /** One scoped run at `root`: heal, list, compact — [[compactLanded]]
     * minus the ancestor refusal (done once per public call), shared by
-    * [[compactBacklog]]'s bounded leaves. Any `.compact_journal` the
-    * listing finds BELOW the root is a crashed NARROWER-scoped run's
-    * protocol state (a backlog shard, a per-subtree maintenance run):
-    * heal each at ITS OWN root first — deepest first, each heal is
-    * confined to its subtree — and re-list, so half-swapped child state
-    * (published bin + stale sources + live journal) is never planned
-    * over as committed data (re-binning both halves
-    * duplicates the rows permanently, and the surviving stale journal
-    * resurrects them again at the next child-scoped heal). */
+    * [[compactBacklog]]'s bounded leaves. */
   private def compactScoped(
       spark: SparkSession, fs: FileSystem, root: Path,
       targetBytes: Long, minBinFiles: Int): CompactStats = {
-    var healed = healJournal(spark, root.toString)
-    if (!fs.exists(root))
-      return CompactStats(0L, 0L, 0L, 0L, healed)
-    var (byDir, nested) = listCommitted(fs, root)
-    if (nested.nonEmpty) {
-      nested.sortBy(-_.toUri.getPath.length)
-        .foreach(j => healed += healJournal(spark, j.getParent.toString))
-      val again = listCommitted(fs, root)
-      // healJournal deletes every journal it processes, so a survivor
-      // means an unreadable/empty journal — surface it, never plan over
-      // a subtree whose protocol state can't be resolved
-      require(again._2.isEmpty,
-        s"compaction: nested journal(s) survive healing under $root: " +
-          s"${again._2.mkString(", ")} — manual recovery required")
-      byDir = again._1
-    }
-    compactFrom(spark, fs, root, byDir, targetBytes,
-      minBinFiles, healed)
+    val (healed, byDir) = healAndList(spark, fs, root)
+    compactFrom(spark, fs, root, byDir, targetBytes, minBinFiles, healed)
   }
 
   /** The plan → stage → journal → swap tail over an explicit `byDir`
@@ -462,20 +508,11 @@ object TableCompaction {
       byDir: Map[Path, Seq[FileStatus]], targetBytes: Long,
       minBinFiles: Int, healedAtRoot: Long): CompactStats = {
     val filesBefore = byDir.valuesIterator.map(_.size.toLong).sum
-    stageAndJournal(spark, root, byDir, targetBytes, minBinFiles) match {
+    stageBins(spark, root, byDir, targetBytes, minBinFiles) match {
       case None =>
         CompactStats(filesBefore, filesBefore, 0L, 0L, healedAtRoot)
       case Some((moves, rewrittenBytes, staging)) =>
-        for (m <- moves) {
-          if (m.target.nonEmpty) {
-            val target = new Path(root, m.target)
-            require(fs.rename(new Path(root, m.staged), target),
-              s"compactLanded: failed to publish ${m.staged} -> ${m.target}")
-          }
-          m.sources.foreach(s => fs.delete(new Path(root, s), false): Unit)
-        }
-        fs.delete(new Path(root, JournalName), false): Unit
-        fs.delete(staging, true): Unit
+        publishAndSwap(spark, root, moves, staging)
         // accounting off the run's own moves, not a second full listing
         // (the table's motivating problem IS its file count): every
         // source deleted, every non-empty target published
@@ -490,21 +527,15 @@ object TableCompaction {
     }
   }
 
-  /** The plan → stage → journal prefix of the protocol, shared verbatim
-    * between [[compactLanded]] and the spec's crash-injection seam
-    * [[stageAndJournalOnly]] (there is no way to crash a JVM
-    * mid-protocol from ScalaTest, so the spec needs the exact production
-    * prefix, stopped at the exact crash point — a restated copy would
-    * drift). None when no directory holds a qualifying bin; otherwise
-    * the journaled moves, the source bytes they rewrite, and the staging
-    * dir. On return the journal is PUBLISHED and the live table is still
-    * untouched — the swap (or a heal) can always complete forward. */
-  private def stageAndJournal(
+  /** The bin-packing planner: plan and stage the bins of `byDir`. None
+    * when no directory holds a qualifying bin; otherwise the moves to
+    * journal, the source bytes they rewrite, and the staging dir. The
+    * live table is untouched. */
+  private def stageBins(
       spark: SparkSession, root: Path,
       byDir: Map[Path, Seq[FileStatus]], targetBytes: Long,
       minBinFiles: Int): Option[(Seq[Move], Long, Path)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bins: Seq[(Int, Seq[FileStatus])] = byDir.toSeq
       .sortBy { case (dir, _) => dir.toUri.getPath }
       .flatMap { case (_, files) => planBins(files, targetBytes, minBinFiles) }
@@ -513,7 +544,6 @@ object TableCompaction {
 
     val runId = java.util.UUID.randomUUID().toString.take(12)
     val staging = new Path(root, s"$StagingPrefix$runId")
-
     // one staging job per distinct PER-DIR schema (class doc): a dir's
     // bins ride a job whose schema is the merge of exactly that dir's
     // binned files, so no bin's rewrite can absorb a column from a
@@ -588,44 +618,48 @@ object TableCompaction {
       }
     }
 
-    // intent journal AFTER all bins are staged, BEFORE any mutation of
-    // the live table — the heal can always complete forward from here
-    graft.util.AtomicPublish.file(conf, new Path(root, JournalName),
-      Some(JournalMagic)) { out =>
-      out.writeInt(moves.size)
-      moves.foreach { m =>
-        out.writeUTF(m.target); out.writeUTF(m.staged)
-        out.writeInt(m.sources.size); m.sources.foreach(out.writeUTF)
-      }
-    }
     Some((moves, bins.iterator.flatMap(_._2).map(_.getLen).sum, staging))
   }
 
-  /** The staging + journal half of [[compactLanded]] WITHOUT the swap —
-    * the crash-injection seam the spec drives to pin the heal paths.
-    * Returns the journaled moves' target names ("" for delete-only
-    * bins). Production code never calls this. */
-  private[graft] def stageAndJournalOnly(
-      spark: SparkSession, table: String, targetBytes: Long,
-      minBinFiles: Int = 2): Seq[String] = {
+  /** The rewrite planner (class doc): replace the committed rows under
+    * `scope` — sub-directories of `table` relative to its root, or the
+    * whole table when empty — with `f` of those rows, written
+    * `partitionBy` the given columns (restate the table's own partition
+    * columns, or the layout changes). The rows are read from exactly the
+    * listed source files through `spark`, so the caller's session conf
+    * (partition-column inference included) governs the read. Heals a
+    * leftover journal first. False, with nothing staged, when the scope
+    * holds no committed data file. */
+  private[graft] def rewrite(spark: SparkSession, table: String,
+      partitionBy: Seq[String] = Nil, scope: Seq[String] = Nil)(
+      f: DataFrame => DataFrame): Boolean = {
     val (fs, root) = fsAndRoot(spark, table)
-    val staged = stageAndJournal(spark, root,
-      dataFilesByDir(fs, root), targetBytes, minBinFiles)
-    require(staged.nonEmpty, "stageAndJournalOnly: nothing to stage")
-    staged.get._1.map(_.target)
-  }
-
-  /** Execute the first `n` journaled swaps' RENAME half only (no source
-    * deletes; delete-only bins have nothing to rename and are skipped) —
-    * the partial-swap crash shape the spec injects. */
-  private[graft] def renameFirstJournaled(
-      spark: SparkSession, table: String, n: Int): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val (fs, root) = fsAndRoot(spark, table)
-    readMoves(conf, new Path(root, JournalName))
-      .filter(_.target.nonEmpty).take(n).foreach { m =>
-        require(fs.rename(new Path(root, m.staged), new Path(root, m.target)),
-          s"renameFirstJournaled: $m")
+    refuseFileSinkAncestors(fs, root)
+    val sources = healAndList(spark, fs, root)._2.valuesIterator.flatten
+      .filter { st =>
+        val rel = relativize(root, st.getPath)
+        scope.isEmpty || scope.exists(d => rel.startsWith(d.stripSuffix("/") + "/"))
+      }.toSeq.sortBy(_.getPath.toUri.getPath)
+    if (sources.isEmpty) return false
+    val staging = new Path(root,
+      StagingPrefix + java.util.UUID.randomUUID().toString.take(12))
+    val w = f(spark.read.option("basePath", root.toString)
+      .parquet(sources.map(_.getPath.toString): _*)).write
+    (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*))
+      .parquet(staging.toString)
+    // every staged file publishes at its own path under the root (Spark's
+    // part names carry the write job's id, so they never collide), then
+    // ONE delete-only move retires the whole scope
+    val publishes = listCommitted(fs, staging)._1.valuesIterator.flatten
+      .toSeq.sortBy(_.getPath.toUri.getPath).map { st =>
+        val target = relativize(staging, st.getPath)
+        require(!fs.exists(new Path(root, target)),
+          s"in-place rewrite: $target already exists under $root")
+        Move(target, relativize(root, st.getPath), Nil)
       }
+    publishAndSwap(spark, root,
+      publishes :+ Move("", "", sources.map(st => relativize(root, st.getPath))),
+      staging)
+    true
   }
 }

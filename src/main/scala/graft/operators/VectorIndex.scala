@@ -96,7 +96,7 @@ object VectorIndex {
     }.sum
   }
 
-  /** The retrain trigger wired to the drift dials (r10 verdict #4):
+  /** The retrain trigger wired to the drift dials:
     * ext88 measures that recall DECAYS after the corpus mutates under a
     * stale quantizer; ext75/ext90 measure the drift that predicts it;
     * this closes the loop. TWO dials, each a bounded histogram compared
@@ -107,7 +107,7 @@ object VectorIndex {
     *  - sign-OCTANT buckets over dims 1–3 (quantizer-free; sees mean
     *    shifts that flip signs);
     *  - coarse-LIST occupancy — the current corpus assigned to the
-    *    STORED centroids (r11 verdict #3; one map-side pass, ≤ nLists
+    *    STORED centroids (one map-side pass, ≤ nLists
     *    rows) — which sees the sign-PRESERVING drift octants cannot
     *    (uniform scale-up, rotation in higher dims): assignments move
     *    off the stale centroids exactly when the partition the index
@@ -121,8 +121,8 @@ object VectorIndex {
     * codes with an old model. Below threshold NOTHING is touched
     * (spec-pinned byte-identical). Returns (psi, retrained).
     *
-    * Failure contract matches [[deleteIvfPq]]: re-runnable, not atomic —
-    * but never generation-mixing. A `.swap_pending` marker is created
+    * Failure contract: re-runnable, not atomic — but never
+    * generation-mixing. A `.swap_pending` marker is created
     * only once staging is FULLY built and removed only after the last
     * rename, so the next call sees the marker and completes the swap AS
     * A UNIT before the stats read: every still-staged subdir is
@@ -223,67 +223,33 @@ object VectorIndex {
   /** Index deletion — the remaining CRUD leg (GDPR erasure, retracted
     * documents, dedup-driven pruning): drop `ids` from the codes WITHOUT
     * touching unaffected inverted lists. The codes of the victim ids live
-    * in a handful of list= partitions; dynamic partition overwrite
-    * rewrites ONLY those partitions (anti-joined against the tombstones),
-    * so a delete of d docs costs O(lists containing them), never a full
-    * index rewrite — at index scale the difference between an erasure
-    * request and a rebuild. The model is untouched (a quantizer does not
-    * unlearn; retrain on drift, per [[appendIvfPq]]'s contract).
+    * in a handful of list= partitions, and only those are rewritten — an
+    * anti-join against the tombstones over
+    * [[TableCompaction.rewrite]] scoped to the affected list dirs — so a
+    * delete of d docs costs O(lists containing them), never a full index
+    * rewrite; a list whose every id is tombstoned is removed. The model is
+    * untouched (a quantizer does not unlearn; retrain on drift, per
+    * [[appendIvfPq]]'s contract).
     *
-    * Failure contract: the operation is IDEMPOTENTLY RE-RUNNABLE, not
-    * atomic (plain parquet directories have no multi-partition commit). A
-    * crash at any point leaves the index either untouched or partially
-    * erased, and re-running with the same `ids` completes the deletion:
-    * `affected` is recomputed from whatever codes remain, so already-
-    * cleared lists drop out and still-stale lists are rewritten. Callers
-    * MUST retry a failed delete; fully-tombstoned list dirs are cleared
-    * before the overwrite so the pure-deleted-data files go first, and the
-    * staging dir (survivor copies only) is removed on every exit path.
+    * Failure contract: the rewrite's. A crash heals forward at the start
+    * of the next delete: a search inside the crash window may see a
+    * surviving code twice, or a victim not yet deleted, and never misses
+    * a surviving code. Untouched lists' files stay byte-identical. Run in
+    * the index writer's exclusive window.
     */
   def deleteIvfPq(spark: SparkSession, dir: String, ids: DataFrame,
       idCol: String): Unit = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    val codes = s"$dir/codes"
+    // heal first, so the affected lists are read off a settled index
+    TableCompaction.healJournal(spark, codes): Unit
     val tombstones = broadcast(ids.select(col(idCol).as("neighbor_id")).distinct())
-    val codes = spark.read.parquet(s"$dir/codes")
     // bounded collect: list ids number ≤ nLists by construction
-    val affected = codes.join(tombstones, "neighbor_id")
-      .select("list").distinct().collect().map(_.getInt(0))
-    if (affected.isEmpty) return
-    // stage the survivors of the affected lists OUTSIDE the index first —
-    // Spark refuses to overwrite a path it is reading, and a mid-rewrite
-    // failure must not leave codes/ half-deleted
-    val tmp = s"$dir/codes_rewrite_tmp"
-    codes
-      .filter(col("list").isin(affected.map(Integer.valueOf).toSeq: _*))
-      .join(tombstones, Seq("neighbor_id"), "left_anti")
-      .select(codes.columns.filter(_ != "list").map(col) :+ col("list"): _*)
-      .write.mode("overwrite").partitionBy("list").parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    try {
-      val staged = spark.read.parquet(tmp)
-      // dynamic overwrite only replaces partitions PRESENT in the write — a
-      // list whose every row was tombstoned writes nothing and would keep
-      // its stale files. Clear those partition dirs BEFORE the overwrite
-      // (r6 advice): they hold ONLY deleted ids' codes, so for the erasure
-      // use case they are the most urgent bytes to destroy, and a crash
-      // between the two steps must not leave them readable behind a
-      // "delete succeeded" overwrite.
-      val remaining = staged.select("list").distinct().collect().map(_.getInt(0)).toSet
-      affected.filterNot(remaining).foreach { l =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/codes/list=$l"), true): Unit
-      }
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try staged.write.mode("overwrite").partitionBy("list").parquet(s"$dir/codes")
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    } finally
-      // tmp holds only survivor copies (no deleted codes) — clean it on
-      // every path so a failed run can't accumulate stale rewrite dirs
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true): Unit
+    val affected = spark.read.parquet(codes).join(tombstones, "neighbor_id")
+      .select("list").distinct().collect().map(_.getInt(0)).sorted
+    if (affected.nonEmpty)
+      TableCompaction.rewrite(spark, codes, Seq("list"),
+        affected.map(l => s"list=$l").toSeq)(
+        _.join(tombstones, Seq("neighbor_id"), "left_anti")): Unit
   }
 
   /** Search a built index. `corpus` supplies raw vectors for the exact

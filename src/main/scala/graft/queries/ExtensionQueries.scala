@@ -3356,17 +3356,22 @@ object ExtensionQueries {
       """)),
 
     // ------------------------------------------------------------- EXT88
-    // ANN recall AFTER index mutation (r6 verdict ask #8): ext62 audits a
-    // freshly-built index, but a production index is built once and then
-    // mutated — appends under the original quantizer, surgical deletes —
-    // and its recall decays silently as the stored distribution drifts
-    // from the trained one. This entry exercises the FULL lifecycle
-    // (build on the even half → append the odd half → delete every 7th
-    // id) and grades search on the MUTATED index against brute force over
-    // the surviving corpus — the number an index operator watches to
-    // decide when appendIvfPq's drift has earned a retrain. Rows-only
-    // (float recall vs engine-specific PQ codes); the recall floor and
-    // deleted-id absence are pinned in VectorIndexSpec.
+    // ANN recall AFTER index mutation: ext62 audits a freshly-built
+    // index, but a production index is built once and then mutated —
+    // appends under the original quantizer, surgical deletes — and its
+    // recall decays silently as the stored distribution drifts from the
+    // trained one. This entry exercises the FULL lifecycle (build on the
+    // even half → append the odd half → delete every 7th id) and grades
+    // search on the MUTATED index against brute force over the surviving
+    // corpus — the number an index operator watches to decide when
+    // appendIvfPq's drift has earned a retrain. The delete is the
+    // engine's one in-place rewrite (TableCompaction: stage → journal →
+    // swap → heal) scoped to the affected list= dirs: untouched lists
+    // stay byte-identical, and a crash heals forward at the next delete —
+    // a search may see a surviving code twice inside the window, never
+    // miss one. Rows-only (float recall vs engine-specific PQ codes); the
+    // recall floor, deleted-id absence and the delete's crash points are
+    // pinned in VectorIndexSpec.
     QueryDef(
       "ext88_ann_recall_after_mutation",
       (s, dir) => {
@@ -6155,7 +6160,7 @@ object ExtensionQueries {
 
     // ------------------------------------------------------------ EXT131
     // RETROACTIVE WATCHLIST SWEEP — the other half of ext125's
-    // enforcement story (r12 verdict #1): the live monitor scores new
+    // enforcement story: the live monitor scores new
     // ARRIVALS against the watchlist, but a takedown claim filed today
     // must also find YESTERDAY's landed corpus. This entry runs the
     // watermarked sweep (WatchlistMonitor.sweepWatchlist) over a landed
@@ -6170,6 +6175,11 @@ object ExtensionQueries {
     //         economics that hold when "landed" is 100 TB;
     //  re-run of day 2: empty delta, zero passes, zero appended rows —
     //         the idempotency the watermark exists for.
+    // Past its file bound the watermark folds to one row per clip through
+    // the engine's one in-place rewrite (TableCompaction: stage → journal
+    // → swap → heal); a crash inside the fold heals forward at the next
+    // sweep, so a watermark row may read twice, never go missing — the
+    // outcome that would re-sweep the whole watched set.
     // Output: the flags table (track doc_id, clip_id, offset_units,
     // coverage) — each embed flags its clip at offset 3, coverage 1.0,
     // exactly the live monitor's verdict for the same pair (shared flag
@@ -6600,15 +6610,11 @@ object ExtensionQueries {
       None, bench = false, eagerLifecycle = true), // stateful lifecycle entry, like ext121/ext131
 
     // ------------------------------------------------------------ EXT136
-    // LANDED-TABLE SMALL-FILE COMPACTION ARC (r14) — the last table in
-    // the ingest estate with NO maintenance story: the audited landing
+    // LANDED-TABLE SMALL-FILE COMPACTION ARC — the audited landing
     // sinks append one parquet file per source-partition per micro-batch
     // (a year of 30-second batches is ~10⁶ files per source dir; every
-    // downstream scan pays a task per file), and while the fingerprint
-    // store folds behind its manifest (ext133/134), the graduated
-    // markers rewrite, the sweep watermark fold-compacts and the ANN
-    // index swaps generations, the landing table itself just accumulated.
-    // `TableCompaction.compactLanded` closes the set WITHOUT giving the
+    // downstream scan pays a task per file).
+    // `TableCompaction.compactLanded` bounds that WITHOUT giving the
     // table a manifest — its value is that any engine (the DuckDB oracle
     // included) reads it as a plain partitioned dir — so the protocol is
     // an intent JOURNAL instead: per partition dir, FFD-bin the files
@@ -6626,7 +6632,8 @@ object ExtensionQueries {
     // discipline) so the rewrite cost is bounded by the small-file
     // bytes; a crash heals FORWARD from the journal on the next run
     // (transient duplicate inside the crash window, never a loss — the
-    // sweep watermark's at-least-once posture), and rewriting
+    // contract of every in-place rewrite, which all share this
+    // protocol), and rewriting
     // row-to-file identity is safe because the landing path's
     // idempotence is content-based (digest anti-joins, k:/r: dedup
     // keys), never file-based — a `_spark_metadata` file-sink table,
@@ -6639,8 +6646,8 @@ object ExtensionQueries {
     // at deliveries. Rows-only (filesystem lifecycle);
     // TableCompactionSpec pins contents-unchanged (incl. the dir-encoded
     // partition column staying OUT of the data bytes), untouched-file
-    // byte-identity, both crash-heal paths through the production
-    // staging seam, delete-only zero-row bins, the file-sink refusal,
+    // byte-identity, both crash-heal paths through the shared crash
+    // seam, delete-only zero-row bins, the file-sink refusal,
     // and the entry's exact arc at sf0.001.
     QueryDef(
       "ext136_landed_compaction",
@@ -6682,22 +6689,18 @@ object ExtensionQueries {
       None, bench = false, eagerLifecycle = true), // stateful lifecycle entry, like ext121/ext131
 
     // ------------------------------------------------------------ EXT137
-    // REJECTS RETENTION + MARKER COMPACTION ARC (r14) — the maintenance
-    // pass compactGraduated's contract has referenced since r11 ("run
-    // after each rejects-retention pass") without the repo having one:
-    // every audited ingest posture appends one rejects row per rejected
-    // delivery FOREVER, and unlike the graduated markers — where losing
-    // a row is safe-by-direction — losing a rejects row outside the
-    // policy silently un-audits a suspect. `Retention.expireOlderThan`
-    // is therefore a STAGED REWRITE behind a `.retention_pending` marker
-    // (the VectorIndex generation-swap discipline): stage the kept rows
-    // dot-invisibly, publish the marker, swap, delete the marker — a
-    // crash at any point heals FORWARD on the next call (staged rows are
-    // the committed intent once the marker exists), and plain readers
-    // see the untouched table until the swap's own blink, which is why
-    // retention shares the graduation's single-writer maintenance
-    // window. Zero shuffle: one map-side filter pass, and the rewrite
-    // consolidates the append-cadence small files as a side effect. The
+    // REJECTS RETENTION + MARKER COMPACTION ARC — every audited ingest
+    // posture appends one rejects row per rejected delivery FOREVER, and
+    // losing a rejects row outside the policy silently un-audits a
+    // suspect. `Retention.expireOlderThan` (a filter) and
+    // `CorpusIngest.compactGraduated` (a semi-join against the surviving
+    // rejects) both run through the engine's one in-place rewrite
+    // (TableCompaction: stage dot-invisibly → publish the journal → swap
+    // → heal): a crash at any point heals FORWARD on the next call, and a
+    // reader may see a rewritten row twice during the swap, never
+    // missing. Both share the graduation's single-writer maintenance
+    // window. Retention shuffles nothing: one map-side filter pass, and
+    // the rewrite consolidates the append-cadence small files. The
     // entry runs the DEPLOYED composition end-to-end on a bounded slice:
     // the bloom-gated decontaminating ingest (fpp 0.5, minRun 1 — the
     // noisy dial, so the rejects table actually fills) over a corpus
@@ -6709,8 +6712,8 @@ object ExtensionQueries {
     // rows_expired): rejects fall only at the retention step, markers
     // only at the compaction step, the no-op expires nothing. Rows-only
     // (Bloom bit layout engine-specific, stateful lifecycle);
-    // RetentionSpec pins the policy semantics, every crash-heal path
-    // through the production staging seam, the compactGraduated
+    // RetentionSpec pins the policy semantics, both rewrites' journal
+    // crash points through the shared crash seam, the compactGraduated
     // composition row-for-row, and the entry's exact arc at sf0.001.
     QueryDef(
       "ext137_rejects_retention",

@@ -427,52 +427,31 @@ object CorpusIngest {
     * "never pay the exact scan twice" is one marker row per all-time
     * suspect, and nothing else ever deletes one. A marker's only job is
     * to anti-join its suspect row away in [[graduateBloomRejects]], so
-    * once the retention policy ([[graft.operators.Retention]] — the
-    * staged-rewrite-behind-a-marker pass) removes a suspect from
-    * `<table>_rejects` (the audit trail the markers mirror), its marker
-    * is dead weight: this keeps exactly the markers whose (doc_id,
-    * digest) still exists among the rejects' "contaminated_maybe" rows
-    * and rewrites the table. Run after each rejects-retention pass, in
-    * the same maintenance window as the graduation (single writer, like
-    * every maintenance path here). A crash mid-rewrite re-runs: the
-    * compacted set is checkpointed off-table before the overwrite, and
-    * losing a marker is safe-by-direction (its suspect merely pays the
-    * idempotent exact scan once more). No-op when no marker table
-    * exists. */
+    * once the retention policy ([[graft.operators.Retention]]) removes a
+    * suspect from `<table>_rejects` (the audit trail the markers
+    * mirror), its marker is dead weight: this keeps exactly the markers
+    * whose (doc_id, digest) still exists among the rejects'
+    * "contaminated_maybe" rows — a semi-join over
+    * [[graft.operators.TableCompaction.rewrite]], so a crash heals
+    * forward on the next call and never loses a marker. A rejects table
+    * that retention removed ENTIRELY is decided structurally
+    * ([[graft.util.CommittedTable.hasData]]): every marker then mirrors
+    * nothing and the rewrite keeps none, while a genuine read failure on
+    * a healthy table propagates. Run after each rejects-retention pass,
+    * in the same single-writer maintenance window as the graduation.
+    * No-op when no marker table exists. */
   def compactGraduated(spark: SparkSession, table: String): Unit = {
-    val graduatedPath = s"${table}_graduated"
-    // structural no-op decision, like every emptiness branch here: a Try
-    // would also fold a transient read failure on a HEALTHY markers
-    // table into "nothing graduated yet" — benign per call, but a
-    // persistently failing table would silently never compact (and
-    // never surface); now the genuine failure propagates from the read
-    if (!graft.util.CommittedTable.hasData(spark, graduatedPath))
-      return // nothing graduated yet
-    val done = spark.read.parquet(graduatedPath).select("doc_id", "digest")
-    // "rejects table removed by retention" is decided STRUCTURALLY
-    // (r13 ADVICE — the sweep watermark's discipline): a retention pass
-    // may have removed the table ENTIRELY, and then every marker mirrors
-    // a suspect that no longer exists, so the right outcome is an empty
-    // marker table. The Try this replaces folded a transient IO error on
-    // a HEALTHY table into that destructive branch; now a genuine read
-    // failure PROPAGATES. What the structural check does NOT defend
-    // against is a CONCURRENT rejects overwrite (its delete→write window
-    // is structurally indistinguishable from "removed") — that exclusion
-    // is the class contract: retention, graduation and this compaction
-    // share one single-writer maintenance window (scaladoc).
-    val kept =
-      if (!graft.util.CommittedTable.hasData(spark, s"${table}_rejects"))
-        done.limit(0)
-      else
-        done.join(
-          spark.read.parquet(s"${table}_rejects")
+    val rejects = s"${table}_rejects"
+    val haveRejects = graft.util.CommittedTable.hasData(spark, rejects)
+    graft.operators.TableCompaction.rewrite(spark, s"${table}_graduated") {
+      done =>
+        if (!haveRejects) done.limit(0)
+        else done.join(
+          spark.read.parquet(rejects)
             .filter(col("reject_reason") === "contaminated_maybe")
             .select("doc_id", "digest"),
           Seq("doc_id", "digest"), "left_semi").distinct()
-    // checkpoint BEFORE overwrite: parquet cannot overwrite a path its
-    // plan is still reading
-    kept.localCheckpoint(true)
-      .write.mode("overwrite").parquet(graduatedPath)
+    }: Unit
   }
 
   /** The EXCISE-policy gate verdicts — [[gateVerdicts]]'s reject-on-hit

@@ -247,7 +247,7 @@ object WatchlistMonitor {
     flags
   }
 
-  /** [[sweepLanded]] with PERSISTED bookkeeping (r12 verdict #2):
+  /** [[sweepLanded]] with PERSISTED bookkeeping:
     * instead of the CALLER tracking "clips added since the last sweep",
     * a `<out>_swept` parquet watermark beside the flags table records
     * (clip_id, sweep_epoch) for every clip ever swept, the sweep
@@ -268,20 +268,24 @@ object WatchlistMonitor {
     * direction is impossible. Returns the delta's flags (empty frame in
     * the flag schema when the delta is empty).
     *
-    * The watermark is never collected to the driver (r13 verdict #3):
-    * the delta AND the max epoch come from ONE aggregate pass over the
-    * watermark scan (a map-side `isin` probe of the driver-bounded
-    * watched set feeding a `collect_set`, beside the `max`), and
-    * [[compactSweptIfFragmented]] folds the table back to one row per
-    * clip once its appended files pass a bound — so the watermark stays
-    * a compact (clip_id, latest epoch) table at takedown-archive scale
-    * instead of a monotone append trail. */
+    * The watermark is never collected to the driver: the delta AND the
+    * max epoch come from ONE aggregate pass over the watermark scan (a
+    * map-side `isin` probe of the driver-bounded watched set feeding a
+    * `collect_set`, beside the `max`). Once its committed files pass
+    * `compactFileBound` the watermark folds back to one row per clip
+    * (latest epoch) through [[graft.operators.TableCompaction.rewrite]],
+    * so it stays a compact (clip_id, latest epoch) table at
+    * takedown-archive scale; a crash inside the fold heals forward at
+    * the start of the next sweep — a watermark row may read twice during
+    * the swap, and is never missing. */
   def sweepWatchlist[W](
       spark: org.apache.spark.sql.SparkSession, landedTable: String,
       watchedIds: Seq[Long], loadClips: Seq[Long] => W,
       flag: (DataFrame, W) => DataFrame, out: String,
       compactFileBound: Int = SweptCompactFileBound): DataFrame = {
     val sweptPath = s"${out}_swept"
+    // finish a fold a crash interrupted before the watermark is read
+    graft.operators.TableCompaction.healJournal(spark, sweptPath): Unit
     // "nothing durably swept" is decided STRUCTURALLY
     // ([[graft.util.CommittedTable]] — never by swallowing a read
     // failure): a transient IO error on a healthy watermark must
@@ -290,17 +294,14 @@ object WatchlistMonitor {
     // double-append every historical flag
     val haveSwept = graft.util.CommittedTable.hasData(spark, sweptPath)
     import spark.implicits._
-    // delta + epoch computed DISTRIBUTED (r13 verdict #3): the watermark
-    // holds one row per clip EVER swept, so collecting the whole table
-    // to the driver was the one driver-sized structure in an otherwise
-    // broadcast-probe path. ONE aggregate pass computes both (the sweep
-    // hot path was paying two full watermark scans — a semi-join job for
-    // the intersection, then a second scan for the max epoch): the
-    // WATCHED set is driver-bounded by contract (it arrives as a Seq),
-    // so it probes as a map-side `isin` (In/InSet — no join, no
-    // exchange of watermark rows beyond the partial-agg row per task)
-    // feeding a `collect_set` beside the `max`; the driver receives one
-    // row whose set column is bounded by the same watchlist contract.
+    // delta + epoch computed DISTRIBUTED: the watermark holds one row
+    // per clip EVER swept, so it never reaches the driver, and ONE
+    // aggregate pass computes both: the WATCHED set is driver-bounded
+    // by contract (it arrives as a Seq), so it probes as a map-side
+    // `isin` (In/InSet — no join, no exchange of watermark rows beyond
+    // the partial-agg row per task) feeding a `collect_set` beside the
+    // `max`; the driver receives one row whose set column is bounded by
+    // the same watchlist contract.
     val (delta, epoch): (Seq[Long], Long) = {
       val watched = watchedIds.distinct
       if (!haveSwept) (watched.sorted, 1L)
@@ -330,11 +331,16 @@ object WatchlistMonitor {
         .withColumn("sweep_epoch", lit(epoch))
         .coalesce(1)
         .write.mode("append").parquet(sweptPath)
-      // bound the watermark's file/row accretion (r13 verdict #3): each
-      // sweep appends one file, and a crash re-sweep may duplicate a
-      // clip's row (at-least-once, as documented) — nothing else ever
-      // rewrites them, so without a fold the table grows monotonically
-      compactSweptIfFragmented(spark, sweptPath, compactFileBound)
+      // bound the watermark's file/row accretion: each sweep appends one
+      // file, and a crash re-sweep may duplicate a clip's row
+      // (at-least-once, as documented). coalesce(1): the folded
+      // (long, long) rows would otherwise land as up-to-32 mostly-empty
+      // files and re-trip the bound on the very next sweep
+      if (graft.operators.TableCompaction.committedDataFiles(spark, sweptPath) >
+          compactFileBound)
+        graft.operators.TableCompaction.rewrite(spark, sweptPath)(
+          _.groupBy("clip_id").agg(max("sweep_epoch").as("sweep_epoch"))
+            .coalesce(1)): Unit
       flags
     }
   }
@@ -344,35 +350,6 @@ object WatchlistMonitor {
     * file per effective sweep, so ~16 sweeps between folds; overridable
     * per call for tests). */
   private val SweptCompactFileBound = 16
-
-  /** Overwrite-compact the sweep watermark to (clip_id, latest
-    * sweep_epoch) once its committed-file count passes
-    * [[SweptCompactFileBound]]. Checkpointed BEFORE the overwrite
-    * (parquet cannot overwrite a path its plan still reads; the
-    * checkpoint is watermark-sized — (long, long) rows, one per all-time
-    * watched clip). The overwrite's delete→write window is crash-unsafe
-    * only in the SAFE direction: a watermark lost mid-rewrite re-sweeps
-    * and re-appends flags on the next call (dedup downstream, the
-    * at-least-once posture everywhere here) — it can never record a
-    * sweep that didn't land. */
-  private def compactSweptIfFragmented(
-      spark: org.apache.spark.sql.SparkSession, sweptPath: String,
-      bound: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(sweptPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nFiles = fs.listStatus(p).count(f =>
-      f.isFile && f.getPath.getName.endsWith(".parquet"))
-    if (nFiles > bound) {
-      // coalesce(1): the folded watermark is (long, long) rows — left at
-      // the shuffle partitioning it would land as up-to-32 mostly-empty
-      // files and re-trip the file bound on the very next sweep
-      spark.read.parquet(sweptPath)
-        .groupBy("clip_id").agg(max("sweep_epoch").as("sweep_epoch"))
-        .localCheckpoint(true)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(sweptPath)
-    }
-  }
 
   /** The modality-generic core: ONE fenced decode per item, the vote per
     * broadcast clip, explode to flag rows. The broadcast ships the

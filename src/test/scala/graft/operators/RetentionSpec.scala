@@ -7,10 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
 /** [[Retention.rewriteKeeping]] / [[Retention.expireOlderThan]] — the
-  * staged-rewrite-behind-a-marker retention for audit tables: policy
-  * semantics, stats, schema/layout preservation, idempotence, and every
-  * crash window of the marker protocol driven through the production
-  * staging seam. */
+  * retention filter over [[TableCompaction.rewrite]] for audit tables:
+  * policy semantics, stats, schema/layout preservation, idempotence, and
+  * every crash point of the rewrite's journal (its intent marker) driven
+  * through the shared crash seam [[TableCompaction.crashingAfter]]. */
 class RetentionSpec extends AnyFunSuite with SparkTestSession {
 
   private def withDir[T](body: String => T): T =
@@ -33,6 +33,14 @@ class RetentionSpec extends AnyFunSuite with SparkTestSession {
       .collect().toSeq.sortBy(_.getLong(0))
 
   private val day2 = java.sql.Timestamp.valueOf("2026-01-02 00:00:00")
+
+  private val keepDay2 = col("ingest_ts") >= lit(day2)
+
+  /** Protocol state the rewrite left under `table`: its journal and any
+    * staging dir. */
+  private def litter(table: String): Seq[String] =
+    Option(fs(table).globStatus(new Path(table, ".compact_*")))
+      .getOrElse(Array.empty).map(_.getPath.getName).toSeq
 
   test("expireOlderThan keeps exactly the rows at/after the cutoff, " +
       "schema intact, and reports the counts") {
@@ -90,9 +98,9 @@ class RetentionSpec extends AnyFunSuite with SparkTestSession {
     withDir { base =>
       val table = s"$base/t"
       rejects(20).write.parquet(table)
-      Retention.stageAndMarkOnly(spark, table,
-        col("ingest_ts") >= lit(day2)): Unit
-      // crash window: marker + staged + UNTOUCHED table — a plain
+      assert(TableCompaction.crashingAfter(0)(
+        Retention.rewriteKeeping(spark, table, keepDay2)))
+      // crash window: journal + staged + UNTOUCHED table — a plain
       // reader mid-protocol still sees all 20 rows
       assert(spark.read.parquet(table).count() == 20)
       // the next retention call heals forward first: the staged state
@@ -100,38 +108,28 @@ class RetentionSpec extends AnyFunSuite with SparkTestSession {
       val stats = Retention.expireOlderThan(spark, table, "ingest_ts", day2)
       assert(stats == Retention.RetentionStats(10L, 10L, 0L))
       assert(rowsOf(table).size == 10)
+      assert(litter(table).isEmpty)
     }
   }
 
-  test("heals forward from a crash mid-swap (table dir deleted, staged " +
-      "not yet renamed)") {
-    withDir { base =>
+  test("heals forward from a crash after k renames: a kept row may read " +
+      "twice inside the window, never missing") {
+    for (k <- Seq(1, 2)) withDir { base =>
       val table = s"$base/t"
-      rejects(20).write.parquet(table)
-      Retention.stageAndMarkOnly(spark, table,
-        col("ingest_ts") >= lit(day2)): Unit
-      fs(table).delete(new Path(table), true): Unit // the blink, frozen
-      assert(Retention.healPending(spark, table))
-      assert(rowsOf(table).size == 10)
-      // marker gone; a second heal finds nothing
-      assert(!Retention.healPending(spark, table))
-    }
-  }
-
-  test("a marker whose staged dir is gone with the table present means " +
-      "the swap completed: heal just drops the marker") {
-    withDir { base =>
-      val table = s"$base/t"
-      rejects(20).write.parquet(table)
-      val stagedName = Retention.stageAndMarkOnly(spark, table,
-        col("ingest_ts") >= lit(day2))
-      // simulate the post-swap crash: staged renamed in, marker not yet
-      // deleted — equivalently, replace the table with the staged dir
-      val f = fs(table)
-      f.delete(new Path(table), true): Unit
-      assert(f.rename(new Path(s"$base/$stagedName"), new Path(table)))
-      assert(Retention.healPending(spark, table))
-      assert(rowsOf(table).size == 10)
+      // partitioned, so the kept rows stage as one file per source dir
+      rejects(30).write.partitionBy("source").parquet(table)
+      val all = rowsOf(table)
+      assert(TableCompaction.crashingAfter(k)(Retention.expireOlderThan(
+        spark, table, "ingest_ts", day2, partitionBy = Seq("source"))))
+      // k kept files are published beside every untouched source
+      val mid = rowsOf(table)
+      assert(mid.size > all.size && all.forall(mid.contains),
+        s"k=$k: the crash window may duplicate rows, never drop one")
+      val stats = Retention.expireOlderThan(spark, table, "ingest_ts",
+        day2, partitionBy = Seq("source"))
+      assert(stats == Retention.RetentionStats(15L, 15L, 0L), s"k=$k: $stats")
+      assert(rowsOf(table) == all.filter(!_.getTimestamp(1).before(day2)))
+      assert(litter(table).isEmpty, s"k=$k: ${litter(table)}")
     }
   }
 
@@ -225,11 +223,11 @@ class RetentionSpec extends AnyFunSuite with SparkTestSession {
       val table = s"$base/t"
       rejects(4).write.parquet(table)
       // the shape AtomicPublish.file leaves when killed between create
-      // and rename: a young dot-temp beside the never-published marker
-      val tmp = new Path(
-        s"$base/..t.retention_pending.${"ab12cd34ef56"}.tmp")
+      // and rename: a young dot-temp beside the never-published journal
+      val tmp = new Path(s"$table/..compact_journal.${"ab12cd34ef56"}.tmp")
       val out = fs(table).create(tmp, true); out.writeUTF("torn"); out.close()
-      assert(!Retention.healPending(spark, table)) // no marker: heal is clean
+      // no journal: the heal is clean
+      assert(TableCompaction.healJournal(spark, table) == 0L)
       val stats = Retention.expireOlderThan(spark, table, "ingest_ts", day2)
       assert(stats.rowsExpired == 2) // retention proceeds immediately
     }
@@ -239,9 +237,10 @@ class RetentionSpec extends AnyFunSuite with SparkTestSession {
     withDir { base =>
       val table = s"$base/t"
       rejects(4).write.parquet(table)
-      val orphan = new Path(s"$base/.t.retention_staged_deadbeef")
-      fs(table).mkdirs(orphan): Unit
-      assert(!Retention.healPending(spark, table)) // no marker
+      // a pre-journal crash: kept rows staged, no journal published
+      val orphan = new Path(s"$table/.compact_staging_deadbeef")
+      rejects(4).write.parquet(orphan.toString)
+      assert(TableCompaction.healJournal(spark, table) == 0L) // no journal
       assert(!fs(table).exists(orphan))
       assert(rowsOf(table).size == 4) // table untouched
     }
@@ -251,14 +250,18 @@ class RetentionSpec extends AnyFunSuite with SparkTestSession {
     withDir { base =>
       val table = s"$base/t"
       rejects(4).write.parquet(table)
-      val stagedName = Retention.stageAndMarkOnly(spark, table,
-        col("ingest_ts") >= lit(day2))
-      val f = fs(table)
-      f.delete(new Path(table), true): Unit
-      f.delete(new Path(s"$base/$stagedName"), true): Unit
-      intercept[IllegalArgumentException] {
-        Retention.healPending(spark, table)
+      assert(TableCompaction.crashingAfter(0)(
+        Retention.rewriteKeeping(spark, table, keepDay2)))
+      // a journaled publish whose staged file AND target are both gone:
+      // its rows survive nowhere but in the sources
+      litter(table).filter(_.startsWith(".compact_staging_"))
+        .foreach(d => fs(table).delete(new Path(table, d), true): Unit)
+      val e = intercept[IllegalArgumentException] {
+        Retention.rewriteKeeping(spark, table, keepDay2)
       }
+      assert(e.getMessage.contains("manual recovery"))
+      // the loud failure deleted no source
+      assert(rowsOf(table).size == 4)
     }
   }
 
@@ -313,16 +316,15 @@ class RetentionSpec extends AnyFunSuite with SparkTestSession {
       // random crash injection before the healing policy run
       rnd.nextInt(4) match {
         case 0 => // no crash
-        case 1 => // crash after the marker, before the swap
-          Retention.stageAndMarkOnly(spark, table, keep, parts): Unit
-        case 2 => // crash mid-swap: table dir deleted, staged not renamed
-          Retention.stageAndMarkOnly(spark, table, keep, parts): Unit
-          fs(table).delete(new Path(table), true): Unit
-        case _ => // crash after the swap, marker not yet deleted
-          val staged = Retention.stageAndMarkOnly(spark, table, keep, parts)
-          fs(table).delete(new Path(table), true): Unit
-          assert(fs(table).rename(new Path(s"$base/$staged"),
-            new Path(table)))
+        case 1 => // crash after the journal, before any rename
+          assert(TableCompaction.crashingAfter(0)(
+            Retention.rewriteKeeping(spark, table, keep, parts)))
+        case 2 => // crash after k renames (the run completes when fewer
+          // files staged), the sources not yet deleted
+          TableCompaction.crashingAfter(1 + rnd.nextInt(2))(
+            Retention.rewriteKeeping(spark, table, keep, parts)): Unit
+        case _ => // crash before the journal: an orphan staging dir
+          df.limit(1).write.parquet(s"$table/.compact_staging_r$round")
       }
       val stats = Retention.rewriteKeeping(spark, table, keep, parts)
       assert(stats.rowsExpired == 0 || stats.rowsExpired ==
@@ -333,9 +335,8 @@ class RetentionSpec extends AnyFunSuite with SparkTestSession {
             .collect().toSeq.sorted
         else Seq.empty[Long]
       assert(got == expected, s"round $round: policy outcome diverged")
-      // no marker, no staged litter
-      val litter = fs(table).globStatus(new Path(base, ".t.retention_*"))
-      assert(litter == null || litter.isEmpty, s"round $round: litter")
+      // no journal, no staged litter
+      assert(litter(table).isEmpty, s"round $round: ${litter(table)}")
     }
   }
 
@@ -419,6 +420,31 @@ class RetentionSpec extends AnyFunSuite with SparkTestSession {
       assert(markers.count() == 3)
       assert(markers.select("doc_id").as[Long].collect().sorted.toSeq ==
         Seq(3L, 4L, 5L))
+    }
+  }
+
+  test("compactGraduated heals forward from a crash at the journal and " +
+      "after k renames: no graduated marker is lost") {
+    for (k <- Seq(0, 1)) withDir { base =>
+      val table = s"$base/corpus"
+      import spark.implicits._
+      (0 until 6).map(i => (i.toLong, s"d$i", "contaminated_maybe"))
+        .toDF("doc_id", "digest", "reject_reason")
+        .filter(col("doc_id") >= 2).write.parquet(s"${table}_rejects")
+      // markers for all six suspects, appended over three graduations
+      for (b <- 0 until 3)
+        (0 until 6).filter(_ % 3 == b).map(i => (i.toLong, s"d$i"))
+          .toDF("doc_id", "digest").write.mode("append")
+          .parquet(s"${table}_graduated")
+      def markers(): Seq[Long] = spark.read.parquet(s"${table}_graduated")
+        .select("doc_id").as[Long].collect().toSeq.sorted
+      assert(TableCompaction.crashingAfter(k)(
+        graft.streaming.CorpusIngest.compactGraduated(spark, table)))
+      // inside the window every marker still reads, possibly twice
+      assert((0L until 6L).forall(markers().contains), s"k=$k: ${markers()}")
+      graft.streaming.CorpusIngest.compactGraduated(spark, table)
+      assert(markers() == Seq(2L, 3L, 4L, 5L), s"k=$k: ${markers()}")
+      assert(litter(s"${table}_graduated").isEmpty)
     }
   }
 }

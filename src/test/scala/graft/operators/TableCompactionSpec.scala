@@ -10,7 +10,8 @@ import graft.SparkTestSession
   * compaction: contents-unchanged, untouched-files-byte-identical,
   * idempotence, the `_spark_metadata` refusal, delete-only zero-row
   * bins, and the journal heal paths (crash after journal / crash
-  * mid-swap), driven through the production staging seam. */
+  * mid-swap), driven through the crash seam
+  * [[TableCompaction.crashingAfter]]. */
 class TableCompactionSpec extends AnyFunSuite with SparkTestSession {
 
   private def withDir[T](body: String => T): T =
@@ -261,8 +262,8 @@ class TableCompactionSpec extends AnyFunSuite with SparkTestSession {
       val crashed = s"$base/crashed"
       landPartitioned(crashed)
       val beforeCrash = rowsOf(crashed)
-      TableCompaction.stageAndJournalOnly(spark, crashed,
-        targetBytes = 64L << 20): Unit
+      assert(TableCompaction.crashingAfter(0)(
+        TableCompaction.compactLanded(spark, crashed, 64L << 20)))
       val s3 = TableCompaction.compactBacklog(spark, crashed,
         targetBytes = 64L << 20, budgetFiles = 3)
       assert(s3.healedBins == 2, s"both journaled bins heal forward: $s3")
@@ -339,9 +340,8 @@ class TableCompactionSpec extends AnyFunSuite with SparkTestSession {
     withDir { table =>
       landPartitioned(table)
       val before = rowsOf(table)
-      val targets = TableCompaction.stageAndJournalOnly(spark, table,
-        64L << 20)
-      assert(targets.nonEmpty)
+      assert(TableCompaction.crashingAfter(0)(
+        TableCompaction.compactLanded(spark, table, 64L << 20)))
       // journal published, bins staged — a plain reader mid-protocol
       // sees exactly the pre-compaction table
       assert(rowsOf(table) == before)
@@ -355,12 +355,12 @@ class TableCompactionSpec extends AnyFunSuite with SparkTestSession {
     withDir { table =>
       landPartitioned(table)
       val before = rowsOf(table)
-      val targets = TableCompaction.stageAndJournalOnly(spark, table,
-        64L << 20)
-      // "crash"; the next run heals the journaled swap forward, then
-      // finds nothing left to bin
+      assert(TableCompaction.crashingAfter(0)(
+        TableCompaction.compactLanded(spark, table, 64L << 20)))
+      // "crash"; the next run heals the journaled swap forward (one bin
+      // per source dir), then finds nothing left to bin
       val stats = TableCompaction.compactLanded(spark, table, 64L << 20)
-      assert(stats.healedBins == targets.size)
+      assert(stats.healedBins == 2)
       assert(stats.binsWritten == 0)
       assert(rowsOf(table) == before)
       assert(TableCompaction.committedDataFiles(spark, table) == 2)
@@ -376,10 +376,10 @@ class TableCompactionSpec extends AnyFunSuite with SparkTestSession {
     withDir { table =>
       landPartitioned(table)
       val before = rowsOf(table)
-      val targets = TableCompaction.stageAndJournalOnly(spark, table,
-        64L << 20)
-      assert(targets.size == 2)
-      TableCompaction.renameFirstJournaled(spark, table, 1)
+      // two bins journaled, the first renamed in, its sources not yet
+      // deleted
+      assert(TableCompaction.crashingAfter(1)(
+        TableCompaction.compactLanded(spark, table, 64L << 20)))
       // the crash window: bin 1 is both published AND still has its
       // sources — transiently duplicated, never missing
       val dupCount = spark.read.parquet(table).count()
@@ -530,18 +530,12 @@ class TableCompactionSpec extends AnyFunSuite with SparkTestSession {
       // random crash injection before the healing run
       rnd.nextInt(3) match {
         case 0 => // no crash
-        case 1 => // crash after journal, before any swap
-          try TableCompaction.stageAndJournalOnly(spark, table, target): Unit
-          catch { case _: IllegalArgumentException => } // nothing to stage
-        case 2 => // crash mid-swap: some bins renamed, none deleted
-          try {
-            val targets = TableCompaction
-              .stageAndJournalOnly(spark, table, target)
-            val renameable = targets.count(_.nonEmpty)
-            if (renameable > 0)
-              TableCompaction.renameFirstJournaled(spark, table,
-                1 + rnd.nextInt(renameable))
-          } catch { case _: IllegalArgumentException => }
+        case 1 => // crash after journal, before any swap (when any bin)
+          TableCompaction.crashingAfter(0)(
+            TableCompaction.compactLanded(spark, table, target)): Unit
+        case 2 => // crash mid-swap after k renames (when that many bins)
+          TableCompaction.crashingAfter(1 + rnd.nextInt(3))(
+            TableCompaction.compactLanded(spark, table, target)): Unit
       }
       TableCompaction.compactLanded(spark, table, target): Unit
       assert(idsByDir() == before, s"round $round: contents diverged")
@@ -559,7 +553,7 @@ class TableCompactionSpec extends AnyFunSuite with SparkTestSession {
 
   test("a crashed CHILD-scoped run's journal heals before a root-scoped " +
       "run plans: half-swapped child state is never re-binned as data") {
-    // the r15 ADVICE shape: a compactBacklog shard (or a user's own
+    // a compactBacklog shard (or a user's own
     // per-subtree run) crashes mid-swap in a child — bin published, some
     // sources not yet deleted, journal live AT THE CHILD — and a later
     // run scoped at the ROOT takes the under-budget compactScoped path,
@@ -570,10 +564,9 @@ class TableCompactionSpec extends AnyFunSuite with SparkTestSession {
       landPartitioned(table)
       val before = rowsOf(table)
       val child = s"$table/source=s0"
-      val targets = TableCompaction.stageAndJournalOnly(spark, child,
-        targetBytes = 64L << 20)
-      assert(targets.size == 1)
-      TableCompaction.renameFirstJournaled(spark, child, 1)
+      // the child's one bin renamed in, its sources not yet deleted
+      assert(TableCompaction.crashingAfter(1)(
+        TableCompaction.compactLanded(spark, child, 64L << 20)))
       // the crash window: the child's rows are transiently duplicated
       assert(spark.read.parquet(table).count() > before.size.toLong)
       val stats = TableCompaction.compactLanded(spark, table, 64L << 20)
@@ -611,9 +604,8 @@ class TableCompactionSpec extends AnyFunSuite with SparkTestSession {
         .map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
       val before = rows()
       val grandchild = s"$table/source=s1/day=1"
-      TableCompaction.stageAndJournalOnly(spark, grandchild,
-        targetBytes = 64L << 20): Unit
-      TableCompaction.renameFirstJournaled(spark, grandchild, 1)
+      assert(TableCompaction.crashingAfter(1)(
+        TableCompaction.compactLanded(spark, grandchild, 64L << 20)))
       // budget 8 forces sharding at the root (13 committed files after
       // the crash) while each source subtree stays UNDER budget (6 and
       // 7), so source=s1 runs as ONE scoped leaf whose recursive listing

@@ -80,7 +80,8 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
     untouched.foreach { l => assert(fileState(l) == beforeUntouched(l), s"list $l rewritten") }
     assert(!new java.io.File(s"$dir/codes/list=$emptyTarget").exists(),
       "a fully-tombstoned list must not keep stale files")
-    assert(!new java.io.File(s"$dir/codes_rewrite_tmp").exists(), "staging dir cleaned")
+    assert(!new java.io.File(s"$dir/codes").list().exists(_.startsWith(".compact_")),
+      "journal and staging dir cleaned")
     // and the index still answers, without ever returning a victim
     val got = VectorIndex.searchIvfPq(spark, dir,
         emb.filter(col("vec_id") < 8), emb, "vec_id", "embedding",
@@ -89,6 +90,54 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
     assert(got.nonEmpty)
     assert(got.map(_.getLong(1)).toSet.intersect(victims.toSet).isEmpty,
       "deleted ids must never surface as neighbors")
+  }
+
+  test("deleteIvfPq heals forward from a crash at the journal and after k renames: tombstones absent, untouched lists byte-identical") {
+    val base = graft.ScratchDir.dir("vecidx-delcrash")
+    VectorIndex.buildIvfPq(emb, "vec_id", "embedding", s"$base/built",
+      nLists = 8, m = 8, ksub = 16)
+    def codeIds(dir: String) = spark.read.parquet(s"$dir/codes")
+      .select("neighbor_id", "list").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSeq
+    val byList = codeIds(s"$base/built").groupBy(_._2)
+    val lists = byList.keys.toSeq.sorted
+    // one list wiped entirely, two more losing a few ids each
+    val victims = byList(lists(0)).map(_._1) ++
+      byList(lists(1)).map(_._1).take(3) ++ byList(lists(2)).map(_._1).take(2)
+    val untouched = lists.drop(3)
+    def digests(dir: String, l: Int): Map[String, Seq[Byte]] =
+      new java.io.File(s"$dir/codes/list=$l").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq)
+        .toMap
+    import spark.implicits._
+    for (k <- Seq(0, 1, 2)) {
+      val dir = s"$base/k$k"
+      val hfs = org.apache.hadoop.fs.FileSystem.getLocal(
+        spark.sparkContext.hadoopConfiguration)
+      hfs.delete(new org.apache.hadoop.fs.Path(dir), true): Unit
+      assert(org.apache.hadoop.fs.FileUtil.copy(hfs,
+        new org.apache.hadoop.fs.Path(s"$base/built"), hfs,
+        new org.apache.hadoop.fs.Path(dir), false,
+        spark.sparkContext.hadoopConfiguration))
+      val before = codeIds(dir)
+      val untouchedBytes = untouched.map(l => l -> digests(dir, l)).toMap
+      val tomb = victims.toDF("vec_id")
+      assert(TableCompaction.crashingAfter(k)(
+        VectorIndex.deleteIvfPq(spark, dir, tomb, "vec_id")), s"k=$k")
+      // inside the window no surviving code is missing
+      val mid = codeIds(dir).toSet
+      assert(before.filterNot(c => victims.contains(c._1)).forall(mid), s"k=$k")
+      // the next delete heals forward, then finds nothing left to delete
+      VectorIndex.deleteIvfPq(spark, dir, tomb, "vec_id")
+      val after = codeIds(dir)
+      assert(after.sorted == before.filterNot(c => victims.contains(c._1)).sorted,
+        s"k=$k: exactly the victims left, nothing duplicated")
+      untouched.foreach(l =>
+        assert(digests(dir, l) == untouchedBytes(l), s"k=$k: list $l rewritten"))
+      assert(!new java.io.File(s"$dir/codes/list=${lists(0)}").exists())
+      assert(!new java.io.File(s"$dir/codes").list().exists(_.startsWith(".compact_")))
+    }
   }
 
   test("recall after build→append→delete stays above the fresh-index floor; deleted ids absent") {
@@ -370,36 +419,5 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
     assert(loaded.coarse.map(_.toSeq).toSeq == trained.coarse.map(_.toSeq).toSeq)
     assert(loaded.codebooks.map(_.map(_.toSeq).toSeq).toSeq ==
       trained.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
-  }
-
-  import spark.implicits._
-
-  // deleteIvfPq rewrites the affected `list=` partitions in this mode
-  test("dynamic partition overwrite reprocesses ONE day idempotently, leaving siblings untouched") {
-    // the lakehouse correction contract: re-running a day's pipeline with
-    // fixed data must replace exactly that day's partition — static
-    // overwrite mode would wipe the whole table
-    val dir = graft.ScratchDir.dir("dpo")
-    def rows(day: String, tag: String) =
-      (1 to 4).map(i => ("camA", day, s"$tag-$i")).toDF("camera_id", "day", "payload")
-    rows("2024-01-01", "orig").unionAll(rows("2024-01-02", "orig"))
-      .write.partitionBy("day").mode("overwrite").parquet(dir)
-
-    val before = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      rows("2024-01-02", "fixed")
-        .write.partitionBy("day").mode("overwrite").parquet(dir)
-    } finally before match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-
-    val res = spark.read.parquet(dir)
-    assert(res.count() == 8)
-    // partition-column inference reads the day dir back as DateType
-    val byDay = res.collect().groupBy(_.getAs[AnyRef]("day").toString)
-    assert(byDay("2024-01-01").forall(_.getAs[String]("payload").startsWith("orig-")))
-    assert(byDay("2024-01-02").forall(_.getAs[String]("payload").startsWith("fixed-")))
   }
 }

@@ -463,4 +463,44 @@ class WatchlistMonitorSpec extends AnyFunSuite with SparkTestSession {
     assert(spark.read.parquet(out).count() == 3,
       "the folded watermark must still suppress every re-sweep")
   }
+
+  test("a crash inside the sweep watermark's fold heals forward at the next sweep: no watermark row lost, nothing re-swept") {
+    val winSec = AudioCorpus.TrackWindowSec
+    val base = graft.ScratchDir.dir("watchmon-sweep-crash")
+    val landedDir = s"$base/landed"
+    Seq((3L, AudioCorpus.renderTrack(3L)), (7L, AudioCorpus.renderTrack(7L)),
+      (11L, AudioCorpus.renderTrack(11L)))
+      .toDF("track_id", "wav").write.parquet(landedDir)
+    def loadClips(ids: Seq[Long]): Seq[WatchlistMonitor.WatchClip] =
+      WatchlistMonitor.audioWatchlist(
+        ids.map(id => (id, AudioCorpus.renderTrack(id)))
+          .toDF("doc_id", "wav"), "wav", "doc_id", windowSec = winSec)
+    for (k <- Seq(0, 1)) {
+      val out = s"$base/flags$k"
+      def sweep(watched: Seq[Long]) = WatchlistMonitor.sweepWatchlist(
+        spark, landedDir, watched, loadClips,
+        (b: DataFrame, w: Seq[WatchlistMonitor.WatchClip]) =>
+          WatchlistMonitor.flagAudio(b, "wav", w, windowSec = winSec), out,
+        compactFileBound = 2)
+      def watermark() = spark.read.parquet(s"${out}_swept").collect()
+        .map(r => r.getAs[Long]("clip_id") -> r.getAs[Long]("sweep_epoch"))
+        .toSeq.sorted
+      sweep(Seq(0L))
+      sweep(Seq(0L, 4L))
+      // the third sweep appends its flags and watermark row, then its
+      // fold stops at the journal (k = 0) or after the folded file's
+      // rename (k = 1), the three appended files not yet deleted
+      assert(graft.operators.TableCompaction.crashingAfter(k)(
+        sweep(Seq(0L, 4L, 8L))), s"k=$k")
+      val expected = Seq(0L -> 1L, 4L -> 2L, 8L -> 3L)
+      assert(watermark().distinct == expected, s"k=$k: ${watermark()}")
+      // the next sweep heals the fold forward first, so the delta is
+      // empty: nothing re-swept, nothing re-appended
+      assert(sweep(Seq(0L, 4L, 8L)).isEmpty, s"k=$k")
+      assert(watermark() == expected, s"k=$k: ${watermark()}")
+      assert(graft.operators.TableCompaction.committedDataFiles(
+        spark, s"${out}_swept") == 1)
+      assert(spark.read.parquet(out).count() == 3, s"k=$k: flags re-appended")
+    }
+  }
 }
