@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import graft.util.{AtomicPublish, CommittedTable}
 
 /** PERSISTED perceptual fingerprint table + the ingest cycle over it —
   * the concrete form of the "at scale this is a parquet table maintained
@@ -19,44 +24,44 @@ import org.apache.spark.sql.functions._
   * Consistency contract: [[ingest]] computes the delivery's verdicts
   * EAGERLY (checkpoint) before touching the store, so the probe never
   * observes its own delivery's rows; one writer at a time (the daily
-  * ingest job). The `_manifest` file names the LIVE partitions and every
-  * mutation's last step rewrites it atomically, so all manifest-resolved
-  * reads — the DEFAULT whenever a manifest exists, which is after any
-  * mutation — see exactly one layout, pre- or post-mutation, never a
-  * partial one: a read that starts mid-compaction resolves the
-  * pre-publish layout (published-but-unlisted base invisible, folded
-  * inputs still listed) or the post-publish one, never the duplicated
-  * union and never a missing-path error. Compaction RETAINS the
-  * partitions it folds for one full generation (r12 verdict #7 — the
-  * snapshot-retention discipline): their files are deleted only by the
-  * NEXT [[compact]] call's reclaim pass, so a reader that resolved the
-  * old manifest keeps resolving real files across the entire publish —
-  * the only reader that can still fail is one whose resolved manifest is
-  * TWO compactions old. A REPLAYED delivery rewrites its own partition's
-  * files in place, so a reader of that one partition still needs the
-  * writer's exclusive window (replay is a crash-recovery path, not
-  * steady state); a store that predates manifest maintenance falls back
-  * to directory discovery until its first mutation creates one.
+  * ingest job). The `_manifest` file names the LIVE partitions, every
+  * mutation's last step rewrites it atomically, and every read resolves
+  * through it — so a read sees exactly one layout, pre- or
+  * post-mutation, never a partial one: a read that starts
+  * mid-compaction resolves the pre-publish layout (published-but-unlisted
+  * base invisible, folded inputs still listed) or the post-publish one,
+  * never the duplicated union and never a missing-path error. A
+  * directory with no manifest is an error to the readers; to the
+  * writers it is an EMPTY store (nothing live, nothing retired) while
+  * none of its partitions was ever visible, and an error otherwise (a
+  * lost manifest — see `writerState`). Compaction
+  * RETAINS the partitions it folds for one full generation: their files
+  * are deleted only by the NEXT [[compact]] call's reclaim pass, so a
+  * reader that resolved the old manifest keeps resolving real files
+  * across the entire publish — the only reader that can still fail is
+  * one whose resolved manifest is TWO compactions old. A REPLAYED
+  * delivery rewrites its own partition's files in place, so a reader of
+  * that one partition still needs the writer's exclusive window (replay
+  * is a crash-recovery path, not steady state).
   *
-  * REPLAY SAFETY (r9 verdict #1 — a mechanism, not a caveat): the store
-  * is PARTITIONED BY `delivery_id` (`dir/delivery_id=<id>/`, the ext73
-  * inverted-file directory discipline), every [[ingest]] call names its
-  * delivery, and the probe side always EXCLUDES the caller's own
-  * delivery partition — its own prior append is invisible to it, so
-  * survivors cannot self-match. An immediate replay (before any later
-  * delivery lands) recomputes bit-identical verdicts (within-delivery
-  * dedup is deterministic). After LATER deliveries have merged, verdict
-  * CLASSES remain stable by construction — a kept item cannot gain a
-  * match, because any later near-duplicate of it dropped AGAINST it
-  * instead of appending, and a dropped item's original match is still
-  * stored — but a dropped_existing row's EVIDENCE may name a nearer
-  * (or tie-smaller) survivor that arrived after the first run: the
-  * probe answers from the current store, not a historical snapshot.
-  * Both halves of this contract are fuzz-pinned. The merge is an
-  * OVERWRITE of only the caller's `delivery_id=<id>/` partition
-  * directory (written directly, the standard partition layout Spark's
-  * discovery reads back — dynamic partition overwrite by path): a
-  * re-run REPLACES its own prior append instead of stacking a second
+  * REPLAY SAFETY: the store is PARTITIONED BY `delivery_id`
+  * (`dir/delivery_id=<id>/`, the ext73 inverted-file directory
+  * discipline), every [[ingest]] call names its delivery, and the probe
+  * side always EXCLUDES the caller's own delivery partition — its own
+  * prior append is invisible to it, so survivors cannot self-match. An
+  * immediate replay (before any later delivery lands) recomputes
+  * bit-identical verdicts (within-delivery dedup is deterministic).
+  * After LATER deliveries have merged, verdict CLASSES remain stable by
+  * construction — a kept item cannot gain a match, because any later
+  * near-duplicate of it dropped AGAINST it instead of appending, and a
+  * dropped item's original match is still stored — but a
+  * dropped_existing row's EVIDENCE may name a nearer (or tie-smaller)
+  * survivor that arrived after the first run: the probe answers from the
+  * current store, not a historical snapshot. Both halves of this
+  * contract are fuzz-pinned. The merge is an OVERWRITE of only the
+  * caller's `delivery_id=<id>/` partition directory (written directly,
+  * the standard partition layout — dynamic partition overwrite by path):
+  * a re-run REPLACES its own prior append instead of stacking a second
   * copy, which also heals a partial append left by a mid-write crash —
   * including the zero-survivor replay, where the overwrite lands an
   * empty (schema-bearing) file that clears any stale partial rows.
@@ -71,7 +76,7 @@ object FingerprintStore {
   /** Reserved delivery-tag PREFIX for [[compact]]'s merged base
     * partitions — bases are VERSIONED (`compacted-1`, `compacted-2`, …)
     * so publishing a new base never has to delete the previous one
-    * first: the fold's rows live in at least one DISCOVERED partition at
+    * first: the fold's rows live in at least one on-disk partition at
     * every instant, and a crash at any point loses nothing (see
     * [[compact]]'s crash-safety note). */
   val CompactedPrefix = "compacted"
@@ -81,14 +86,14 @@ object FingerprintStore {
     * verbatim: a '/', '=', '%' or space would make the DISCOVERED value
     * (Spark unescapes %XX) differ from the FILTER value, silently
     * defeating the probe's own-partition exclusion — exactly the
-    * self-match bug the mechanism exists to prevent (r10 ADVICE). */
+    * self-match bug the mechanism exists to prevent. */
   private val SafeDeliveryId = "[A-Za-z0-9._-]+"
 
   /** Exactly the reserved base names (`compacted`, `compacted-<n>`) —
-    * NOT the whole `compacted*` namespace, so a pre-existing store's
-    * legal delivery id like `compacted2025` keeps working and keeps its
-    * replay partition. Public as the layout-observability predicate
-    * that pairs with [[livePartitions]] (ext134 counts folded bases). */
+    * NOT the whole `compacted*` namespace, so a legal delivery id like
+    * `compacted2025` keeps working and keeps its replay partition.
+    * Public as the layout-observability predicate that pairs with
+    * [[livePartitions]] (ext134 counts folded bases). */
   def isCompactedBase(id: String): Boolean =
     id == CompactedPrefix || id.matches(s"$CompactedPrefix-\\d+")
 
@@ -100,25 +105,20 @@ object FingerprintStore {
         s"got '$deliveryId'")
 
   private def partitionPath(dir: String, deliveryId: String) =
-    new org.apache.hadoop.fs.Path(dir, s"delivery_id=$deliveryId")
+    new Path(dir, s"delivery_id=$deliveryId")
 
-  /** The concurrent-reader snapshot: a one-line-per-live-partition text
-    * file every mutation rewrites ATOMICALLY as its last step (temp file
-    * + rename-with-overwrite), so a reader sees exactly one layout —
-    * pre- or post-mutation — never a partial one.
-    *
-    * FORMAT v2 (r13): a `#graft-manifest-v2` header, live partition
-    * names one per line, and `retired:<name>` lines naming the RETAINED
-    * generation — partitions whose files are still on disk for pinned
-    * readers but whose generation is over, i.e. exactly the set the next
-    * [[compact]]'s reclaim pass may delete. Making retirement EXPLICIT
-    * is what lets reclaim distinguish "generation ended" from "complete
-    * partition whose manifest merge was lost to a racing rewrite" — the
-    * latter is someone's landed data and is RE-ADOPTED, never deleted
-    * (see [[compact]]). A header-less (v1) manifest predates the
-    * distinction: its unlisted on-disk partitions are adopted as retired
-    * on the first v2 rewrite, preserving v1's delete-unlisted semantics
-    * across the upgrade. */
+  /** The concurrent-reader snapshot: a text file every mutation rewrites
+    * ATOMICALLY as its last step ([[AtomicPublish.file]]), so a reader
+    * sees exactly one layout — pre- or post-mutation — never a partial
+    * one. Its first line is the `#graft-manifest-v2` header; then the
+    * live partition names, one per line, and `retired:<name>` lines
+    * naming the RETAINED generation — partitions whose files are still
+    * on disk for pinned readers but whose generation is over, i.e.
+    * exactly the set the next [[compact]]'s reclaim pass may delete.
+    * Retirement is EXPLICIT so reclaim can tell "generation ended" from
+    * "complete partition whose manifest merge was lost to a racing
+    * rewrite" — the latter is someone's landed data and is RE-ADOPTED,
+    * never deleted (see [[compact]]). */
   private val ManifestFile = "_manifest"
   private val ManifestHeader = "#graft-manifest-v2"
   private val RetiredPrefix = "retired:"
@@ -138,101 +138,99 @@ object FingerprintStore {
     * underscore prefix keeps it invisible to Spark's file discovery. */
   private val AckFile = "_graft_ack"
 
-  private def writeAck(fs: org.apache.hadoop.fs.FileSystem,
-      partition: org.apache.hadoop.fs.Path): Unit =
-    fs.create(new org.apache.hadoop.fs.Path(partition, AckFile), true)
-      .close()
+  private def writeAck(fs: FileSystem, partition: Path): Unit =
+    fs.create(new Path(partition, AckFile), true).close()
 
-  /** One parsed manifest snapshot: the live set, the retired set, and
-    * whether the file carried the v2 header — all from a SINGLE read,
-    * so an upgrade decision can never be made against a different
-    * manifest than the live/retired sets it accompanies. */
-  private case class ManifestState(live: Seq[String],
-      retired: Seq[String], v2: Boolean)
+  /** One parsed manifest: the live set and the retired set, both from a
+    * SINGLE read. */
+  private case class ManifestState(live: Seq[String], retired: Seq[String])
 
-  /** Parsed manifest, None if absent. v1 files (no header) parse as
-    * all-live with no retired set — callers that REWRITE the manifest
-    * must upgrade via [[retiredOnUpgrade]]. */
-  private def manifestState(spark: SparkSession,
-      dir: String): Option[ManifestState] =
-    manifestLines(spark, dir).map { lines =>
-      val (retired, live) = lines.filterNot(_.startsWith("#"))
-        .partition(_.startsWith(RetiredPrefix))
-      ManifestState(live, retired.map(_.stripPrefix(RetiredPrefix)),
-        v2 = lines.headOption.contains(ManifestHeader))
-    }
 
-  /** The retired set a v1→v2 manifest rewrite must adopt: everything on
-    * disk that the v1 manifest does not list — under v1 semantics those
-    * are the retained generation (or crash orphans) awaiting deletion,
-    * and the v2 rewrite must keep saying so, or the next compact would
-    * re-adopt a retained generation as live and hand every reader the
-    * duplicated union. Decided from the caller's ALREADY-PARSED
-    * snapshot, never a manifest re-read: a second read racing another
-    * writer's v1→v2 rewrite could see the v2 header and skip the
-    * adoption for live/retired sets parsed from the v1 file — dropping
-    * the retained generation from both sets at once. */
-  private def retiredOnUpgrade(st: ManifestState,
-      fs: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path): Seq[String] =
-    if (st.v2) Seq.empty
-    else listPartitionNames(fs, base).filterNot(st.live.toSet)
-
-  private def fsOf(dir: String,
-      conf: org.apache.hadoop.conf.Configuration) = {
-    val base = new org.apache.hadoop.fs.Path(dir)
+  private def fsOf(dir: String, conf: Configuration) = {
+    val base = new Path(dir)
     (base.getFileSystem(conf), base)
   }
 
-  private def listPartitionNames(fs: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path): Seq[String] =
-    fs.listStatus(base)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("delivery_id="))
-      .map(_.getPath.getName).toSeq
+  /** The one read of `_manifest`, None when the directory has none —
+    * the [[AtomicPublish]] read the compaction journal and the
+    * data-batch cadence counter share: absence is trusted only after two consecutive
+    * listings find neither the manifest nor an in-flight publish's
+    * temp, and the read itself retries over a concurrent publish's
+    * transient windows, so an FNF that survives those retries means the
+    * file was never published. */
+  private def manifestState(spark: SparkSession,
+      dir: String): Option[ManifestState] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val (fs, base) = fsOf(dir, conf)
+    val mf = new Path(base, ManifestFile)
+    if (AtomicPublish.confirmedAbsent(fs, mf)) None
+    else
+      try Some(AtomicPublish.readFile(conf, mf)(parseManifest(mf, _)))
+      catch { case _: java.io.FileNotFoundException => None }
+  }
 
-  /** Atomically publish the manifest naming `names` as the live
-    * partitions and `retired` as the retained-but-generation-over set —
-    * [[graft.util.AtomicPublish.file]]'s dot-temp + rename-with-OVERWRITE
-    * (the one rename that may replace an existing target atomically;
-    * plain FileSystem.rename refuses). */
-  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path, names: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration,
-      retired: Seq[String] = Seq.empty): Unit = {
-    val mf = new org.apache.hadoop.fs.Path(base, ManifestFile)
-    graft.util.AtomicPublish.file(conf, mf) { out =>
-      out.write(((ManifestHeader +: names.sorted) ++
+  private def parseManifest(mf: Path,
+      in: java.io.InputStream): ManifestState = {
+    val lines = scala.io.Source.fromInputStream(in, "UTF-8")
+      .getLines().filter(_.nonEmpty).toList
+    require(lines.headOption.contains(ManifestHeader),
+      s"$mf is not a fingerprint-store manifest: its first line must be " +
+        s"'$ManifestHeader', got '${lines.headOption.getOrElse("")}'")
+    val (retired, live) = lines.tail.partition(_.startsWith(RetiredPrefix))
+    ManifestState(live, retired.map(_.stripPrefix(RetiredPrefix)))
+  }
+
+  private def noManifest(dir: String) = new IllegalStateException(
+    s"$dir has no $ManifestFile — not a fingerprint store; init or " +
+      "writeDelivery creates one")
+
+  /** The manifest as the WRITERS see it. With no manifest, the store is
+    * EMPTY (nothing live, nothing retired) only while no partition in
+    * the directory ever became visible — at most a first delivery's torn
+    * or unmerged write, which carries no ack. A compacted base or an
+    * acked partition without a manifest means the manifest was LOST (on
+    * the local filesystem [[AtomicPublish.file]] replaces it
+    * delete-then-rename, so a publisher killed between the two steps
+    * leaves only its dot-temp): an empty live set would let the next
+    * [[compact]]'s reclaim delete every folded base, so the writers
+    * refuse instead, naming the recovery. */
+  private def writerState(spark: SparkSession,
+      dir: String): ManifestState =
+    manifestState(spark, dir).getOrElse {
+      val (fs, base) = fsOf(dir, spark.sparkContext.hadoopConfiguration)
+      val onceVisible = fs.exists(base) && fs.listStatus(base).exists { s =>
+        val n = s.getPath.getName
+        s.isDirectory && n.startsWith("delivery_id=") &&
+          (isCompactedBase(n.stripPrefix("delivery_id=")) ||
+            fs.exists(new Path(s.getPath, AckFile)))
+      }
+      if (onceVisible)
+        throw new IllegalStateException(
+          s"$dir has acknowledged or compacted partitions but no " +
+            s"$ManifestFile — the manifest was lost, and writing as if " +
+            "the store were empty would reclaim them; restore " +
+            s"$ManifestFile (a publish killed mid-replace leaves its " +
+            s"complete bytes in a .$ManifestFile.*.tmp sibling)")
+      ManifestState(Seq.empty, Seq.empty)
+    }
+
+  /** Atomically publish the manifest naming `live` as the live
+    * partitions and `retired` as the retained-but-generation-over set. */
+  private def writeManifest(conf: Configuration, base: Path,
+      live: Seq[String], retired: Seq[String] = Seq.empty): Unit =
+    AtomicPublish.file(conf, new Path(base, ManifestFile)) { out =>
+      out.write(((ManifestHeader +: live.sorted) ++
         retired.sorted.map(RetiredPrefix + _))
         .mkString("", "\n", "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
-    // this JVM just upgraded/created the manifest — a stale
-    // confirmed-legacy verdict must not short-circuit the next probe
-    confirmedLegacy.remove(fs.makeQualified(mf).toString): Unit
-  }
 
-  /** Refresh the manifest from the directory's CURRENT layout — correct
-    * ONLY when the directory holds exactly the live partitions: after
-    * [[init]]'s full reset, or on a legacy store's first mutation.
-    * Delivery writes use [[mergeIntoManifest]] instead (r12 ADVICE): a
-    * directory re-listing would resurrect RETAINED partitions — the
-    * previous compaction's folded inputs, kept on disk for pinned
-    * readers — back into the manifest as live, exactly the duplicated
-    * union the manifest exists to rule out. */
-  private def refreshManifest(spark: SparkSession, dir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val (fs, base) = fsOf(dir, conf)
-    writeManifest(fs, base, listPartitionNames(fs, base), conf)
-  }
-
-  /** Add `name` to the EXISTING manifest's live set — the delivery
-    * writers' manifest maintenance: the writer knows exactly which one
-    * partition it touched, so it names it instead of trusting the
-    * directory (which also holds the previous generation's retained
-    * partitions and, after a crashed compact, an unlisted orphan base —
-    * neither may become live). A store with no manifest yet (legacy)
-    * adopts its current directory layout, which at that point IS the
-    * live set.
+  /** Add `name` to the manifest's live set — the delivery writers'
+    * manifest maintenance: the writer knows exactly which one partition
+    * it touched, so it names it instead of trusting the directory (which
+    * also holds the previous generation's retained partitions and
+    * possibly crash leftovers — none of which may become live). With no
+    * manifest yet (`writerState`), the new one lists `name` alone.
     *
     * VERIFIED merge: [[writeManifest]]'s rename-with-overwrite is atomic
     * per write, but not around the read-modify-write — two merges racing
@@ -257,22 +255,15 @@ object FingerprintStore {
   private val MaxManifestMergeAttempts = 8
   private def mergeIntoManifest(spark: SparkSession, dir: String,
       name: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val (fs, base) = fsOf(dir, conf)
     var attempts = 0
     var visible = false
     while (!visible && attempts < MaxManifestMergeAttempts) {
       attempts += 1
-      manifestState(spark, dir) match {
-        case Some(st) =>
-          writeManifest(fs, base, (st.live :+ name).distinct, conf,
-            retired = (st.retired ++ retiredOnUpgrade(st, fs, base))
-              .distinct.filterNot(_ == name))
-        case None =>
-          writeManifest(fs, base,
-            (listPartitionNames(fs, base) :+ name).distinct, conf)
-      }
-      visible = manifestNames(spark, dir).exists(_.contains(name))
+      val st = writerState(spark, dir)
+      writeManifest(spark.sparkContext.hadoopConfiguration, new Path(dir),
+        (st.live :+ name).distinct,
+        retired = st.retired.distinct.filterNot(_ == name))
+      visible = manifestState(spark, dir).exists(_.live.contains(name))
     }
     if (!visible)
       throw new IllegalStateException(
@@ -281,196 +272,62 @@ object FingerprintStore {
           "contending faster than the verify loop converges")
   }
 
-  /** Raw manifest lines, None if the file is absent. Each read check
-    * rides [[graft.util.AtomicPublish.withReadRetries]] — the one
-    * shared defense against the transient mid-rewrite windows
-    * (checksum-sidecar skew, the delete-then-rename absence blink)
-    * that filesystems without a truly atomic rename-with-overwrite
-    * open for concurrent readers. On top of it, ABSENCE is only
-    * trusted after several checks in a row END absent (a check that
-    * successfully reads the file returns immediately, so absent
-    * confirms are consecutive outcomes by construction, each with its
-    * own full retry budget): "no manifest" means "legacy store" to
-    * every caller — readers fall back to directory discovery (the
-    * duplicated union, once a generation is retained) and writers
-    * ADOPT the directory as live — so mistaking a mid-rename blink
-    * for legacy is the one misread with destructive downstream
-    * semantics. A genuinely legacy store pays the re-check sleeps
-    * ONCE: its confirmed-absent verdict is cached per qualified path
-    * (r13 ADVICE — resolvedFrame probes the manifest on every read, so
-    * uncached the sleeps tax every read of a legacy store), and each
-    * subsequent probe is [[graft.util.AtomicPublish.confirmedAbsent]]
-    * — a pair of consecutive parent-directory listings — manifest
-    * present, or a manifest publish observably in flight (its fresh
-    * dot-temp sibling), invalidates the entry and falls through to the
-    * full confirm protocol, so an upgrade by this JVM
-    * ([[writeManifest]] also invalidates) or any other is picked up
-    * immediately. The listing shape is what closes the cross-JVM
-    * TOCTOU: an upgraded store being rewritten holds the manifest OR
-    * the writer's temp at every instant of the publish protocol, so a
-    * listing cannot answer "neither" for it the way two sequential
-    * single-name probes (each landing in a different publish's
-    * window) could — and the helper's second listing covers the
-    * torn-readdir case one listing can't; orphaned temps age out
-    * after [[graft.util.AtomicPublish.OrphanTempHorizonMs]] instead
-    * of taxing the fast path forever. */
-  private val confirmedLegacy =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def manifestLines(spark: SparkSession,
-      dir: String): Option[Seq[String]] = {
-    val (fs, base) = fsOf(dir, spark.sparkContext.hadoopConfiguration)
-    val mf = new org.apache.hadoop.fs.Path(base, ManifestFile)
-    val legacyKey = fs.makeQualified(mf).toString
-    if (confirmedLegacy.contains(legacyKey)) {
-      // confirmedAbsent = TWO consecutive neither-manifest-nor-temp
-      // listings, not one (a readdir racing the temp→manifest rename
-      // can miss both names) — the same consecutive-outcomes
-      // discipline as the full confirm protocol below, without its
-      // sleeps
-      if (graft.util.AtomicPublish.confirmedAbsent(fs, mf))
-        return None // still legacy — no manifest, no writer mid-publish
-      // upgraded (or being upgraded) since confirmed — full probe
-      confirmedLegacy.remove(legacyKey): Unit
-    }
-    val absentConfirms = 3
-    var absentSeen = 0
-    while (absentSeen < absentConfirms) {
-      val check = graft.util.AtomicPublish.withReadRetries() { () =>
-        if (!fs.exists(mf)) None
-        else {
-          val in = fs.open(mf)
-          try Some(scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().filter(_.nonEmpty).toList)
-          finally in.close()
-        }
-      }
-      check match {
-        case some @ Some(_) => return some
-        case None =>
-          absentSeen += 1
-          if (absentSeen < absentConfirms) Thread.sleep(25L)
-      }
-    }
-    confirmedLegacy.add(legacyKey): Unit
-    None
-  }
-
-  /** The LIVE partition names — what every reader resolves. */
-  private def manifestNames(spark: SparkSession,
-      dir: String): Option[Seq[String]] =
-    manifestState(spark, dir).map(_.live)
-
-  /** The store frame resolved through the manifest snapshot instead of
-    * directory discovery. `basePath` keeps the delivery_id partition
-    * column derivable from the explicit paths. */
-  private def pinnedFrame(spark: SparkSession, dir: String): DataFrame = {
-    val names = manifestNames(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"$dir has no $ManifestFile to pin to — the store predates " +
-          "manifest maintenance; any mutation (init/ingest/writeDelivery/" +
-          "compact) creates one"))
-    val base = new org.apache.hadoop.fs.Path(dir)
-    if (names.isEmpty) {
-      // an empty LIVE set reads as zero rows, not a zero-path
-      // AnalysisException: "the manifest says nothing is live" is a
-      // valid layout (unreachable via this API's own mutations, which
-      // all publish at least one name, but a racing rewrite or a
-      // hand-repair can produce it). The store is modality-generic —
-      // `id` is whatever type the caller ingested — so the schema
-      // comes from any on-disk partition (retained generations
-      // included; filtered to zero rows), falling back to the
-      // canonical (long, long, string) only for a store with no files
-      // at all.
-      val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // first on-disk partition whose schema actually reads — a torn
-      // write or a marker-only directory (the degenerate states this
-      // branch exists to survive) must not crash the probe
-      return listPartitionNames(fs, base).view
-        .flatMap { n =>
-          scala.util.Try(
-            spark.read.option("basePath", dir)
-              .parquet(new org.apache.hadoop.fs.Path(base, n).toString)
-              .where(lit(false))).toOption
-        }
-        .headOption
-        .getOrElse {
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("phash",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("delivery_id",
-              org.apache.spark.sql.types.StringType)))
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        }
-    }
-    spark.read.option("basePath", dir)
-      .parquet(names.map(n =>
-        new org.apache.hadoop.fs.Path(base, n).toString): _*)
+  /** The store frame (id, phash, delivery_id) resolved through the
+    * manifest: exactly its live partitions, by explicit path (`basePath`
+    * keeps the delivery_id partition column derivable). Errors for a
+    * directory with no manifest. */
+  private def resolvedFrame(spark: SparkSession, dir: String): DataFrame = {
+    val live = manifestState(spark, dir).getOrElse(throw noManifest(dir)).live
+    if (live.nonEmpty)
+      spark.read.option("basePath", dir)
+        .parquet(live.map(n => new Path(dir, n).toString): _*)
+    else
+      // an empty LIVE set reads as zero rows of the canonical schema,
+      // not a zero-path AnalysisException: no mutation here publishes
+      // one, but a hand-repaired manifest can
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(Seq(StructField("id", LongType),
+          StructField("phash", LongType),
+          StructField("delivery_id", StringType))))
   }
 
   /** Initialize (or reset) the store from a hash frame (id, phash) —
     * the whole table is overwritten; the seed rows land in the reserved
     * `__init__` delivery partition (written even when empty, so the
-    * store always reads back with its schema). */
+    * store always reads back with its schema), which the new manifest
+    * lists alone. */
   def init(hashes: DataFrame, dir: String): Unit = {
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(
-      hashes.sparkSession.sparkContext.hadoopConfiguration)
+    val conf = hashes.sparkSession.sparkContext.hadoopConfiguration
+    val (fs, base) = fsOf(dir, conf)
     fs.delete(base, true): Unit
+    val seed = partitionPath(dir, InitDelivery)
     hashes.select(col("id"), col("phash"))
-      .write.mode("overwrite")
-      .parquet(partitionPath(dir, InitDelivery).toString)
-    refreshManifest(hashes.sparkSession, dir)
-    writeAck(fs, partitionPath(dir, InitDelivery))
+      .write.mode("overwrite").parquet(seed.toString)
+    writeManifest(conf, base, Seq(seed.getName))
+    writeAck(fs, seed)
   }
 
-  /** The manifest-resolved store frame when a manifest exists — the
-    * only read that is correct once compaction retains a generation
-    * (the directory then holds live ∪ retained partitions, so raw
-    * discovery would read the duplicated union) — else directory
-    * discovery (a legacy store that predates manifest maintenance;
-    * its directory holds exactly the live set). `mustPin` turns the
-    * legacy fallback into an error for callers that need the
-    * concurrent-reader snapshot guarantee. */
-  private def resolvedFrame(spark: SparkSession, dir: String,
-      mustPin: Boolean): DataFrame =
-    if (mustPin || manifestNames(spark, dir).isDefined)
-      pinnedFrame(spark, dir)
-    else spark.read.parquet(dir)
-
   /** The store as a frame (id, phash), resolved through the `_manifest`
-    * snapshot whenever one exists (class doc — always, after any
-    * mutation): the read sees exactly one published layout, never a
+    * snapshot: the read sees exactly one published layout, never a
     * mid-mutation mix, and never the previous generation's RETAINED
-    * partitions. `pinToManifest = true` additionally REFUSES the
-    * legacy directory-discovery fallback for a store with no manifest. */
-  def read(spark: SparkSession, dir: String,
-      pinToManifest: Boolean = false): DataFrame =
-    resolvedFrame(spark, dir, pinToManifest)
-      .select(col("id"), col("phash"))
+    * partitions. Errors for a directory with no manifest. */
+  def read(spark: SparkSession, dir: String): DataFrame =
+    resolvedFrame(spark, dir).select(col("id"), col("phash"))
 
-  /** The store with its delivery provenance: (id, phash, delivery_id).
-    * `pinToManifest` as in [[read]]. */
-  def readTagged(spark: SparkSession, dir: String,
-      pinToManifest: Boolean = false): DataFrame =
-    resolvedFrame(spark, dir, pinToManifest)
+  /** The store with its delivery provenance: (id, phash, delivery_id),
+    * resolved as in [[read]]. */
+  def readTagged(spark: SparkSession, dir: String): DataFrame =
+    resolvedFrame(spark, dir)
       .select(col("id"), col("phash"), col("delivery_id").cast("string"))
 
   /** The LIVE partition names from the manifest snapshot (delivery ids,
     * `delivery_id=` prefix stripped) — the layout-observability read:
     * unlike a distinct over [[readTagged]], it also counts live EMPTY
     * partitions (a zero-survivor delivery is manifest-listed but
-    * contributes no rows). Errors for a legacy store with no manifest,
-    * like `pinToManifest = true` reads. */
+    * contributes no rows). Errors for a directory with no manifest. */
   def livePartitions(spark: SparkSession, dir: String): Seq[String] =
-    manifestNames(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"$dir has no $ManifestFile — the store predates manifest " +
-          "maintenance; any mutation creates one"))
-      .map(_.stripPrefix("delivery_id="))
+    manifestState(spark, dir).getOrElse(throw noManifest(dir))
+      .live.map(_.stripPrefix("delivery_id="))
 
   /** One delivery through the store: verdicts for every delivered id
     * ([[ImageDedup.incrementalVerdicts]] semantics — dedupe the delivery
@@ -519,15 +376,15 @@ object FingerprintStore {
   def writeDelivery(dir: String, deliveryId: String,
       hashes: DataFrame): Unit = {
     requireSafeId(deliveryId)
+    val partition = partitionPath(dir, deliveryId)
     // mode("overwrite") replaces the whole partition dir, so a replay
     // also clears the prior ack until its own merge re-earns it
     hashes.select(col("id"), col("phash"))
-      .write.mode("overwrite")
-      .parquet(partitionPath(dir, deliveryId).toString)
+      .write.mode("overwrite").parquet(partition.toString)
     val spark = hashes.sparkSession
-    mergeIntoManifest(spark, dir, s"delivery_id=$deliveryId")
+    mergeIntoManifest(spark, dir, partition.getName)
     val (fs, _) = fsOf(dir, spark.sparkContext.hadoopConfiguration)
-    writeAck(fs, partitionPath(dir, deliveryId))
+    writeAck(fs, partition)
     // A compact racing this writer's data→merge window (outside the
     // one-mutator contract, or an unprotected in-flight delivery) can
     // reclaim the just-written unlisted-unacked partition; the merge
@@ -537,19 +394,14 @@ object FingerprintStore {
     // caller replays, and the replay rewrites data before re-merging.
     // (An empty delivery still writes a schema-bearing parquet file,
     // so file-presence is the right test, not row count.)
-    val dataFiles = try
-      fs.listStatus(partitionPath(dir, deliveryId))
-        .filter { s =>
-          val n = s.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        }
-    catch {
-      // the racing compact can also delete the whole directory between
-      // the ack and this listing — same race, same curated diagnosis
-      case _: java.io.FileNotFoundException =>
-        Array.empty[org.apache.hadoop.fs.FileStatus]
-    }
-    if (dataFiles.isEmpty)
+    val landed =
+      try CommittedTable.hasData(spark, partition.toString)
+      catch {
+        // the racing compact can also delete the whole directory
+        // mid-listing — same race, same curated diagnosis
+        case _: java.io.FileNotFoundException => false
+      }
+    if (!landed)
       throw new IllegalStateException(
         s"delivery $deliveryId's data files vanished between write and " +
           s"acknowledgment in $dir — a concurrent compact reclaimed the " +
@@ -559,11 +411,11 @@ object FingerprintStore {
 
   /** Fold old delivery partitions into a single versioned
     * `delivery_id=compacted-N` base — one-partition-per-delivery-forever
-    * is a small-file trajectory at ingest cadence (r10 verdict #3; the
-    * ext73 lifecycle discipline). The `keepRecent` most recent REAL
-    * deliveries (by partition mtime, ties by id — `__init__` and any
-    * existing compacted bases always fold) keep their own partitions, so
-    * their replay contract is untouched.
+    * is a small-file trajectory at ingest cadence (the ext73 lifecycle
+    * discipline). The `keepRecent` most recent REAL deliveries (by
+    * partition mtime, ties by id — `__init__` and any existing compacted
+    * bases always fold) keep their own partitions, so their replay
+    * contract is untouched.
     *
     * Contract after compaction:
     *  - store CONTENTS (id, phash) are unchanged (spec-pinned);
@@ -577,34 +429,37 @@ object FingerprintStore {
     *    stored (id, phash) set unchanged. Compact a delivery only once
     *    its at-least-once window has passed.
     *
-    * Crash safety AND reader retention (r12 verdict #7): the merged
-    * base is staged under a dot-prefixed dir (invisible to partition
-    * discovery), published by rename to a FRESH VERSIONED name
-    * (`compacted-N`, N above every existing base — the previous base is
-    * never deleted to make room), and the manifest swapped to the new
-    * layout as the mutation's last step — with the folded inputs named
-    * on explicit `retired:` lines. They are thus RETAINED on disk for
-    * one full generation: a reader that resolved the pre-swap manifest
-    * keeps resolving real files for as long as this compaction's
-    * outputs are live, because only the NEXT [[compact]] call's opening
-    * reclaim pass deletes them — and reclaim deletes ONLY by explicit
-    * evidence (r13): the retired set, an unlisted compacted base (a
-    * crashed publish; its rows are still live in the old manifest's
-    * fold inputs), and unlisted partitions without the [[AckFile]]
-    * acknowledgment (torn writes, and deliveries that crashed between
-    * the data write and the manifest merge — consistent with their
-    * write never having become visible, so a caller that reprocessed
-    * the same documents under a new id never probes phantom rows). An
-    * unlisted ACKNOWLEDGED delivery partition is the one remaining
-    * possibility — once-visible landed data whose manifest line a
-    * racing rewrite lost — and is RE-ADOPTED as live instead of
-    * deleted, so bookkeeping losing a line can cost visibility until
-    * the next compact, never the data.
+    * Crash safety AND reader retention: the merged base is staged under
+    * a dot-prefixed dir (invisible to partition discovery), published by
+    * rename to a FRESH VERSIONED name (`compacted-N`, N above every
+    * existing base — the previous base is never deleted to make room),
+    * and the manifest swapped to the new layout as the mutation's last
+    * step — with the folded inputs named on explicit `retired:` lines.
+    * They are thus RETAINED on disk for one full generation: a reader
+    * that resolved the pre-swap manifest keeps resolving real files for
+    * as long as this compaction's outputs are live, because only the
+    * NEXT [[compact]] call's opening reclaim pass deletes them — and
+    * reclaim deletes ONLY by explicit evidence: the retired set, an
+    * unlisted compacted base (a crashed publish; its rows are still live
+    * in the old manifest's fold inputs), and unlisted partitions without
+    * the [[AckFile]] acknowledgment (torn writes, and deliveries that
+    * crashed between the data write and the manifest merge — consistent
+    * with their write never having become visible, so a caller that
+    * reprocessed the same documents under a new id never probes phantom
+    * rows). An unlisted ACKNOWLEDGED delivery partition is the one
+    * remaining possibility — once-visible landed data whose manifest
+    * line a racing rewrite lost — and is RE-ADOPTED as live instead of
+    * deleted, so bookkeeping losing a line can cost visibility until the
+    * next compact, never the data. With no manifest in a store none of
+    * whose partitions was ever visible (`writerState`), the live and
+    * retired sets are empty and the same rule deletes every leftover.
     * A crash at any point therefore leaves either the old manifest
     * layout intact (staging and an unpublished base are invisible; a
     * re-run reclaims and rebuilds) or the new layout plus the retained
     * generation — never a layout any manifest-resolved reader sees
-    * torn. NOTE: every compact call reclaims, including one that then
+    * torn. (A crash inside the manifest's own local-filesystem replace
+    * leaves no manifest at all; readers and writers then refuse rather
+    * than guess, so nothing is reclaimed.) NOTE: every compact call reclaims, including one that then
     * finds nothing to fold — so "one generation" means "until the next
     * compact", not "forever".
     *
@@ -619,21 +474,11 @@ object FingerprintStore {
   def compact(spark: SparkSession, dir: String, keepRecent: Int,
       protect: Set[String] = Set.empty): Unit = {
     require(keepRecent >= 0, s"keepRecent must be >= 0, got $keepRecent")
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val (fs, base) = fsOf(dir, conf)
     if (!fs.exists(base)) return
-    // liveness = the manifest; a legacy store (no manifest yet) adopts
-    // its current directory layout, which at that point IS the live set
-    val (live0, retired0) = manifestState(spark, dir) match {
-      case Some(st) =>
-        // a v1 manifest carries no retired lines: its unlisted on-disk
-        // partitions ARE the retained generation under v1 semantics
-        (st.live.toSet,
-          (st.retired ++ retiredOnUpgrade(st, fs, base)).toSet)
-      case None =>
-        refreshManifest(spark, dir)
-        (listPartitionNames(fs, base).toSet, Set.empty[String])
-    }
+    val st = writerState(spark, dir)
+    val (live0, retired0) = (st.live.toSet, st.retired.toSet)
     // RECLAIM pass (scaladoc): deletion is by EXPLICIT evidence only —
     //  * `retired:` partitions: the previous compaction's retained
     //    inputs; their generation ends here;
@@ -655,8 +500,7 @@ object FingerprintStore {
         !live0.contains(s.getPath.getName))
       .foreach { s =>
         val n = s.getPath.getName
-        val acked = fs.exists(
-          new org.apache.hadoop.fs.Path(s.getPath, AckFile))
+        val acked = fs.exists(new Path(s.getPath, AckFile))
         if (retired0.contains(n) ||
             isCompactedBase(n.stripPrefix("delivery_id=")) || !acked)
           fs.delete(s.getPath, true): Unit
@@ -667,19 +511,16 @@ object FingerprintStore {
     // visible, reclaimed retirement lines drop — an atomic, consistent
     // intermediate state even if the fold below never runs
     if (readopted.nonEmpty || retired0.nonEmpty)
-      writeManifest(fs, base, live.toSeq,
-        spark.sparkContext.hadoopConfiguration)
+      writeManifest(conf, base, live.toSeq)
     val parts = fs.listStatus(base)
       .filter(s => s.isDirectory && live.contains(s.getPath.getName))
       .map(s => (s.getPath.getName.stripPrefix("delivery_id="), s))
     // ACK BACKFILL: a live-listed partition IS visible — exactly what
     // the ack asserts — so any live partition missing one gets it here:
-    // pre-ack-era stores upgrade on their first compact, and a crash
-    // inside writeDelivery's merge→ack window (listed but unacked)
-    // heals instead of staying re-adoption-ineligible forever
+    // a crash inside writeDelivery's merge→ack window (listed but
+    // unacked) heals instead of staying re-adoption-ineligible forever
     parts.foreach { case (_, s) =>
-      val ack = new org.apache.hadoop.fs.Path(s.getPath, AckFile)
-      if (!fs.exists(ack)) writeAck(fs, s.getPath)
+      if (!fs.exists(new Path(s.getPath, AckFile))) writeAck(fs, s.getPath)
     }
     val real = parts.filter { case (id, _) =>
       id != InitDelivery && !isCompactedBase(id) }
@@ -690,7 +531,7 @@ object FingerprintStore {
     // needlessly destroy a lone delivery's replay partition) → no-op,
     // files byte-identical
     if (fold.length <= 1) return
-    val staging = new org.apache.hadoop.fs.Path(dir, ".compact_staging")
+    val staging = new Path(dir, ".compact_staging")
     fs.delete(staging, true): Unit
     spark.read.parquet(fold.map(_._2.getPath.toString).toIndexedSeq: _*)
       .select(col("id"), col("phash"))
@@ -704,16 +545,15 @@ object FingerprintStore {
         n.stripPrefix(s"delivery_id=$CompactedPrefix-").toLong).toOption)
       .foldLeft(0L)(math.max) + 1
     val target = partitionPath(dir, s"$CompactedPrefix-$nextN")
-    graft.util.AtomicPublish.dirFresh(fs, staging, target)
+    AtomicPublish.dirFresh(fs, staging, target)
     // manifest swap is the mutation's LAST step: readers flip atomically
     // from the old layout (inputs listed, new base invisible) to the new
     // one; the folded inputs stay on disk as the retained generation —
     // named on `retired:` lines so the NEXT compact's reclaim pass
     // deletes exactly them and nothing merely unlisted
-    writeManifest(fs, base,
+    writeManifest(conf, base,
       parts.map(_._1).filter(keep.contains).map(id => s"delivery_id=$id") :+
         target.getName,
-      spark.sparkContext.hadoopConfiguration,
       retired = fold.map { case (id, _) => s"delivery_id=$id" }.toSeq)
   }
 }

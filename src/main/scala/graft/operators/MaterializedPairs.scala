@@ -51,7 +51,7 @@ object MaterializedPairs {
     */
   def setSimPairs(docs: DataFrame, textCol: String, idCol: String,
       n: Int, threshold: Double, key: String): DataFrame =
-    memoized(docs, "word", textCol, idCol, n, threshold, key)(
+    memoPairs(docs, "word", textCol, idCol, n, threshold, key)(
       Dedup.setSimilarityJoin(docs, textCol, idCol, n, threshold))
 
   /** [[Dedup.charSetSimilarityJoin]] (CHAR-n-gram template-level pairs)
@@ -62,7 +62,7 @@ object MaterializedPairs {
     */
   def charSetSimPairs(docs: DataFrame, textCol: String, idCol: String,
       n: Int, threshold: Double, key: String): DataFrame =
-    memoized(docs, "char", textCol, idCol, n, threshold, key)(
+    memoPairs(docs, "char", textCol, idCol, n, threshold, key)(
       Dedup.charSetSimilarityJoin(docs, textCol, idCol, n, threshold))
 
   /** Generic session-scoped materialized-frame memo under the same
@@ -71,17 +71,8 @@ object MaterializedPairs {
     * edge list ext94 (PageRank) and ext96 (HITS) both iterate over. The
     * caller owns key hygiene (include the context identity + input dir).
     */
-  def frame(key: String)(build: => DataFrame): DataFrame = {
-    evictStopped()
-    memo.computeIfAbsent(key, _ => {
-      val df = build.persist(StorageLevel.MEMORY_AND_DISK)
-      val t0 = System.nanoTime()
-      val n = df.count()
-      buildSecs.put(label(key), (System.nanoTime() - t0) / 1e9)
-      System.err.println(s"[graft] materialized frame: key=$key rows=$n")
-      df
-    })
-  }
+  def frame(key: String)(build: => DataFrame): DataFrame =
+    memoize(key, label(key), s"frame: key=$key")(build)
 
   /** The session component of every memo key: applicationId (changes when
     * a context stops and a new one starts, so a recycled identityHashCode
@@ -105,22 +96,30 @@ object MaterializedPairs {
       dead
     }
 
-  private def memoized(docs: DataFrame, kind: String, textCol: String,
+  private def memoPairs(docs: DataFrame, kind: String, textCol: String,
       idCol: String, n: Int, threshold: Double, key: String)(
+      build: => DataFrame): DataFrame =
+    memoize(Seq(sessionKey(docs.sparkSession), kind, key,
+        textCol, idCol, n, threshold).mkString("|"),
+      s"$kind-setsim|$key|n=$n|t=$threshold",
+      s"$kind setsim pairs: key=$key n=$n t=$threshold")(build)
+
+  /** The one memo body (object doc): the first caller of `key` builds,
+    * persists and materializes the frame with an eager `count()`, books
+    * the build seconds under `ledgerLabel` and logs `what` with the row
+    * count; every later caller gets the same frame. */
+  private def memoize(key: String, ledgerLabel: String, what: String)(
       build: => DataFrame): DataFrame = {
     evictStopped()
-    val full = Seq(sessionKey(docs.sparkSession), kind, key,
-      textCol, idCol, n, threshold).mkString("|")
-    memo.computeIfAbsent(full, _ => {
-      val pairs = build.persist(StorageLevel.MEMORY_AND_DISK)
+    memo.computeIfAbsent(key, _ => {
+      val df = build.persist(StorageLevel.MEMORY_AND_DISK)
       val t0 = System.nanoTime()
-      val nPairs = pairs.count()
+      val rows = df.count()
       val secs = (System.nanoTime() - t0) / 1e9
-      buildSecs.put(s"$kind-setsim|$key|n=$n|t=$threshold", secs)
+      buildSecs.put(ledgerLabel, secs)
       System.err.println(
-        f"[graft] materialized $kind setsim pairs: key=$key n=$n t=$threshold " +
-          f"pairs=$nPairs build=$secs%.1fs")
-      pairs
+        f"[graft] materialized $what rows=$rows build=$secs%.1fs")
+      df
     })
   }
 

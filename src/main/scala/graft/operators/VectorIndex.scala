@@ -154,13 +154,11 @@ object VectorIndex {
     val statsDf = spark.read.parquet(s"$dir/stats")
     def toHist(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => r.getAs[Long]("bucket") -> r.getAs[Long]("n")).toMap
-    // a pre-two-dial stats file (no `dial` column) is all-octant — the
-    // legacy dial keeps working; the list dial arms on the next rebuild
+    require(statsDf.columns.contains("dial"),
+      s"$dir/stats has no `dial` column — not a stats file buildIvfPq writes")
     val refByDial: Map[String, Map[Long, Long]] =
-      if (statsDf.columns.contains("dial"))
-        statsDf.collect().groupBy(_.getAs[String]("dial"))
-          .view.mapValues(toHist).toMap
-      else Map(DialOctant -> toHist(statsDf.collect()))
+      statsDf.collect().groupBy(_.getAs[String]("dial"))
+        .view.mapValues(toHist).toMap
     // ONE corpus pass feeds BOTH dials (pre-r14: an octant job, then a
     // coarseOccupancy job — the full corpus scanned twice per trigger
     // probe; the scan is the trigger's dominant cost at corpus scale).

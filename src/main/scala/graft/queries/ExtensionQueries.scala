@@ -6393,8 +6393,7 @@ object ExtensionQueries {
           // rows, and the column claims to report the store layout
           (step, phase,
             FingerprintStore.livePartitions(s, storeDir).size.toLong,
-            FingerprintStore.read(s, storeDir, pinToManifest = true)
-              .count())
+            FingerprintStore.read(s, storeDir).count())
         def deliver(tag: String, lo: Long, hi: Long): Unit =
           // count(), not collect(): the verdict frame is already eagerly
           // materialized by ingest's own checkpoint — this just consumes
@@ -6513,7 +6512,7 @@ object ExtensionQueries {
           (step, phase, live.size.toLong,
             live.count(FingerprintStore.isCompactedBase).toLong,
             disk.toLong,
-            FingerprintStore.read(s, store, pinToManifest = true).count())
+            FingerprintStore.read(s, store).count())
         }
         val phases = Seq("seed", "fire_noop", "append_1", "fold_1",
           "append_2", "fold_2_reclaim")

@@ -3,14 +3,7 @@ package graft.util
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 
-/** THE staged-publish skeleton (r12 verdict #4): the fingerprint store's
-  * manifest, the persisted Bloom index, and the IVF-PQ generation swap
-  * each hand-rolled a temp-write + rename protocol, and the copies had
-  * already diverged — [[graft.operators.FingerprintStore]]'s manifest
-  * used the one atomic replace Hadoop offers
-  * (`FileContext.rename(OVERWRITE)`) while `BloomIndex.save` published
-  * with delete-then-rename, leaving a window where a concurrent loader
-  * finds NO file at all. One helper, three protocols, each encoding a
+/** THE staged-publish skeleton: three protocols, each encoding a
   * different (and deliberate) guarantee:
   *
   *  - [[file]] — atomic single-file publish-with-replace: write a
@@ -22,7 +15,11 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
   *    shape). A reader sees the old bytes or the new bytes, never a
   *    missing or half-written file. An optional MAGIC header is written
   *    first and verified by [[readFile]], so a foreign or truncated file
-  *    rejects instead of mis-parsing.
+  *    rejects instead of mis-parsing. [[readFile]], behind a
+  *    [[confirmedAbsent]] check for files that may never have been
+  *    published, is the one way back in: the fingerprint store's
+  *    manifest, the compaction journal, the data-batch cadence counter
+  *    and the persisted Bloom index all read through it.
   *  - [[dirFresh]] — directory publish to a FRESH target (versioned
   *    names): a plain rename guarded by `!exists`, because the caller's
   *    crash-safety story depends on never replacing an existing
@@ -88,8 +85,7 @@ object AtomicPublish {
   }
 
   /** `target` is confirmed ABSENT — neither present nor observably
-    * mid-publish — by TWO consecutive [[existsOrInFlight]] listings,
-    * the same discipline the fingerprint store's legacy check uses: a
+    * mid-publish — by TWO consecutive [[existsOrInFlight]] listings: a
     * directory listing racing the temp→target rename is not atomic
     * (readdir can miss an entry mid-rename), so one listing can answer
     * "neither" for a durably PUBLISHED target; for two back-to-back
@@ -168,9 +164,9 @@ object AtomicPublish {
     * sidecar) and FileNotFoundException (the delete-then-rename blink).
     * Both converge as soon as the writer's rename lands; the real error
     * — corruption, a genuinely missing file — still surfaces, on the
-    * last attempt. The ONE shared retry core (r13): [[readFile]] and
-    * the fingerprint-store manifest read both ride it, so tuning it for
-    * an object store cannot silently miss a hand-rolled copy. */
+    * last attempt. The ONE shared retry core: every [[readFile]] rides
+    * it, so tuning it for an object store cannot silently miss a
+    * hand-rolled copy. */
   private[graft] def withReadRetries[A](maxAttempts: Int = 8,
       retryFnfIf: () => Boolean = () => true)(
       op: () => A): A = {
@@ -212,7 +208,7 @@ object AtomicPublish {
     * witness, so successful reads pay zero probe I/O): a genuinely
     * never-published file (e.g. loading a Bloom index from a store
     * that never had one) rethrows on the first attempt instead of
-    * burning the whole ~700 ms retry budget (r13 ADVICE) — callers
+    * burning the whole ~700 ms retry budget — callers
     * that probe for maybe-unpublished files must handle FNF anyway;
     * that is what the probe means. Absence takes TWO consecutive
     * listings, never one: one torn readdir must not turn a transient

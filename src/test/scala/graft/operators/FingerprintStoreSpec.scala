@@ -492,13 +492,13 @@ class FingerprintStoreSpec extends AnyFunSuite with SparkTestSession {
       hashes.filter($"id".isin(9L, 10L))).collect(): Unit // kept: 9
     def rowsOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("phash")))
-    def layout(pin: Boolean) =
-      FingerprintStore.readTagged(spark, dir, pinToManifest = pin)
+    def layout() =
+      FingerprintStore.readTagged(spark, dir)
         .collect().map(_.getAs[String]("delivery_id")).toSet
     val before = rowsOf(FingerprintStore.read(spark, dir)).toSet
-    assert(rowsOf(FingerprintStore.read(spark, dir, pinToManifest = true))
+    assert(rowsOf(spark.read.parquet(dir).select($"id", $"phash"))
       .toSet == before, "steady state: pinned == discovery")
-    assert(layout(pin = true) == Set("__init__", "d1", "d2"))
+    assert(layout() == Set("__init__", "d1", "d2"))
     // simulate the mid-compaction instant the class doc names — the fold
     // of __init__ + d1 is PUBLISHED as a base, inputs not yet deleted,
     // manifest not yet swapped (exactly what a crash between compact's
@@ -518,7 +518,7 @@ class FingerprintStoreSpec extends AnyFunSuite with SparkTestSession {
     assert(pinnedMid.toSet == before && pinnedMid.length == before.size,
       s"mid-compaction read must be the OLD layout exactly: " +
         s"${pinnedMid.length} rows vs ${before.size}")
-    assert(layout(pin = true) == Set("__init__", "d1", "d2"),
+    assert(layout() == Set("__init__", "d1", "d2"),
       "the published base must stay invisible until the manifest swap")
     // a real compaction over this crashed state heals it: the reclaim
     // pass deletes the unlisted orphan base, the fold publishes fresh
@@ -526,19 +526,16 @@ class FingerprintStoreSpec extends AnyFunSuite with SparkTestSession {
     // default reads agree, no duplicate rows
     FingerprintStore.compact(spark, dir, keepRecent = 0,
       protect = Set("d2"))
-    val pinnedAfter =
-      rowsOf(FingerprintStore.read(spark, dir, pinToManifest = true))
+    val pinnedAfter = rowsOf(FingerprintStore.read(spark, dir))
     assert(pinnedAfter.toSet == before && pinnedAfter.length == before.size)
-    assert(layout(pin = true) == layout(pin = false) &&
-      layout(pin = true) ==
-        Set(s"${FingerprintStore.CompactedPrefix}-1", "d2"))
-    // a store that predates manifest maintenance refuses to pin rather
-    // than silently fall back to the discovery race
+    assert(layout() == Set(s"${FingerprintStore.CompactedPrefix}-1", "d2"))
+    // a directory with no manifest is not a store: the read refuses
+    // rather than fall back to the directory-discovery race
     val legacy = freshDir("legacy")
     hashes.filter($"id" < 2).select($"id", $"phash")
       .write.parquet(s"$legacy/delivery_id=old")
     val e = intercept[IllegalStateException] {
-      FingerprintStore.read(spark, legacy, pinToManifest = true).collect()
+      FingerprintStore.read(spark, legacy).collect()
     }
     assert(e.getMessage.contains("_manifest"))
   }
@@ -560,7 +557,7 @@ class FingerprintStoreSpec extends AnyFunSuite with SparkTestSession {
       hashes.filter($"id".isin(9L, 10L))).collect(): Unit // kept: 9
     // the long reader: resolves the CURRENT (pre-compaction) manifest
     // now, collects only after the compaction has published and swapped
-    val pinned = FingerprintStore.read(spark, dir, pinToManifest = true)
+    val pinned = FingerprintStore.read(spark, dir)
     val expected = Set(0L, 1L, 2L, 3L, 6L, 9L)
     FingerprintStore.compact(spark, dir, keepRecent = 1) // folds __init__, d1
     assert(pinned.collect().map(_.getAs[Long]("id")).toSet == expected,
@@ -712,7 +709,7 @@ class FingerprintStoreSpec extends AnyFunSuite with SparkTestSession {
     assert(!ghost.exists(),
       "a never-merged (unacked) delivery must be reclaimed, not resurrected")
     // ... and d2's rows are live through the manifest, not discovery
-    assert(FingerprintStore.read(spark, dir, pinToManifest = true)
+    assert(FingerprintStore.read(spark, dir)
       .collect().map(_.getAs[Long]("id")).toSet == all)
   }
 
@@ -763,12 +760,12 @@ class FingerprintStoreSpec extends AnyFunSuite with SparkTestSession {
     // compact first: re-adoption heals any transiently-lost line, and
     // the contract promises the race costs visibility, never data
     FingerprintStore.compact(spark, dir, keepRecent = 1)
-    assert(FingerprintStore.read(spark, dir, pinToManifest = true)
+    assert(FingerprintStore.read(spark, dir)
       .collect().map(_.getAs[Long]("id")).toSet == expect,
       "a racing merge cost DATA, not just visibility")
     // and a second compact folds the raced store cleanly
     FingerprintStore.compact(spark, dir, keepRecent = 0)
-    assert(FingerprintStore.read(spark, dir, pinToManifest = true)
+    assert(FingerprintStore.read(spark, dir)
       .collect().map(_.getAs[Long]("id")).toSet == expect)
   }
 
@@ -798,46 +795,88 @@ class FingerprintStoreSpec extends AnyFunSuite with SparkTestSession {
         .mkString("", "\n", "\n").getBytes("UTF-8"))
     new java.io.File(dir, "._manifest.crc").delete(): Unit // stale checksum
     FingerprintStore.compact(spark, dir, keepRecent = 5)
-    assert(FingerprintStore.read(spark, dir, pinToManifest = true)
+    assert(FingerprintStore.read(spark, dir)
       .collect().map(_.getAs[Long]("id")).toSet == Set(0L, 1L, 2L, 6L),
       "the backfilled ack must carry d1 through a lost manifest line")
   }
 
-  test("a v1 (header-less) manifest's unlisted partitions upgrade as RETIRED: deleted at the next compact, never re-adopted") {
-    // the r12-era layout: retained generations were merely unlisted. The
-    // v2 upgrade must keep treating them as generation-over, or the
-    // re-adoption path would resurrect them as live and hand every
-    // reader the duplicated union.
-    val hashes = ImageDedup.hashes(
-      ImageCorpus.forIds((0L until 12L).toDF("doc_id"), "doc_id"),
-      "png", "doc_id").localCheckpoint(true)
-    val dir = freshDir("v1-upgrade")
-    FingerprintStore.init(hashes.filter($"id" < 3), dir)
-    FingerprintStore.ingest(spark, dir, "d1",
-      hashes.filter($"id" === 6L)).collect(): Unit
-    // a COMPLETE duplicate of the init partition, unlisted — exactly
-    // what an r12 compact's retention left behind
-    val src = new java.io.File(dir, "delivery_id=__init__")
-    val dup = new java.io.File(dir, "delivery_id=old_gen")
-    spark.read.parquet(src.toString).write.parquet(dup.toString)
-    // rewrite the manifest as v1: live lines only, no header
+  test("a manifest without the v2 header is rejected, naming the file") {
+    // every writer publishes the `#graft-manifest-v2` header first, so a
+    // header-less `_manifest` is foreign or damaged — reading it as a
+    // live list would resolve whatever names it happens to carry
+    val dir = freshDir("headerless")
+    FingerprintStore.init(Seq((0L, 1L)).toDF("id", "phash"), dir)
     val mf = new java.io.File(dir, "_manifest")
     java.nio.file.Files.write(mf.toPath,
-      "delivery_id=__init__\ndelivery_id=d1\n".getBytes("UTF-8"))
+      "delivery_id=__init__\n".getBytes("UTF-8"))
     new java.io.File(dir, "._manifest.crc").delete(): Unit // stale checksum
-    def ids() = FingerprintStore.read(spark, dir)
-      .collect().map(_.getAs[Long]("id")).toSeq.sorted
-    assert(ids() == Seq(0L, 1L, 2L, 6L), "v1 manifest must still resolve")
-    // a delivery write upgrades the manifest to v2, adopting old_gen as
-    // retired — NOT as live
-    FingerprintStore.ingest(spark, dir, "d2",
-      hashes.filter($"id" === 9L)).collect(): Unit
-    assert(ids() == Seq(0L, 1L, 2L, 6L, 9L),
-      s"the upgrade resurrected a retained generation: ${ids()}")
-    // and the next compact DELETES it (retired), rather than re-adopting
+    val e = intercept[IllegalArgumentException] {
+      FingerprintStore.read(spark, dir)
+    }
+    assert(e.getMessage.contains(s"$dir/_manifest") &&
+      e.getMessage.contains("#graft-manifest-v2"), e.getMessage)
+    // the writers refuse it too instead of rewriting it
+    intercept[IllegalArgumentException] {
+      FingerprintStore.compact(spark, dir, keepRecent = 0)
+    }
+  }
+
+  test("a first delivery that crashed before its manifest merge never becomes live: the next writeDelivery lists only itself and compact reclaims it") {
+    // delivery a landed its data in a fresh dir, then the writer died
+    // before its first manifest merge: no ack and no manifest line, so
+    // it was never visible and its caller was never told it landed
+    val dir = freshDir("first-crash")
+    Seq((1L, 0x0123456789abcdefL)).toDF("id", "phash")
+      .write.parquet(s"$dir/delivery_id=a")
+    FingerprintStore.writeDelivery(dir, "b",
+      Seq((2L, 0x7edcba9876543210L)).toDF("id", "phash"))
+    assert(FingerprintStore.livePartitions(spark, dir) == Seq("b"))
+    assert(!FingerprintStore.read(spark, dir)
+      .collect().map(_.getAs[Long]("id")).contains(1L),
+      "the crashed delivery's rows must stay invisible")
+    FingerprintStore.compact(spark, dir, keepRecent = 1)
+    assert(!new java.io.File(dir, "delivery_id=a").exists(),
+      "compact must reclaim the never-merged (unacked) delivery")
+  }
+
+  test("a lost manifest is never read as an empty store: the writers refuse and no row is lost") {
+    // on the local filesystem the manifest's replace is delete-then-
+    // rename, so a publisher killed between the two leaves only its
+    // dot-temp; an empty live set would let compact reclaim every base
+    val dir = freshDir("lost-manifest")
+    FingerprintStore.init(Seq((0L, 10L)).toDF("id", "phash"), dir)
+    FingerprintStore.writeDelivery(dir, "d1",
+      Seq((1L, 11L)).toDF("id", "phash"))
     FingerprintStore.compact(spark, dir, keepRecent = 0)
-    assert(!dup.exists(),
-      "a v1 retained generation must be reclaimed at the next compact")
-    assert(ids() == Seq(0L, 1L, 2L, 6L, 9L))
+    FingerprintStore.writeDelivery(dir, "d2",
+      Seq((2L, 12L)).toDF("id", "phash"))
+    FingerprintStore.compact(spark, dir, keepRecent = 0)
+    def ids() = FingerprintStore.read(spark, dir)
+      .collect().map(_.getAs[Long]("id")).toSet
+    assert(ids() == Set(0L, 1L, 2L))
+    val (mf, orphan) = (java.nio.file.Paths.get(dir, "_manifest"),
+      java.nio.file.Paths.get(dir, "._manifest.killed000000.tmp"))
+    java.nio.file.Files.move(mf, orphan)
+    val e = intercept[IllegalStateException] {
+      FingerprintStore.writeDelivery(dir, "d3",
+        Seq((3L, 13L)).toDF("id", "phash"))
+    }
+    assert(e.getMessage.contains("_manifest") &&
+      e.getMessage.contains("lost"), e.getMessage)
+    intercept[IllegalStateException] {
+      FingerprintStore.compact(spark, dir, keepRecent = 0)
+    }
+    Seq(1, 2).foreach { n =>
+      assert(new java.io.File(dir,
+        s"delivery_id=${FingerprintStore.CompactedPrefix}-$n").exists(),
+        s"compacted-$n must survive the lost manifest")
+    }
+    // restoring the orphan's bytes recovers the store with every row;
+    // d3, refused before its merge, stays invisible and is reclaimed
+    java.nio.file.Files.move(orphan, mf)
+    assert(ids() == Set(0L, 1L, 2L))
+    FingerprintStore.compact(spark, dir, keepRecent = 0)
+    assert(ids() == Set(0L, 1L, 2L))
+    assert(!new java.io.File(dir, "delivery_id=d3").exists())
   }
 }

@@ -227,7 +227,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
       .collect().map(r => r.getAs[Long]("bucket") -> r.getAs[Long]("n")).toMap
     assert(fused("list") == twoPass, s"fused=${fused("list")} two-pass=$twoPass")
     assert(fused("list").values.sum == 3L)
-    // octant-only mode (legacy single-dial stats): no list rows at all
+    // octant-only mode (a stats file with no list rows): no list rows at all
     val octOnly = Similarity.driftHistograms(
         dirty, "embedding", octBucket, "octant", None, "list").collect()
     assert(octOnly.forall(_.getAs[String]("dial") == "octant"))

@@ -505,7 +505,7 @@ class ImageIngestSpec extends AnyFunSuite with SparkTestSession {
     val parts = java.nio.file.Files
       .readAllLines(java.nio.file.Paths.get(store, "_manifest")).asScala
       .filter(l => l.nonEmpty && !l.startsWith("#") &&
-        !l.startsWith("retired:")) // LIVE lines only (v2 format, r13)
+        !l.startsWith("retired:")) // LIVE lines only (header and retired: lines skipped)
       .map(_.stripPrefix("delivery_id=")).toSet
     val bases = parts.filter(_.startsWith("compacted-"))
     assert(bases.nonEmpty, s"expected a compacted base, got $parts")
