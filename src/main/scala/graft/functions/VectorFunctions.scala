@@ -43,10 +43,6 @@ object VectorFunctions {
   def cosinePrenormed(dotAB: Column, normA: Column, normB: Column): Column =
     round(dotAB / (normA * normB), 6)
 
-  /** Squared L2 distance. */
-  def l2sq(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v)
-
   /** Symmetric per-vector int8 quantization scale: round(max|x| / 127, 6),
     * falling back to the UNROUNDED max|x|/127 when the 6-dp rounding
     * underflows to 0 for a nonzero vector (max|x| below ~6.35e-5) — the

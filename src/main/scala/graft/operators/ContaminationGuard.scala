@@ -330,20 +330,13 @@ object ContaminationGuard {
       * is exact, not approximate. One small file (~1.2 MB per million
       * windows at 1% fpp): a versioned header carrying (window,
       * hexPrefix, fpp) followed by the filter's own serialization.
-      * Published via [[graft.util.AtomicPublish.file]] (dot-temp +
-      * rename-with-OVERWRITE — r12 verdict #3: the previous
-      * delete-then-rename left a window where a concurrent loader finds
-      * no file at all), so a re-save replaces the index atomically: a
-      * loader racing the publish reads the old generation or the new
-      * one, never a missing or half-written file — atomically by rename
-      * where the filesystem has a true rename-with-overwrite (HDFS),
-      * and by [[graft.util.AtomicPublish.readFile]]'s bounded retries
-      * over the delete-then-rename blink where it does not (Hadoop's
-      * local filesystem); race-spec-pinned either way. The path resolves
-      * through the SAME Hadoop configuration [[loadBloomIndex]] uses
-      * (r12 ADVICE: a `new Configuration()` default here made a
-      * scheme-less `dir` save to the LOCAL filesystem on clusters whose
-      * fs.defaultFS is remote — save "succeeded", load then missed). */
+      * Published via [[graft.util.AtomicPublish.file]] (dot-temp, then
+      * one rename over the target), so a re-save replaces the index
+      * atomically: a loader racing the publish reads the old generation
+      * or the new one, never a missing or half-written file
+      * (race-spec-pinned). The path resolves through the SAME Hadoop
+      * configuration [[loadBloomIndex]] uses, so a scheme-less `dir`
+      * saves to the filesystem the loader reads from (fs.defaultFS). */
     def save(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
       graft.util.AtomicPublish.file(
         spark.sparkContext.hadoopConfiguration,
@@ -366,17 +359,19 @@ object ContaminationGuard {
     * magic header rejects a file that is not a v1 bloom index instead of
     * mis-parsing it into a silently-empty filter. */
   def loadBloomIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): BloomIndex =
+      dir: String): BloomIndex = {
+    val path = new org.apache.hadoop.fs.Path(dir, BloomFileName)
     graft.util.AtomicPublish.readFile(
-      spark.sparkContext.hadoopConfiguration,
-      new org.apache.hadoop.fs.Path(dir, BloomFileName),
+      spark.sparkContext.hadoopConfiguration, path,
       magic = Some(BloomMagic)) { in =>
       val window = in.readInt()
       val hexPrefix = in.readUTF()
       val fpp = in.readDouble()
       BloomIndex(window, hexPrefix, fpp,
         org.apache.spark.util.sketch.BloomFilter.readFrom(in))
-    }
+    }.getOrElse(throw new java.io.FileNotFoundException(
+      s"$path does not exist — BloomIndex.save writes it"))
+  }
 
   /** Map-side Bloom probe of [[bloomIndex]]: one row per document whose
     * might-contain windows include a run of at least `minRun`

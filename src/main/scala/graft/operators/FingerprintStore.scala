@@ -152,21 +152,13 @@ object FingerprintStore {
   }
 
   /** The one read of `_manifest`, None when the directory has none —
-    * the [[AtomicPublish]] read the compaction journal and the
-    * data-batch cadence counter share: absence is trusted only after two consecutive
-    * listings find neither the manifest nor an in-flight publish's
-    * temp, and the read itself retries over a concurrent publish's
-    * transient windows, so an FNF that survives those retries means the
-    * file was never published. */
+    * [[AtomicPublish.readFile]], which the compaction journal and the
+    * data-batch cadence counter share. */
   private def manifestState(spark: SparkSession,
       dir: String): Option[ManifestState] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val (fs, base) = fsOf(dir, conf)
-    val mf = new Path(base, ManifestFile)
-    if (AtomicPublish.confirmedAbsent(fs, mf)) None
-    else
-      try Some(AtomicPublish.readFile(conf, mf)(parseManifest(mf, _)))
-      catch { case _: java.io.FileNotFoundException => None }
+    val mf = new Path(dir, ManifestFile)
+    AtomicPublish.readFile(spark.sparkContext.hadoopConfiguration, mf)(
+      parseManifest(mf, _))
   }
 
   private def parseManifest(mf: Path,
@@ -188,12 +180,12 @@ object FingerprintStore {
     * EMPTY (nothing live, nothing retired) only while no partition in
     * the directory ever became visible — at most a first delivery's torn
     * or unmerged write, which carries no ack. A compacted base or an
-    * acked partition without a manifest means the manifest was LOST (on
-    * the local filesystem [[AtomicPublish.file]] replaces it
-    * delete-then-rename, so a publisher killed between the two steps
-    * leaves only its dot-temp): an empty live set would let the next
+    * acked partition without a manifest means the manifest was LOST:
+    * [[AtomicPublish.file]] replaces it in one rename, so no publish
+    * leaves the store without one, but a `_manifest` can still be
+    * deleted from outside. An empty live set would let the next
     * [[compact]]'s reclaim delete every folded base, so the writers
-    * refuse instead, naming the recovery. */
+    * refuse instead. */
   private def writerState(spark: SparkSession,
       dir: String): ManifestState =
     manifestState(spark, dir).getOrElse {
@@ -208,9 +200,8 @@ object FingerprintStore {
         throw new IllegalStateException(
           s"$dir has acknowledged or compacted partitions but no " +
             s"$ManifestFile — the manifest was lost, and writing as if " +
-            "the store were empty would reclaim them; restore " +
-            s"$ManifestFile (a publish killed mid-replace leaves its " +
-            s"complete bytes in a .$ManifestFile.*.tmp sibling)")
+            "the store were empty would reclaim them; restore the deleted " +
+            ManifestFile)
       ManifestState(Seq.empty, Seq.empty)
     }
 

@@ -224,6 +224,7 @@ object TableCompaction {
     c.substring(r.length)
   }
 
+  /** The journaled moves, empty when no journal was published. */
   private def readMoves(
       conf: org.apache.hadoop.conf.Configuration,
       journal: Path): Seq[Move] =
@@ -234,7 +235,7 @@ object TableCompaction {
         val staged = in.readUTF()
         Move(target, staged, Seq.fill(in.readInt())(in.readUTF()))
       }
-    }
+    }.getOrElse(Seq.empty)
 
   /** Apply journaled moves in order — the one swap, run right after the
     * journal's publish and again by every heal (class doc). The journal
@@ -309,16 +310,10 @@ object TableCompaction {
     val (fs, root) = fsAndRoot(spark, table)
     if (!fs.exists(root)) return 0L
     val journal = new Path(root, JournalName)
-    // a hard kill inside the journal's own publish leaves a young
-    // dot-temp that confirmedAbsent counts as in flight; under the
-    // single-writer window nothing else can be publishing, so a read
-    // that still ends in FileNotFound IS that pre-journal crash (the
-    // publish lands whole or not at all)
-    val moves: Seq[Move] =
-      if (graft.util.AtomicPublish.confirmedAbsent(fs, journal)) Seq.empty
-      else
-        try readMoves(conf, journal)
-        catch { case _: java.io.FileNotFoundException => Seq.empty }
+    // a hard kill inside the journal's own publish leaves only its
+    // dot-temp: the publish lands whole or not at all, so no journal
+    // means nothing was moved
+    val moves = readMoves(conf, journal)
     applyMoves(fs, root, moves)
     if (moves.nonEmpty) fs.delete(journal, false): Unit
     // any staging dir is now an orphan (single-writer window): a crash

@@ -1,16 +1,21 @@
 package graft.operators
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity.PqModel
+import graft.util.AtomicPublish
 
 /** Persisted IVF-PQ index lifecycle — the production contract
   * [[Similarity.ivfPqTopK]]'s one-shot form doesn't give you: build the
   * index ONCE (train + encode + write), answer queries MANY times without
   * retraining or re-encoding the corpus.
   *
-  * On-disk layout under `dir`:
+  * On-disk layout under `dir`: versioned generations `gen-N`, and one
+  * `_current` file naming the generation readers use. Each generation
+  * holds
   *   - `codes/` — the (neighbor_id, cn, list, codes) rows, PARTITIONED BY
   *     list: the inverted-file structure materialized as directory layout,
   *     so a probe of p lists is eligible to read p/nLists of the index
@@ -19,6 +24,27 @@ import graft.operators.Similarity.PqModel
   *   - `model/` — the trained quantizer as ONE parquet row (dim, m, ksub,
   *     coarse, codebooks): parquet instead of a sidecar format so reload
   *     needs no parser and the schema is self-describing.
+  *   - `stats/` — the build-time drift reference [[retrainIfDrifted]]
+  *     compares against.
+  *
+  * Publish: a build ([[buildIvfPq]], and a [[retrainIfDrifted]] that
+  * fires) stages all three under a dot-prefixed dir, publishes it as
+  * `gen-N` with [[graft.util.AtomicPublish.dirFresh]], then flips
+  * `_current` to N with [[graft.util.AtomicPublish.file]] and reclaims
+  * every generation except N and the one it replaced — the shape
+  * [[FingerprintStore]]'s `compacted-N` bases behind one manifest use.
+  * Every reader resolves `_current` ONCE per call ([[currentGen]]), so a
+  * search never pairs one generation's codes with another's model, and a
+  * search that resolved the previous generation keeps reading real files
+  * through the next flip. A crash before the flip leaves the previous
+  * generation serving; its orphan `gen-N` or staging dir is reclaimed by
+  * the next build. [[appendIvfPq]] and [[deleteIvfPq]] mutate the
+  * current generation in place and run in the index writer's exclusive
+  * window, as builds do.
+  *
+  * Upgrade: a directory with no `_current` (the unversioned
+  * `codes`/`model`/`stats` layout) fails loudly, naming the directory —
+  * rebuild the index with [[buildIvfPq]].
   *
   * Determinism: training is seeded and driver-side, so build → search
   * equals the one-shot [[Similarity.ivfPqTopK]] bit-for-bit under the same
@@ -26,23 +52,56 @@ import graft.operators.Similarity.PqModel
   */
 object VectorIndex {
 
+  private val CurrentFile = "_current"
+  private val CurrentMagic = "graft-ivfpq-current-v1"
+  private val GenPrefix = "gen-"
+
+  private def currentN(conf: Configuration, base: Path): Option[Long] =
+    AtomicPublish.readFile(conf, new Path(base, CurrentFile),
+      Some(CurrentMagic))(_.readLong())
+
+  /** The current generation's directory — THE resolve every reader
+    * makes, once per call (class doc). */
+  private[graft] def currentGen(spark: SparkSession, dir: String): String = {
+    val n = currentN(spark.sparkContext.hadoopConfiguration, new Path(dir))
+      .getOrElse(throw new IllegalStateException(
+        s"$dir has no $CurrentFile — not an IVF-PQ index buildIvfPq " +
+          "wrote; rebuild it with buildIvfPq"))
+    s"$dir/$GenPrefix$n"
+  }
+
+  private def generations(fs: FileSystem, base: Path): Seq[Long] =
+    if (!fs.exists(base)) Seq.empty
+    else fs.listStatus(base).toSeq.map(_.getPath.getName)
+      .filter(_.matches(s"$GenPrefix\\d+"))
+      .map(_.stripPrefix(GenPrefix).toLong)
+
   def buildIvfPq(corpus: DataFrame, idCol: String, vecCol: String, dir: String,
       nLists: Int = 16, m: Int = 8, ksub: Int = 16,
       sampleSize: Int = 2048, seed: Long = 42L): Unit = {
     val spark = corpus.sparkSession
+    val conf = spark.sparkContext.hadoopConfiguration
+    val base = new Path(dir)
+    val fs = base.getFileSystem(conf)
+    val previous = currentN(conf, base)
+    // past every generation on disk, so an orphan a crash left before its
+    // flip is never reused
+    val n = (generations(fs, base) ++ previous).maxOption.fold(0L)(_ + 1)
+    val staging = new Path(base, s".$GenPrefix$n")
+    fs.delete(staging, true): Unit // a crashed build's leftover
     val model = Similarity.trainPq(
       Similarity.sampleVectors(corpus, idCol, vecCol, sampleSize, seed), nLists, m, ksub)
     Similarity.encodePqIndex(corpus, idCol, vecCol, model)
-      .write.mode("overwrite").partitionBy("list").parquet(s"$dir/codes")
+      .write.partitionBy("list").parquet(s"$staging/codes")
     spark.createDataFrame(Seq((
         model.dim, model.m, model.ksub,
         model.coarse.map(_.toSeq).toSeq,
         model.codebooks.map(_.map(_.toSeq).toSeq).toSeq)))
       .toDF("dim", "m", "ksub", "coarse", "codebooks")
-      .write.mode("overwrite").parquet(s"$dir/model")
+      .write.parquet(s"$staging/model")
     // build-time distribution reference for retrainIfDrifted, one tiny
-    // parquet with TWO dials (r11 verdict #3): ext90's sign-octant
-    // buckets of the BUILD corpus (quantizer-free, ≤ 8 rows), plus the
+    // parquet with TWO dials: ext90's sign-octant buckets of the BUILD
+    // corpus (quantizer-free, ≤ 8 rows), plus the
     // coarse-LIST occupancy under the just-trained quantizer (≤ nLists
     // rows) — read back from the codes just written, so the reference is
     // exactly what the index holds, with no second assignment pass.
@@ -52,11 +111,16 @@ object VectorIndex {
     // triggers the rebuild.
     octantCounts(corpus, vecCol).withColumn("dial", lit(DialOctant))
       .unionByName(
-        spark.read.parquet(s"$dir/codes")
+        spark.read.parquet(s"$staging/codes")
           .groupBy(col("list").cast("long").as("bucket"))
           .agg(count(lit(1)).as("n"))
           .withColumn("dial", lit(DialList)))
-      .write.mode("overwrite").parquet(s"$dir/stats")
+      .write.parquet(s"$staging/stats")
+    AtomicPublish.dirFresh(fs, staging, new Path(base, s"$GenPrefix$n"))
+    AtomicPublish.file(conf, new Path(base, CurrentFile),
+      Some(CurrentMagic))(_.writeLong(n))
+    generations(fs, base).filterNot(g => g == n || previous.contains(g))
+      .foreach(g => fs.delete(new Path(base, s"$GenPrefix$g"), true): Unit)
   }
 
   private val DialOctant = "octant"
@@ -114,59 +178,32 @@ object VectorIndex {
     *    relies on stops matching the data, which is the recall-decay
     *    mechanism ext88 measures.
     *
-    * When a dial fires, the quantizer is rebuilt
-    * from the current corpus into a dot-prefixed staging dir (invisible
-    * to readers of `codes/`) and published by directory renames —
-    * codes, model and stats swap together, so a search never pairs new
-    * codes with an old model. Below threshold NOTHING is touched
-    * (spec-pinned byte-identical). Returns (psi, retrained).
-    *
-    * Failure contract: re-runnable, not atomic — but never
-    * generation-mixing. A `.swap_pending` marker is created
-    * only once staging is FULLY built and removed only after the last
-    * rename, so the next call sees the marker and completes the swap AS
-    * A UNIT before the stats read: every still-staged subdir is
-    * published (already-published ones have no staged copy left and are
-    * skipped). Healing per-subdir on "target missing" alone would be
-    * wrong twice over — a crash mid-heal could strand NEW codes under
-    * the OLD model and then report healthy, and the stats read could
-    * wedge on a missing dir. The trigger can neither wedge itself nor
-    * serve a mixed generation. Swap in the writer's exclusive window. */
+    * When a dial fires, the quantizer is rebuilt from the current corpus
+    * as a new generation ([[buildIvfPq]]'s publish: codes, model and
+    * stats flip together through `_current`, so a search never pairs new
+    * codes with an old model). Below threshold NOTHING is touched
+    * (spec-pinned byte-identical). Returns (psi, retrained). Run in the
+    * index writer's exclusive window. */
   def retrainIfDrifted(spark: SparkSession, dir: String, corpus: DataFrame,
       idCol: String, vecCol: String, threshold: Double,
       nLists: Int = 16, m: Int = 8, ksub: Int = 16,
       sampleSize: Int = 2048, seed: Long = 42L): (Double, Boolean) = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val staging = s"$dir/.retrain_staging"
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/.swap_pending")
-    val subs = Seq("codes", "model", "stats")
-    if (fs.exists(marker)) {
-      subs.foreach { sub =>
-        val staged = new org.apache.hadoop.fs.Path(s"$staging/$sub")
-        if (fs.exists(staged))
-          graft.util.AtomicPublish.replaceDir(fs, staged,
-            new org.apache.hadoop.fs.Path(s"$dir/$sub"))
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true): Unit
-      fs.delete(marker, false): Unit
-    }
-    val statsDf = spark.read.parquet(s"$dir/stats")
+    val gen = currentGen(spark, dir)
+    val statsDf = spark.read.parquet(s"$gen/stats")
     def toHist(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => r.getAs[Long]("bucket") -> r.getAs[Long]("n")).toMap
     require(statsDf.columns.contains("dial"),
-      s"$dir/stats has no `dial` column — not a stats file buildIvfPq writes")
+      s"$gen/stats has no `dial` column — not a stats file buildIvfPq writes")
     val refByDial: Map[String, Map[Long, Long]] =
       statsDf.collect().groupBy(_.getAs[String]("dial"))
         .view.mapValues(toHist).toMap
-    // ONE corpus pass feeds BOTH dials (pre-r14: an octant job, then a
-    // coarseOccupancy job — the full corpus scanned twice per trigger
-    // probe; the scan is the trigger's dominant cost at corpus scale).
-    // The collect is bounded: ≤ 8 octant + ≤ nLists list rows.
+    // ONE corpus pass feeds BOTH dials — the scan is the trigger's
+    // dominant cost at corpus scale. The collect is bounded: ≤ 8 octant
+    // + ≤ nLists list rows.
     val curByDial: Map[String, Map[Long, Long]] =
       Similarity.driftHistograms(corpus, vecCol,
           octantBucket(vecCol), DialOctant,
-          if (refByDial.contains(DialList)) Some(loadModel(spark, dir))
+          if (refByDial.contains(DialList)) Some(loadModelAt(spark, gen))
           else None, DialList)
         .collect().groupBy(_.getAs[String]("dial"))
         .view.mapValues(toHist).toMap
@@ -177,23 +214,17 @@ object VectorIndex {
     val psi = math.max(psiOct, psiList.getOrElse(0.0))
     if (psi <= threshold) (psi, false)
     else {
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true): Unit
-      buildIvfPq(corpus, idCol, vecCol, staging, nLists, m, ksub,
+      buildIvfPq(corpus, idCol, vecCol, dir, nLists, m, ksub,
         sampleSize, seed)
-      fs.create(marker, true).close() // staging complete — arm the heal
-      subs.foreach { sub =>
-        graft.util.AtomicPublish.replaceDir(fs,
-          new org.apache.hadoop.fs.Path(s"$staging/$sub"),
-          new org.apache.hadoop.fs.Path(s"$dir/$sub"))
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true): Unit
-      fs.delete(marker, false): Unit
       (psi, true)
     }
   }
 
-  def loadModel(spark: SparkSession, dir: String): PqModel = {
-    val r = spark.read.parquet(s"$dir/model").head()
+  def loadModel(spark: SparkSession, dir: String): PqModel =
+    loadModelAt(spark, currentGen(spark, dir))
+
+  private def loadModelAt(spark: SparkSession, gen: String): PqModel = {
+    val r = spark.read.parquet(s"$gen/model").head()
     // row arrays come back as mutable.ArraySeq — type against collection.Seq
     PqModel(
       r.getAs[Int]("dim"), r.getAs[Int]("m"), r.getAs[Int]("ksub"),
@@ -213,9 +244,10 @@ object VectorIndex {
     */
   def appendIvfPq(newBatch: DataFrame, idCol: String, vecCol: String,
       dir: String): Unit = {
-    val model = loadModel(newBatch.sparkSession, dir)
-    Similarity.encodePqIndex(newBatch, idCol, vecCol, model)
-      .write.mode("append").partitionBy("list").parquet(s"$dir/codes")
+    val gen = currentGen(newBatch.sparkSession, dir)
+    Similarity.encodePqIndex(newBatch, idCol, vecCol,
+        loadModelAt(newBatch.sparkSession, gen))
+      .write.mode("append").partitionBy("list").parquet(s"$gen/codes")
   }
 
   /** Index deletion — the remaining CRUD leg (GDPR erasure, retracted
@@ -237,7 +269,7 @@ object VectorIndex {
     */
   def deleteIvfPq(spark: SparkSession, dir: String, ids: DataFrame,
       idCol: String): Unit = {
-    val codes = s"$dir/codes"
+    val codes = s"${currentGen(spark, dir)}/codes"
     // heal first, so the affected lists are read off a settled index
     TableCompaction.healJournal(spark, codes): Unit
     val tombstones = broadcast(ids.select(col(idCol).as("neighbor_id")).distinct())
@@ -257,9 +289,9 @@ object VectorIndex {
   def searchIvfPq(spark: SparkSession, dir: String,
       queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, nProbe: Int = 2, refineFactor: Int = 4): DataFrame = {
-    val model = loadModel(spark, dir)
-    val index = spark.read.parquet(s"$dir/codes")
-    Similarity.searchPqIndex(index, corpus, queries, idCol, vecCol,
-      model, k, nProbe, refineFactor)
+    val gen = currentGen(spark, dir)
+    Similarity.searchPqIndex(spark.read.parquet(s"$gen/codes"), corpus,
+      queries, idCol, vecCol, loadModelAt(spark, gen), k, nProbe,
+      refineFactor)
   }
 }

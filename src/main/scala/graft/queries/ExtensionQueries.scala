@@ -2681,11 +2681,11 @@ object ExtensionQueries {
       "ext73_ann_index_lifecycle",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        // per-PROCESS path + overwrite mode: repeated builds within a JVM
-        // (plan audits, re-runs) reuse one directory instead of leaking a
-        // fresh temp dir per invocation, while two concurrent JVMs (sbt
-        // test vs the Verify driver) never overwrite each other's codes/
-        // mid-read
+        // per-PROCESS path: repeated builds within a JVM (plan audits,
+        // re-runs) reuse one directory — each publishes a new generation
+        // and reclaims all but the last two — instead of leaking a fresh
+        // temp dir per invocation, while two concurrent JVMs (sbt test vs
+        // the Verify driver) never touch each other's index
         val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft-vecidx-ext73-" +
           ProcessHandle.current().pid()
         graft.operators.VectorIndex.buildIvfPq(
@@ -3378,9 +3378,9 @@ object ExtensionQueries {
         val emb = Tables.embeddings(s, dir)
         val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft-vecidx-ext88-" +
           ProcessHandle.current().pid()
-        // buildIvfPq overwrites codes/, so the build→append→delete
-        // sequence is idempotent per invocation (same per-process dir
-        // convention as ext73)
+        // each buildIvfPq publishes a fresh generation, so the
+        // build→append→delete sequence is idempotent per invocation
+        // (same per-process dir convention as ext73)
         graft.operators.VectorIndex.buildIvfPq(
           emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idxDir,
           nLists = 8, m = 8, ksub = 16)
@@ -6529,12 +6529,12 @@ object ExtensionQueries {
       None, bench = false, eagerLifecycle = true), // stateful lifecycle entry, like ext121/ext131
 
     // ------------------------------------------------------------ EXT135
-    // ANN RETRAIN TRIGGER ARC (r14) — the last maintenance composition
+    // ANN RETRAIN TRIGGER ARC — the last maintenance composition
     // with no catalog entry: ext73 proves the index CRUD lifecycle and
     // ext88 measures the recall decay a stale quantizer causes, but the
     // operator that CLOSES that loop — `VectorIndex.retrainIfDrifted`'s
-    // two-dial drift probe → staged rebuild → marker-bracketed atomic
-    // swap — was ScalaTest-only. The entry runs the trigger's whole
+    // two-dial drift probe → rebuild as a new generation → `_current`
+    // flip — was ScalaTest-only. The entry runs the trigger's whole
     // decision arc over the embeddings table, one probe per step:
     // (1) the build corpus itself — BOTH dials quiet, nothing touched
     // (byte-identical below threshold, spec-pinned); (2) a
@@ -6557,13 +6557,13 @@ object ExtensionQueries {
     // OCTANT dial provably fires against the near-uniform reference (the
     // returned psi is the max of both dials) → retrain; (5) quiet again.
     // Each probe is ONE corpus pass (the fused driftHistograms — both
-    // dials from a single scan, the r14 one-pass shape) plus, when a
-    // dial fires, the staged rebuild; emitted per step: (step, phase,
-    // psi 6dp, retrained, n_live_lists from the codes/ directory
-    // listing). Rows-only (float PSI and kmeans training are
-    // engine-specific); VectorIndexSpec pins the entry's exact
-    // fire/disarm arc at sf0.001 plus crash-heal, no-op byte-identity
-    // and rebuild-equals-fresh-build on the operator itself.
+    // dials from a single scan) plus, when a dial fires, the rebuild;
+    // emitted per step: (step, phase, psi 6dp, retrained, n_live_lists
+    // from the current generation's codes/ directory listing). Rows-only
+    // (float PSI and kmeans training are engine-specific); VectorIndexSpec
+    // pins the entry's exact fire/disarm arc at sf0.001 plus
+    // crash-before-flip, no-op byte-identity and
+    // rebuild-equals-fresh-build on the operator itself.
     QueryDef(
       "ext135_ann_retrain_trigger",
       (s, dir) => withScratch("annretrain-ext135") { idxDir =>
@@ -6579,7 +6579,8 @@ object ExtensionQueries {
           transform(col("embedding"), x => abs(x)).as("embedding"))
           .localCheckpoint(false)
         def listDirs(): Long = {
-          val p = new org.apache.hadoop.fs.Path(s"$idxDir/codes")
+          val p = new org.apache.hadoop.fs.Path(
+            s"${VectorIndex.currentGen(s, idxDir)}/codes")
           val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
           fs.listStatus(p).count(st => st.isDirectory &&
             st.getPath.getName.startsWith("list=")).toLong

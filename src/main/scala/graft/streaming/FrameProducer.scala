@@ -4,7 +4,7 @@ import java.util.Base64
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.model.VideoFrameData
 
@@ -170,18 +170,6 @@ object FrameProducer {
       .option("kafka.compression.type", "gzip")
       .option("kafka.max.request.size", (5 * 1024 * 1024).toString)
       .option("checkpointLocation", checkpointDir)
-      .start()
-
-  /** Offline sink: JSON-lines files that [[MotionPipeline.runStream]]
-    * consumes — closes the producer→processor loop without a broker.
-    */
-  def writeToJsonDir(wire: DataFrame, dir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    wire.select(col("value")).writeStream
-      .format("text")
-      .option("path", dir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
       .start()
 
   // ------------------------------------------------------------- metrics

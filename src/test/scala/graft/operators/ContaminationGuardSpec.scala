@@ -382,15 +382,13 @@ class ContaminationGuardSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("CONCURRENT load during re-save: every load resolves one coherent generation — never a missing, torn, or parameter-mixed index") {
-    // the r12 verdict's publish contract, exercised as an actual race
-    // rather than reasoned about: a writer re-saves alternating
-    // generations in a tight loop while this thread loads continuously.
-    // Each loaded index must be ENTIRELY generation A or ENTIRELY
-    // generation B — the bundled (window, hexPrefix, fpp) are the
-    // coherence witness (a torn read would readUTF garbage or pair A's
-    // header with B's bits and fail readFrom; a non-atomic publish
-    // would surface as FileNotFound; checksum-sidecar skew retries
-    // inside AtomicPublish.readFile).
+    // the publish contract, exercised as an actual race rather than
+    // reasoned about: a writer re-saves alternating generations in a
+    // tight loop while this thread loads continuously. Each loaded index
+    // must be ENTIRELY generation A or ENTIRELY generation B — the
+    // bundled (window, hexPrefix, fpp) are the coherence witness (a torn
+    // read would fail the CRC32 trailer or pair A's header with B's
+    // bits; a non-atomic publish would surface as FileNotFound).
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global

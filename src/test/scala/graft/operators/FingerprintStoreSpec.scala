@@ -20,6 +20,18 @@ class FingerprintStoreSpec extends AnyFunSuite with SparkTestSession {
   private def freshDir(tag: String): String =
     graft.ScratchDir.dir(s"fpstore-$tag") + "/store"
 
+  /** Hand-edit `_manifest`'s lines through the store's own publish, so
+    * the edited file keeps a valid CRC32 trailer. */
+  private def editManifest(dir: String)(
+      edit: List[String] => List[String]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val mf = new org.apache.hadoop.fs.Path(dir, "_manifest")
+    val lines = graft.util.AtomicPublish.readFile(conf, mf)(in =>
+      scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList).get
+    graft.util.AtomicPublish.file(conf, mf)(
+      _.write(edit(lines).mkString("", "\n", "\n").getBytes("UTF-8")))
+  }
+
   test("a later delivery drops against an earlier delivery's kept rows (the merge step)") {
     // families of 3: {0,1,2}, {3,4,5}, {6,7,8}, {9,10,11}
     val hashes = ImageDedup.hashes(
@@ -284,19 +296,11 @@ class FingerprintStoreSpec extends AnyFunSuite with SparkTestSession {
             loseOutstanding = false // re-adoption healed any lost line
             check(s"step $step compact")
           case _ if !loseOutstanding => // lose one live DELIVERY line
-            val mf = new java.io.File(dir, "_manifest")
-            val lines = scala.io.Source.fromFile(mf).getLines().toList
-            val losable = lines.filter { l =>
-              l.startsWith("delivery_id=") && // live, not header/retired
-                !FingerprintStore.isCompactedBase(
-                  l.stripPrefix("delivery_id="))
-            }
+            val losable = FingerprintStore.livePartitions(spark, dir)
+              .filterNot(FingerprintStore.isCompactedBase)
             if (losable.nonEmpty) {
-              val victim = losable(rnd.nextInt(losable.size))
-              java.nio.file.Files.write(mf.toPath,
-                lines.filterNot(_ == victim)
-                  .mkString("", "\n", "\n").getBytes("UTF-8"))
-              new java.io.File(dir, "._manifest.crc").delete(): Unit
+              val victim = "delivery_id=" + losable(rnd.nextInt(losable.size))
+              editManifest(dir)(_.filterNot(_ == victim))
               loseOutstanding = true
               check(s"step $step lose $victim")
             }
@@ -658,7 +662,7 @@ class FingerprintStoreSpec extends AnyFunSuite with SparkTestSession {
     assert(FingerprintStore.read(spark, dir).count() == 2)
   }
 
-  test("reclaim deletes only by explicit evidence: a lost manifest line is re-adopted, a torn write and a v1 retained generation are deleted") {
+  test("reclaim deletes only by explicit evidence: a lost manifest line is re-adopted, a torn write and an unacked crash are deleted") {
     val hashes = ImageDedup.hashes(
       ImageCorpus.forIds((0L until 15L).toDF("doc_id"), "doc_id"),
       "png", "doc_id").localCheckpoint(true)
@@ -674,14 +678,7 @@ class FingerprintStoreSpec extends AnyFunSuite with SparkTestSession {
     assert(ids() == all)
     // LOST MANIFEST LINE: a racing rewrite dropped d2's name — its
     // complete partition is on disk but unlisted; reads lose its rows...
-    val mf = new java.io.File(dir, "_manifest")
-    val lines = scala.io.Source.fromFile(mf).getLines().toList
-    java.nio.file.Files.write(mf.toPath,
-      lines.filterNot(_ == "delivery_id=d2")
-        .mkString("", "\n", "\n").getBytes("UTF-8"))
-    // the hand-edit bypasses Hadoop's checksummed local FS — drop the
-    // stale .crc sidecar or every subsequent manifest read throws
-    new java.io.File(dir, "._manifest.crc").delete(): Unit
+    editManifest(dir)(_.filterNot(_ == "delivery_id=d2"))
     assert(ids() == all - 9L, "fixture: the lost line must hide d2")
     // ... a TORN WRITE (no ack, no _SUCCESS), and a delivery that
     // CRASHED between its data write and its manifest merge (parquet
@@ -788,12 +785,7 @@ class FingerprintStoreSpec extends AnyFunSuite with SparkTestSession {
     assert(ack.exists(), "compact must backfill acks on live partitions")
     // the restored ack is what makes a later lost manifest line
     // survivable: drop d1's line and compact — it must be re-adopted
-    val mf = new java.io.File(dir, "_manifest")
-    val lines = scala.io.Source.fromFile(mf).getLines().toList
-    java.nio.file.Files.write(mf.toPath,
-      lines.filterNot(_ == "delivery_id=d1")
-        .mkString("", "\n", "\n").getBytes("UTF-8"))
-    new java.io.File(dir, "._manifest.crc").delete(): Unit // stale checksum
+    editManifest(dir)(_.filterNot(_ == "delivery_id=d1"))
     FingerprintStore.compact(spark, dir, keepRecent = 5)
     assert(FingerprintStore.read(spark, dir)
       .collect().map(_.getAs[Long]("id")).toSet == Set(0L, 1L, 2L, 6L),
@@ -806,10 +798,7 @@ class FingerprintStoreSpec extends AnyFunSuite with SparkTestSession {
     // live list would resolve whatever names it happens to carry
     val dir = freshDir("headerless")
     FingerprintStore.init(Seq((0L, 1L)).toDF("id", "phash"), dir)
-    val mf = new java.io.File(dir, "_manifest")
-    java.nio.file.Files.write(mf.toPath,
-      "delivery_id=__init__\n".getBytes("UTF-8"))
-    new java.io.File(dir, "._manifest.crc").delete(): Unit // stale checksum
+    editManifest(dir)(_ => List("delivery_id=__init__"))
     val e = intercept[IllegalArgumentException] {
       FingerprintStore.read(spark, dir)
     }
@@ -840,9 +829,9 @@ class FingerprintStoreSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("a lost manifest is never read as an empty store: the writers refuse and no row is lost") {
-    // on the local filesystem the manifest's replace is delete-then-
-    // rename, so a publisher killed between the two leaves only its
-    // dot-temp; an empty live set would let compact reclaim every base
+    // a `_manifest` deleted from outside (here: moved aside) beside
+    // acked and compacted partitions; an empty live set would let
+    // compact reclaim every base
     val dir = freshDir("lost-manifest")
     FingerprintStore.init(Seq((0L, 10L)).toDF("id", "phash"), dir)
     FingerprintStore.writeDelivery(dir, "d1",

@@ -9,13 +9,15 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
 
   private val sf = "/root/testdata/sf0.01"
   private def emb = graft.sources.Tables.embeddings(spark, sf)
+  /** The current generation's codes dir. */
+  private def codesOf(dir: String) = s"${VectorIndex.currentGen(spark, dir)}/codes"
 
   test("build -> search equals the one-shot ivfPqTopK bit-for-bit; codes are list-partitioned") {
     val dir = graft.ScratchDir.dir("vecidx")
     VectorIndex.buildIvfPq(emb, "vec_id", "embedding", dir, nLists = 8, m = 8, ksub = 16)
 
     // the inverted-file layout is real directory partitioning
-    val listDirs = new java.io.File(s"$dir/codes").listFiles()
+    val listDirs = new java.io.File(codesOf(dir)).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("list="))
     assert(listDirs.length > 1, "expected list=N partition directories")
 
@@ -55,7 +57,7 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
   test("deleteIvfPq: victims gone, untouched lists' files untouched, emptied lists cleared") {
     val dir = graft.ScratchDir.dir("vecidx-del")
     VectorIndex.buildIvfPq(emb, "vec_id", "embedding", dir, nLists = 8, m = 8, ksub = 16)
-    val codes = spark.read.parquet(s"$dir/codes")
+    val codes = spark.read.parquet(codesOf(dir))
       .select("neighbor_id", "list").collect()
       .map(r => (r.getLong(0), r.getInt(1)))
     val byList = codes.groupBy(_._2)
@@ -64,7 +66,7 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
     val victims = byList(emptyTarget).map(_._1) ++ byList(partialTarget).map(_._1).take(3)
     val untouched = byList.keys.filterNot(l => l == emptyTarget || l == partialTarget)
     assert(untouched.nonEmpty, "fixture must leave some lists untouched")
-    def fileState(l: Int) = Option(new java.io.File(s"$dir/codes/list=$l").listFiles())
+    def fileState(l: Int) = Option(new java.io.File(s"${codesOf(dir)}/list=$l").listFiles())
       .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
       .map(f => (f.getName, f.lastModified(), f.length())).toSet
 
@@ -72,15 +74,15 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
     val beforeUntouched = untouched.map(l => l -> fileState(l)).toMap
     VectorIndex.deleteIvfPq(spark, dir, victims.toSeq.toDF("vec_id"), "vec_id")
 
-    val after = spark.read.parquet(s"$dir/codes")
+    val after = spark.read.parquet(codesOf(dir))
       .select("neighbor_id", "list").collect().map(r => (r.getLong(0), r.getInt(1)))
     assert(after.length == codes.length - victims.length, "exactly the victims left")
     assert(after.map(_._1).toSet.intersect(victims.toSet).isEmpty)
     // a delete is surgical: untouched lists keep their exact files
     untouched.foreach { l => assert(fileState(l) == beforeUntouched(l), s"list $l rewritten") }
-    assert(!new java.io.File(s"$dir/codes/list=$emptyTarget").exists(),
+    assert(!new java.io.File(s"${codesOf(dir)}/list=$emptyTarget").exists(),
       "a fully-tombstoned list must not keep stale files")
-    assert(!new java.io.File(s"$dir/codes").list().exists(_.startsWith(".compact_")),
+    assert(!new java.io.File(codesOf(dir)).list().exists(_.startsWith(".compact_")),
       "journal and staging dir cleaned")
     // and the index still answers, without ever returning a victim
     val got = VectorIndex.searchIvfPq(spark, dir,
@@ -96,7 +98,7 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
     val base = graft.ScratchDir.dir("vecidx-delcrash")
     VectorIndex.buildIvfPq(emb, "vec_id", "embedding", s"$base/built",
       nLists = 8, m = 8, ksub = 16)
-    def codeIds(dir: String) = spark.read.parquet(s"$dir/codes")
+    def codeIds(dir: String) = spark.read.parquet(codesOf(dir))
       .select("neighbor_id", "list").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSeq
     val byList = codeIds(s"$base/built").groupBy(_._2)
@@ -106,7 +108,7 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
       byList(lists(1)).map(_._1).take(3) ++ byList(lists(2)).map(_._1).take(2)
     val untouched = lists.drop(3)
     def digests(dir: String, l: Int): Map[String, Seq[Byte]] =
-      new java.io.File(s"$dir/codes/list=$l").listFiles()
+      new java.io.File(s"${codesOf(dir)}/list=$l").listFiles()
         .filter(_.getName.endsWith(".parquet"))
         .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq)
         .toMap
@@ -135,8 +137,8 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
         s"k=$k: exactly the victims left, nothing duplicated")
       untouched.foreach(l =>
         assert(digests(dir, l) == untouchedBytes(l), s"k=$k: list $l rewritten"))
-      assert(!new java.io.File(s"$dir/codes/list=${lists(0)}").exists())
-      assert(!new java.io.File(s"$dir/codes").list().exists(_.startsWith(".compact_")))
+      assert(!new java.io.File(s"${codesOf(dir)}/list=${lists(0)}").exists())
+      assert(!new java.io.File(codesOf(dir)).list().exists(_.startsWith(".compact_")))
     }
   }
 
@@ -324,89 +326,95 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
     assert(rows.forall(_.getAs[Long]("n_live_lists") == 8L))
   }
 
-  test("retrainIfDrifted heals its own crash window: an armed marker completes the whole staged swap before the stats read") {
-    // the worst interruption: the swap loop deleted a target and died
-    // before its rename — the target is gone, the staged copy exists,
-    // the .swap_pending marker is armed. Simulated for EACH subdir
-    // (stats is the one that wedged the naive trigger: the next call
-    // reads $dir/stats first).
-    import spark.implicits._
-    def vec(i: Long): Seq[Double] =
-      (0 until 8).map(d => -0.4 - 0.01 * ((i * 7 + d * 3) % 13))
-    val corpus = (0L until 120L).map(i => (i, vec(i)))
-      .toDF("vec_id", "embedding").localCheckpoint(true)
-    for (sub <- Seq("codes", "model", "stats")) {
-      val dir = graft.ScratchDir.dir(s"vecidx-heal-$sub")
-      VectorIndex.buildIvfPq(corpus, "vec_id", "embedding", dir,
-        nLists = 4, m = 4, ksub = 8, sampleSize = 256, seed = 7L)
-      // manufacture the crash state: target moved into staging, marker armed
-      val staging = new java.io.File(dir, ".retrain_staging")
-      assert(staging.mkdir())
-      assert(new java.io.File(dir, sub)
-        .renameTo(new java.io.File(staging, sub)), s"fixture move of $sub")
-      assert(new java.io.File(dir, ".swap_pending").createNewFile())
-      val (psi, did) = VectorIndex.retrainIfDrifted(spark, dir, corpus,
-        "vec_id", "embedding", threshold = 0.1,
-        nLists = 4, m = 4, ksub = 8, sampleSize = 256, seed = 7L)
-      assert(!did && psi < 0.01,
-        s"$sub: healed trigger sees an undrifted corpus: psi=$psi did=$did")
-      assert(new java.io.File(dir, sub).exists(), s"$sub not healed")
-      assert(!new java.io.File(dir, ".swap_pending").exists(),
-        s"$sub: marker must clear after the heal")
-      // and the healed index still answers searches
-      val q = corpus.filter(col("vec_id") < 3)
-      val got = VectorIndex.searchIvfPq(spark, dir, q, corpus,
-        "vec_id", "embedding", k = 3, nProbe = 2, refineFactor = 4)
-      assert(got.count() == 9, s"$sub: healed index must serve searches")
-    }
-  }
-
-  test("the heal never strands a mixed generation: an armed swap publishes codes, model AND stats as a unit") {
-    // crash state after the OLD run published codes only: staged model +
-    // stats remain, marker armed, live codes are NEW-generation. A heal
-    // keyed on 'target missing' would see nothing missing and leave new
-    // codes under the old model, silently — the marker protocol must
-    // finish the swap instead, and the result must equal a fresh build.
+  /** Two corpora whose quantizers differ: all-negative (octant 0), then
+    * the same ids plus an all-positive half (octant 7). */
+  private def driftFixture() = {
     import spark.implicits._
     def vOld(i: Long): Seq[Double] =
       (0 until 8).map(d => -0.4 - 0.01 * ((i * 7 + d * 3) % 13))
     def vNew(i: Long): Seq[Double] =
       (0 until 8).map(d => 0.4 + 0.01 * ((i * 5 + d * 11) % 17))
-    val oldC = (0L until 150L).map(i => (i, vOld(i))).toDF("vec_id", "embedding")
+    val oldC = (0L until 150L).map(i => (i, vOld(i)))
+      .toDF("vec_id", "embedding").localCheckpoint(true)
     val fullC = oldC.unionByName(
       (150L until 300L).map(i => (i, vNew(i))).toDF("vec_id", "embedding"))
       .localCheckpoint(true)
-    val dir = graft.ScratchDir.dir("vecidx-mixed")
-    VectorIndex.buildIvfPq(oldC, "vec_id", "embedding", dir,
+    (oldC, fullC)
+  }
+
+  private def build(corpus: org.apache.spark.sql.DataFrame, dir: String) =
+    VectorIndex.buildIvfPq(corpus, "vec_id", "embedding", dir,
       nLists = 4, m = 4, ksub = 8, sampleSize = 256, seed = 7L)
-    VectorIndex.appendIvfPq(fullC.filter(col("vec_id") >= 150), "vec_id",
-      "embedding", dir)
-    // the interrupted retrain: full staging built from the CURRENT corpus
-    val staging = s"$dir/.retrain_staging"
-    VectorIndex.buildIvfPq(fullC, "vec_id", "embedding", staging,
-      nLists = 4, m = 4, ksub = 8, sampleSize = 256, seed = 7L)
-    // crash after publishing codes only
-    def rmRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmRec))
-      f.delete(): Unit
-    }
-    rmRec(new java.io.File(dir, "codes"))
-    assert(new java.io.File(staging, "codes")
-      .renameTo(new java.io.File(dir, "codes")))
-    assert(new java.io.File(dir, ".swap_pending").createNewFile())
-    val (_, _) = VectorIndex.retrainIfDrifted(spark, dir, fullC,
-      "vec_id", "embedding", threshold = 1e9, // below-threshold call: heal only
-      nLists = 4, m = 4, ksub = 8, sampleSize = 256, seed = 7L)
-    val fresh = graft.ScratchDir.dir("vecidx-mixed-fresh")
-    VectorIndex.buildIvfPq(fullC, "vec_id", "embedding", fresh,
-      nLists = 4, m = 4, ksub = 8, sampleSize = 256, seed = 7L)
-    val q = fullC.filter(col("vec_id") >= 150 && col("vec_id") < 160)
-    def results(d: String) = VectorIndex.searchIvfPq(spark, d, q, fullC,
+
+  /** Ids 140–159 searched against `corpus`: the old half's last ten and
+    * the new half's first ten. */
+  private def search(dir: String, corpus: org.apache.spark.sql.DataFrame) =
+    VectorIndex.searchIvfPq(spark, dir,
+        corpus.filter(col("vec_id") >= 140 && col("vec_id") < 160), corpus,
         "vec_id", "embedding", k = 5, nProbe = 2, refineFactor = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3))).toSet
-    assert(results(dir) == results(fresh),
-      "after the heal the index must equal a fresh current-corpus build — never new codes under the old model")
+
+  test("a crash before the _current flip leaves the previous generation serving; the next retrain publishes cleanly") {
+    val (oldC, fullC) = driftFixture()
+    val base = graft.ScratchDir.dir("vecidx-flip")
+    val dir = s"$base/index"
+    build(oldC, dir)
+    val before = search(dir, fullC)
+    val modelBefore = VectorIndex.loadModel(spark, dir)
+    // the crash state: a retrain published gen-1 and died before the
+    // flip; a second attempt died mid-build, leaving a partial staging dir
+    build(fullC, s"$base/fresh")
+    val hfs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    assert(org.apache.hadoop.fs.FileUtil.copy(hfs,
+      new org.apache.hadoop.fs.Path(VectorIndex.currentGen(spark, s"$base/fresh")),
+      hfs, new org.apache.hadoop.fs.Path(s"$dir/gen-1"), false,
+      spark.sparkContext.hadoopConfiguration))
+    assert(new java.io.File(s"$dir/.gen-2/codes").mkdirs())
+    assert(VectorIndex.currentGen(spark, dir) == s"$dir/gen-0")
+    assert(search(dir, fullC) == before, "the previous generation keeps serving")
+    assert(VectorIndex.loadModel(spark, dir).coarse.map(_.toSeq).toSeq ==
+      modelBefore.coarse.map(_.toSeq).toSeq)
+    val (psi, did) = VectorIndex.retrainIfDrifted(spark, dir, fullC,
+      "vec_id", "embedding", threshold = 0.1,
+      nLists = 4, m = 4, ksub = 8, sampleSize = 256, seed = 7L)
+    assert(did && psi > 0.1, s"psi=$psi did=$did")
+    assert(VectorIndex.currentGen(spark, dir) == s"$dir/gen-2")
+    assert(search(dir, fullC) == search(s"$base/fresh", fullC),
+      "the retrained index must equal a fresh build from the current corpus")
+    // the orphan is reclaimed; the replaced generation stays for readers
+    // that resolved it before the flip
+    assert(new java.io.File(dir).list().toSet ==
+      Set("_current", "gen-0", "gen-2"))
+  }
+
+  test("a search concurrent with a forced retrain scores every result against one generation's model") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val (oldC, fullC) = driftFixture()
+    val base = graft.ScratchDir.dir("vecidx-live")
+    val dir = s"$base/index"
+    build(oldC, dir)
+    build(fullC, s"$base/fresh")
+    val (oldGen, newGen) = (search(dir, fullC), search(s"$base/fresh", fullC))
+    assert(oldGen != newGen, "fixture: the generations must answer differently")
+    val retrain = Future {
+      VectorIndex.retrainIfDrifted(spark, dir, fullC, "vec_id", "embedding",
+        threshold = -1.0, // psi ≥ 0: always retrain
+        nLists = 4, m = 4, ksub = 8, sampleSize = 256, seed = 7L)
+    }
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Set[(Long, Long, Double, Long)]]
+    while (!retrain.isCompleted) seen += search(dir, fullC)
+    assert(Await.result(retrain, 5.minutes)._2)
+    seen += search(dir, fullC)
+    assert(seen.length >= 2, "fixture: a search must overlap the retrain")
+    seen.zipWithIndex.foreach { case (r, i) =>
+      assert(r == oldGen || r == newGen,
+        s"search $i of ${seen.length} mixed generations: $r")
+    }
+    assert(seen.last == newGen)
   }
 
   test("the persisted model round-trips exactly") {

@@ -227,7 +227,7 @@ class CorpusIngestSpec extends AnyFunSuite with SparkTestSession {
       spark.sparkContext.hadoopConfiguration,
       new org.apache.hadoop.fs.Path(ckpt, ".graft_data_batches"),
       Some("GRAFT_DATA_BATCH_CADENCE_V1"))(
-      in => { in.readLong(); in.readLong() })
+      in => { in.readLong(); in.readLong() }).getOrElse(0L)
     def wave(rows: (Long, String, String, java.sql.Timestamp)*): Unit = {
       source.addData(rows: _*)
       CorpusIngest.writeAudited(

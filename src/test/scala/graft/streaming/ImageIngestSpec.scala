@@ -501,12 +501,8 @@ class ImageIngestSpec extends AnyFunSuite with SparkTestSession {
     // manifest, not the directory — the directory also RETAINS the
     // previous compaction's folded inputs for pinned readers (r12
     // verdict #7), and those are exactly not the live set
-    import scala.jdk.CollectionConverters._
-    val parts = java.nio.file.Files
-      .readAllLines(java.nio.file.Paths.get(store, "_manifest")).asScala
-      .filter(l => l.nonEmpty && !l.startsWith("#") &&
-        !l.startsWith("retired:")) // LIVE lines only (header and retired: lines skipped)
-      .map(_.stripPrefix("delivery_id=")).toSet
+    val parts =
+      graft.operators.FingerprintStore.livePartitions(spark, store).toSet
     val bases = parts.filter(_.startsWith("compacted-"))
     assert(bases.nonEmpty, s"expected a compacted base, got $parts")
     assert((parts -- bases).size <= 1,

@@ -5,10 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 
-/** The r14 filesystem probes: [[CommittedTable]]'s structural-emptiness
-  * decision (the shared replacement for Try-as-removed) and
-  * [[AtomicPublish]]'s never-published fast-fail with its in-flight
-  * temp-sibling evidence.
+/** The filesystem publish contracts: [[CommittedTable]]'s
+  * structural-emptiness decision, and [[AtomicPublish]]'s single-file
+  * publish and its one read — atomic under racing readers and racing
+  * publishers, `None` only for a never-published file, and loud on a
+  * corrupt one.
   */
 class PublishProbesSpec extends AnyFunSuite with SparkTestSession {
 
@@ -49,74 +50,86 @@ class PublishProbesSpec extends AnyFunSuite with SparkTestSession {
       "a committed partitioned write must read as data")
   }
 
-  test("FNF gate is behavioral: rethrow on the first attempt when the probe answers never-published, full retry budget when it answers in-flight") {
-    // asserted on ATTEMPT COUNTS, not wall-clock — the repo's own bench
-    // notes document 2-4x timing swings under neighbor-VM load, so a
-    // `took < Nms` assert here would be flaky by design
-    var attempts = 0
-    intercept[java.io.FileNotFoundException] {
-      AtomicPublish.withReadRetries(retryFnfIf = () => false) { () =>
-        attempts += 1
-        throw new java.io.FileNotFoundException("never published")
-      }
-    }
-    assert(attempts == 1,
-      s"never-published must rethrow on the FIRST attempt, made $attempts")
-    attempts = 0
-    intercept[java.io.FileNotFoundException] {
-      AtomicPublish.withReadRetries(maxAttempts = 3,
-          retryFnfIf = () => true) { () =>
-        attempts += 1
-        throw new java.io.FileNotFoundException("mid-blink")
-      }
-    }
-    assert(attempts == 3,
-      s"an in-flight absence must burn the whole budget, made $attempts")
-    // the probe is consulted AT failure time (not at entry): a no-
-    // evidence verdict on the first failure rethrows immediately —
-    // there is no stale entry-time verdict to keep retrying on
-    attempts = 0
-    intercept[java.io.FileNotFoundException] {
-      AtomicPublish.withReadRetries(maxAttempts = 3,
-          retryFnfIf = () => attempts > 1) { () =>
-        attempts += 1
-        throw new java.io.FileNotFoundException("x")
-      }
-    }
-    assert(attempts == 1, "first failure with no evidence rethrows")
-  }
-
-  test("readFile wires the gate to confirmedAbsent: never-published throws FNF; a fresh temp sibling reads as in-flight; an aged orphan does not") {
+  test("readFile is None exactly for a never-published file; a dot-temp sibling does not change that") {
     val base = graft.ScratchDir.dir("pubprobe")
     val target = new Path(s"$base/index.bin")
-    intercept[java.io.FileNotFoundException] {
-      AtomicPublish.readFile(conf, target)(_.readLong())
+    assert(AtomicPublish.readFile(conf, target)(_.readLong()).isEmpty)
+    // a hard-killed publish's orphan temp is not the file
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(base, ".index.bin.deadbeefdead.tmp"),
+      Array[Byte](1))
+    assert(AtomicPublish.readFile(conf, target)(_.readLong()).isEmpty)
+    AtomicPublish.file(conf, target)(_.writeLong(7L))
+    assert(AtomicPublish.readFile(conf, target)(_.readLong()).contains(7L))
+  }
+
+  test("a flipped payload byte and a truncated file each fail the read, naming the file") {
+    graft.ScratchDir.withDir("pubcorrupt") { base =>
+      val target = new Path(s"$base/state.bin")
+      val file = java.nio.file.Paths.get(base, "state.bin")
+      def readFails(what: String): Unit = {
+        val e = intercept[org.apache.hadoop.fs.ChecksumException] {
+          AtomicPublish.readFile(conf, target, Some("graft-probe-v1"))(
+            _.readLong())
+        }
+        assert(e.getMessage.contains(target.toString), s"$what: ${e.getMessage}")
+      }
+      AtomicPublish.file(conf, target, Some("graft-probe-v1"))(
+        _.writeLong(0x0123456789abcdefL))
+      val good = java.nio.file.Files.readAllBytes(file)
+      val flipped = good.clone()
+      flipped(good.length - 6) = (flipped(good.length - 6) ^ 0x10).toByte
+      java.nio.file.Files.write(file, flipped)
+      readFails("flipped byte")
+      java.nio.file.Files.write(file, good.take(good.length - 3))
+      readFails("truncated")
+      java.nio.file.Files.write(file, Array.emptyByteArray)
+      readFails("empty")
+      // an intact file of another format fails on the header instead
+      AtomicPublish.file(conf, target, Some("graft-other-v1"))(_.writeLong(1L))
+      val e = intercept[IllegalArgumentException] {
+        AtomicPublish.readFile(conf, target, Some("graft-probe-v1"))(
+          _.readLong())
+      }
+      assert(e.getMessage.contains(target.toString) &&
+        e.getMessage.contains("graft-other-v1"), e.getMessage)
     }
-    val fs = target.getFileSystem(conf)
-    // absence is only trusted through TWO consecutive listings
-    // (confirmedAbsent) — a single readdir racing a temp→target rename
-    // can miss both names of a durably published file; the stable-state
-    // verdicts of the pair must match the single-listing probe's
-    assert(AtomicPublish.confirmedAbsent(fs, target),
-      "a never-published target is confirmed absent")
-    // a FRESH in-flight publish's dot-temp sibling (AtomicPublish
-    // .tmpFor's naming) flips the probe: absence now reads as the
-    // delete-then-rename blink
-    val tmp = java.nio.file.Paths.get(base, ".index.bin.deadbeefdead.tmp")
-    java.nio.file.Files.write(tmp, Array[Byte](1))
-    assert(AtomicPublish.existsOrInFlight(fs, target))
-    assert(!AtomicPublish.confirmedAbsent(fs, target),
-      "an in-flight temp sibling must block the absence verdict")
-    // an ORPHANED temp (hard-killed publisher, older than the horizon)
-    // stops counting as in-flight evidence — without the age-out one
-    // orphan would tax every probe of this target forever
-    java.nio.file.Files.setLastModifiedTime(tmp,
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - AtomicPublish.OrphanTempHorizonMs - 60000))
-    assert(!AtomicPublish.existsOrInFlight(fs, target),
-      "an aged orphan temp must not read as an in-flight publish")
-    assert(AtomicPublish.confirmedAbsent(fs, target),
-      "an orphan-only target is confirmed absent")
+  }
+
+  test("RACING reads: a bare reader never sees a missing or checksum-failing file while the target is re-published 2,000 times") {
+    // one read per loop iteration, no retry around it: every read must
+    // land a complete value. A publish that replaces the target in two
+    // steps (delete, then rename; or data, then a `.crc` sidecar) shows
+    // up here as a None or a ChecksumException.
+    graft.ScratchDir.withDir("pub-reads") { base =>
+      val target = new Path(s"$base/value.bin")
+      AtomicPublish.file(conf, target)(_.writeLong(0L))
+      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val writerError =
+        new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val writer = new Thread(() =>
+        try (1 to 2000).foreach(i =>
+          AtomicPublish.file(conf, target)(_.writeLong(i.toLong)))
+        catch { case t: Throwable => writerError.set(t) }
+        finally done.set(true))
+      var (reads, missing, checksum, last) = (0L, 0L, 0L, 0L)
+      writer.start()
+      try while (!done.get()) {
+        try AtomicPublish.readFile(conf, target)(_.readLong()) match {
+          case Some(v) =>
+            assert(v >= last, s"read went backwards: $v after $last")
+            last = v; reads += 1
+          case None => missing += 1
+        } catch {
+          case _: org.apache.hadoop.fs.ChecksumException => checksum += 1
+        }
+      } finally writer.join()
+      assert(writerError.get() == null, s"publish threw: ${writerError.get()}")
+      assert(missing == 0 && checksum == 0,
+        s"$reads good reads, $missing missing, $checksum checksum errors")
+      assert(reads > 0)
+      assert(AtomicPublish.readFile(conf, target)(_.readLong()).contains(2000L))
+    }
   }
 
   test("readFile still absorbs a concurrent re-publish: the file existed at entry, so mid-blink FNF retries") {
@@ -133,24 +146,23 @@ class PublishProbesSpec extends AnyFunSuite with SparkTestSession {
     writer.start()
     try {
       // 40 loads against a tight re-save loop: every read must land a
-      // complete value, never FNF/checksum leakage from the blink
+      // complete value
       (1 to 40).foreach { _ =>
         val got = AtomicPublish.readFile(conf, target)(_.readLong())
-        assert(got >= 1L)
+        assert(got.exists(_ >= 1L), s"read $got")
       }
     } finally { stop.set(true); writer.join() }
   }
 
   test("RACING publishers of one target never fail on the overwrite-" +
       "rename window; last complete value wins") {
-    // local/Checksum FileContext implements rename(OVERWRITE) as
-    // validate → delete → plain rename with no lock across the steps, so
-    // two concurrent publishes can interleave a rename into the other's
-    // delete→rename window — surfacing (pre-fix) as
-    // FileAlreadyExistsException despite OVERWRITE (caught live by
-    // FingerprintStoreSpec's racing-writers run). Two hammering threads
-    // reproduce the window with good probability; the publish must
-    // absorb it and the target must always read as ONE complete value.
+    // a replace built from separate steps (FileContext's local
+    // rename(OVERWRITE) is validate → delete → plain rename with no lock
+    // across them) lets one publish land inside another's window —
+    // FileAlreadyExistsException despite OVERWRITE, or a torn target.
+    // Two hammering threads reproduce such a window with good
+    // probability; every publish must succeed and the target must
+    // always read as ONE complete value.
     graft.ScratchDir.withDir("pub-race") { base =>
       val target = new Path(s"$base/state")
       val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -162,7 +174,7 @@ class PublishProbesSpec extends AnyFunSuite with SparkTestSession {
       }
       threads.foreach(_.start()); threads.foreach(_.join())
       assert(errors.isEmpty, s"racing publish threw: ${errors.peek()}")
-      val v = AtomicPublish.readFile(conf, target)(_.readLong())
+      val v = AtomicPublish.readFile(conf, target)(_.readLong()).get
       assert(v == 1150L || v == 2150L, s"unexpected final value $v")
     }
   }
