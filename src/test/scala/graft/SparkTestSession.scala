@@ -10,6 +10,7 @@ object SparkTestSession {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config(GraftSession.localFileSystem)
     .getOrCreate()
 }
 

@@ -478,13 +478,14 @@ class MotionPipelineSpec extends AnyFunSuite with SparkTestSession {
     try {
       val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
       val t0 = 1700980000000L
+      // data first: an AvailableNow query drains what exists when it starts
+      stream.addData(
+        FrameFixtures.frameJson("camL", t0, FrameFixtures.PosA),
+        FrameFixtures.frameJson("camL", t0 + 1000, FrameFixtures.PosB))
       val q = MotionPipeline.writeResults(
         MotionPipeline.detectBin(
           MotionPipeline.decodeWire(stream.toDF().toDF("value")), tmp("lrl-img")),
         tmp("lrl-out"), tmp("lrl-ckpt"))
-      stream.addData(
-        FrameFixtures.frameJson("camL", t0, FrameFixtures.PosA),
-        FrameFixtures.frameJson("camL", t0 + 1000, FrameFixtures.PosB))
       q.awaitTermination()
       // listener delivery is async — poll briefly
       var tries = 0
@@ -501,13 +502,14 @@ class MotionPipelineSpec extends AnyFunSuite with SparkTestSession {
     import spark.implicits._
     val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
     val t0 = 1700960000000L
+    // data first: an AvailableNow query drains what exists when it starts
+    stream.addData(
+      FrameFixtures.frameJson("camM", t0, FrameFixtures.PosA),
+      FrameFixtures.frameJson("camN", t0, FrameFixtures.PosA))
     val q = MotionPipeline.writeResults(
       MotionPipeline.detectBin(
         MotionPipeline.decodeWire(stream.toDF().toDF("value")), tmp("obs-img")),
       tmp("obs-out"), tmp("obs-ckpt"))
-    stream.addData(
-      FrameFixtures.frameJson("camM", t0, FrameFixtures.PosA),
-      FrameFixtures.frameJson("camN", t0, FrameFixtures.PosA))
     q.awaitTermination()
     val observed = q.recentProgress.flatMap(p =>
       Option(p.observedMetrics.get("graft_load")))

@@ -132,28 +132,6 @@ class PublishProbesSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
-  test("readFile still absorbs a concurrent re-publish: the file existed at entry, so mid-blink FNF retries") {
-    val base = graft.ScratchDir.dir("pubrace")
-    val target = new Path(s"$base/value.bin")
-    def save(v: Long): Unit =
-      AtomicPublish.file(conf, target)(_.writeLong(v))
-    save(1L)
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val writer = new Thread(() => {
-      var v = 2L
-      while (!stop.get()) { save(v); v += 1 }
-    })
-    writer.start()
-    try {
-      // 40 loads against a tight re-save loop: every read must land a
-      // complete value
-      (1 to 40).foreach { _ =>
-        val got = AtomicPublish.readFile(conf, target)(_.readLong())
-        assert(got.exists(_ >= 1L), s"read $got")
-      }
-    } finally { stop.set(true); writer.join() }
-  }
-
   test("RACING publishers of one target never fail on the overwrite-" +
       "rename window; last complete value wins") {
     // a replace built from separate steps (FileContext's local
