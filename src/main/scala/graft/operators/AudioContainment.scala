@@ -30,7 +30,7 @@ import graft.cv.AudioOps
   *    windows never score like a genuine containment, and the winning
   *    offset IS the answer to "where in the track does the clip start".
   *
-  * A pair is reported when the best alignment covers ≥ `minCoverage` of
+  * A pair is reported when the best alignment covers ≥ [[MinCoverage]] of
   * the SHORTER side's surviving windows — clip-in-track containment when
   * lengths differ (the clip is the shorter side), full near-duplication
   * when they match. Window-aligned insertions are matched exactly; an
@@ -42,6 +42,11 @@ import graft.cv.AudioOps
   * hop = window/2.
   */
 object AudioContainment {
+
+  /** Window-hash Hamming distance at or under which two windows match. */
+  private[graft] val MaxDist = 2
+  /** Best-alignment share of the shorter side that reports a pair. */
+  private[graft] val MinCoverage = 0.8
 
   // asNondeterministic is an OPTIMIZER FENCE, not a semantics claim: an
   // expensive deterministic UDF left unfenced gets INLINED by
@@ -78,15 +83,14 @@ object AudioContainment {
     * the clip's window 0 aligns (≥ 0 for a true containment; the sign
     * carries through for partial head overlaps), coverage the best-single-
     * alignment support over the shorter side's surviving windows, capped
-    * at 1.0. Pairs with coverage >= `minCoverage` survive.
+    * at 1.0. Pairs with coverage >= [[MinCoverage]] survive.
     */
   def containmentPairs(tracks: DataFrame, audioCol: String, idCol: String,
-      windowSec: Double = 0.512, maxDist: Int = 2,
-      minCoverage: Double = 0.8, hopSec: Double = 0.0): DataFrame =
+      windowSec: Double = 0.512, hopSec: Double = 0.0): DataFrame =
     containmentPairsFromWindows(
       keptWindowHashes(tracks, audioCol, idCol, windowSec, hopSec)
         .localCheckpoint(true),
-      hop = if (hopSec > 0) hopSec else windowSec, maxDist, minCoverage)
+      hop = if (hopSec > 0) hopSec else windowSec)
 
   /** The informative (post-silence-filter) window-hash table the verdict
     * consumes — the [[VideoDedup.keptFrameHashes]] sibling, exposed so a
@@ -100,12 +104,11 @@ object AudioContainment {
   /** [[containmentPairs]] downstream of an already-built
     * [[keptWindowHashes]] frame (`hop` in seconds converts the winning
     * window offset to `offset_seconds`). */
-  def containmentPairsFromWindows(wh: DataFrame, hop: Double,
-      maxDist: Int = 2, minCoverage: Double = 0.8): DataFrame = {
+  def containmentPairsFromWindows(wh: DataFrame, hop: Double): DataFrame = {
     val windowPairs = ImageDedup.hammingNearDupPairs(
       wh.select(struct(col("id"), col("win_idx")).as("id"),
         col("whash").as("phash")),
-      maxDist)
+      MaxDist)
       .select(col("id_a.id").as("a0"), col("id_a.win_idx").as("wa0"),
         col("id_b.id").as("b0"), col("id_b.win_idx").as("wb0"))
       .filter(col("a0") =!= col("b0"))
@@ -124,7 +127,7 @@ object AudioContainment {
       .withColumn("coverage",
         least(lit(1.0), round(col("aligned_units").cast("double") /
           least(col("na"), col("nb")), 6)))
-      .filter(col("coverage") >= minCoverage)
+      .filter(col("coverage") >= MinCoverage)
       // the clip is the shorter surviving side; its start in the track is
       // (track window) − (clip window) at the winning alignment: best_off
       // is ta − tb, so the sign flips with which side is the clip

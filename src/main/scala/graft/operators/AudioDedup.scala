@@ -38,8 +38,8 @@ object AudioDedup {
       .filter(col("phash").isNotNull)
 
   /** Verified near-duplicate clip pairs (id_a < id_b, Hamming `dist` <=
-    * `maxDist`) via the shared banded candidate join. */
-  def nearDupPairs(audio: DataFrame, audioCol: String, idCol: String,
-      maxDist: Int = 3): DataFrame =
-    ImageDedup.hammingNearDupPairs(hashes(audio, audioCol, idCol), maxDist)
+    * 3) via the shared banded candidate join. */
+  def nearDupPairs(audio: DataFrame, audioCol: String,
+      idCol: String): DataFrame =
+    ImageDedup.hammingNearDupPairs(hashes(audio, audioCol, idCol), 3)
 }

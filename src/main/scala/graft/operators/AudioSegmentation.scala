@@ -17,7 +17,7 @@ import graft.cv.AudioOps
   * Scale shape (deliberately [[VideoShots]]'s): ONE map-side decode per
   * track exploding to (frame_idx, rms) rows on a fixed 512-sample grid →
   * voiced-frame filter → one per-track lag window (a gap longer than
-  * `maxGapFrames` opens a segment; shorter dropouts — a breath, a
+  * [[MaxGapFrames]] opens a segment; shorter dropouts — a breath, a
   * plosive dip — stay inside) → per-(track, segment) rollup. No join
   * anywhere; skew bounded by the longest single track, exactly the
   * frame-table argument. The decode UDF is `asNondeterministic()` — the
@@ -57,22 +57,27 @@ object AudioSegmentation {
       .select(col("id"), col("frame_idx"), round(col("rms"), 6).as("rms"),
         col("sample_rate"))
 
+  /** A frame at or above this RMS is voiced. */
+  private[graft] val VoiceRms = 0.01
+  /** Longest silent gap, in frames, that does not end a segment. */
+  private[graft] val MaxGapFrames = 1
+
   /** Voiced segments per track: (id, seg_idx, start_frame, end_frame,
     * n_voiced_frames, duration_sec) — a segment is a maximal run of
-    * frames with rms >= `voiceRms` allowing interior silent gaps of at
-    * most `maxGapFrames`; duration spans start..end inclusive (interior
+    * frames with rms >= [[VoiceRms]] allowing interior silent gaps of at
+    * most [[MaxGapFrames]]; duration spans start..end inclusive (interior
     * tolerated gaps count toward duration, as they do in the audio).
     * Tracks with no voiced frames emit nothing.
     */
-  def segments(tracks: DataFrame, audioCol: String, idCol: String,
-      voiceRms: Double = 0.01, maxGapFrames: Int = 1): DataFrame = {
+  def segments(tracks: DataFrame, audioCol: String,
+      idCol: String): DataFrame = {
     val voiced = frameRms(tracks, audioCol, idCol)
-      .filter(col("rms") >= voiceRms)
+      .filter(col("rms") >= VoiceRms)
     val w = Window.partitionBy("id").orderBy("frame_idx")
     voiced
       .withColumn("gap", col("frame_idx") - lag(col("frame_idx"), 1).over(w))
       .withColumn("newSeg",
-        when(col("gap").isNull || col("gap") > maxGapFrames + 1, 1L)
+        when(col("gap").isNull || col("gap") > MaxGapFrames + 1, 1L)
           .otherwise(0L))
       .withColumn("seg_idx", sum(col("newSeg")).over(w) - 1)
       .groupBy(col("id"), col("seg_idx"))

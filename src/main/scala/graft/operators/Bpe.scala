@@ -21,11 +21,14 @@ import graft.functions.TextFunctions
   * distributed, O(model) centralized, model broadcast back.
   *
   * Determinism: pair selection breaks count ties on (left, right) lexical
-  * order, and the dictionary collect is capped at `maxVocabRows` taken in
+  * order, and the dictionary collect is capped at [[MaxVocabRows]] taken in
   * (count desc, token asc) order — reproducible across runs, partitions,
   * and cluster sizes.
   */
 object Bpe {
+
+  /** The word-dictionary rows [[trainMerges]] collects. */
+  private val MaxVocabRows = 100000
 
   /** Initial symbols of a word: one per CODE POINT, not UTF-16 unit — a
     * surrogate pair (emoji, astral CJK) must stay one symbol, or the UDF
@@ -49,18 +52,18 @@ object Bpe {
       .groupBy("tok").agg(count(lit(1)).as("cnt"))
 
   /** Learn `numMerges` merges from the word-frequency dictionary of
-    * `docs`. The dictionary collect is bounded: the top `maxVocabRows`
+    * `docs`. The dictionary collect is bounded: the top [[MaxVocabRows]]
     * word types by (count desc, token asc) — at web scale the type
     * distribution is so heavy-tailed that the dropped singleton tail
     * cannot influence early merges (and the cap is the documented
     * trade, same rationale as ivfTopK's bounded quantizer sample).
     */
-  def trainMerges(docs: DataFrame, textCol: String, numMerges: Int,
-      maxVocabRows: Int = 100000): Seq[Merge] = {
+  def trainMerges(docs: DataFrame, textCol: String,
+      numMerges: Int): Seq[Merge] = {
     require(numMerges >= 0, s"numMerges must be >= 0, got $numMerges")
     val dict = wordFrequencies(docs, textCol)
       .orderBy(col("cnt").desc, col("tok"))
-      .limit(maxVocabRows)
+      .limit(MaxVocabRows)
       .collect().map(r => (r.getString(0), r.getLong(1)))
     // words as mutable symbol sequences, weighted by type frequency
     val words = dict.map { case (w, c) =>

@@ -94,7 +94,11 @@ object Centrality {
       case None => build.localCheckpoint(false)
     }
 
-  /** `iters` rounds of damped PageRank over `edges(src, dst)` (assumed
+  /** PageRank's damping factor and round count. */
+  private[graft] val Damping = 0.85
+  private[graft] val Iters = 8
+
+  /** [[Iters]] rounds of damped PageRank over `edges(src, dst)` (assumed
     * distinct pairs). Nodes = src ∪ dst; dangling mass is redistributed
     * uniformly. Returns (node, r DECIMAL(28,12)) summing to ~1.
     *
@@ -102,7 +106,7 @@ object Centrality {
     * counted once to size the rounds' partitioning
     * ([[EdgeRowsPerPartition]]).
     */
-  def pageRank(edges: DataFrame, damping: Double = 0.85, iters: Int = 8,
+  def pageRank(edges: DataFrame,
       memoKey: Option[String] = None): DataFrame = {
     import scala.concurrent.{Await, Future}
     val s0 = edges.sparkSession
@@ -161,7 +165,7 @@ object Centrality {
         round(lit(1.0) / lit(nVal), 12).cast("decimal(28,12)").as("r"))
       .localCheckpoint(false)
 
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to Iters) {
       // The round's two jobs are INDEPENDENT given the previous frame —
       // the contribution shuffle (the round's wall) and the dangling-mass
       // scalar (two tiny stages) — so they run OVERLAPPED (guide §2.6)
@@ -177,7 +181,7 @@ object Centrality {
         .head()
       val dang = dangRow.getDecimal(0)
       Await.result(fc, IterTimeout)
-      r = rankUpdate(nodes, contrib, nVal, dang, damping)
+      r = rankUpdate(nodes, contrib, nVal, dang, Damping)
         .localCheckpoint(false)
     }
     graft.ScaleScope.bind(s0, r)

@@ -176,7 +176,7 @@ object ContaminationGuard {
         length(col("cleaned")).cast("long").as("kept_chars") :+
         md5(col("cleaned")).as("cleaned_digest"): _*)
 
-  /** Island cut-list probe for ingest paths: adds `outCol` — a SORTED,
+  /** Island cut-list probe for ingest paths: adds `cuts` — a SORTED,
     * DISJOINT array<struct<s,e,benches>> of the 1-based char intervals
     * covering every benchmark-window island in the row's text (each with
     * the benchmark ids it matched — see [[CutSpan]]), NULL for clean
@@ -192,7 +192,7 @@ object ContaminationGuard {
     * ENFORCED like [[excise]]'s — a cut list from a sampled index is a
     * silently partial decontamination (`allowSampled` opts in). */
   def withCuts(docs: DataFrame, textCol: String, index: BenchIndex,
-      outCol: String = "cuts", guard: Column = lit(true),
+      guard: Column = lit(true),
       allowSampled: Boolean = false): DataFrame = {
     require(allowSampled || index.hexPrefix.isEmpty,
       "excision needs the exact tier: a sampled index sees 1/16 of the " +
@@ -209,7 +209,7 @@ object ContaminationGuard {
         if (cuts.isEmpty) None else Some(cuts)
       }
     }.asNondeterministic() // one hashing pass per row — optimizer fence
-    docs.withColumn(outCol,
+    docs.withColumn("cuts",
       probe(col(textCol), coalesce(guard, lit(false))))
   }
 
@@ -496,7 +496,7 @@ object ContaminationGuard {
   final case class GateHit(bench_id: Long, match_pos: Long)
 
   /** First-hit gate probe for ingest paths
-    * ([[graft.streaming.CorpusIngest]]): adds `outCol` — null for clean
+    * ([[graft.streaming.CorpusIngest]]): adds `contamination` — null for clean
     * rows, struct(bench_id, match_pos) of the FIRST matched window
     * (lowest position; lowest bench id if one window serves several
     * benchmarks) otherwise. Unlike [[flag]] it SHORT-CIRCUITS at the
@@ -510,7 +510,7 @@ object ContaminationGuard {
     * the probe lazy, because the nondeterministic fence keeps the UDF in
     * its own Project where it is computed unconditionally. */
   def withHit(docs: DataFrame, textCol: String, index: BenchIndex,
-      outCol: String = "contamination", guard: Column = lit(true)): DataFrame = {
+      guard: Column = lit(true)): DataFrame = {
     val bc = docs.sparkSession.sparkContext.broadcast(index)
     val probe = udf { (text: String, enabled: Boolean) =>
       probeEvals.incrementAndGet(): Unit
@@ -524,7 +524,7 @@ object ContaminationGuard {
         hit
       }
     }.asNondeterministic() // one hashing pass per row — optimizer fence
-    docs.withColumn(outCol,
+    docs.withColumn("contamination",
       probe(col(textCol), coalesce(guard, lit(false))))
   }
 

@@ -60,9 +60,14 @@ object Dedup {
       .drop("__d")
   }
 
+  /** MinHash word-shingle width and signature length. */
+  private val ShingleN = 3
+  private val Perms = 64
+
   /** MinHash + LSH near-duplicate candidate pairs.
     *
-    * shingle(n words) → minhash signature (`perms`) → `bands` LSH bands →
+    * shingle([[ShingleN]] words) → minhash signature ([[Perms]]) → `bands`
+    * LSH bands →
     * explode band keys → self-join per (band, key) bucket → distinct pairs.
     * Output: (id_a, id_b) with id_a < id_b, plus the estimated Jaccard from
     * signature agreement. The band join is an equi shuffle join on the bucket
@@ -70,8 +75,8 @@ object Dedup {
     */
   def minHashLsh(
       df: DataFrame, textCol: String, idCol: String,
-      shingleN: Int = 3, perms: Int = 64, bands: Int = 16): DataFrame = {
-    val sigs = signatures(df, textCol, idCol, shingleN, perms, bands)
+      bands: Int = 16): DataFrame = {
+    val sigs = signatures(df, textCol, idCol, bands)
     val a = sigs.select(col("band"), col("key"), col("id").as("id_a"), col("sig").as("sig_a"))
     val b = sigs.select(col("band"), col("key"), col("id").as("id_b"), col("sig").as("sig_b"))
     // dedup candidate pairs BEFORE scoring: a pair can collide in up to
@@ -83,17 +88,17 @@ object Dedup {
       .distinct()
       .select(col("id_a"), col("id_b"),
         round(sigAgreement(col("sig_a"), col("sig_b"))
-          .cast("double") / perms.toDouble, 6).as("est_jaccard"))
+          .cast("double") / Perms.toDouble, 6).as("est_jaccard"))
   }
 
   /** Candidate (id_a, id_b) pairs only — no signature payload carried
     * through the distinct shuffle and no agreement scan; the cheap input
-    * for pipelines that verify candidates exactly ([[nearDupPipeline]]).
+    * for pipelines that verify candidates exactly ([[nearDupPipeline]]),
+    * at 16 bands.
     */
   def minHashLshCandidates(
-      df: DataFrame, textCol: String, idCol: String,
-      shingleN: Int = 3, perms: Int = 64, bands: Int = 16): DataFrame = {
-    val sigs = signatures(df, textCol, idCol, shingleN, perms, bands)
+      df: DataFrame, textCol: String, idCol: String): DataFrame = {
+    val sigs = signatures(df, textCol, idCol, bands = 16)
     val a = sigs.select(col("band"), col("key"), col("id").as("id_a"))
     val b = sigs.select(col("band"), col("key"), col("id").as("id_b"))
     a.join(b, Seq("band", "key"))
@@ -104,14 +109,14 @@ object Dedup {
 
   private def signatures(
       df: DataFrame, textCol: String, idCol: String,
-      shingleN: Int, perms: Int, bands: Int): DataFrame = {
-    require(bands > 0 && bands <= perms && perms % bands == 0,
-      s"bands must divide perms with rows >= 1 (got perms=$perms bands=$bands): " +
+      bands: Int): DataFrame = {
+    require(bands > 0 && bands <= Perms && Perms % bands == 0,
+      s"bands must divide perms with rows >= 1 (got perms=$Perms bands=$bands): " +
         "rows = 0 would put every document in one bucket — the all-pairs blowup")
-    val rows = perms / bands
+    val rows = Perms / bands
     df.select(
       col(idCol).as("id"),
-      minHashFromText(col(textCol), shingleN, perms).as("sig"))
+      minHashFromText(col(textCol), ShingleN, Perms).as("sig"))
       // null-text docs have no signature; without this filter they'd all
       // share the constant empty-slice band key — an all-pairs blowup of
       // exactly the kind banding exists to prevent
@@ -120,18 +125,15 @@ object Dedup {
       .select(col("id"), col("sig"), col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
-  /** SimHash near-duplicate pairs: 64-bit signature, bucket by the 4 16-bit
-    * quarters. Pigeonhole: a pair differing in ≤ 3 bits cannot touch all 4
-    * quarters, so it shares at least one exact quarter — hence candidate
-    * generation is complete only for `maxHamming` ≤ 3 (enforced; d = 4 can
-    * spread one flipped bit per quarter and would be silently missed).
-    * Verify Hamming inside buckets.
+  /** SimHash near-duplicate pairs within Hamming distance 3: 64-bit
+    * signature, bucket by the 4 16-bit quarters. Pigeonhole: a pair
+    * differing in ≤ 3 bits cannot touch all 4 quarters, so it shares at
+    * least one exact quarter — hence candidate generation is complete
+    * (d = 4 could spread one flipped bit per quarter and would be silently
+    * missed). Verify Hamming inside buckets.
     */
   def simHashPairs(
-      df: DataFrame, textCol: String, idCol: String, maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4-quarter bucketing is only complete for maxHamming <= 3, got $maxHamming " +
-        "(use more/smaller bands for larger radii)")
+      df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val sigs = df.select(col(idCol).as("id"), simHashFromText(col(textCol)).as("sig"))
     val quarters = sigs.select(col("id"), col("sig"),
       explode(array((0 until 4).map(q =>
@@ -142,7 +144,7 @@ object Dedup {
     a.join(b, Seq("q", "qv"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"), hamming64(col("sig_a"), col("sig_b")).cast("int").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= 3)
       .distinct()
   }
 
@@ -286,11 +288,11 @@ object Dedup {
   /** The LOSSLESS candidate stage of [[setSimilarityJoin]] (prefix filter +
     * size band), public so audits can count/bound the candidate fanout
     * without paying the verify stage. Output: (doc_a, doc_b) candidate ids,
-    * a superset of every pair with Jaccard ≥ `threshold`.
+    * a superset of every pair of 3-word-shingle sets with Jaccard ≥ 0.8.
     */
-  def setSimCandidates(df: DataFrame, textCol: String, idCol: String,
-      n: Int = 3, threshold: Double = 0.8): DataFrame =
-    setSimCandidatesOnSets(shingleSets(df, textCol, idCol, n), threshold)
+  def setSimCandidates(df: DataFrame, textCol: String,
+      idCol: String): DataFrame =
+    setSimCandidatesOnSets(shingleSets(df, textCol, idCol, 3), 0.8)
 
   /** [[setSimCandidates]] over a prepared (id, toks) frame. */
   def setSimCandidatesOnSets(sets: DataFrame, threshold: Double): DataFrame = {
@@ -328,9 +330,9 @@ object Dedup {
     * (doc_a, doc_b, jaccard ≥ threshold).
     */
   def nearDupPipeline(
-      df: DataFrame, textCol: String, idCol: String, threshold: Double,
-      shingleN: Int = 3, perms: Int = 64, bands: Int = 16): DataFrame = {
-    val candidates = minHashLshCandidates(df, textCol, idCol, shingleN, perms, bands)
+      df: DataFrame, textCol: String, idCol: String,
+      threshold: Double): DataFrame = {
+    val candidates = minHashLshCandidates(df, textCol, idCol)
     val toks = df.select(col(idCol).as("__id"), tokenSet(col(textCol)).as("__toks"))
     candidates
       .join(toks.withColumnRenamed("__id", "id_a").withColumnRenamed("__toks", "toks_a"), "id_a")
@@ -526,20 +528,21 @@ object Dedup {
     */
   def semDedup(
       df: DataFrame, vecCol: String, idCol: String, k: Int,
-      threshold: Double, iters: Int = 3, seed: Long = 42L): DataFrame =
+      threshold: Double): DataFrame =
     semDedupFromAssignments(
-      semDedupAssignments(df, vecCol, idCol, k, iters, seed), threshold)
+      semDedupAssignments(df, vecCol, idCol, k), threshold)
 
   /** The cluster-assignment half of [[semDedup]] — the one engine-specific
     * step (iterative float k-means): (id, v, nrm, cluster), localCheckpoint'd
     * since it feeds both pair-join sides and the accounting join. Exposed
     * as the oracle-aux seam: ext54 exports (id, cluster) and DuckDB
     * replays everything downstream ([[semDedupFromAssignments]] — the
-    * within-cluster cosine pruning and the rollup) off it. */
+    * within-cluster cosine pruning and the rollup) off it. Runs 3 Lloyd
+    * iterations from seed 42. */
   def semDedupAssignments(
-      df: DataFrame, vecCol: String, idCol: String, k: Int,
-      iters: Int = 3, seed: Long = 42L): DataFrame = {
-    val (cents, _) = Similarity.kmeansCentroids(df, idCol, vecCol, k, iters, seed)
+      df: DataFrame, vecCol: String, idCol: String, k: Int): DataFrame = {
+    val (cents, _) = Similarity.kmeansCentroids(df, idCol, vecCol, k,
+      iters = 3, seed = 42L)
     // map-side argmin against the driver-held k×dim matrix (same tie rule
     // as training: lowest cluster id wins) — assignment costs ZERO
     // shuffles at any corpus size

@@ -331,7 +331,7 @@ object FingerprintStore {
     * frame (id, verdict, matched_id, dist), eagerly computed.
     */
   def ingest(spark: SparkSession, dir: String, deliveryId: String,
-      deliveryHashes: DataFrame, maxDist: Int = 3): DataFrame = {
+      deliveryHashes: DataFrame): DataFrame = {
     requireSafeId(deliveryId)
     val delivery = deliveryHashes.select(col("id"), col("phash"))
       .localCheckpoint(true)
@@ -339,7 +339,7 @@ object FingerprintStore {
     val probe = readTagged(spark, dir)
       .filter(col("delivery_id") =!= deliveryId)
       .select(col("id"), col("phash"))
-    val verdicts = ImageDedup.incrementalVerdicts(delivery, probe, maxDist)
+    val verdicts = ImageDedup.incrementalVerdicts(delivery, probe)
       .localCheckpoint(true) // materialize BEFORE mutating the store
     writeDelivery(dir, deliveryId,
       delivery.join(

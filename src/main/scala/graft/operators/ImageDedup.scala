@@ -77,13 +77,16 @@ object ImageDedup {
     images.select(col(idCol).as("id"), fingerprint(col(imageCol)).as("phash"))
       .filter(col("phash").isNotNull)
 
+  /** Hamming distance at or under which two image fingerprints are
+    * near-duplicates (the image pair joins and the leakage probe). */
+  private[graft] val MaxDist = 3
+
   /** Verified near-duplicate image pairs (id_a < id_b, Hamming `dist`
-    * <= `maxDist`) via [[hammingNearDupPairs]] over the dHash column.
-    * `maxDist` in [0, 31] (in practice dHash duplicates sit at dist <= 10).
+    * <= [[MaxDist]]) via [[hammingNearDupPairs]] over the dHash column.
     */
-  def nearDupPairs(images: DataFrame, imageCol: String, idCol: String,
-      maxDist: Int = 3): DataFrame =
-    hammingNearDupPairs(hashes(images, imageCol, idCol), maxDist)
+  def nearDupPairs(images: DataFrame, imageCol: String,
+      idCol: String): DataFrame =
+    hammingNearDupPairs(hashes(images, imageCol, idCol), MaxDist)
 
   /** The modality-agnostic core: verified pairs within Hamming `maxDist`
     * over any (id, phash LONG) frame — images (dHash), audio
@@ -238,9 +241,9 @@ object ImageDedup {
     * dist) — nearest by (distance, id) so the evidence row is
     * deterministic; clean rows carry NULLs.
     */
-  def leakageVerdicts(evalHashes: DataFrame, trainHashes: DataFrame,
-      maxDist: Int = 3): DataFrame = {
-    val nearest = hammingJoinAgainst(evalHashes, trainHashes, maxDist)
+  def leakageVerdicts(evalHashes: DataFrame,
+      trainHashes: DataFrame): DataFrame = {
+    val nearest = hammingJoinAgainst(evalHashes, trainHashes, MaxDist)
       .groupBy(col("id"))
       .agg(min_by(col("match_id"), struct(col("dist"), col("match_id")))
         .as("nearest_train_id"),
@@ -252,16 +255,16 @@ object ImageDedup {
         col("nearest_train_id"), col("dist"))
   }
 
-  def incrementalVerdicts(newHashes: DataFrame, existingHashes: DataFrame,
-      maxDist: Int = 3): DataFrame = {
+  def incrementalVerdicts(newHashes: DataFrame,
+      existingHashes: DataFrame): DataFrame = {
     val newH = newHashes.select(col("id"), col("phash")).localCheckpoint(false)
     val clusters = Dedup.clusterPairs(
-      hammingNearDupPairs(newH, maxDist)
+      hammingNearDupPairs(newH, MaxDist)
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
     val survivorOf = newH.select(col("id"))
       .join(clusters, newH("id") === clusters("doc_id"), "left")
       .select(col("id"), coalesce(col("cluster_id"), col("id")).as("survivor"))
-    val existing = hammingJoinAgainst(newH, existingHashes, maxDist)
+    val existing = hammingJoinAgainst(newH, existingHashes, MaxDist)
       .groupBy(col("id"))
       .agg(min_by(col("match_id"), struct(col("dist"), col("match_id")))
         .as("nearest_existing"),

@@ -22,14 +22,17 @@ import graft.functions.TextFunctions
   */
 object LangIdNgram {
 
+  /** Character n-gram width of every profile and document gram set. */
+  private[graft] val GramN = 3
+
   /** (doc_id, gram) pairs — each document's distinct n-gram set, exploded.
     * Uses the fused one-pass gram extractor: the interpreted
     * transform+substr HOF was the suite's hot loop (set parity
     * cross-checked in TextFunctionsSpec).
     */
-  private def docGrams(df: DataFrame, textCol: String, idCol: String, n: Int) =
+  private def docGrams(df: DataFrame, textCol: String, idCol: String) =
     df.select(col(idCol).as("doc_id"),
-      explode(TextFunctions.charNgramSetFast(col(textCol), n)).as("g"))
+      explode(TextFunctions.charNgramSetFast(col(textCol), GramN)).as("g"))
 
   /** Top-K profile from an already-extracted (lang, g) gram frame — the
     * ONE copy of the ranking semantics (ties → lexicographically smaller
@@ -62,10 +65,10 @@ object LangIdNgram {
     */
   def trainProfiles(
       df: DataFrame, textCol: String, langCol: String, idCol: String,
-      n: Int = 3, topK: Int = 50): DataFrame =
+      topK: Int = 50): DataFrame =
     profilesFromGrams(
       df.select(col(langCol).as("lang"),
-        explode(TextFunctions.charNgramSetFast(col(textCol), n)).as("g")),
+        explode(TextFunctions.charNgramSetFast(col(textCol), GramN)).as("g")),
       topK)
 
   /** Classify every document: the language whose profile shares the most
@@ -74,10 +77,10 @@ object LangIdNgram {
     * (doc_id, predicted).
     */
   def classify(
-      df: DataFrame, profiles: DataFrame, textCol: String, idCol: String,
-      n: Int = 3): DataFrame =
+      df: DataFrame, profiles: DataFrame, textCol: String,
+      idCol: String): DataFrame =
     df.select(col(idCol).as("doc_id"))
-      .join(bestFromGrams(docGrams(df, textCol, idCol, n), profiles), Seq("doc_id"), "left")
+      .join(bestFromGrams(docGrams(df, textCol, idCol), profiles), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cand"), lit("und")).as("predicted"))
 
   /** Self-trained train+classify over one labeled corpus — the composed
@@ -94,9 +97,9 @@ object LangIdNgram {
     */
   def selfTest(
       df: DataFrame, textCol: String, langCol: String, idCol: String,
-      n: Int = 3, topK: Int = 50): DataFrame = {
+      topK: Int = 50): DataFrame = {
     val grams = df.select(col(idCol).as("doc_id"), col(langCol).as("lang"),
-        explode(TextFunctions.charNgramSetFast(col(textCol), n)).as("g"))
+        explode(TextFunctions.charNgramSetFast(col(textCol), GramN)).as("g"))
     val profiles = profilesFromGrams(grams.select("lang", "g"), topK)
     val best = bestFromGrams(grams.select("doc_id", "g"), profiles)
     df.select(col(idCol).as("doc_id"), col(langCol).as("lang"))

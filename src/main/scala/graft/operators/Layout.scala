@@ -15,9 +15,12 @@ import org.apache.spark.sql.functions._
   *
   * Everything is codegen'd column arithmetic — the bit interleave is a
   * fold of shift/mask expressions (no UDF in the write path) — plus ONE
-  * bounded stats pass to scale each dimension to `bits`-bit fixed-point.
+  * bounded stats pass to scale each dimension to [[Bits]]-bit fixed-point.
   */
 object Layout {
+
+  /** Fixed-point width of each dimension in the Morton key. */
+  private val Bits = 16
 
   /** Interleave the low `bits` bits of two non-negative long columns
     * (x in even positions, y in odd) — the 2-D Morton key. Pure
@@ -52,11 +55,10 @@ object Layout {
   }
 
   private def zorderWith(df: DataFrame, colX: String, colY: String,
-      nParts: Int, bits: Int,
-      stats: (Double, Double, Double, Double)): DataFrame = {
+      nParts: Int, stats: (Double, Double, Double, Double)): DataFrame = {
     val (xLo, xHi, yLo, yHi) = stats
     df.withColumn("__zkey",
-        interleaveBits(scaled(col(colX), xLo, xHi, bits), scaled(col(colY), yLo, yHi, bits), bits))
+        interleaveBits(scaled(col(colX), xLo, xHi, Bits), scaled(col(colY), yLo, yHi, Bits), Bits))
       .repartitionByRange(nParts, col("__zkey"))
       .sortWithinPartitions(col("__zkey"))
       .drop("__zkey")
@@ -68,8 +70,8 @@ object Layout {
     * dropped, rows clustered.
     */
   def zorder(df: DataFrame, colX: String, colY: String,
-      nParts: Int, bits: Int = 16): DataFrame =
-    zorderWith(df, colX, colY, nParts, bits, rangeStats(df, colX, colY))
+      nParts: Int): DataFrame =
+    zorderWith(df, colX, colY, nParts, rangeStats(df, colX, colY))
 
   /** Layout-quality audit: per partition of the clustered frame, the span
     * of each dimension as a fraction of its global range — the proxy for
@@ -78,12 +80,12 @@ object Layout {
     * y_span_frac), one row per non-empty partition.
     */
   def zorderAudit(df: DataFrame, colX: String, colY: String,
-      nParts: Int, bits: Int = 16): DataFrame = {
+      nParts: Int): DataFrame = {
     // ONE stats pass shared by the key scaling and the span normalization
     val stats = rangeStats(df, colX, colY)
     val xSpan = math.max(stats._2 - stats._1, Double.MinPositiveValue)
     val ySpan = math.max(stats._4 - stats._3, Double.MinPositiveValue)
-    zorderWith(df, colX, colY, nParts, bits, stats)
+    zorderWith(df, colX, colY, nParts, stats)
       .select(spark_partition_id().cast("long").as("pid"),
         col(colX).cast("double").as("x"), col(colY).cast("double").as("y"))
       .groupBy("pid")

@@ -120,7 +120,7 @@ object MediaQuality {
         round(col("s._5"), 6).as("sharpness"),
         round(col("s._6"), 6).as("entropy"))
 
-  /** Default image-gate thresholds — named so the BATCH verdict
+  /** The image-gate thresholds — named so the BATCH verdict
     * ([[imageVerdicts]]), the catalog entry (ext113) and the STREAMING
     * pre-filter ([[imageQualityReason]], fed to
     * [[graft.streaming.ImageIngest]]) can never drift apart. */
@@ -141,31 +141,22 @@ object MediaQuality {
     * decode → stats → the EXACT [[imageVerdicts]] rule order over
     * 6-dp-rounded stats. Shared by the streaming pre-filter UDF and the
     * stream/batch parity spec. */
-  private[graft] def imageReasonOf(bytes: Array[Byte],
-      minSide: Int = DefaultMinSide,
-      minMeanLuma: Double = DefaultMinMeanLuma,
-      minContrast: Double = DefaultMinContrast,
-      minSharpness: Double = DefaultMinSharpness): Option[String] =
+  private[graft] def imageReasonOf(bytes: Array[Byte]): Option[String] =
     Option(bytes).flatMap(ImageOps.decode) match {
       case None => Some("undecodable")
-      case Some(img) =>
-        imageReasonOfDecoded(img, minSide, minMeanLuma, minContrast,
-          minSharpness)
+      case Some(img) => imageReasonOfDecoded(img)
     }
 
   /** The rule half of [[imageReasonOf]] over an ALREADY-decoded image —
     * split out so the gated ingest's combined gate+fingerprint UDF can
     * rule and hash from ONE decode. */
-  private[graft] def imageReasonOfDecoded(img: ImageOps.DecodedImage,
-      minSide: Int = DefaultMinSide,
-      minMeanLuma: Double = DefaultMinMeanLuma,
-      minContrast: Double = DefaultMinContrast,
-      minSharpness: Double = DefaultMinSharpness): Option[String] = {
+  private[graft] def imageReasonOfDecoded(
+      img: ImageOps.DecodedImage): Option[String] = {
     val (mean, std, grad, _) = imageLumaStats(img)
-    if (math.min(img.cols, img.rows) < minSide) Some("too_small")
-    else if (r6(mean) < minMeanLuma) Some("too_dark")
-    else if (r6(std) < minContrast) Some("low_contrast")
-    else if (r6(grad) < minSharpness) Some("blurred")
+    if (math.min(img.cols, img.rows) < DefaultMinSide) Some("too_small")
+    else if (r6(mean) < DefaultMinMeanLuma) Some("too_dark")
+    else if (r6(std) < DefaultMinContrast) Some("low_contrast")
+    else if (r6(grad) < DefaultMinSharpness) Some("blurred")
     else None
   }
 
@@ -176,9 +167,9 @@ object MediaQuality {
   }.asNondeterministic()
 
   /** Failing-reason column for an encoded-image column (NULL = pass) —
-    * the standalone column form of the quality gate (one fenced decode,
-    * default thresholds), for pipelines that want the verdict without
-    * stats or fingerprints; the streaming ingest adapters use the
+    * the standalone column form of the quality gate (one fenced decode),
+    * for pipelines that want the verdict without stats or fingerprints;
+    * the streaming ingest adapters use the
     * combined gate+fingerprint UDFs built on [[imageReasonOfDecoded]]
     * instead, so their gate and dedup share one decode. */
   def imageQualityReason(imageCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -192,16 +183,14 @@ object MediaQuality {
     * scales both scores down — a dark image should fail as dark, not as
     * incidentally blurry): (…stats…, keep BOOL, reason STRING|NULL).
     */
-  def imageVerdicts(stats: DataFrame, minSide: Int = DefaultMinSide,
-      minMeanLuma: Double = DefaultMinMeanLuma,
-      minContrast: Double = DefaultMinContrast,
-      minSharpness: Double = DefaultMinSharpness): DataFrame =
+  def imageVerdicts(stats: DataFrame): DataFrame =
     stats.withColumn("reason",
         when(!col("decodable"), "undecodable")
-          .when(least(col("width"), col("height")) < minSide, "too_small")
-          .when(col("mean_luma") < minMeanLuma, "too_dark")
-          .when(col("contrast") < minContrast, "low_contrast")
-          .when(col("sharpness") < minSharpness, "blurred"))
+          .when(least(col("width"), col("height")) < DefaultMinSide,
+            "too_small")
+          .when(col("mean_luma") < DefaultMinMeanLuma, "too_dark")
+          .when(col("contrast") < DefaultMinContrast, "low_contrast")
+          .when(col("sharpness") < DefaultMinSharpness, "blurred"))
       .withColumn("keep", col("reason").isNull)
 
   // ------------------------------------------------------------ audio
@@ -270,7 +259,7 @@ object MediaQuality {
         round(col("s._4"), 6).as("clipping_ratio"),
         round(col("s._5"), 6).as("silence_ratio"))
 
-  /** Default audio-gate thresholds — shared like the image set. */
+  /** The audio-gate thresholds — shared like the image set. */
   val DefaultMinDurationSec = 0.5
   val DefaultMinRms = 0.01
   val DefaultMaxSilenceRatio = 0.5
@@ -279,30 +268,21 @@ object MediaQuality {
   /** The audio gate as ONE scalar: bytes → failing reason (None = pass),
     * the EXACT [[audioVerdicts]] rule order over 6-dp-rounded stats —
     * shared by the streaming pre-filter UDF and the parity spec. */
-  private[graft] def audioReasonOf(bytes: Array[Byte],
-      minDurationSec: Double = DefaultMinDurationSec,
-      minRms: Double = DefaultMinRms,
-      maxSilenceRatio: Double = DefaultMaxSilenceRatio,
-      maxClippingRatio: Double = DefaultMaxClippingRatio): Option[String] =
+  private[graft] def audioReasonOf(bytes: Array[Byte]): Option[String] =
     Option(bytes).flatMap(AudioOps.decodeWav) match {
       case None => Some("undecodable")
-      case Some(a) =>
-        audioReasonOfDecoded(a, minDurationSec, minRms, maxSilenceRatio,
-          maxClippingRatio)
+      case Some(a) => audioReasonOfDecoded(a)
     }
 
   /** The rule half of [[audioReasonOf]] over an already-decoded track —
     * see [[imageReasonOfDecoded]]. */
-  private[graft] def audioReasonOfDecoded(a: AudioOps.DecodedAudio,
-      minDurationSec: Double = DefaultMinDurationSec,
-      minRms: Double = DefaultMinRms,
-      maxSilenceRatio: Double = DefaultMaxSilenceRatio,
-      maxClippingRatio: Double = DefaultMaxClippingRatio): Option[String] = {
+  private[graft] def audioReasonOfDecoded(
+      a: AudioOps.DecodedAudio): Option[String] = {
     val (dur, rms, _, clip, sil) = audioQualityStats(a)
-    if (r6(dur) < minDurationSec) Some("too_short")
-    else if (r6(rms) < minRms) Some("near_silent")
-    else if (r6(sil) > maxSilenceRatio) Some("mostly_silent")
-    else if (r6(clip) > maxClippingRatio) Some("clipped")
+    if (r6(dur) < DefaultMinDurationSec) Some("too_short")
+    else if (r6(rms) < DefaultMinRms) Some("near_silent")
+    else if (r6(sil) > DefaultMaxSilenceRatio) Some("mostly_silent")
+    else if (r6(clip) > DefaultMaxClippingRatio) Some("clipped")
     else None
   }
 
@@ -320,17 +300,13 @@ object MediaQuality {
     * near-silent, mostly-silent and clipped tracks (first failing rule in
     * fixed order): (…stats…, keep BOOL, reason STRING|NULL).
     */
-  def audioVerdicts(stats: DataFrame,
-      minDurationSec: Double = DefaultMinDurationSec,
-      minRms: Double = DefaultMinRms,
-      maxSilenceRatio: Double = DefaultMaxSilenceRatio,
-      maxClippingRatio: Double = DefaultMaxClippingRatio): DataFrame =
+  def audioVerdicts(stats: DataFrame): DataFrame =
     stats.withColumn("reason",
         when(!col("decodable"), "undecodable")
-          .when(col("duration_sec") < minDurationSec, "too_short")
-          .when(col("rms") < minRms, "near_silent")
-          .when(col("silence_ratio") > maxSilenceRatio, "mostly_silent")
-          .when(col("clipping_ratio") > maxClippingRatio, "clipped"))
+          .when(col("duration_sec") < DefaultMinDurationSec, "too_short")
+          .when(col("rms") < DefaultMinRms, "near_silent")
+          .when(col("silence_ratio") > DefaultMaxSilenceRatio, "mostly_silent")
+          .when(col("clipping_ratio") > DefaultMaxClippingRatio, "clipped"))
       .withColumn("keep", col("reason").isNull)
 
   // ------------------------------------------------------------ video
@@ -371,19 +347,22 @@ object MediaQuality {
     * static_ratio) where low_info_ratio is the fraction of frames whose
     * dHash popcount falls outside [[TemporalAlignment.informative]]'s
     * band (black frames / title cards) and static_ratio is the fraction
-    * of frame TRANSITIONS whose dHash Hamming distance is <= `staticDist`
+    * of frame TRANSITIONS whose dHash Hamming distance is <= [[StaticDist]]
     * (a 2-hour static interview scores ~1.0; a montage ~0.0). One
     * window + one agg, both partitioned by video_id — no join. Every
     * cross-row reduction is order-independent (exact integer sums for
     * the luma mean, exact 0/1 sums for the ratios), so the summary is
     * bit-stable across partitionings — and oracle-replayable.
     */
-  def videoStats(frameRows: DataFrame, staticDist: Int = 2): DataFrame =
-    videoStatsFromFrames(videoFrameStats(frameRows), staticDist)
+  def videoStats(frameRows: DataFrame): DataFrame =
+    videoStatsFromFrames(videoFrameStats(frameRows))
+
+  /** A frame transition at or under this dHash distance counts as static. */
+  private[graft] val StaticDist = 2
 
   /** [[videoStats]] downstream of an already-built [[videoFrameStats]]
     * frame. */
-  def videoStatsFromFrames(pf: DataFrame, staticDist: Int = 2): DataFrame = {
+  def videoStatsFromFrames(pf: DataFrame): DataFrame = {
     val w = Window.partitionBy("video_id").orderBy("frame_idx")
     pf
       .withColumn("prev", lag(col("fh"), 1).over(w))
@@ -397,7 +376,7 @@ object MediaQuality {
           .otherwise(1.0)), 6).as("low_info_ratio"),
         round(coalesce(
           avg(when(col("prev").isNotNull,
-            when(bit_count(col("prev").bitwiseXOR(col("fh"))) <= staticDist,
+            when(bit_count(col("prev").bitwiseXOR(col("fh"))) <= StaticDist,
               1.0).otherwise(0.0))), lit(0.0)), 6).as("static_ratio"))
   }
 }

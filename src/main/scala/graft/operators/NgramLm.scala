@@ -31,14 +31,17 @@ import graft.functions.TextFunctions
   */
 object NgramLm {
 
+  /** Character n-gram order of the model. */
+  private[graft] val N = 3
+
   /** Train on `reference`, score `docs`: one row per document with at
     * least one n-gram — (doc_id, n_grams, logprob), logprob = 6-dp average
     * ln p over ALL gram occurrences (multiset, not set: repetition is
     * signal here).
     */
   def score(docs: DataFrame, reference: DataFrame,
-      textCol: String, idCol: String, n: Int = 3): DataFrame = {
-    require(n >= 2, s"n-gram LM needs n >= 2, got $n")
+      textCol: String, idCol: String): DataFrame = {
+    val n = N
     val grams = (df: DataFrame) => df.select(col(idCol).as("doc_id"),
       explode(TextFunctions.charNgramsFast(col(textCol), n)).as("gram"))
     val cN = grams(reference).groupBy("gram").agg(count(lit(1)).as("c_n"))

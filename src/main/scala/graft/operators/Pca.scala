@@ -70,8 +70,9 @@ object Pca {
   /** Eigen-decomposition of a symmetric matrix by cyclic Jacobi rotations.
     * Returns (eigenvalues desc, eigenvectors as rows) with pinned signs.
     */
-  private[operators] def jacobiEigen(m: Array[Array[Double]], sweeps: Int = 16)
+  private[operators] def jacobiEigen(m: Array[Array[Double]])
       : (Array[Double], Array[Array[Double]]) = {
+    val sweeps = 16
     val d = m.length
     val a = m.map(_.clone())
     val v = Array.tabulate(d, d)((i, j) => if (i == j) 1.0 else 0.0)

@@ -29,6 +29,9 @@ object QualityClassifier {
 
   private def sigmoid(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
 
+  /** Gradient-descent step size on the standardized features. */
+  private val LearningRate = 1.0
+
   /** Train on `featureCols` (numeric) against a 0/1 `labelCol`. Rows with
     * any NULL feature or label are excluded (a learned gate must not train
     * on undefined ratios — empty docs produce NULL ratios upstream).
@@ -37,7 +40,7 @@ object QualityClassifier {
     * NaN.
     */
   private[graft] def train(df: DataFrame, featureCols: Seq[String],
-      labelCol: String, iters: Int = 12, lr: Double = 1.0): (Array[Double], Array[Double], Array[Double]) = {
+      labelCol: String, iters: Int = 12): (Array[Double], Array[Double], Array[Double]) = {
     require(featureCols.nonEmpty, "train: no feature columns")
     require(iters >= 1, s"train: iters must be >= 1, got $iters")
     val d = featureCols.length
@@ -94,7 +97,7 @@ object QualityClassifier {
           while (i < a.length) { a(i) += b(i); i += 1 }
           a
         })
-      w = Array.tabulate(d + 1)(i => w(i) - lr * g(i) / n)
+      w = Array.tabulate(d + 1)(i => w(i) - LearningRate * g(i) / n)
     }
     rdd.unpersist()
     data.unpersist()
@@ -120,7 +123,7 @@ object QualityClassifier {
     * scoring pass + one agg.
     */
   def scoreAudit(df: DataFrame, featureCols: Seq[String], labelCol: String,
-      groupCol: String, iters: Int = 12, lr: Double = 1.0): DataFrame = {
+      groupCol: String, iters: Int = 12): DataFrame = {
     // cache the prepared frame ONCE: feature derivation (HOF-heavy for the
     // text-quality features) would otherwise run for the training cache
     // fill AND the scoring pass. The audit is |groups| rows — eagerly
@@ -129,7 +132,7 @@ object QualityClassifier {
       .filter(featureCols.map(col(_).isNotNull).reduce(_ && _) && col(labelCol).isNotNull)
       .select((col(groupCol) +: col(labelCol) +: featureCols.map(col)): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (w, mean, std) = train(base, featureCols, labelCol, iters, lr)
+    val (w, mean, std) = train(base, featureCols, labelCol, iters)
     val audit = base
       .withColumn("__p", probCol(featureCols, w, mean, std))
       .withColumn("__y", col(labelCol).cast("double"))

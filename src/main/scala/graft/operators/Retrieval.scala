@@ -31,15 +31,19 @@ import org.apache.spark.sql.functions._
   */
 object Retrieval {
 
-  /** Top-`k` documents per query under BM25(k1, b).
+  /** BM25's term-saturation and length-normalization parameters. */
+  private[graft] val K1 = 1.2
+  private[graft] val B = 0.75
+
+  /** Top-`k` documents per query under BM25([[K1]], [[B]]).
     *
     * @param docs    corpus with `idCol` and `textCol`
     * @param queries (queryIdCol, termCol) table of query terms, assumed
     *                small (broadcast) and distinct per (query, term)
     */
   def bm25TopK(docs: DataFrame, queries: DataFrame, textCol: String,
-      idCol: String, queryIdCol: String, termCol: String, k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      idCol: String, queryIdCol: String, termCol: String,
+      k: Int): DataFrame = {
     val toks = docs.select(col(idCol),
       explode(graft.functions.TextFunctions.tokens(col(textCol))).as("term"))
     val tf = toks.groupBy(idCol, "term").agg(count(lit(1)).as("tf"))
@@ -52,8 +56,8 @@ object Retrieval {
     // (1 - b + b * dl/avgdl) with avgdl expanded as dl*n_docs/tot_len so both
     // engines evaluate the identical double-op sequence (left-assoc * then /).
     val denom = col("tf").cast("double") +
-      lit(k1) * (lit(1.0) - lit(b) +
-        lit(b) * (col("dl").cast("double") * col("n_docs") / col("tot_len")))
+      lit(K1) * (lit(1.0) - lit(B) +
+        lit(B) * (col("dl").cast("double") * col("n_docs") / col("tot_len")))
     val idf = log(lit(1.0) +
       (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val scored = tf.join(q, "term")
@@ -61,7 +65,7 @@ object Retrieval {
       .join(broadcast(dfreq.join(q.select("term").distinct(), "term")), "term")
       .crossJoin(broadcast(stats))
       .withColumn("tscore",
-        idf * (col("tf").cast("double") * lit(k1 + 1.0)) / denom)
+        idf * (col("tf").cast("double") * lit(K1 + 1.0)) / denom)
 
     val folded = scored.groupBy(col("query_id"), col(idCol))
       .agg(sort_array(collect_list(struct(col("term"), col("tscore")))).as("arr"))

@@ -27,6 +27,9 @@ object Sampling {
   /** [[hashBucket]] with the percentage modulus both samplers use. */
   def hashBucket(key: Column): Column = hashBucket(key, 100)
 
+  /** Percent of docs [[leakageFreeSplit]] puts in the test split. */
+  private[graft] val TestPct = 10
+
   /** Train/test split with near-duplicate LEAKAGE exclusion — the split a
     * hash bucket alone gets wrong: a train doc that is a near-dup of a
     * test doc leaks the test set into training (memorization reads as
@@ -52,15 +55,13 @@ object Sampling {
     * the production shape where one pairs job feeds dedup AND the split.
     */
   def leakageFreeSplit(docs: DataFrame, textCol: String, idCol: String,
-      testPct: Int = 10, simThreshold: Double = 0.8,
-      shingleN: Int = 3, transitive: Boolean = false,
+      simThreshold: Double = 0.8, transitive: Boolean = false,
       precomputedPairs: Option[DataFrame] = None): DataFrame = {
-    require(testPct >= 1 && testPct <= 99, s"testPct in [1,99], got $testPct")
     val labeled = docs.select(col(idCol).as("doc_id"),
-      when(hashBucket(col(idCol)) < testPct, lit("test"))
+      when(hashBucket(col(idCol)) < TestPct, lit("test"))
         .otherwise(lit("train")).as("split0"))
     val pairs = precomputedPairs
-      .getOrElse(Dedup.setSimilarityJoin(docs, textCol, idCol, shingleN, simThreshold))
+      .getOrElse(Dedup.setSimilarityJoin(docs, textCol, idCol, threshold = simThreshold))
       .select("doc_a", "doc_b")
     val testIds = labeled.filter(col("split0") === "test")
       .select(col("doc_id").as("tid"))

@@ -25,6 +25,11 @@ import graft.functions.VectorFunctions._
   */
 object Similarity {
 
+  /** The seed of every sampled or hashed choice here, and the IVF
+    * quantizer's training-sample size. */
+  private val Seed = 42L
+  private val SampleSize = 2048
+
   /** Exact top-k cosine neighbors for each query vector.
     * Inputs must have (idCol, vecCol: array<float|double>).
     * Output: (query_id, neighbor_id, sim, rank) with rank 1..k, ties broken
@@ -90,8 +95,7 @@ object Similarity {
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,
-      nLists: Int = 16, nProbe: Int = 2,
-      sampleSize: Int = 2048, seed: Long = 42L): DataFrame = {
+      nLists: Int = 16, nProbe: Int = 2): DataFrame = {
     val spark = corpus.sparkSession
     import org.apache.spark.sql.Row
 
@@ -101,9 +105,9 @@ object Similarity {
     // topic bias (ids often correlate with ingest batches)
     val sample: Array[Array[Double]] = corpus
       .filter(col(vecCol).isNotNull)
-      .select(xxhash64(lit(seed), col(idCol)).as("__h"), toDouble(col(vecCol)).as("v"))
+      .select(xxhash64(lit(Seed), col(idCol)).as("__h"), toDouble(col(vecCol)).as("v"))
       .orderBy(col("__h"))
-      .limit(sampleSize)
+      .limit(SampleSize)
       .collect()
       .map(_.getSeq[Double](1).toArray)
     require(sample.nonEmpty, "ivfTopK: empty corpus")
@@ -169,10 +173,9 @@ object Similarity {
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nLists: Int = 16, nProbe: Int = 2,
-      m: Int = 8, ksub: Int = 16, refineFactor: Int = 4,
-      sampleSize: Int = 2048, seed: Long = 42L): DataFrame = {
+      m: Int = 8, ksub: Int = 16, refineFactor: Int = 4): DataFrame = {
     val model = trainPq(
-      sampleVectors(corpus, idCol, vecCol, sampleSize, seed), nLists, m, ksub)
+      sampleVectors(corpus, idCol, vecCol, SampleSize, Seed), nLists, m, ksub)
     searchPqIndex(encodePqIndex(corpus, idCol, vecCol, model),
       corpus, queries, idCol, vecCol, model, k, nProbe, refineFactor)
   }
@@ -479,9 +482,9 @@ object Similarity {
     * Output: (list, n_vecs, centroid: array<double>).
     */
   def kmeansDistributed(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int = 5, seed: Long = 42L): DataFrame = {
+      k: Int, iters: Int = 5): DataFrame = {
     val spark = corpus.sparkSession
-    val (cents, counts) = kmeansCentroids(corpus, idCol, vecCol, k, iters, seed)
+    val (cents, counts) = kmeansCentroids(corpus, idCol, vecCol, k, iters, Seed)
     val rows = cents.indices.map(i => (i, counts(i), cents(i).toSeq))
     spark.createDataFrame(rows).toDF("list", "n_vecs", "centroid")
   }
@@ -705,14 +708,14 @@ object Similarity {
     */
   def lshTopK(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, nBits: Int = 8,
-      nTables: Int = 1, seed: Int = 42): DataFrame = {
+      nTables: Int = 1): DataFrame = {
     require(nTables >= 1, s"lshTopK: nTables must be >= 1, got $nTables")
     def prep(df: DataFrame, id: String, v: String, n: String) =
       df.filter(col(vecCol).isNotNull)
         .select(col(idCol).as(id), toDouble(col(vecCol)).as(v))
         .withColumn(n, norm2(col(v))).filter(col(n) > 0)
     def buckets(v: String) =
-      array((0 until nTables).map(t => hyperplaneBucket(col(v), nBits, seed + t)): _*)
+      array((0 until nTables).map(t => hyperplaneBucket(col(v), nBits, Seed.toInt + t)): _*)
 
     val q = prep(queries, "query_id", "qv", "qn")
     val c = prep(corpus, "neighbor_id", "cv", "cn")

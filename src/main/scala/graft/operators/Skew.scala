@@ -18,14 +18,16 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
+  /** The salt's `rand` seed: it keeps runs reproducible. */
+  private val Seed = 42L
+
   /** Inner equi-join `probe.key = build.key` with an `nSalt`-way salt.
-    * `rand(seed)` keeps runs reproducible.
     */
   def saltedJoin(
       probe: DataFrame, build: DataFrame, key: String,
-      nSalt: Int = 8, seed: Long = 42L): DataFrame = {
+      nSalt: Int = 8): DataFrame = {
     require(nSalt > 0)
-    val salted = probe.withColumn("__salt", (rand(seed) * nSalt).cast("int"))
+    val salted = probe.withColumn("__salt", (rand(Seed) * nSalt).cast("int"))
     val replicated = build.withColumn("__salt",
       explode(sequence(lit(0), lit(nSalt - 1))))
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
@@ -36,8 +38,8 @@ object Skew {
     * this is for the pathological case where one key's partials themselves
     * overwhelm a single reducer (billions of rows of one key).
     */
-  def saltedCount(df: DataFrame, key: String, nSalt: Int = 8, seed: Long = 42L): DataFrame =
-    df.withColumn("__salt", (rand(seed) * nSalt).cast("int"))
+  def saltedCount(df: DataFrame, key: String, nSalt: Int = 8): DataFrame =
+    df.withColumn("__salt", (rand(Seed) * nSalt).cast("int"))
       .groupBy(col(key), col("__salt"))
       .agg(count(lit(1)).as("__partial"))
       .groupBy(col(key))

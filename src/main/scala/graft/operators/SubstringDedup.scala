@@ -27,6 +27,9 @@ import org.apache.spark.sql.functions._
   */
 object SubstringDedup {
 
+  /** [[samplingRecallAudit]]'s window, in code points. */
+  private[graft] val AuditWindow = 64
+
   /** All (pos, md5) windows of `window` code points whose md5 hex starts
     * with one of 16 `sampleHexPrefixes` characters — pos is 1-based in code
     * points, matching both column `substr` and the DuckDB oracle. Documents
@@ -126,9 +129,10 @@ object SubstringDedup {
     * MinHash on bounded pairs. Output: one row per maximal run
     * (doc_id, run_start, n_windows, run_chars, det_1_16, det_1_256).
     */
-  def samplingRecallAudit(docs: DataFrame, textCol: String, idCol: String,
-      window: Int = 64): DataFrame = {
+  def samplingRecallAudit(docs: DataFrame, textCol: String,
+      idCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
+    val window = AuditWindow
     val spans = duplicatedSpans(docs, textCol, idCol, window, hexPrefix = "")
     spans
       .withColumn("grp", col("pos") -

@@ -15,7 +15,7 @@ import graft.util.CommittedTable
   *  - [[compactLanded]] / [[compactBacklog]] bin-pack small files. Per
   *    partition directory, first-fit-decreasing packs the committed data
   *    files SMALLER than `targetBytes` into bins of at most `targetBytes`
-  *    total, rewrites each bin of ≥ `minBinFiles` files into ONE
+  *    total, rewrites each bin of ≥ [[MinBinFiles]] files into ONE
   *    fresh-named file in the same directory, and deletes the bin's
   *    sources. Files already ≥ `targetBytes` are never read, rewritten or
   *    moved, so the rewrite cost is bounded by the small-file bytes. Bins
@@ -192,9 +192,9 @@ object TableCompaction {
   /** First-fit-decreasing over the files smaller than `targetBytes`:
     * descending by size, each file lands in the first bin it fits (sum ≤
     * `targetBytes`) or opens a new one; bins that end up with fewer than
-    * `minBinFiles` files are dropped (rewriting one file buys nothing). */
-  private def planBins(files: Seq[FileStatus], targetBytes: Long,
-      minBinFiles: Int): Seq[Seq[FileStatus]] = {
+    * [[MinBinFiles]] files are dropped (rewriting one file buys nothing). */
+  private def planBins(files: Seq[FileStatus],
+      targetBytes: Long): Seq[Seq[FileStatus]] = {
     final class Bin { var size = 0L
       val members = scala.collection.mutable.ArrayBuffer[FileStatus]() }
     val bins = scala.collection.mutable.ArrayBuffer[Bin]()
@@ -205,8 +205,11 @@ object TableCompaction {
       bin.size += f.getLen
       bin.members += f
     }
-    bins.toSeq.map(_.members.toSeq).filter(_.size >= minBinFiles)
+    bins.toSeq.map(_.members.toSeq).filter(_.size >= MinBinFiles)
   }
+
+  /** A bin of fewer files would rewrite a lone file for no layout gain. */
+  private val MinBinFiles = 2
 
   /** The scan-side rendering of a file path — the EXACT string
     * `input_file_name()` reports for rows read from this file
@@ -327,21 +330,18 @@ object TableCompaction {
 
   /** Run one compaction pass over `table` (class doc for the protocol,
     * crash and concurrency contracts). No-op — beyond healing any
-    * leftover journal — when no directory holds ≥ `minBinFiles` files
+    * leftover journal — when no directory holds ≥ [[MinBinFiles]] files
     * smaller than `targetBytes`, so the pass is idempotent: a second run
     * over an already-compacted table rewrites nothing and every file is
     * byte-identical. */
   def compactLanded(
       spark: SparkSession,
       table: String,
-      targetBytes: Long = DefaultTargetBytes,
-      minBinFiles: Int = 2): CompactStats = {
+      targetBytes: Long = DefaultTargetBytes): CompactStats = {
     require(targetBytes > 0, "targetBytes must be positive")
-    require(minBinFiles >= 2,
-      "minBinFiles < 2 would rewrite lone files for no layout gain")
     val (fs, root) = fsAndRoot(spark, table)
     refuseFileSinkAncestors(fs, root)
-    compactScoped(spark, fs, root, targetBytes, minBinFiles)
+    compactScoped(spark, fs, root, targetBytes)
   }
 
   /** [[compactLanded]] with an automatic driver-memory bound (class
@@ -362,23 +362,20 @@ object TableCompaction {
       spark: SparkSession,
       table: String,
       targetBytes: Long = DefaultTargetBytes,
-      minBinFiles: Int = 2,
       budgetFiles: Int = 100000): CompactStats = {
     require(targetBytes > 0, "targetBytes must be positive")
-    require(minBinFiles >= 2,
-      "minBinFiles < 2 would rewrite lone files for no layout gain")
     require(budgetFiles >= 1, s"budgetFiles must be >= 1, got $budgetFiles")
     val (fs, root) = fsAndRoot(spark, table)
     refuseFileSinkAncestors(fs, root)
-    shardOne(spark, fs, root, targetBytes, minBinFiles, budgetFiles)
+    shardOne(spark, fs, root, targetBytes, budgetFiles)
   }
 
   private def shardOne(
       spark: SparkSession, fs: FileSystem, root: Path,
-      targetBytes: Long, minBinFiles: Int, budgetFiles: Int): CompactStats = {
+      targetBytes: Long, budgetFiles: Int): CompactStats = {
     if (!fs.exists(root)) return CompactStats(0L, 0L, 0L, 0L, 0L)
     if (!committedFilesExceed(fs, root, budgetFiles))
-      return compactScoped(spark, fs, root, targetBytes, minBinFiles)
+      return compactScoped(spark, fs, root, targetBytes)
     // over budget: heal THIS root's protocol state first (a prior
     // unsharded — or differently-budgeted — run may have crashed with
     // its journal here; subtree runs heal only their own roots), then
@@ -399,15 +396,14 @@ object TableCompaction {
           "(_spark_metadata): its readers resolve the file list through " +
           "the log — compact the sink's OUTPUT only via a log-aware " +
           "rewrite, not this operator")
-      shardOne(spark, fs, child.getPath, targetBytes, minBinFiles,
-        budgetFiles)
+      shardOne(spark, fs, child.getPath, targetBytes, budgetFiles)
     }
     val direct = fs.listStatus(root)
       .filter(st => CommittedTable.isCommittedDataFile(root, st)).toSeq
     val fromDirect =
       if (direct.isEmpty) CompactStats(0L, 0L, 0L, 0L, 0L)
       else compactFrom(spark, fs, root, Map(root -> direct), targetBytes,
-        minBinFiles, healedAtRoot = 0L)
+        healedAtRoot = 0L)
     (fromChildren :+ fromDirect).foldLeft(
       CompactStats(0L, 0L, 0L, 0L, healed)) { (a, b) =>
       CompactStats(a.filesBefore + b.filesBefore,
@@ -491,9 +487,9 @@ object TableCompaction {
     * [[compactBacklog]]'s bounded leaves. */
   private def compactScoped(
       spark: SparkSession, fs: FileSystem, root: Path,
-      targetBytes: Long, minBinFiles: Int): CompactStats = {
+      targetBytes: Long): CompactStats = {
     val (healed, byDir) = healAndList(spark, fs, root)
-    compactFrom(spark, fs, root, byDir, targetBytes, minBinFiles, healed)
+    compactFrom(spark, fs, root, byDir, targetBytes, healed)
   }
 
   /** The plan → stage → journal → swap tail over an explicit `byDir`
@@ -501,9 +497,9 @@ object TableCompaction {
   private def compactFrom(
       spark: SparkSession, fs: FileSystem, root: Path,
       byDir: Map[Path, Seq[FileStatus]], targetBytes: Long,
-      minBinFiles: Int, healedAtRoot: Long): CompactStats = {
+      healedAtRoot: Long): CompactStats = {
     val filesBefore = byDir.valuesIterator.map(_.size.toLong).sum
-    stageBins(spark, root, byDir, targetBytes, minBinFiles) match {
+    stageBins(spark, root, byDir, targetBytes) match {
       case None =>
         CompactStats(filesBefore, filesBefore, 0L, 0L, healedAtRoot)
       case Some((moves, rewrittenBytes, staging)) =>
@@ -528,12 +524,12 @@ object TableCompaction {
     * live table is untouched. */
   private def stageBins(
       spark: SparkSession, root: Path,
-      byDir: Map[Path, Seq[FileStatus]], targetBytes: Long,
-      minBinFiles: Int): Option[(Seq[Move], Long, Path)] = {
+      byDir: Map[Path, Seq[FileStatus]],
+      targetBytes: Long): Option[(Seq[Move], Long, Path)] = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bins: Seq[(Int, Seq[FileStatus])] = byDir.toSeq
       .sortBy { case (dir, _) => dir.toUri.getPath }
-      .flatMap { case (_, files) => planBins(files, targetBytes, minBinFiles) }
+      .flatMap { case (_, files) => planBins(files, targetBytes) }
       .zipWithIndex.map(_.swap)
     if (bins.isEmpty) return None
 

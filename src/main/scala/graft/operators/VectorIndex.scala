@@ -284,14 +284,14 @@ object VectorIndex {
 
   /** Search a built index. `corpus` supplies raw vectors for the exact
     * refine stage only (the standard split: the index holds codes, the
-    * store holds vectors).
+    * store holds vectors), over a pool of 4·k candidates per query.
     */
   def searchIvfPq(spark: SparkSession, dir: String,
       queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, nProbe: Int = 2, refineFactor: Int = 4): DataFrame = {
+      k: Int, nProbe: Int = 2): DataFrame = {
     val gen = currentGen(spark, dir)
     Similarity.searchPqIndex(spark.read.parquet(s"$gen/codes"), corpus,
       queries, idCol, vecCol, loadModelAt(spark, gen), k, nProbe,
-      refineFactor)
+      refineFactor = 4)
   }
 }

@@ -20,7 +20,7 @@ import graft.sources.Video
   * O(k·|videos|) rows; candidates are the banded equi-join on frame-hash
   * slices (never all-pairs); the video-level verdict is one hash agg over
   * frame matches. Two videos near-dup when ≥ `minOverlap` of their sampled
-  * frames match within `maxDist` — robust to a re-encode (hashes stable),
+  * frames match within [[MaxDist]] — robust to a re-encode (hashes stable),
   * an intro/outro edit (only some frames must match), and frame jitter
   * (every sampled frame of A is tested against every sampled frame of B
   * that lands in the same band bucket, not just the same index).
@@ -33,6 +33,17 @@ object VideoDedup {
     * so batch and stream agree bit-for-bit on which frames carry identity. */
   val LowInfoMinBits = 4
   val LowInfoMaxBits = 60
+
+  /** Frame-hash Hamming distance at or under which two frames match. */
+  private[graft] val MaxDist = 3
+  /** The near-dup path's frame stride (containment samples every frame). */
+  private[graft] val NearDupEveryNth = 2
+  /** Whole-video and segment signature tiers' banding distances (see
+    * [[segmentCandidates]] for why the segment tier's is tight). */
+  private val SigMaxDist = 10
+  private val SegSigMaxDist = 4
+  /** Best-alignment share of the shorter clip that reports containment. */
+  private[graft] val MinCoverage = 0.8
 
   def informativeHash(h: Long): Boolean = {
     val b = java.lang.Long.bitCount(h)
@@ -80,31 +91,8 @@ object VideoDedup {
       .select(col("id"), col("f._1").as("frame_idx"),
         col("f._2").as("phash"), col("n_sampled"))
 
-  /** Verified near-duplicate video pairs: (id_a < id_b, matched_frames,
-    * overlap_ratio).
-    *
-    * Overlap contract: both numerator and denominator count frames that
-    * SURVIVE the low-information filter below (r8 ADVICE: a pre-filter
-    * denominator made a duplicate dominated by near-uniform frames
-    * unreachable, since filtered frames can never match). `matched_frames`
-    * counts distinct matched frames on the SMALLER (post-filter) side —
-    * counting the larger side could exceed the denominator when many of
-    * its frames match few of the other's (static scenes).
-    *
-    * TEMPORAL ALIGNMENT (r8 ask #4): `overlap_ratio` is the largest
-    * single-alignment support via the shared
-    * [[TemporalAlignment.alignedOverlap]] core (jitter = `everyNth`, one
-    * original frame either side), so a shuffled MONTAGE of A's frames no
-    * longer scores like a re-encode of A (its matches are real but
-    * scattered across offsets), while re-encodes, splices, contained clips
-    * and uniformly time-shifted copies all concentrate their matches at
-    * one offset and keep their scores. Capped at 1.0 (a static-scene
-    * duplicate matches every frame at every offset; its best window
-    * over-counts the same frames at neighboring offsets).
-    * Pairs with overlap_ratio >= `minOverlap` survive.
-    */
   /** The informative (post-low-info-filter) frame-hash table — the frame
-    * substrate [[nearDupPairs]] and [[prefilteredNearDupPairs]] both
+    * substrate [[nearDupPairs]] and [[prefilteredNearDupPairsFromKept]] both
     * consume; expose it so a session can materialize ONE decode pass for
     * all of them (the decoded-frame-table discipline).
     */
@@ -120,21 +108,43 @@ object VideoDedup {
       .filter(TemporalAlignment.informative(col("phash"),
         LowInfoMinBits, LowInfoMaxBits))
 
-  def nearDupPairs(videos: DataFrame, videoCol: String, idCol: String,
-      everyNth: Int = 2, maxDist: Int = 3,
-      minOverlap: Double = 0.6): DataFrame =
-    nearDupPairsFromKept(
-      keptFrameHashes(videos, videoCol, idCol, everyNth).localCheckpoint(false),
-      everyNth, maxDist, minOverlap)
+  /** Verified near-duplicate video pairs: (id_a < id_b, matched_frames,
+    * overlap_ratio).
+    *
+    * Overlap contract: both numerator and denominator count frames that
+    * SURVIVE the low-information filter ([[keptFrameHashes]]; r8 ADVICE: a pre-filter
+    * denominator made a duplicate dominated by near-uniform frames
+    * unreachable, since filtered frames can never match). `matched_frames`
+    * counts distinct matched frames on the SMALLER (post-filter) side —
+    * counting the larger side could exceed the denominator when many of
+    * its frames match few of the other's (static scenes).
+    *
+    * TEMPORAL ALIGNMENT (r8 ask #4): `overlap_ratio` is the largest
+    * single-alignment support via the shared
+    * [[TemporalAlignment.alignedOverlap]] core (jitter = the stride, one
+    * original frame either side), so a shuffled MONTAGE of A's frames no
+    * longer scores like a re-encode of A (its matches are real but
+    * scattered across offsets), while re-encodes, splices, contained clips
+    * and uniformly time-shifted copies all concentrate their matches at
+    * one offset and keep their scores. Capped at 1.0 (a static-scene
+    * duplicate matches every frame at every offset; its best window
+    * over-counts the same frames at neighboring offsets).
+    * Pairs with overlap_ratio >= 0.6 survive.
+    */
+  def nearDupPairs(videos: DataFrame, videoCol: String,
+      idCol: String): DataFrame =
+    nearDupPairsFromKept(keptFrameHashes(videos, videoCol, idCol,
+      NearDupEveryNth).localCheckpoint(false))
 
-  /** [[nearDupPairs]] over an already-built [[keptFrameHashes]] frame. */
-  def nearDupPairsFromKept(fh: DataFrame, everyNth: Int = 2,
-      maxDist: Int = 3, minOverlap: Double = 0.6): DataFrame = {
+  /** [[nearDupPairs]] over an already-built [[keptFrameHashes]] frame
+    * (sampled every [[NearDupEveryNth]] frames). */
+  def nearDupPairsFromKept(fh: DataFrame,
+      minOverlap: Double = 0.6): DataFrame = {
     // frame-level banded join on a composite key; same-video collisions
     // (static scenes) are dropped by the different-video filter
     val framePairs = ImageDedup.hammingNearDupPairs(
       fh.select(struct(col("id"), col("frame_idx")).as("id"), col("phash")),
-      maxDist)
+      MaxDist)
       .select(col("id_a.id").as("va0"), col("id_a.frame_idx").as("fa0"),
         col("id_b.id").as("vb0"), col("id_b.frame_idx").as("fb0"))
       .filter(col("va0") =!= col("vb0"))
@@ -149,7 +159,8 @@ object VideoDedup {
     // POST-FILTER per-video frame counts — the denominator must count only
     // frames that are allowed to match
     val counts = fh.groupBy(col("id")).agg(count(lit(1)).as("n_kept"))
-    TemporalAlignment.alignedOverlap(framePairs, counts, jitter = everyNth)
+    TemporalAlignment.alignedOverlap(framePairs, counts,
+      jitter = NearDupEveryNth)
       .select(col("id_a").as("vid_a"), col("id_b").as("vid_b"),
         col("matched_units").as("matched_frames"),
         least(lit(1.0), round(col("aligned_units").cast("double") /
@@ -177,7 +188,7 @@ object VideoDedup {
     * original frames, so batch grids agree across videos), alongside the
     * whole-video signature. A HEAVY SPLICE shares whole spans of its
     * source even when its minority share dilutes the global majority vote
-    * past `sigMaxDist` — the shared spans' segment signatures still sit
+    * past [[SigMaxDist]] — the shared spans' segment signatures still sit
     * within threshold and carry the pair to refine. Candidate volume
     * stays |videos| × (1 + ⌈k/segHop⌉) signature rows (k = sampled
     * frames/video), 2–3 orders below frame-level banding.
@@ -239,7 +250,7 @@ object VideoDedup {
 
   /** Candidate video pairs from the SEGMENT tier alone: the Hamming-
     * banded join over [[segmentSignatures]], distinct different-video
-    * (id_a, id_b). `segSigMaxDist` is deliberately TIGHT (default 4, vs
+    * (id_a, id_b). [[SegSigMaxDist]] is deliberately TIGHT (4, vs
     * the whole-video tier's 10): the segment tier exists to catch CLEAN
     * shared spans, whose segment votes come out near-identical — global
     * drift tolerance is the whole-video tier's job — and banding at
@@ -249,37 +260,36 @@ object VideoDedup {
     * bucket sizes explode quadratically at corpus scale for recall the
     * tier does not need. */
   def segmentCandidates(fh: DataFrame, everyNth: Int = 2,
-      segLen: Int = 16, segSigMaxDist: Int = 4,
-      segHop: Int = 0): DataFrame =
+      segLen: Int = 16, segHop: Int = 0): DataFrame =
     ImageDedup.hammingNearDupPairs(
-      segmentSignatures(fh, everyNth, segLen, segHop), segSigMaxDist)
+      segmentSignatures(fh, everyNth, segLen, segHop), SegSigMaxDist)
       .select(col("id_a"), col("id_b")).distinct()
 
   /** Candidate video pairs for the two-tier path: the whole-video
-    * [[videoSignatures]] banded join at `sigMaxDist` UNION the
-    * [[segmentCandidates]] at their tight `segSigMaxDist` — each
+    * [[videoSignatures]] banded join at [[SigMaxDist]] UNION the
+    * [[segmentCandidates]] at their tight [[SegSigMaxDist]] — each
     * granularity joined in ITS OWN band space so bucket sizes never add
     * across tiers (see [[segmentCandidates]]). `segLen <= 0` disables
     * the segment tier (whole-video signatures only — the r9 behavior,
     * kept callable so ext122 can report both tiers' candidate counts
     * side by side). */
   def signatureCandidates(fh: DataFrame, everyNth: Int = 2,
-      sigMaxDist: Int = 10, segLen: Int = 16,
-      segSigMaxDist: Int = 4, segHop: Int = 0): DataFrame = {
-    val whole = ImageDedup.hammingNearDupPairs(videoSignatures(fh), sigMaxDist)
+      segLen: Int = 16, segHop: Int = 0): DataFrame = {
+    val whole = ImageDedup.hammingNearDupPairs(videoSignatures(fh), SigMaxDist)
       .select(col("id_a"), col("id_b"))
     (if (segLen <= 0) whole
      else whole.unionByName(
-       segmentCandidates(fh, everyNth, segLen, segSigMaxDist, segHop)))
+       segmentCandidates(fh, everyNth, segLen, segHop)))
       .distinct()
   }
 
-  /** PREFILTERED near-dup pairs — the two-tier form of [[nearDupPairs]]
+  /** PREFILTERED near-dup pairs over an already-built
+    * [[keptFrameHashes]] frame — the two-tier form of [[nearDupPairs]]
     * for archive scale, the ANN playbook (coarse candidates → exact
     * refine on the pool, ext61's IVF-PQ shape) applied to video:
     *  1. candidate video pairs from a Hamming-banded join over the
     *     [[videoSignatures]] UNION the [[segmentSignatures]]
-    *     (|videos| × (1 + segments) rows, not |frames|) at `sigMaxDist`;
+    *     (|videos| × (1 + segments) rows, not |frames|) at [[SigMaxDist]];
     *  2. the SAME temporal-alignment vote as the full path, evaluated
     *     per candidate pair over the two videos' collected frame-hash
     *     lists — O(na·nb) per pair, bounded by item length, paid only
@@ -289,7 +299,7 @@ object VideoDedup {
     * the overwhelming duplicate class in a scraped archive) vote
     * near-identical whole-video signatures and always reach refine; a
     * HEAVY SPLICE that dilutes the global majority vote past
-    * `sigMaxDist` is carried to refine by the SEGMENT tier instead
+    * [[SigMaxDist]] is carried to refine by the SEGMENT tier instead
     * (r9 verdict #2 — its shared spans vote clean segment signatures;
     * spec-pinned: the splice the whole-video tier provably misses is
     * caught with the segment tier on). The residual miss class is
@@ -297,7 +307,7 @@ object VideoDedup {
     * within-span variation — shrink `segLen` to trade candidate rows
     * for that recall); the whole trade is AUDITED against the exact
     * path by ext122 exactly as ext16/ext17/ext62 audit the ANN tiers,
-    * now reporting both tiers' candidate counts. `sigMaxDist` cannot
+    * now reporting both tiers' candidate counts. [[SigMaxDist]] cannot
     * simply be raised instead: banding at distance d needs d+1 slices,
     * and past ~10 the slices get so narrow that bucket collisions
     * regress the candidate join toward all-pairs. Verdict semantics on
@@ -305,26 +315,10 @@ object VideoDedup {
     * (spec-pinned parity), so prefiltered ⊆ exact holds whatever the
     * candidate tier admits.
     */
-  def prefilteredNearDupPairs(videos: DataFrame, videoCol: String,
-      idCol: String, everyNth: Int = 2, maxDist: Int = 3,
-      minOverlap: Double = 0.6, sigMaxDist: Int = 10,
-      segLen: Int = 16, segSigMaxDist: Int = 4,
-      segHop: Int = 0): DataFrame =
-    prefilteredNearDupPairsFromKept(
-      keptFrameHashes(videos, videoCol, idCol, everyNth).localCheckpoint(false),
-      everyNth, maxDist, minOverlap, sigMaxDist, segLen, segSigMaxDist,
-      segHop)
-
-  /** [[prefilteredNearDupPairs]] over an already-built
-    * [[keptFrameHashes]] frame. */
-  def prefilteredNearDupPairsFromKept(fh: DataFrame, everyNth: Int = 2,
-      maxDist: Int = 3, minOverlap: Double = 0.6,
-      sigMaxDist: Int = 10, segLen: Int = 16,
-      segSigMaxDist: Int = 4, segHop: Int = 0): DataFrame =
+  def prefilteredNearDupPairsFromKept(fh: DataFrame,
+      segLen: Int = 16): DataFrame =
     refineCandidates(fh,
-      signatureCandidates(fh, everyNth, sigMaxDist, segLen, segSigMaxDist,
-        segHop),
-      everyNth, maxDist, minOverlap)
+      signatureCandidates(fh, NearDupEveryNth, segLen), NearDupEveryNth)
 
   /** The refine stage alone: the exact temporal-alignment vote over an
     * externally supplied candidate-pair frame (id_a, id_b) — split out so
@@ -332,7 +326,7 @@ object VideoDedup {
     * for counting can refine the SAME frame instead of recomputing the
     * signature aggregations and banded join a second time. */
   def refineCandidates(fh: DataFrame, cands: DataFrame, everyNth: Int = 2,
-      maxDist: Int = 3, minOverlap: Double = 0.6): DataFrame = {
+      minOverlap: Double = 0.6): DataFrame = {
     val lists = fh.groupBy(col("id"))
       .agg(sort_array(collect_list(struct(col("frame_idx"), col("phash"))))
         .as("fs"))
@@ -340,7 +334,7 @@ object VideoDedup {
       .join(lists.select(col("id").as("id_a"), col("fs").as("fa")), Seq("id_a"))
       .join(lists.select(col("id").as("id_b"), col("fs").as("fb")), Seq("id_b"))
       .select(col("id_a").as("vid_a"), col("id_b").as("vid_b"),
-        refineUdf(maxDist, everyNth)(col("fa"), col("fb")).as("r"))
+        refineUdf(everyNth)(col("fa"), col("fb")).as("r"))
       .select(col("vid_a"), col("vid_b"),
         col("r._1").as("matched_frames"),
         col("r._2").as("overlap_ratio"))
@@ -388,12 +382,12 @@ object VideoDedup {
     (matchedSmall.size.toLong, ratio)
   }
 
-  private def refineUdf(maxDist: Int, jitter: Int) =
+  private def refineUdf(jitter: Int) =
     udf { (fa: Seq[org.apache.spark.sql.Row], fb: Seq[org.apache.spark.sql.Row]) =>
       alignLists(
         fa.map(r => (r.getInt(0), r.getLong(1))),
         fb.map(r => (r.getInt(0), r.getLong(1))),
-        maxDist, jitter)
+        MaxDist, jitter)
     }.asNondeterministic()
 
   /** Verified CLIP-IN-VIDEO containment pairs — the video sibling of
@@ -405,7 +399,7 @@ object VideoDedup {
     * SHORTER side's surviving frames and the winning alignment's offset
     * is REPORTED as the clip's start frame in the track.
     *
-    * `everyNth` defaults to 1 here (vs [[nearDupPairs]]'s 2):
+    * Every frame is sampled here (vs [[nearDupPairs]]'s every 2nd):
     * localization wants every frame — a stride of s quantizes the
     * reported offset to multiples of s and halves vote support for
     * embeds misaligned to the stride grid (the audio path's hop-dial
@@ -416,24 +410,22 @@ object VideoDedup {
     * smaller id), offset_frames the frame index in the track where the
     * clip's frame 0 aligns (≥ 0 for a true containment; the sign carries
     * through for partial head overlaps), coverage capped at 1.0. Pairs
-    * with coverage >= `minCoverage` survive.
+    * with coverage >= [[MinCoverage]] survive.
     */
-  def containmentPairs(videos: DataFrame, videoCol: String, idCol: String,
-      everyNth: Int = 1, maxDist: Int = 3,
-      minCoverage: Double = 0.8): DataFrame =
+  def containmentPairs(videos: DataFrame, videoCol: String,
+      idCol: String): DataFrame =
     containmentPairsFromKept(
-      keptFrameHashes(videos, videoCol, idCol, everyNth).localCheckpoint(false),
-      everyNth, maxDist, minCoverage)
+      keptFrameHashes(videos, videoCol, idCol, everyNth = 1)
+        .localCheckpoint(false))
 
   /** [[containmentPairs]] downstream of an already-built
     * [[keptFrameHashes]] frame — the oracle-aux seam (ext117 exports the
     * frame table and this runs the localization vote over the exact
-    * exported rows). */
-  def containmentPairsFromKept(fh: DataFrame, everyNth: Int = 1,
-      maxDist: Int = 3, minCoverage: Double = 0.8): DataFrame = {
+    * exported rows), sampled every frame. */
+  def containmentPairsFromKept(fh: DataFrame): DataFrame = {
     val framePairs = ImageDedup.hammingNearDupPairs(
       fh.select(struct(col("id"), col("frame_idx")).as("id"), col("phash")),
-      maxDist)
+      MaxDist)
       .select(col("id_a.id").as("va0"), col("id_a.frame_idx").as("fa0"),
         col("id_b.id").as("vb0"), col("id_b.frame_idx").as("fb0"))
       .filter(col("va0") =!= col("vb0"))
@@ -443,11 +435,11 @@ object VideoDedup {
         when(col("va0") <= col("vb0"), col("fa0")).otherwise(col("fb0")).as("ta"),
         when(col("va0") <= col("vb0"), col("fb0")).otherwise(col("fa0")).as("tb"))
     val counts = fh.groupBy(col("id")).agg(count(lit(1)).as("n_kept"))
-    TemporalAlignment.alignedOverlap(framePairs, counts, jitter = everyNth)
+    TemporalAlignment.alignedOverlap(framePairs, counts, jitter = 1)
       .withColumn("coverage",
         least(lit(1.0), round(col("aligned_units").cast("double") /
           least(col("na"), col("nb")), 6)))
-      .filter(col("coverage") >= minCoverage)
+      .filter(col("coverage") >= MinCoverage)
       // the clip is the shorter surviving side; its start in the track is
       // (track frame) − (clip frame) at the winning alignment: best_off
       // is ta − tb, so the sign flips with which side is the clip

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * minus the cross-video mirror canonicalization — see [[frameHashUdf]]
   * for why the canonical min is wrong within one video), then ONE
   * per-video window pass: a frame
-  * whose Hamming distance to its predecessor exceeds `cutDist` opens a new
+  * whose Hamming distance to its predecessor exceeds [[CutDist]] opens a new
   * shot (hard-cut detection by perceptual-hash discontinuity — the
   * standard cheap shot detector; dissolves need a frame-difference model
   * and land in the same running-sum shape), and the shot index is the
@@ -51,6 +51,10 @@ object VideoShots {
   private[graft] def frameHash(px: Column, rows: Column, cols: Column,
       channels: Column): Column = frameHashUdf(rows, cols, channels, px)
 
+  /** A frame whose dHash is more than this many bits from its
+    * predecessor's opens a new shot. */
+  private[graft] val CutDist = 10
+
   /** Per-shot segmentation: (video_id, shot_idx, start_frame, end_frame,
     * n_frames) — frame indices are ORIGINAL indices (sampling stride
     * preserved in `start_frame`/`end_frame`; `n_frames` counts SAMPLED
@@ -58,20 +62,10 @@ object VideoShots {
     * decodable frames emits nothing.
     */
   def shots(videos: DataFrame, videoCol: String, idCol: String,
-      everyNth: Int = 1, cutDist: Int = 10): DataFrame =
+      everyNth: Int = 1): DataFrame =
     shotsFromFrames(
-      graft.sources.Video.framesById(videos, videoCol, idCol),
-      everyNth, cutDist)
+      graft.sources.Video.framesById(videos, videoCol, idCol), everyNth)
 
-  /** [[shots]] over an already-decoded frames table
-    * ((video_id, frame_idx, rows, cols, channels, px) —
-    * [[graft.sources.Video.framesById]]'s shape): the form a session with
-    * a MATERIALIZED decoded-frames table uses, paying zero extra decodes.
-    */
-  /** (id, frame_idx, shot_idx) per sampled frame — the per-frame shot
-    * assignment [[shotsFromFrames]] and [[keyframes]] both roll up from:
-    * one lag + one running sum over the per-video window.
-    */
   /** The sampled-frame dHash table [[shotAssignment]] rolls up from —
     * public as the oracle-aux seam (r16): ext110/ext112 export it during
     * Verify so DuckDB can restate the lag / cut-threshold / running-sum
@@ -84,15 +78,19 @@ object VideoShots {
         frameHashUdf(col("rows"), col("cols"), col("channels"), col("px"))
           .as("phash"))
 
+  /** (id, frame_idx, shot_idx) per sampled frame — the per-frame shot
+    * assignment [[shotsFromFrames]] and [[keyframes]] both roll up from:
+    * one lag + one running sum over the per-video window.
+    */
   private def shotAssignment(frameRows: DataFrame,
-      everyNth: Int, cutDist: Int): DataFrame = {
+      everyNth: Int): DataFrame = {
     val fh = frameHashes(frameRows, everyNth)
     val w = Window.partitionBy("id").orderBy("frame_idx")
     fh
       .withColumn("prev", lag(col("phash"), 1).over(w))
       .withColumn("is_cut",
         when(col("prev").isNotNull &&
-          bit_count(col("phash").bitwiseXOR(col("prev"))) > cutDist, 1L)
+          bit_count(col("phash").bitwiseXOR(col("prev"))) > CutDist, 1L)
           .otherwise(0L))
       .withColumn("shot_idx",
         sum(col("is_cut")).over(w.rowsBetween(Window.unboundedPreceding,
@@ -100,9 +98,13 @@ object VideoShots {
       .select(col("id"), col("frame_idx"), col("shot_idx"))
   }
 
-  def shotsFromFrames(frameRows: DataFrame,
-      everyNth: Int = 1, cutDist: Int = 10): DataFrame =
-    shotAssignment(frameRows, everyNth, cutDist)
+  /** [[shots]] over an already-decoded frames table
+    * ((video_id, frame_idx, rows, cols, channels, px) —
+    * [[graft.sources.Video.framesById]]'s shape): the form a session with
+    * a MATERIALIZED decoded-frames table uses, paying zero extra decodes.
+    */
+  def shotsFromFrames(frameRows: DataFrame, everyNth: Int = 1): DataFrame =
+    shotAssignment(frameRows, everyNth)
       .groupBy(col("id"), col("shot_idx"))
       .agg(min(col("frame_idx")).as("start_frame"),
         max(col("frame_idx")).as("end_frame"),
@@ -117,13 +119,13 @@ object VideoShots {
     * — first/last frames sit next to transitions; deterministic:
     * ceil-middle of the sorted sampled frames). Output (video_id,
     * shot_idx, keyframe_idx, shot_frames) — same window partitioning as
-    * the segmentation, one extra rank/count pass, still no join.
+    * the segmentation, one extra rank/count pass, still no join. Every
+    * frame is sampled.
     */
-  def keyframes(frameRows: DataFrame,
-      everyNth: Int = 1, cutDist: Int = 10): DataFrame = {
+  def keyframes(frameRows: DataFrame): DataFrame = {
     val ws = Window.partitionBy("id", "shot_idx").orderBy("frame_idx")
     val wc = Window.partitionBy("id", "shot_idx")
-    shotAssignment(frameRows, everyNth, cutDist)
+    shotAssignment(frameRows, everyNth = 1)
       .withColumn("rn", row_number().over(ws))
       .withColumn("cnt", count(lit(1)).over(wc))
       .filter(col("rn") === floor((col("cnt") + 1) / 2)) // SQL `/` is double
@@ -135,11 +137,10 @@ object VideoShots {
     * mean_shot_frames) — the corpus-curation rollup (shot-count and
     * shot-length distributions are standard video-quality signals: a
     * single-shot static video and a 1-cut-per-frame slideshow both get
-    * flagged).
+    * flagged), over every frame.
     */
-  def shotSummary(frameRows: DataFrame,
-      everyNth: Int = 1, cutDist: Int = 10): DataFrame =
-    shotsFromFrames(frameRows, everyNth, cutDist)
+  def shotSummary(frameRows: DataFrame): DataFrame =
+    shotsFromFrames(frameRows)
       .groupBy(col("video_id"))
       .agg(count(lit(1)).as("n_shots"),
         max(col("n_frames")).as("longest_shot_frames"),

@@ -17,18 +17,43 @@ import graft.functions.VectorFunctions
   */
 object ExtensionQueries {
 
+  /** The [[graft.operators.NgramLm.score]] model the n-gram LM entries'
+    * oracles replay: trained on docs < 250, one `lp` per scored gram. */
+  private val ngramLmOracleCtes = {
+    val n = graft.operators.NgramLm.N
+    s"""tr AS (SELECT lower(text) AS t FROM documents
+                    WHERE doc_id < 250 AND text IS NOT NULL),
+        tg AS (SELECT unnest(list_transform(range(1, length(t) - ${n - 2}),
+                      i -> substr(t, CAST(i AS INT), $n))) AS gram
+               FROM tr WHERE length(t) >= $n),
+        c3 AS (SELECT gram, CAST(COUNT(*) AS BIGINT) AS c_n FROM tg GROUP BY gram),
+        c2 AS (SELECT substr(gram, 1, ${n - 1}) AS prefix, CAST(SUM(c_n) AS BIGINT) AS c_prefix
+               FROM c3 GROUP BY 1),
+        v AS (SELECT CAST(COUNT(*) AS BIGINT) AS v FROM c3),
+        dt AS (SELECT doc_id, unnest(list_transform(range(1, length(lower(text)) - ${n - 2}),
+                      i -> substr(lower(text), CAST(i AS INT), $n))) AS gram
+               FROM documents WHERE length(lower(text)) >= $n),
+        sc AS (SELECT doc_id, ln((COALESCE(c_n, 0) + 1.0) /
+                                 (COALESCE(c_prefix, 0) + v)) AS lp
+               FROM dt LEFT JOIN c3 USING (gram)
+                       LEFT JOIN c2 ON substr(dt.gram, 1, ${n - 1}) = c2.prefix, v)"""
+  }
+
   /** The language-ID train+classify oracle CTEs, shared by ext22 (the
     * predictions) and ext76 (the classification report over them) — ONE
     * copy of the gram/profile/winner SQL so the two gates can never verify
     * against diverging semantics.
     */
-  private val langIdOracleCtes = """
+  private val langIdOracleCtes = {
+    val n = graft.operators.LangIdNgram.GramN
+    s"""
         grams AS (
           SELECT doc_id, lang,
                  unnest(list_sort(list_distinct(
-                   CASE WHEN length(lower(text)) <= 3 THEN [lower(text)]
-                        ELSE list_transform(range(1, length(lower(text)) - 1),
-                                            i -> substr(lower(text), i, 3)) END))) AS g
+                   CASE WHEN length(lower(text)) <= $n THEN [lower(text)]
+                        ELSE list_transform(
+                          range(1, length(lower(text)) - ${n - 2}),
+                          i -> substr(lower(text), i, $n)) END))) AS g
           FROM documents),
         prof AS (
           SELECT lang AS cand, g FROM (
@@ -41,6 +66,7 @@ object ExtensionQueries {
                      ORDER BY COUNT(*) DESC, cand) AS rk
             FROM grams JOIN prof USING (g)
             GROUP BY doc_id, cand) WHERE rk = 1)"""
+  }
 
   /** The [[graft.operators.TemporalAlignment.alignedOverlap]] vote
     * restated in DuckDB SQL over an exported post-filter unit-hash aux
@@ -922,7 +948,7 @@ object ExtensionQueries {
     QueryDef(
       "ext22_langid_ngram",
       (s, dir) => graft.operators.LangIdNgram.selfTest(
-        Tables.documents(s, dir), "text", "lang", "doc_id", n = 3, topK = 50),
+        Tables.documents(s, dir), "text", "lang", "doc_id", topK = 50),
       Some(s"""
         WITH $langIdOracleCtes
         SELECT doc_id, lang, COALESCE(b.cand, 'und') AS predicted
@@ -1850,25 +1876,10 @@ object ExtensionQueries {
       (s, dir) => {
         val docs = Tables.documents(s, dir)
         graft.operators.NgramLm.score(
-          docs, docs.filter(col("doc_id") < 250), "text", "doc_id", n = 3)
+          docs, docs.filter(col("doc_id") < 250), "text", "doc_id")
       },
-      Some("""
-        WITH tr AS (SELECT lower(text) AS t FROM documents
-                    WHERE doc_id < 250 AND text IS NOT NULL),
-        tg AS (SELECT unnest(list_transform(range(1, length(t) - 1),
-                      i -> substr(t, CAST(i AS INT), 3))) AS gram
-               FROM tr WHERE length(t) >= 3),
-        c3 AS (SELECT gram, CAST(COUNT(*) AS BIGINT) AS c_n FROM tg GROUP BY gram),
-        c2 AS (SELECT substr(gram, 1, 2) AS prefix, CAST(SUM(c_n) AS BIGINT) AS c_prefix
-               FROM c3 GROUP BY 1),
-        v AS (SELECT CAST(COUNT(*) AS BIGINT) AS v FROM c3),
-        dt AS (SELECT doc_id, unnest(list_transform(range(1, length(lower(text)) - 1),
-                      i -> substr(lower(text), CAST(i AS INT), 3))) AS gram
-               FROM documents WHERE length(lower(text)) >= 3),
-        sc AS (SELECT doc_id, ln((COALESCE(c_n, 0) + 1.0) /
-                                 (COALESCE(c_prefix, 0) + v)) AS lp
-               FROM dt LEFT JOIN c3 USING (gram)
-                       LEFT JOIN c2 ON substr(dt.gram, 1, 2) = c2.prefix, v)
+      Some(s"""
+        WITH $ngramLmOracleCtes
         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
                ROUND(AVG(lp), 6) AS logprob
         FROM sc GROUP BY doc_id
@@ -1993,7 +2004,7 @@ object ExtensionQueries {
         import org.apache.spark.sql.expressions.Window
         val docs = Tables.documents(s, dir)
         val scored = graft.operators.NgramLm.score(
-          docs, docs.filter(col("doc_id") < 250), "text", "doc_id", n = 3)
+          docs, docs.filter(col("doc_id") < 250), "text", "doc_id")
           .join(docs.select(col("doc_id"), col("lang")), "doc_id")
         val w = Window.partitionBy("lang").orderBy(col("logprob").desc, col("doc_id"))
         scored.withColumn("bucket", ntile(3).over(w).cast("long"))
@@ -2002,23 +2013,8 @@ object ExtensionQueries {
             round(avg("logprob"), 6).as("avg_logprob"),
             round(min("logprob"), 6).as("min_logprob"))
       },
-      Some("""
-        WITH tr AS (SELECT lower(text) AS t FROM documents
-                    WHERE doc_id < 250 AND text IS NOT NULL),
-        tg AS (SELECT unnest(list_transform(range(1, length(t) - 1),
-                      i -> substr(t, CAST(i AS INT), 3))) AS gram
-               FROM tr WHERE length(t) >= 3),
-        c3 AS (SELECT gram, CAST(COUNT(*) AS BIGINT) AS c_n FROM tg GROUP BY gram),
-        c2 AS (SELECT substr(gram, 1, 2) AS prefix, CAST(SUM(c_n) AS BIGINT) AS c_prefix
-               FROM c3 GROUP BY 1),
-        v AS (SELECT CAST(COUNT(*) AS BIGINT) AS v FROM c3),
-        dt AS (SELECT doc_id, unnest(list_transform(range(1, length(lower(text)) - 1),
-                      i -> substr(lower(text), CAST(i AS INT), 3))) AS gram
-               FROM documents WHERE length(lower(text)) >= 3),
-        sc AS (SELECT doc_id, ln((COALESCE(c_n, 0) + 1.0) /
-                                 (COALESCE(c_prefix, 0) + v)) AS lp
-               FROM dt LEFT JOIN c3 USING (gram)
-                       LEFT JOIN c2 ON substr(dt.gram, 1, 2) = c2.prefix, v),
+      Some(s"""
+        WITH $ngramLmOracleCtes,
         scored AS (SELECT doc_id, ROUND(AVG(lp), 6) AS logprob
                    FROM sc GROUP BY doc_id),
         b AS (SELECT d.lang, scored.logprob,
@@ -2050,7 +2046,7 @@ object ExtensionQueries {
       // per-cluster rollup
       (s, dir) => {
         val assigned = Dedup.semDedupAssignments(
-          Tables.embeddings(s, dir), "embedding", "vec_id", k = 8, iters = 3)
+          Tables.embeddings(s, dir), "embedding", "vec_id", k = 8)
         graft.util.OracleAux.export("semdedup_assignments", dir,
           assigned.select("id", "cluster"))
         Dedup.semDedupFromAssignments(assigned, threshold = 0.42)
@@ -2568,7 +2564,7 @@ object ExtensionQueries {
       (s, dir) => {
         val docs = Tables.documents(s, dir)
         val scores = graft.operators.NgramLm.score(
-          docs, docs.filter(col("doc_id") < 250), "text", "doc_id", n = 3)
+          docs, docs.filter(col("doc_id") < 250), "text", "doc_id")
         val bySrc = scores
           .join(docs.select(col("doc_id"), col("source")), "doc_id")
           .groupBy("source")
@@ -2586,23 +2582,8 @@ object ExtensionQueries {
             round(col("excess"), 6).as("excess"),
             round(col("w") / col("wsum"), 6).as("weight"))
       },
-      Some("""
-        WITH tr AS (SELECT lower(text) AS t FROM documents
-                    WHERE doc_id < 250 AND text IS NOT NULL),
-        tg AS (SELECT unnest(list_transform(range(1, length(t) - 1),
-                      i -> substr(t, CAST(i AS INT), 3))) AS gram
-               FROM tr WHERE length(t) >= 3),
-        c3 AS (SELECT gram, CAST(COUNT(*) AS BIGINT) AS c_n FROM tg GROUP BY gram),
-        c2 AS (SELECT substr(gram, 1, 2) AS prefix, CAST(SUM(c_n) AS BIGINT) AS c_prefix
-               FROM c3 GROUP BY 1),
-        v AS (SELECT CAST(COUNT(*) AS BIGINT) AS v FROM c3),
-        dt AS (SELECT doc_id, unnest(list_transform(range(1, length(lower(text)) - 1),
-                      i -> substr(lower(text), CAST(i AS INT), 3))) AS gram
-               FROM documents WHERE length(lower(text)) >= 3),
-        sc AS (SELECT doc_id, ln((COALESCE(c_n, 0) + 1.0) /
-                                 (COALESCE(c_prefix, 0) + v)) AS lp
-               FROM dt LEFT JOIN c3 USING (gram)
-                       LEFT JOIN c2 ON substr(dt.gram, 1, 2) = c2.prefix, v),
+      Some(s"""
+        WITH $ngramLmOracleCtes,
         doc AS (SELECT doc_id, ROUND(AVG(lp), 6) AS logprob FROM sc GROUP BY doc_id),
         bysrc AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
                          SUM(CAST(logprob AS DECIMAL(18,6))) AS s
@@ -2692,7 +2673,7 @@ object ExtensionQueries {
           emb, "vec_id", "embedding", idxDir, nLists = 8, m = 8, ksub = 16)
         graft.operators.VectorIndex.searchIvfPq(
           s, idxDir, emb.filter(col("vec_id") < 8), emb, "vec_id", "embedding",
-          k = 5, nProbe = 2, refineFactor = 4)
+          k = 5, nProbe = 2)
       },
       None, bench = false, eagerLifecycle = true),
 
@@ -2780,7 +2761,7 @@ object ExtensionQueries {
       "ext76_classifier_eval",
       (s, dir) => graft.operators.Evaluation.classificationReport(
         graft.operators.LangIdNgram.selfTest(
-          Tables.documents(s, dir), "text", "lang", "doc_id", n = 3, topK = 50),
+          Tables.documents(s, dir), "text", "lang", "doc_id", topK = 50),
         "lang", "predicted"),
       Some(s"""
         WITH $langIdOracleCtes,
@@ -2997,12 +2978,14 @@ object ExtensionQueries {
     QueryDef(
       "ext80_winnowing_recall",
       (s, dir) => graft.operators.SubstringDedup.samplingRecallAudit(
-        Tables.documents(s, dir), "text", "doc_id", window = 64),
-      Some("""
+        Tables.documents(s, dir), "text", "doc_id"),
+      Some {
+        val w = graft.operators.SubstringDedup.AuditWindow
+        s"""
         WITH w AS (
-          SELECT doc_id, i AS pos, md5(substr(text, CAST(i AS INT), 64)) AS h
+          SELECT doc_id, i AS pos, md5(substr(text, CAST(i AS INT), $w)) AS h
           FROM documents,
-               UNNEST(range(1, GREATEST(length(text) - 62, 1))) AS t(i)),
+               UNNEST(range(1, GREATEST(length(text) - ${w - 2}, 1))) AS t(i)),
         d AS (SELECT h FROM w GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2),
         s AS (SELECT w.* FROM w JOIN d USING (h)),
         isl AS (
@@ -3017,10 +3000,11 @@ object ExtensionQueries {
                  CAST(MAX(CASE WHEN substr(h, 1, 2) = '00' THEN 1 ELSE 0 END)
                       AS BIGINT) AS det_1_256
           FROM isl GROUP BY doc_id, grp)
-        SELECT doc_id, run_start, n_windows, n_windows + 63 AS run_chars,
+        SELECT doc_id, run_start, n_windows, n_windows + ${w - 1} AS run_chars,
                det_1_16, det_1_256
         FROM runs
-      """), bench = false), // audit tool (exact enumeration) — ext67's adjudication
+      """
+      }, bench = false), // audit tool (exact enumeration) — ext67's adjudication
 
     // ------------------------------------------------------------- EXT81
     // Duplicated-character coverage per document (the Lee et al. 2022
@@ -3257,11 +3241,11 @@ object ExtensionQueries {
         val docs = Tables.documents(s, dir)
         docs.select(col("doc_id"), col("source"))
           .join(graft.operators.Sampling.leakageFreeSplit(
-            docs, "text", "doc_id", testPct = 10, simThreshold = 0.8,
+            docs, "text", "doc_id", simThreshold = 0.8,
             precomputedPairs = Some(sharedSetSimPairs(s, dir))),
             Seq("doc_id"))
       },
-      Some("""
+      Some(raw"""
         WITH d AS (SELECT doc_id,
                      list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
                    FROM documents),
@@ -3278,7 +3262,8 @@ object ExtensionQueries {
                           ELSE ROUND(CAST(i AS DOUBLE) / u, 6) END) >= 0.8),
         lab AS (SELECT doc_id, source,
                   CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6))
-                                 AS BIGINT) % 100 < 10
+                                 AS BIGINT) % 100 <
+                         ${graft.operators.Sampling.TestPct}
                        THEN 'test' ELSE 'train' END AS split0
                 FROM documents),
         leaked AS (
@@ -3315,11 +3300,11 @@ object ExtensionQueries {
         val pairs = sharedCharTemplatePairs(s, dir)
         docs.select(col("doc_id"), col("source"))
           .join(graft.operators.Sampling.leakageFreeSplit(
-            docs, "text", "doc_id", testPct = 10, simThreshold = 0.4,
+            docs, "text", "doc_id", simThreshold = 0.4,
             transitive = true, precomputedPairs = Some(pairs)),
             Seq("doc_id"))
       },
-      Some("""
+      Some(s"""
         WITH RECURSIVE
         sh AS (SELECT doc_id,
                  list_distinct(
@@ -3341,7 +3326,8 @@ object ExtensionQueries {
         c AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM r GROUP BY node),
         lab AS (SELECT doc_id, source,
                   CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6))
-                                 AS BIGINT) % 100 < 10
+                                 AS BIGINT) % 100 <
+                         ${graft.operators.Sampling.TestPct}
                        THEN 'test' ELSE 'train' END AS split0
                 FROM documents WHERE doc_id < 150),
         leaked AS (
@@ -3393,7 +3379,7 @@ object ExtensionQueries {
         graft.operators.Similarity.recallVsExact(
           graft.operators.VectorIndex.searchIvfPq(
             s, idxDir, queries, survivors, "vec_id", "embedding",
-            k = 5, nProbe = 4, refineFactor = 4),
+            k = 5, nProbe = 4),
           graft.operators.Similarity.bruteForceTopK(
             queries, survivors, "vec_id", "embedding", k = 5))
       },
@@ -3641,7 +3627,7 @@ object ExtensionQueries {
           Tables.documents(s, dir), q, "text", "doc_id", "query_id", "term",
           k = 5)
       },
-      Some("""
+      Some(raw"""
         WITH toks AS (
           SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS term
           FROM documents),
@@ -3658,10 +3644,10 @@ object ExtensionQueries {
         scored AS (
           SELECT CAST(q.query_id AS BIGINT) AS query_id, tf.doc_id, tf.term,
                  ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-                   * (CAST(tfv AS DOUBLE) * (CAST(1.2 AS DOUBLE) + 1.0))
-                   / (CAST(tfv AS DOUBLE) + CAST(1.2 AS DOUBLE)
-                      * (1.0 - CAST(0.75 AS DOUBLE)
-                         + CAST(0.75 AS DOUBLE)
+                   * (CAST(tfv AS DOUBLE) * (CAST(${graft.operators.Retrieval.K1} AS DOUBLE) + 1.0))
+                   / (CAST(tfv AS DOUBLE) + CAST(${graft.operators.Retrieval.K1} AS DOUBLE)
+                      * (1.0 - CAST(${graft.operators.Retrieval.B} AS DOUBLE)
+                         + CAST(${graft.operators.Retrieval.B} AS DOUBLE)
                            * (CAST(dl AS DOUBLE) * n_docs / tot_len))) AS tscore
           FROM tf JOIN q USING (term) JOIN dl USING (doc_id)
                   JOIN dfreq USING (term) CROSS JOIN stats),
@@ -3694,8 +3680,8 @@ object ExtensionQueries {
         // memoKey: the graph layout (src-clustered edges, node list) is
         // shared with ext96's HITS under the session memo — the second
         // centrality consumer skips the whole setup (guide §2.4)
-        val pr = graft.operators.Centrality.pageRank(edges, damping = 0.85,
-          iters = 8, memoKey = Some(s"tradegraph|$dir"))
+        val pr = graft.operators.Centrality.pageRank(edges,
+          memoKey = Some(s"tradegraph|$dir"))
           .select(tradeNodeStr(col("node")).as("node"), col("r"))
         // top-k PRE-REDUCE before the rank window (r17, guide §2.4/§5): a
         // no-partition row_number window funnels the ENTIRE node set
@@ -3713,7 +3699,9 @@ object ExtensionQueries {
             round(col("r").cast("double") + lit(0.0), 9).as("rank"))
       },
       Some {
-        val iterCtes = (0 until 8).map { i =>
+        val iters = graft.operators.Centrality.Iters
+        val damping = graft.operators.Centrality.Damping
+        val iterCtes = (0 until iters).map { i =>
           s"""
         dang$i AS MATERIALIZED (SELECT CAST(COALESCE(SUM(r), 0) AS DECIMAL(38,12)) AS dangle
                    FROM r$i LEFT JOIN outd USING (node) WHERE outdeg IS NULL),
@@ -3724,8 +3712,8 @@ object ExtensionQueries {
                                  JOIN edges e ON e.src = a.node
                       GROUP BY e.dst),
         r${i + 1} AS MATERIALIZED (SELECT nd.node,
-                 CAST(ROUND((1.0 - CAST(0.85 AS DOUBLE)) / n_nodes
-                      + CAST(0.85 AS DOUBLE)
+                 CAST(ROUND((1.0 - CAST($damping AS DOUBLE)) / n_nodes
+                      + CAST($damping AS DOUBLE)
                         * (CAST(COALESCE(c.in_sum, 0) AS DOUBLE)
                            + CAST(d.dangle AS DOUBLE) / n_nodes), 12)
                       AS DECIMAL(28,12)) AS r
@@ -3747,7 +3735,7 @@ object ExtensionQueries {
         SELECT rn, node, rank FROM (
           SELECT CAST(ROW_NUMBER() OVER (ORDER BY r DESC, node) AS BIGINT) AS rn,
                  node, ROUND(CAST(r AS DOUBLE) + 0.0, 9) AS rank
-          FROM r8) WHERE rn <= 25
+          FROM r$iters) WHERE rn <= 25
       """
       }),
 
@@ -4351,8 +4339,7 @@ object ExtensionQueries {
         graft.util.OracleAux.export("video_frame_hashes", dir,
           sharedDedupFrameHashes(s, dir).select("id", "frame_idx", "phash"))
         graft.operators.VideoDedup.nearDupPairsFromKept(
-          sharedDedupFrameHashes(s, dir),
-          everyNth = 2, maxDist = 3, minOverlap = 0.6)
+          sharedDedupFrameHashes(s, dir), minOverlap = 0.6)
           .orderBy("vid_a", "vid_b")
       },
       Some(s"""
@@ -4364,7 +4351,8 @@ object ExtensionQueries {
           SELECT a.id AS id_a, b.id AS id_b,
                  a.frame_idx AS ta, b.frame_idx AS tb
           FROM fh a JOIN fh b ON a.id < b.id
-          WHERE bit_count(xor(a.phash, b.phash)) <= 3),
+          WHERE bit_count(xor(a.phash, b.phash)) <=
+            ${graft.operators.VideoDedup.MaxDist}),
         wc AS (
           SELECT fp.id_a, fp.id_b, fp.ta, fp.tb,
                  ca.n_kept AS na, cb.n_kept AS nb,
@@ -4382,7 +4370,11 @@ object ExtensionQueries {
                FROM wc GROUP BY id_a, id_b, na, nb, t_off),
         win AS (SELECT id_a, id_b, na, nb,
                        SUM(c) OVER (PARTITION BY id_a, id_b ORDER BY t_off
-                         RANGE BETWEEN 2 PRECEDING AND 2 FOLLOWING) AS w
+                         RANGE BETWEEN
+                           ${graft.operators.VideoDedup.NearDupEveryNth}
+                           PRECEDING AND
+                           ${graft.operators.VideoDedup.NearDupEveryNth}
+                           FOLLOWING) AS w
                 FROM po),
         al AS (SELECT id_a, id_b, na, nb, MAX(w) AS aligned
                FROM win GROUP BY id_a, id_b, na, nb)
@@ -4666,8 +4658,7 @@ object ExtensionQueries {
         val withCut = hashes.crossJoin(broadcast(bound))
         val verdicts = graft.operators.ImageDedup.incrementalVerdicts(
           withCut.filter(col("id") >= col("cut")).select("id", "phash"),
-          withCut.filter(col("id") < col("cut")).select("id", "phash"),
-          maxDist = 3)
+          withCut.filter(col("id") < col("cut")).select("id", "phash"))
         verdicts.join(docs, verdicts("id") === docs("doc_id"))
           .groupBy("source")
           .agg(count(lit(1)).as("delivered"),
@@ -4692,7 +4683,8 @@ object ExtensionQueries {
         oldh AS (SELECT id, phash FROM h, cut WHERE id < c),
         pr AS (SELECT a.id AS doc_a, b.id AS doc_b
                FROM newh a JOIN newh b ON a.id < b.id
-               WHERE bit_count(xor(a.phash, b.phash)) <= 3),
+               WHERE bit_count(xor(a.phash, b.phash)) <=
+                 ${graft.operators.ImageDedup.MaxDist}),
         e AS (SELECT doc_a AS src, doc_b AS dst FROM pr
               UNION SELECT doc_b AS src, doc_a AS dst FROM pr),
         r AS (SELECT src AS node, src AS lbl FROM e
@@ -4702,7 +4694,8 @@ object ExtensionQueries {
                  FROM newh n LEFT JOIN c USING (id)),
         ex AS (SELECT DISTINCT n.id
                FROM newh n JOIN oldh o
-                 ON bit_count(xor(n.phash, o.phash)) <= 3),
+                 ON bit_count(xor(n.phash, o.phash)) <=
+                   ${graft.operators.ImageDedup.MaxDist}),
         v AS (SELECT s.id,
                      CASE WHEN s.survivor <> s.id THEN 'dropped_within'
                           WHEN ex.id IS NOT NULL THEN 'dropped_existing'
@@ -4755,14 +4748,14 @@ object ExtensionQueries {
           wh.select("id", "win_idx", "whash"))
         graft.operators.AudioContainment.containmentPairsFromWindows(
           wh.localCheckpoint(true),
-          hop = graft.sources.AudioCorpus.TrackWindowSec,
-          maxDist = 2, minCoverage = 0.8)
+          hop = graft.sources.AudioCorpus.TrackWindowSec)
           .orderBy("clip_id", "track_id")
       },
       Some(s"""
         WITH ${alignedOverlapOracleCtes(
           graft.util.OracleAux.glob("audio_window_hashes"),
-          "win_idx", "whash", maxDist = 2, jitter = 1)}
+          "win_idx", "whash", graft.operators.AudioContainment.MaxDist,
+          jitter = 1)}
         SELECT CASE WHEN na <= nb THEN id_a ELSE id_b END AS clip_id,
                CASE WHEN na <= nb THEN id_b ELSE id_a END AS track_id,
                CASE WHEN na <= nb THEN -best_off ELSE best_off END
@@ -4772,7 +4765,9 @@ object ExtensionQueries {
                  AS offset_seconds,
                matched_units AS matched_windows,
                coverage
-        FROM cov WHERE coverage >= 0.8 ORDER BY clip_id, track_id
+        FROM cov
+        WHERE coverage >= ${graft.operators.AudioContainment.MinCoverage}
+        ORDER BY clip_id, track_id
       """)),
 
     // ------------------------------------------------------------ EXT110
@@ -4804,7 +4799,7 @@ object ExtensionQueries {
           graft.operators.VideoShots.frameHashes(
             sharedSceneFrames(s, dir), everyNth = 1))
         graft.operators.VideoShots.shotsFromFrames(
-          sharedSceneFrames(s, dir), everyNth = 1, cutDist = 10)
+          sharedSceneFrames(s, dir), everyNth = 1)
           .orderBy("video_id", "shot_idx")
       },
       Some(s"""
@@ -4815,7 +4810,8 @@ object ExtensionQueries {
                               (PARTITION BY id ORDER BY frame_idx)
                             IS NOT NULL
                            AND bit_count(xor(phash, LAG(phash) OVER
-                              (PARTITION BY id ORDER BY frame_idx))) > 10
+                              (PARTITION BY id ORDER BY frame_idx))) >
+                       ${graft.operators.VideoShots.CutDist}
                           THEN 1 ELSE 0 END AS is_cut
               FROM fh),
         a AS (SELECT id, frame_idx,
@@ -4904,8 +4900,7 @@ object ExtensionQueries {
         graft.util.OracleAux.export("scene_frame_hashes", dir,
           graft.operators.VideoShots.frameHashes(
             sharedSceneFrames(s, dir), everyNth = 1))
-        graft.operators.VideoShots.keyframes(
-          sharedSceneFrames(s, dir), everyNth = 1, cutDist = 10)
+        graft.operators.VideoShots.keyframes(sharedSceneFrames(s, dir))
           .orderBy("video_id", "shot_idx")
       },
       Some(s"""
@@ -4916,7 +4911,8 @@ object ExtensionQueries {
                               (PARTITION BY id ORDER BY frame_idx)
                             IS NOT NULL
                            AND bit_count(xor(phash, LAG(phash) OVER
-                              (PARTITION BY id ORDER BY frame_idx))) > 10
+                              (PARTITION BY id ORDER BY frame_idx))) >
+                       ${graft.operators.VideoShots.CutDist}
                           THEN 1 ELSE 0 END AS is_cut
               FROM fh),
         a AS (SELECT id, frame_idx,
@@ -5079,7 +5075,8 @@ object ExtensionQueries {
                ROUND(AVG(CASE WHEN bit_count(fh) BETWEEN 4 AND 60
                  THEN 0.0 ELSE 1.0 END), 6) AS low_info_ratio,
                ROUND(COALESCE(AVG(CASE WHEN prev IS NOT NULL THEN
-                 (CASE WHEN bit_count(xor(prev, fh)) <= 2
+                 (CASE WHEN bit_count(xor(prev, fh)) <=
+                    ${graft.operators.MediaQuality.StaticDist}
                   THEN 1.0 ELSE 0.0 END) END), 0.0), 6) AS static_ratio
         FROM l GROUP BY video_id ORDER BY video_id
       """)),
@@ -5109,7 +5106,7 @@ object ExtensionQueries {
         graft.util.OracleAux.export("image_hashes", dir, hashes)
         val isEval = (floor(col("id") / 3) % 5 === 4) || (col("id") % 7 === 3)
         graft.operators.ImageDedup.leakageVerdicts(
-          hashes.filter(isEval), hashes.filter(!isEval), maxDist = 3)
+          hashes.filter(isEval), hashes.filter(!isEval))
           .orderBy("eval_id")
       },
       // ORACLE-HASHED since r16: DuckDB re-splits the aux hash frame with
@@ -5125,7 +5122,8 @@ object ExtensionQueries {
         j AS (SELECT e.id AS eval_id, t.id AS train_id,
                      CAST(bit_count(xor(e.phash, t.phash)) AS BIGINT) AS dist
               FROM ev e JOIN tr t
-                ON bit_count(xor(e.phash, t.phash)) <= 3),
+                ON bit_count(xor(e.phash, t.phash)) <=
+                  ${graft.operators.ImageDedup.MaxDist}),
         n AS (SELECT eval_id, train_id, dist,
                      ROW_NUMBER() OVER (PARTITION BY eval_id
                        ORDER BY dist, train_id) AS rk
@@ -5172,21 +5170,22 @@ object ExtensionQueries {
         graft.util.OracleAux.export("clip_frame_hashes", dir,
           fh.select("id", "frame_idx", "phash"))
         graft.operators.VideoDedup.containmentPairsFromKept(
-          fh.localCheckpoint(false), everyNth = 1, maxDist = 3,
-          minCoverage = 0.8)
+          fh.localCheckpoint(false))
           .orderBy("clip_id", "track_id")
       },
       Some(s"""
         WITH ${alignedOverlapOracleCtes(
           graft.util.OracleAux.glob("clip_frame_hashes"),
-          "frame_idx", "phash", maxDist = 3, jitter = 1)}
+          "frame_idx", "phash", graft.operators.VideoDedup.MaxDist,
+          jitter = 1)}
         SELECT CASE WHEN na <= nb THEN id_a ELSE id_b END AS clip_id,
                CASE WHEN na <= nb THEN id_b ELSE id_a END AS track_id,
                CASE WHEN na <= nb THEN -best_off ELSE best_off END
                  AS offset_frames,
                matched_units AS matched_frames,
                coverage
-        FROM cov WHERE coverage >= 0.8 ORDER BY clip_id, track_id
+        FROM cov WHERE coverage >= ${graft.operators.VideoDedup.MinCoverage}
+        ORDER BY clip_id, track_id
       """)),
 
     // ------------------------------------------------------------ EXT118
@@ -5338,13 +5337,16 @@ object ExtensionQueries {
       Some(s"""
         WITH fr AS (SELECT id, frame_idx, rms, sample_rate FROM read_parquet(
                '${graft.util.OracleAux.glob("audio_frame_rms")}')),
-        v AS (SELECT * FROM fr WHERE rms >= 0.01),
+        v AS (SELECT * FROM fr
+              WHERE rms >= ${graft.operators.AudioSegmentation.VoiceRms}),
         l AS (SELECT id, frame_idx, sample_rate,
                      frame_idx - LAG(frame_idx) OVER
                        (PARTITION BY id ORDER BY frame_idx) AS gap
               FROM v),
         a AS (SELECT id, frame_idx, sample_rate,
-                     CAST(SUM(CASE WHEN gap IS NULL OR gap > 2 THEN 1 ELSE 0
+                     CAST(SUM(CASE WHEN gap IS NULL OR gap >
+                       ${graft.operators.AudioSegmentation.MaxGapFrames + 1}
+                       THEN 1 ELSE 0
                        END) OVER (PARTITION BY id ORDER BY frame_idx
                        ROWS UNBOUNDED PRECEDING) AS BIGINT) - 1 AS seg_idx
               FROM l)
@@ -5495,7 +5497,7 @@ object ExtensionQueries {
         // without this the audit pays the signature aggregations and
         // banded joins three times over
         val candsVideo = graft.operators.VideoDedup.signatureCandidates(
-          fh, everyNth = 2, sigMaxDist = 10, segLen = 0).localCheckpoint(false)
+          fh, everyNth = 2, segLen = 0).localCheckpoint(false)
         val candsSeg = graft.operators.VideoDedup.segmentCandidates(
           fh, everyNth = 2, segLen = 3).localCheckpoint(false)
         val candsAll = candsVideo.unionByName(candsSeg).distinct()
@@ -5518,13 +5520,13 @@ object ExtensionQueries {
         val tiersF = cvF.zip(csF).map { case (nV, nSeg) =>
           val nAll = candsAll.count()
           val pre = graft.operators.VideoDedup.refineCandidates(
-            fh, candsAll, everyNth = 2, maxDist = 3, minOverlap = 0.6)
+            fh, candsAll, everyNth = 2, minOverlap = 0.6)
             .select(col("vid_a"), col("vid_b")).localCheckpoint(false)
           (nV, nSeg, nAll, pre, pre.count())
         }
         val fullF = Future {
           val full = graft.operators.VideoDedup.nearDupPairsFromKept(
-            fh, everyNth = 2, maxDist = 3, minOverlap = 0.6)
+            fh, minOverlap = 0.6)
             .select(col("vid_a"), col("vid_b")).localCheckpoint(false)
           (full, full.count())
         }
@@ -6493,7 +6495,7 @@ object ExtensionQueries {
           graft.streaming.ImageIngest.writeDeduped(
             s.readStream.schema(s.read.parquet(staged).schema)
               .parquet(staged),
-            s"$base/t", s"$base/ckpt", maxDist = 3,
+            s"$base/t", s"$base/ckpt",
             watermarkDelay = "10 minutes",
             writeBackTo = Some(store),
             writeBackCompactEvery = 2, writeBackKeepRecent = 1)

@@ -10,7 +10,7 @@ import graft.operators.AudioDedup
   * [[ImageIngest]], audio here): an arriving clip is dropped when its
   * spectral fingerprint ([[AudioDedup.fingerprint]] — the EXACT arithmetic
   * of the batch pair join ext102, bucket keys via the shared band slices)
-  * sits within Hamming `maxDist` of ANY clip seen inside the watermark
+  * sits within Hamming 3 of ANY clip seen inside the watermark
   * horizon, so a re-encoded, volume-normalized or resampled redelivery
   * stays out of the landing table. See [[PerceptualIngest]] for the
   * state/eviction/rollup contract.
@@ -19,37 +19,24 @@ object AudioIngest {
 
   /** End-to-end: (clip_id, source, ingest_ts, wav) stream → near-deduped
     * landing table (kept clips, partitioned by source) + `<table>_rejects`
-    * with match evidence. `bootstrapFrom` = (persisted spectral
-    * fingerprint table (id, phash), state timestamp): warm-starts the
-    * suppressor ([[PerceptualIngest.bootstrapState]]; the store is
-    * modality-generic, so an audio fingerprint table works unchanged —
-    * [[VideoIngest]] stays bootstrap-less because its state keys pack
-    * composite (video, frame) ids that a whole-item store does not hold).
+    * with match evidence. The suppressor starts cold: no fingerprint
+    * store bootstraps it and none is written back.
     */
   def writeDeduped(
       clips: DataFrame, table: String, checkpoint: String,
-      maxDist: Int = 3, watermarkDelay: String = "10 minutes",
-      maxPerBucket: Int = 256,
-      bootstrapFrom: Option[(DataFrame, Long)] = None,
-      qualityGate: Boolean = false,
-      writeBackTo: Option[String] = None,
-      writeBackCompactEvery: Int = 0,
-      writeBackKeepRecent: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
+      watermarkDelay: String = "10 minutes",
+      qualityGate: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery =
     PerceptualIngest.writeDeduped(
       clips, AudioDedup.fingerprint, idCol = "clip_id", payloadCol = "wav",
-      table = table, checkpoint = checkpoint, maxDist = maxDist,
-      watermarkDelay = watermarkDelay, maxPerBucket = maxPerBucket,
+      table = table, checkpoint = checkpoint,
+      watermarkDelay = watermarkDelay,
       rename = Map("item_id" -> "clip_id", "payload" -> "wav",
         "matched_item" -> "matched_clip"),
-      bootstrapFrom = bootstrapFrom,
       // the ext114 audio gate (identical thresholds/rule order to the
       // batch verdicts) as a map-side pre-filter; rule + spectral
       // fingerprint from ONE fenced decode — see ImageIngest
       gateFingerprint =
-        if (qualityGate) Some(c => gateFingerprintUdf(c)) else None,
-      writeBackTo = writeBackTo,
-      writeBackCompactEvery = writeBackCompactEvery,
-      writeBackKeepRecent = writeBackKeepRecent)
+        if (qualityGate) Some(c => gateFingerprintUdf(c)) else None)
 
   /** ONE decode → (failing rule | spectral fingerprint): the ext114 rule
     * scalar plus [[graft.cv.AudioOps.spectralHash64]] — the same scalar

@@ -28,6 +28,10 @@ object CorpusIngest {
     org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id LONG, text STRING, source STRING, ingest_ts TIMESTAMP")
 
+  /** The corpus gate's thresholds ([[TextFunctions.qualityReason]]). */
+  private val MinTokens = 5
+  private val MinDistinctRatio = 0.2
+
   /** Parse the raw `value` lines; malformed JSON or records missing the
     * required fields drop (null-filter), matching the frame path's
     * contract. Each line is parsed once: the fields come out of an
@@ -60,17 +64,14 @@ object CorpusIngest {
     */
   def gateVerdicts(
       docs: DataFrame,
-      minTokens: Int = 5,
-      minDistinctRatio: Double = 0.2,
       watchlist: Option[graft.operators.ContaminationGuard.BenchIndex] = None): DataFrame = {
     val probed = watchlist match {
-      case None => scored(docs, minTokens, minDistinctRatio)
+      case None => scored(docs)
         .withColumn("contamination",
           lit(null).cast("struct<bench_id:bigint,match_pos:bigint>"))
       case Some(idx) =>
         graft.operators.ContaminationGuard.withHit(
-          scored(docs, minTokens, minDistinctRatio), "text", idx,
-          outCol = "contamination", guard = col("__q_reason").isNull)
+          scored(docs), "text", idx, guard = col("__q_reason").isNull)
     }
     probed
       .withColumn("reject_reason",
@@ -85,19 +86,19 @@ object CorpusIngest {
     * of the scoring block the exact ([[gateVerdicts]]) and Bloom
     * ([[gateVerdictsBloom]]) gates share, so their spec-pinned
     * class-parity cannot drift on the quality/digest side. */
-  private def scored(docs: DataFrame, minTokens: Int,
-      minDistinctRatio: Double): DataFrame = {
+  private def scored(docs: DataFrame): DataFrame = {
     val feats = TextFunctions.qualityFeatures(col("text")).toMap
     docs
       .withColumn("n_tokens", feats("n_tokens"))
       .withColumn("distinct_ratio", feats("distinct_ratio"))
       .withColumn("digest", md5(col("text")))
       .withColumn("__q_reason",
-        TextFunctions.qualityReason(col("text"), minTokens, minDistinctRatio))
+        TextFunctions.qualityReason(col("text"), MinTokens, MinDistinctRatio))
   }
 
-  /** Score, gate, and dedup: keeps documents with at least `minTokens`
-    * tokens and a distinct-token ratio of at least `minDistinctRatio`
+  /** Score, gate, and dedup: keeps documents with at least
+    * [[MinTokens]] tokens and a distinct-token ratio of at least
+    * [[MinDistinctRatio]]
     * (plus, when a `watchlist` is given, no benchmark-window hit —
     * [[gateVerdicts]]), then drops any document whose md5 digest was
     * already seen within the watermark window. Works identically on batch
@@ -106,12 +107,10 @@ object CorpusIngest {
     */
   def prepare(
       docs: DataFrame,
-      minTokens: Int = 5,
-      minDistinctRatio: Double = 0.2,
       watermarkDelay: String = "10 minutes",
       watchlist: Option[graft.operators.ContaminationGuard.BenchIndex] = None): DataFrame =
     dedupByDigest(
-      gateVerdicts(docs, minTokens, minDistinctRatio, watchlist)
+      gateVerdicts(docs, watchlist)
         .filter(col("reject_reason").isNull)
         .drop("reject_reason", "bench_id", "match_pos"),
       watermarkDelay)
@@ -173,17 +172,14 @@ object CorpusIngest {
     */
   def writeAudited(
       docs: DataFrame, table: String, checkpoint: String,
-      minTokens: Int = 5, minDistinctRatio: Double = 0.2,
       watermarkDelay: String = "10 minutes",
       watchlist: Option[graft.operators.ContaminationGuard.BenchIndex] = None,
       trigger: Trigger = Trigger.AvailableNow(),
-      compactLandedEvery: Int = 0,
-      compactLandedTargetBytes: Long =
-        graft.operators.TableCompaction.DefaultTargetBytes): StreamingQuery =
-    writeRouted(gateVerdicts(docs, minTokens, minDistinctRatio, watchlist),
+      compactLandedEvery: Int = 0): StreamingQuery =
+    writeRouted(gateVerdicts(docs, watchlist),
       checkpoint, watermarkDelay, trigger)(
       auditedSinks(table, evidenceCols = Seq("bench_id", "match_pos"),
-        compactLandedEvery, compactLandedTargetBytes, checkpoint))
+        compactLandedEvery, checkpoint))
 
   /** The passers/rejects sink pair every audited writer shares — kept
     * rows land source-partitioned minus the gate's `evidenceCols`
@@ -221,8 +217,7 @@ object CorpusIngest {
     * pass ([[graft.operators.Retention]]), whose staged rewrite already
     * consolidates files. */
   private def auditedSinks(table: String, evidenceCols: Seq[String],
-      compactLandedEvery: Int, compactLandedTargetBytes: Long,
-      checkpoint: String): (DataFrame, Long) => Unit = {
+      compactLandedEvery: Int, checkpoint: String): (DataFrame, Long) => Unit = {
     val cadence = new DataBatchCadence(checkpoint)
     (b: DataFrame, batchId: Long) => {
       // the cadence dial rides an observe() ON the landing write itself
@@ -248,7 +243,7 @@ object CorpusIngest {
       if (cadence.fires(b.sparkSession.sparkContext.hadoopConfiguration,
           compactLandedEvery, batchId, hasData = landed > 0))
         try graft.operators.TableCompaction.compactLanded(
-          b.sparkSession, table, compactLandedTargetBytes): Unit
+          b.sparkSession, table): Unit
         catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(
@@ -307,11 +302,9 @@ object CorpusIngest {
   def gateVerdictsBloom(
       docs: DataFrame,
       watchlist: graft.operators.ContaminationGuard.BloomIndex,
-      minTokens: Int = 5,
-      minDistinctRatio: Double = 0.2,
       minRun: Int = 3): DataFrame =
     graft.operators.ContaminationGuard.withBloomHit(
-      scored(docs, minTokens, minDistinctRatio),
+      scored(docs),
       "text", watchlist, minRun, outCol = "__hit",
       guard = col("__q_reason").isNull)
       .withColumn("reject_reason",
@@ -330,18 +323,13 @@ object CorpusIngest {
   def writeAuditedBloom(
       docs: DataFrame, table: String, checkpoint: String,
       watchlist: graft.operators.ContaminationGuard.BloomIndex,
-      minTokens: Int = 5, minDistinctRatio: Double = 0.2,
       watermarkDelay: String = "10 minutes",
       minRun: Int = 3,
-      trigger: Trigger = Trigger.AvailableNow(),
-      compactLandedEvery: Int = 0,
-      compactLandedTargetBytes: Long =
-        graft.operators.TableCompaction.DefaultTargetBytes): StreamingQuery =
-    writeRouted(
-      gateVerdictsBloom(docs, watchlist, minTokens, minDistinctRatio, minRun),
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    writeRouted(gateVerdictsBloom(docs, watchlist, minRun),
       checkpoint, watermarkDelay, trigger)(
       auditedSinks(table, evidenceCols = Seq("match_pos"),
-        compactLandedEvery, compactLandedTargetBytes, checkpoint))
+        compactLandedEvery = 0, checkpoint))
 
   /** The batch GRADUATION [[writeAuditedBloom]]'s suspects await — and
     * the RE-ADMISSION path a false-positive-able gate owes its corpus:
@@ -369,8 +357,7 @@ object CorpusIngest {
     * columns — is the return value. Run in the ingest's maintenance
     * window (it reads what the stream writes). */
   def graduateBloomRejects(spark: SparkSession, table: String,
-      bench: DataFrame, textCol: String, idCol: String,
-      window: Int = 64): DataFrame = {
+      bench: DataFrame, textCol: String, idCol: String): DataFrame = {
     val graduatedPath = s"${table}_graduated"
     val allSuspects = spark.read.parquet(s"${table}_rejects")
       .filter(col("reject_reason") === "contaminated_maybe")
@@ -397,7 +384,7 @@ object CorpusIngest {
     val confirmed = graft.operators.ContaminationGuard.flag(
       suspects, "text", "doc_id",
       graft.operators.ContaminationGuard.benchmarkIndex(
-        bench, textCol, idCol, window))
+        bench, textCol, idCol))
       .localCheckpoint(true)
     val cleared = suspects
       .join(broadcast(confirmed.select("doc_id").distinct()),
@@ -488,17 +475,15 @@ object CorpusIngest {
     */
   def gateVerdictsExcising(
       docs: DataFrame,
-      watchlist: graft.operators.ContaminationGuard.BenchIndex,
-      minTokens: Int = 5,
-      minDistinctRatio: Double = 0.2): DataFrame = {
+      watchlist: graft.operators.ContaminationGuard.BenchIndex): DataFrame = {
     val qual = (c: org.apache.spark.sql.Column) =>
-      TextFunctions.qualityReason(c, minTokens, minDistinctRatio)
+      TextFunctions.qualityReason(c, MinTokens, MinDistinctRatio)
     val feats = TextFunctions.qualityFeatures(col("text")).toMap
     val Seq(nSpans, removedChars) =
       graft.operators.ContaminationGuard.spanStats(col("cuts"))
     graft.operators.ContaminationGuard.withCuts(
       docs.withColumn("__q_orig", qual(col("text"))),
-      "text", watchlist, outCol = "cuts", guard = col("__q_orig").isNull)
+      "text", watchlist, guard = col("__q_orig").isNull)
       .withColumn("n_spans", nSpans)
       .withColumn("removed_chars", removedChars)
       // the attribution that must survive the excision (the original
@@ -540,17 +525,12 @@ object CorpusIngest {
   def writeAuditedExcising(
       docs: DataFrame, table: String, checkpoint: String,
       watchlist: graft.operators.ContaminationGuard.BenchIndex,
-      minTokens: Int = 5, minDistinctRatio: Double = 0.2,
       watermarkDelay: String = "10 minutes",
-      trigger: Trigger = Trigger.AvailableNow(),
-      compactLandedEvery: Int = 0,
-      compactLandedTargetBytes: Long =
-        graft.operators.TableCompaction.DefaultTargetBytes): StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val sharedSinks = auditedSinks(table,
       evidenceCols = Seq("n_spans", "removed_chars", "bench_ids"),
-      compactLandedEvery, compactLandedTargetBytes, checkpoint)
-    writeRouted(
-      gateVerdictsExcising(docs, watchlist, minTokens, minDistinctRatio),
+      compactLandedEvery = 0, checkpoint)
+    writeRouted(gateVerdictsExcising(docs, watchlist),
       checkpoint, watermarkDelay, trigger) { (b, batchId) =>
       sharedSinks(b, batchId)
       // the third sink this posture owes: WHICH landed docs were cut.
@@ -573,12 +553,10 @@ object CorpusIngest {
     */
   def runStream(
       spark: SparkSession, inDir: String, table: String, checkpoint: String,
-      minTokens: Int = 5, minDistinctRatio: Double = 0.2,
       watermarkDelay: String = "10 minutes",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val lines = spark.readStream.schema("value STRING").text(inDir)
-    writeCorpus(
-      prepare(parse(lines), minTokens, minDistinctRatio, watermarkDelay),
-      table, checkpoint, trigger)
+    writeCorpus(prepare(parse(lines), watermarkDelay), table, checkpoint,
+      trigger)
   }
 }

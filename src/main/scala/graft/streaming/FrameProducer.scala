@@ -53,11 +53,9 @@ object FrameProducer {
   private val synthDataUdf = udf((seq: Long, rows: Int, cols: Int, moving: Boolean) =>
     Base64.getEncoder.encodeToString(synthPixels(seq, rows, cols, moving)))
 
-  /** Shape a generator relation (`rate` stream or `range` batch with columns
-    * value, timestamp) into per-camera frames: camera = value mod n,
-    * sequence = value div n — one interleaved round-robin, so each camera
-    * sees `rowsPerSecond / nCameras` FPS (the producer's per-camera
-    * `sleep(33)` throttle becomes the rate source's global rows-per-second).
+  /** Shape a generator relation (`rate-micro-batch` stream or `range`
+    * batch with columns value, timestamp) into per-camera frames: camera =
+    * value mod n, sequence = value div n — one interleaved round-robin.
     */
   private def shape(gen: DataFrame, nCameras: Int, rows: Int, cols: Int,
       moving: Boolean): Dataset[VideoFrameData] = {
@@ -73,30 +71,16 @@ object FrameProducer {
       .as[VideoFrameData]
   }
 
-  /** Unbounded streaming frame source at `framesPerSecond` aggregate rate
-    * (rate-limit parity with VideoEventCreator.java:78's ~30 FPS/camera).
-    */
-  def framesStream(
-      spark: SparkSession, nCameras: Int, framesPerSecond: Int,
-      rows: Int = DefaultRows, cols: Int = DefaultCols,
-      moving: Boolean = true): Dataset[VideoFrameData] =
-    shape(
-      spark.readStream.format("rate")
-        .option("rowsPerSecond", framesPerSecond.toLong)
-        .load(),
-      nCameras, rows, cols, moving)
-
   /** Deterministic streaming generator for tests/replay: `rate-micro-batch`
     * emits exactly `rowsPerBatch` rows per micro-batch with a fixed start
     * timestamp — reproducible micro-batch boundaries, unlike the wall-clock
-    * `rate` source.
+    * `rate` source. Moving default-size frames, 30 fps per camera
+    * (VideoEventCreator.java:78's rate).
     */
   def framesStreamDeterministic(
       spark: SparkSession, nCameras: Int, rowsPerBatch: Int,
-      startMillis: Long = 1700000000000L, fps: Double = 30.0,
-      rows: Int = DefaultRows, cols: Int = DefaultCols,
-      moving: Boolean = true): Dataset[VideoFrameData] = {
-    val stepMs = (1000.0 / fps).toLong
+      startMillis: Long = 1700000000000L): Dataset[VideoFrameData] = {
+    val stepMs = (1000.0 / 30.0).toLong
     shape(
       spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", rowsPerBatch.toLong)
@@ -107,7 +91,7 @@ object FrameProducer {
         // frames in a batch would tie (undefined order, colliding PNG paths)
         .withColumn("timestamp",
           timestamp_millis(lit(startMillis) + (col("value") / nCameras).cast("long") * stepMs)),
-      nCameras, rows, cols, moving)
+      nCameras, DefaultRows, DefaultCols, moving = true)
   }
 
   /** Bounded batch frame source: nCameras × framesPerCamera frames, 1/fps s
@@ -131,10 +115,13 @@ object FrameProducer {
   /** Frames → Kafka-shaped (key, value[, topic]) records: key = camId
     * (VideoEventCreator.java:237), value = the reference's exact JSON field
     * set with ISO-8601 instant timestamp and base64 payload (:218-233),
-    * topic = computed routing column (replaces the ZK-watched assignment).
+    * topic = the [[TopicRouter]] assignment of cameras `cam0 ..
+    * cam{nCameras-1}` (TopicScaler.java:97-183's sorted-rank rule, replacing
+    * the ZK-watched assignment), computed on the driver.
     */
-  def toWire(frames: Dataset[VideoFrameData],
-      nCameras: Int, maxPerTopic: Int = 2, minTopics: Int = 1): DataFrame =
+  def toWire(frames: Dataset[VideoFrameData], nCameras: Int): DataFrame = {
+    val router = new TopicRouter()
+    router.observe((0 until nCameras).map(i => s"cam$i"))
     frames.select(
       col("camId").as("key"),
       to_json(struct(
@@ -144,19 +131,7 @@ object FrameProducer {
         col("cols"),
         col("matType").as("type"),
         col("data"))).as("value"),
-      topicFor(col("camId"), nCameras, maxPerTopic, minTopics).as("topic"))
-
-  /** Camera→topic assignment (TopicScaler.java:97-183):
-    * requiredTopics = max(minTopics, ceil(nCameras / maxPerTopic));
-    * camera i → topic  min(requiredTopics - 1, i / maxPerTopic),
-    * named `video-events-{n}` — as a pure column computation.
-    */
-  def topicFor(camId: org.apache.spark.sql.Column,
-      nCameras: Int, maxPerTopic: Int, minTopics: Int): org.apache.spark.sql.Column = {
-    val required = math.max(minTopics, math.ceil(nCameras.toDouble / maxPerTopic).toInt)
-    val idx = regexp_extract(camId, "(\\d+)$", 1).cast("int")
-    concat(lit("video-events-"),
-      least(lit(required - 1), (idx / maxPerTopic).cast("int")).cast("string"))
+      router.topicColumn(router.assignments, "camId").as("topic"))
   }
 
   /** Kafka writer (acks/batching tuned like producer.properties:1-9) — wire
@@ -176,10 +151,11 @@ object FrameProducer {
 
   /** Per-camera FPS over tumbling wall-clock windows — the producer's load
     * report to ZooKeeper (VideoEventCreator.java:69-90, fps = n·1000/Δt)
-    * restated as a windowed aggregate. Works on batch and (with a watermark)
-    * streaming inputs.
+    * restated as a windowed aggregate over 2 s windows. Works on batch and
+    * (with a watermark) streaming inputs.
     */
-  def fpsByCamera(frames: Dataset[VideoFrameData], windowSeconds: Int = 2): DataFrame =
+  def fpsByCamera(frames: Dataset[VideoFrameData]): DataFrame = {
+    val windowSeconds = 2
     frames
       .groupBy(window(col("timestamp"), s"$windowSeconds seconds"), col("camId"))
       .agg(count(lit(1)).as("n_frames"))
@@ -188,4 +164,5 @@ object FrameProducer {
         col("window.start").as("window_start"),
         col("n_frames"),
         round(col("n_frames").cast("double") / windowSeconds, 2).as("fps"))
+  }
 }

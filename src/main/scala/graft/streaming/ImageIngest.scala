@@ -9,7 +9,7 @@ import graft.operators.{ImageDedup, MediaQuality}
   * dropped when its fingerprint ([[ImageDedup.fingerprint]], the
   * mirror-canonical DCT pHash — the EXACT arithmetic of the batch pair
   * join ext101, bucket keys included via [[ImageDedup.bandSlices]]) sits
-  * within Hamming `maxDist` of ANY image seen inside the watermark
+  * within Hamming 3 of ANY image seen inside the watermark
   * horizon, so a re-encoded, lightly-perturbed or mirrored redelivery
   * (the cases a byte digest cannot catch) stays out of the landing table.
   * See [[PerceptualIngest]] for the state/eviction/rollup contract.
@@ -42,8 +42,7 @@ object ImageIngest {
     */
   def writeDeduped(
       images: DataFrame, table: String, checkpoint: String,
-      maxDist: Int = 3, watermarkDelay: String = "10 minutes",
-      maxPerBucket: Int = 256,
+      watermarkDelay: String = "10 minutes",
       bootstrapFrom: Option[(DataFrame, Long)] = None,
       qualityGate: Boolean = false,
       writeBackTo: Option[String] = None,
@@ -51,8 +50,8 @@ object ImageIngest {
       writeBackKeepRecent: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
     PerceptualIngest.writeDeduped(
       images, ImageDedup.fingerprint, idCol = "img_id", payloadCol = "png",
-      table = table, checkpoint = checkpoint, maxDist = maxDist,
-      watermarkDelay = watermarkDelay, maxPerBucket = maxPerBucket,
+      table = table, checkpoint = checkpoint,
+      watermarkDelay = watermarkDelay,
       rename = Map("item_id" -> "img_id", "payload" -> "png",
         "matched_item" -> "matched_img"),
       bootstrapFrom = bootstrapFrom,

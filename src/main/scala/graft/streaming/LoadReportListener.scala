@@ -9,15 +9,12 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * (/root/reference/dvaf/producer/.../VideoEventCreator.java:69-90 writing
   * "fps=…" to /dvaf/cameras/{id}): Spark already computes per-batch input
   * rates, so the report is a listener over StreamingQueryProgress instead
-  * of a side channel. Reports are kept in a bounded in-memory buffer and
-  * optionally forwarded to a callback (metrics system, log, …).
+  * of a side channel. Reports are kept in a bounded in-memory buffer (the
+  * latest [[LoadReportListener.MaxReports]]).
   */
-class LoadReportListener(
-    maxReports: Int = 1024,
-    forward: LoadReportListener.Report => Unit = _ => ())
-  extends StreamingQueryListener {
+class LoadReportListener extends StreamingQueryListener {
 
-  import LoadReportListener.Report
+  import LoadReportListener.{MaxReports, Report}
 
   private val buf = new ConcurrentLinkedQueue[Report]()
   private val count = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -44,16 +41,17 @@ class LoadReportListener(
       observedRows = observedRows)
     buf.add(r)
     // O(1) trim: ConcurrentLinkedQueue.size() walks the whole list
-    if (count.incrementAndGet() > maxReports) {
+    if (count.incrementAndGet() > MaxReports) {
       if (buf.poll() != null) count.decrementAndGet()
     }
-    forward(r)
   }
 
   override def onQueryTerminated(event: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
 }
 
 object LoadReportListener {
+  val MaxReports = 1024
+
   final case class Report(
       queryName: String,
       batchId: Long,

@@ -27,6 +27,12 @@ import graft.functions.TextFunctions
   */
 object NearDupIngest {
 
+  /** The batch LSH dials ([[graft.operators.Dedup.minHashLsh]]'s
+    * defaults): 3-word shingles, 64 permutations in 16 bands. */
+  private val ShingleN = 3
+  private val Perms = 64
+  private val Bands = 16
+
   /** Fraction of equal signature positions — estimated Jaccard, rounded
     * to 6 dp; 0.0 for an empty bucket. */
   private val Agreement = PerceptualIngest.Compare[Seq[Long]]((a, b) => {
@@ -59,7 +65,7 @@ object NearDupIngest {
     * The dropped docs are not silently discarded — they land in
     * `<table>_rejects` with their match evidence (`reason` = the quality
     * rule or "near_duplicate"), the audit trail a dedup gate owes its
-    * operators. `perms`/`bands`/`shingleN` default to the batch LSH dials.
+    * operators.
     *
     * `qualityGate`: [[TextFunctions.qualityReason]] — empty /
     * too-few-tokens / repetitive, the ext100 funnel gate's exact
@@ -75,11 +81,7 @@ object NearDupIngest {
   def writeNearDeduped(
       docs: DataFrame, table: String, checkpoint: String,
       threshold: Double = 0.9, watermarkDelay: String = "10 minutes",
-      shingleN: Int = 3, perms: Int = 64, bands: Int = 16,
-      maxPerBucket: Int = 256,
       qualityGate: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(bands > 0 && bands <= perms && perms % bands == 0,
-      s"bands must divide perms (got perms=$perms bands=$bands)")
     val reason =
       if (qualityGate) TextFunctions.qualityReason(col("text"))
       else lit(null).cast("string")
@@ -91,14 +93,15 @@ object NearDupIngest {
       // below this projection with a copy of the UDF, so each doc would
       // be signed twice
       .withColumn("fp", when(col("reason").isNull,
-        TextFunctions.minHashUdf(shingleN, perms).asNondeterministic()(col("payload"))))
+        TextFunctions.minHashUdf(ShingleN, Perms).asNondeterministic()(col("payload"))))
     val banded = PerceptualIngest.bandRows[Seq[Long], String](signed,
-      sig => transform(TextFunctions.lshBands(sig, bands, perms / bands),
+      sig => transform(TextFunctions.lshBands(sig, Bands, Perms / Bands),
         s => struct(s("band").as("b"), s("key").as("v"))),
       watermarkDelay)
     PerceptualIngest.landAndReject(
       PerceptualIngest.verdicts(banded, Agreement,
-        PerceptualIngest.ttlMillisOf(watermarkDelay), maxPerBucket),
+        PerceptualIngest.ttlMillisOf(watermarkDelay),
+        PerceptualIngest.MaxPerBucket),
       table, checkpoint, rollup(_, threshold))
   }
 }

@@ -28,12 +28,18 @@ import graft.operators.ImageDedup
   * are the exact arithmetic of its batch pair join, so both sides agree
   * on what "near-duplicate" means and which bucket an item lands in. One
   * stateful operator keyed by (band, key); per-bucket state is
-  * watermark-evicted AND capped (`maxPerBucket`, oldest-out — the
-  * documented recall trade). An item's verdict rows all travel in its own
-  * micro-batch, so the per-item any-band rollup is plain batch work in
-  * the one land/reject sink ([[landAndReject]]).
+  * watermark-evicted AND capped ([[PerceptualIngest.MaxPerBucket]],
+  * oldest-out — the documented recall trade). An item's verdict rows all
+  * travel in its own micro-batch, so the per-item any-band rollup is
+  * plain batch work in the one land/reject sink ([[landAndReject]]).
   */
 object PerceptualIngest {
+
+  /** Stored entries per band bucket, every adapter's cap. */
+  private[streaming] val MaxPerBucket = 256
+  /** Hamming distance at or under which [[writeDeduped]]'s 64-bit
+    * fingerprints are near-duplicates. */
+  private val MaxDist = 3
 
   /** Interval string ("10 minutes") → millis (day-time intervals only —
     * month units have no fixed millis): every adapter's watermark-delay
@@ -199,21 +205,20 @@ object PerceptualIngest {
     * `bootstrapTsMillis` (typically the stream's start time) and age out
     * of each bucket exactly like arrived items — the suppressor remains a
     * HORIZON guard; permanence stays with the batch probe (ext108/121).
-    * Buckets are capped to `maxPerBucket` up front, so resident initial
+    * Buckets are capped to [[MaxPerBucket]] up front, so resident initial
     * state is bounded by the store slice and never grows on its own.
     * Banding is [[ImageDedup.bandSlices]] — the same arithmetic as the
     * live rows, so bootstrapped and arriving hashes meet in the same
     * buckets.
     */
   private[streaming] def bootstrapState(
-      hashes: DataFrame, bootstrapTsMillis: Long,
-      maxDist: Int = 3, maxPerBucket: Int = 256)
+      hashes: DataFrame, bootstrapTsMillis: Long)
       : KeyValueGroupedDataset[(Int, Long), BucketState[Long]] = {
     val spark = hashes.sparkSession
     import spark.implicits._
     hashes
       .select(col("id").cast("long").as("id"), col("phash"),
-        explode(ImageDedup.bandSlices(col("phash"), maxDist)).as("s"))
+        explode(ImageDedup.bandSlices(col("phash"), MaxDist)).as("s"))
       .select(col("s.b").as("band"), col("s.v").as("key"), col("id"),
         col("phash"))
       .as[(Int, Long, Long, Long)]
@@ -221,7 +226,7 @@ object PerceptualIngest {
       .mapGroups { (k, it) =>
         val entries = it
           .map(r => Entry(bootstrapTsMillis, r._3, r._4)).toSeq
-          .sortBy(e => (e.tsMillis, e.itemId)).takeRight(maxPerBucket)
+          .sortBy(e => (e.tsMillis, e.itemId)).takeRight(MaxPerBucket)
         (k, BucketState(entries))
       }
       .groupByKey(_._1)
@@ -262,11 +267,11 @@ object PerceptualIngest {
       .drop("quality_reason")
 
   /** Per-item rollup of one micro-batch's Hamming verdicts: keep iff the
-    * CLOSEST match across all bands stays beyond `maxDist`. Output:
+    * CLOSEST match across all bands stays beyond [[MaxDist]]. Output:
     * (item_id, source, ingest_ts, payload, min_dist, phash, matched_item,
     * keep, reason); phash feeds the store write-back and is dropped before
     * the landing tables. */
-  private def rollup(batch: DataFrame, maxDist: Int): DataFrame =
+  private def rollup(batch: DataFrame): DataFrame =
     decide(batch.groupBy(col("item_id"))
       .agg(
         first(col("source")).as("source"),
@@ -278,7 +283,7 @@ object PerceptualIngest {
         min_by(col("matched_item"), struct(col("score"), col("matched_item")))
           .as("matched_item"),
         first(col("reason"), ignoreNulls = true).as("quality_reason")),
-      col("min_dist") > maxDist)
+      col("min_dist") > MaxDist)
 
   /** The one land/reject sink: each micro-batch's verdicts → `rollup`
     * (which must yield `keep`, `reason` and `source`), cached once; kept
@@ -374,8 +379,7 @@ object PerceptualIngest {
       items: DataFrame, fingerprint: Column => Column,
       idCol: String, payloadCol: String,
       table: String, checkpoint: String,
-      maxDist: Int = 3, watermarkDelay: String = "10 minutes",
-      maxPerBucket: Int = 256,
+      watermarkDelay: String = "10 minutes",
       rename: Map[String, String] = Map.empty,
       bootstrapFrom: Option[(DataFrame, Long)] = None,
       gateFingerprint: Option[Column => Column] = None,
@@ -400,17 +404,17 @@ object PerceptualIngest {
         col("ingest_ts"), reason.as("reason"), fp.as("fp"),
         col(payloadCol).as("payload"))
     val banded = bandRows[Long, Array[Byte]](hashed,
-      ImageDedup.bandSlices(_, maxDist), watermarkDelay)
+      ImageDedup.bandSlices(_, MaxDist), watermarkDelay)
     val initial = bootstrapFrom.map { case (hashes, ts0) =>
-      bootstrapState(hashes, ts0, maxDist, maxPerBucket)
+      bootstrapState(hashes, ts0)
     }
     val idName = rename.getOrElse("item_id", "item_id")
     val cadence = new DataBatchCadence(checkpoint)
     landAndReject(
-      verdicts(banded, Hamming, ttlMillisOf(watermarkDelay), maxPerBucket,
+      verdicts(banded, Hamming, ttlMillisOf(watermarkDelay), MaxPerBucket,
         initial = initial),
       table, checkpoint,
-      rollup = b => rename.foldLeft(rollup(b, maxDist)) {
+      rollup = b => rename.foldLeft(rollup(b)) {
         case (df, (from, to)) => df.withColumnRenamed(from, to)
       },
       landDrop = Seq("phash"), rejectDrop = Seq("phash"),

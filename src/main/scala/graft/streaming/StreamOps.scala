@@ -19,16 +19,15 @@ object StreamOps {
 
   /** Tumbling event-time frame counts per camera with a watermark: the
     * streaming restatement of "frames per camera-day" (Cassandra partition
-    * key (camera_id, day), CassandraService.java:125-145) at window
+    * key (camera_id, day), CassandraService.java:125-145) at 10 s window
     * granularity. Rows later than the watermark delay are dropped.
     */
   def framesPerWindow(
       frames: Dataset[VideoFrameData],
-      windowLen: String = "10 seconds",
       watermarkDelay: String = "5 seconds"): DataFrame =
     frames
       .withWatermark("timestamp", watermarkDelay)
-      .groupBy(window(col("timestamp"), windowLen), col("camId"))
+      .groupBy(window(col("timestamp"), "10 seconds"), col("camId"))
       .agg(count(lit(1)).as("n_frames"))
       .select(
         col("camId").as("camera_id"),
@@ -36,36 +35,35 @@ object StreamOps {
         col("window.end").as("window_end"),
         col("n_frames"))
 
-  /** Sliding-window frame rate (FPS over the trailing `windowLen`, emitted
-    * every `slide`): the producer's load metric (VideoEventCreator.java:69-90)
-    * as an overlapping event-time window.
+  /** Sliding-window frame rate (FPS over the trailing 10 s, emitted every
+    * 5 s): the producer's load metric (VideoEventCreator.java:69-90) as an
+    * overlapping event-time window.
     */
   def slidingFps(
       frames: Dataset[VideoFrameData],
-      windowSeconds: Int = 10,
-      slideSeconds: Int = 5,
-      watermarkDelay: String = "5 seconds"): DataFrame =
+      watermarkDelay: String = "5 seconds"): DataFrame = {
+    val windowSeconds = 10
     frames
       .withWatermark("timestamp", watermarkDelay)
       .groupBy(
-        window(col("timestamp"), s"$windowSeconds seconds", s"$slideSeconds seconds"),
+        window(col("timestamp"), s"$windowSeconds seconds", "5 seconds"),
         col("camId"))
       .agg(count(lit(1)).as("n_frames"))
       .select(
         col("camId").as("camera_id"),
         col("window.start").as("window_start"),
         round(col("n_frames").cast("double") / windowSeconds, 3).as("fps"))
+  }
 
   /** Session windows per camera: contiguous activity bursts separated by
-    * `gap` of silence — "recording sessions" derived from frame arrivals.
+    * 30 s of silence — "recording sessions" derived from frame arrivals.
     */
   def cameraSessions(
       frames: Dataset[VideoFrameData],
-      gap: String = "30 seconds",
       watermarkDelay: String = "5 seconds"): DataFrame =
     frames
       .withWatermark("timestamp", watermarkDelay)
-      .groupBy(session_window(col("timestamp"), gap), col("camId"))
+      .groupBy(session_window(col("timestamp"), "30 seconds"), col("camId"))
       .agg(count(lit(1)).as("n_frames"))
       .select(
         col("camId").as("camera_id"),
@@ -74,7 +72,7 @@ object StreamOps {
         col("n_frames"))
 
   /** Stream-stream interval self-join with watermarks: purchases within
-    * `horizonSeconds` after an error by the same user — the streaming
+    * [[ConversionHorizonSeconds]] after an error by the same user — the streaming
     * restatement of the batch range join (q09). Both sides carry watermarks
     * so Spark can bound the join state: error rows older than
     * watermark + horizon are evicted.
@@ -82,7 +80,6 @@ object StreamOps {
     */
   def streamConversions(
       events: DataFrame,
-      horizonSeconds: Int = 3600,
       watermarkDelay: String = "10 minutes"): DataFrame = {
     val err = events.filter(col("event_type") === "error")
       .select(col("user_id"), col("event_id").as("error_id"), col("ts").as("err_ts"))
@@ -93,7 +90,8 @@ object StreamOps {
     err.join(pur,
       col("user_id") === col("u2") &&
         col("pur_ts") > col("err_ts") &&
-        col("pur_ts") <= col("err_ts") + expr(s"INTERVAL $horizonSeconds SECONDS"))
+        col("pur_ts") <= col("err_ts") +
+          expr(s"INTERVAL $ConversionHorizonSeconds SECONDS"))
       .select("user_id", "error_id", "purchase_id", "err_ts", "pur_ts")
   }
 
@@ -101,7 +99,7 @@ object StreamOps {
     * NOT convert" stream, the question the inner join cannot answer. The
     * semantics are the subtle part: an unmatched error row is held in
     * state and emits its null-padded result only once the watermark passes
-    * `err_ts + horizonSeconds` (before that, a matching purchase could
+    * `err_ts` + [[ConversionHorizonSeconds]] (before that, a matching purchase could
     * still arrive), so the output is eventually-complete and the state
     * stays bounded by exactly the same eviction rule as the inner join.
     * Spec-pinned in StreamOpsSpec: no premature null row, the null row
@@ -110,7 +108,6 @@ object StreamOps {
     */
   def streamConversionsOuter(
       events: DataFrame,
-      horizonSeconds: Int = 3600,
       watermarkDelay: String = "10 minutes"): DataFrame = {
     val err = events.filter(col("event_type") === "error")
       .select(col("user_id"), col("event_id").as("error_id"), col("ts").as("err_ts"))
@@ -121,10 +118,14 @@ object StreamOps {
     err.join(pur,
       col("user_id") === col("u2") &&
         col("pur_ts") > col("err_ts") &&
-        col("pur_ts") <= col("err_ts") + expr(s"INTERVAL $horizonSeconds SECONDS"),
+        col("pur_ts") <= col("err_ts") +
+          expr(s"INTERVAL $ConversionHorizonSeconds SECONDS"),
       "left_outer")
       .select("user_id", "error_id", "purchase_id", "err_ts", "pur_ts")
   }
+
+  /** How long after an error a purchase still counts as its conversion. */
+  private val ConversionHorizonSeconds = 3600
 
   /** One camera's liveness state: the latest frame event time seen. */
   final case class CamSeen(lastSeenMs: Long)

@@ -75,7 +75,8 @@ final class TopicRouter(
     * camera appearing in this very batch is already routed (the reference's
     * producer blocks on its first assignment, TopicAssignmentManager:115).
     */
-  def route(batch: DataFrame, keyCol: String = "key"): DataFrame = {
+  def route(batch: DataFrame): DataFrame = {
+    val keyCol = "key"
     // null keys can't register (TreeMap natural ordering rejects null, and
     // the reference's ZK path would too) — they fall through to topic 0 via
     // the coalesce below
@@ -132,13 +133,4 @@ object TopicRouter {
         finally batch.unpersist()
       }
       .start()
-
-  /** Batch helper mirroring [[routeStream]]'s per-batch body, including the
-    * optional idle-camera expiry that runs before the reconcile.
-    */
-  def routeBatch(wire: DataFrame, router: TopicRouter,
-      maxIdleMillis: Long = Long.MaxValue): DataFrame = {
-    if (maxIdleMillis != Long.MaxValue) router.expire(maxIdleMillis): Unit
-    router.route(wire)
-  }
 }

@@ -10,14 +10,14 @@ import graft.operators.{ImageDedup, VideoDedup}
   * [[ImageIngest]] and audio [[AudioIngest]]). A video is not one hash
   * but a BAG of sampled frame hashes, so the adapter fans each arriving
   * clip into per-frame band rows
-  * (mirror-canonical dHash on every `everyNth` decoded frame, the EXACT
+  * (mirror-canonical dHash on every [[EveryNth]]th decoded frame, the EXACT
   * arithmetic of the batch pair join ext104 — sampling stride,
   * low-information filter band [[VideoDedup.LowInfoMinBits]] and banding
   * [[ImageDedup.bandSlices]] all shared), routes them through the SAME
   * (band, slice)-keyed watermark-evicted state, and votes at video level
-  * in the sink: the clip is rejected when ≥ `minOverlap` of its surviving
+  * in the sink: the clip is rejected when ≥ [[MinOverlap]] of its surviving
   * sampled frames match ONE retained video at ONE temporal alignment
-  * (±`everyNth` frame-offset window — ext104's montage rejection, so a
+  * (±[[EveryNth]] frame-offset window — ext104's montage rejection, so a
   * shuffled recut of retained footage does not count as a re-upload).
   *
   * Frame identity rides the core's Long itemId as a packed composite
@@ -46,6 +46,13 @@ object VideoIngest {
   val FrameBits = 20
   private val FrameMask = (1L << FrameBits) - 1
 
+  /** ext104's frame stride, frame-match distance and overlap threshold. */
+  private val EveryNth = VideoDedup.NearDupEveryNth
+  private val MaxDist = VideoDedup.MaxDist
+  private val MinOverlap = 0.6
+  /** The gate's least informative-frame share (ext115's low-info rule). */
+  private val MinInfoRatio = 0.5
+
   /** gvid bytes → every sampled (frame_idx, mirror-canonical dHash), None
     * when undecodable: [[VideoDedup.sampleFrameHashes]] — the batch path's
     * sampler, shared so stride/hash arithmetic cannot drift. The
@@ -53,8 +60,8 @@ object VideoIngest {
     * the gate's ratio rule and the band rows share one decode. Fenced
     * like every decode UDF: unfenced, the optimizer copies it into each
     * consumer and the clip decodes once per copy. */
-  private def sampleUdf(everyNth: Int) = udf { bytes: Array[Byte] =>
-    VideoDedup.sampleFrameHashes(bytes, everyNth)
+  private val sampleUdf = udf { bytes: Array[Byte] =>
+    VideoDedup.sampleFrameHashes(bytes, EveryNth)
   }.asNondeterministic()
 
   /** vid + frame_idx → packed composite id, range-checked at pack time. */
@@ -69,14 +76,13 @@ object VideoIngest {
     * clip's band rows share its micro-batch, so this is plain batch work —
     * the [[PerceptualIngest]] division of labor): matched frames are
     * histogrammed per (arriving clip, retained video, frame offset), the
-    * best ±`everyNth` offset window per retained video is the clip's
+    * best ±[[EveryNth]] offset window per retained video is the clip's
     * aligned support, and the clip keeps iff its best support over ALL
-    * retained videos stays below `minOverlap` of its surviving frames.
+    * retained videos stays below [[MinOverlap]] of its surviving frames.
     * Output: (vid_id, source, ingest_ts, gvid, n_frames, matched_vid,
     * overlap_ratio, keep, reason).
     */
-  private def rollup(batch: DataFrame, maxDist: Int, everyNth: Int,
-      minOverlap: Double): DataFrame = {
+  private def rollup(batch: DataFrame): DataFrame = {
     val v = batch
       .withColumn("vid_id", shiftright(col("item_id"), FrameBits))
       .withColumn("own_f", col("item_id").bitwiseAND(lit(FrameMask)))
@@ -89,7 +95,7 @@ object VideoIngest {
         // quality row (gated clips skip the frame fan-out entirely)
         first(col("reason"), ignoreNulls = true).as("quality_reason"))
     val perOffset = v
-      .filter(col("score") <= maxDist && col("matched_item") >= 0)
+      .filter(col("score") <= MaxDist && col("matched_item") >= 0)
       .withColumn("matched_vid", shiftright(col("matched_item"), FrameBits))
       .withColumn("off",
         col("own_f") - col("matched_item").bitwiseAND(lit(FrameMask)))
@@ -97,7 +103,7 @@ object VideoIngest {
       .agg(countDistinct(col("own_f")).as("cnt"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("vid_id", "matched_vid").orderBy("off")
-      .rangeBetween(-everyNth, everyNth)
+      .rangeBetween(-EveryNth, EveryNth)
     val best = perOffset
       .withColumn("win", sum(col("cnt")).over(w))
       .groupBy(col("vid_id"), col("matched_vid"))
@@ -111,7 +117,7 @@ object VideoIngest {
         .withColumn("overlap_ratio",
           least(lit(1.0), round(coalesce(col("aligned_frames"), lit(0L))
             .cast("double") / col("n_frames"), 6))),
-        col("overlap_ratio") < minOverlap)
+        col("overlap_ratio") < MinOverlap)
       .select("vid_id", "source", "ingest_ts", "gvid", "n_frames",
         "matched_vid", "overlap_ratio", "keep", "reason")
   }
@@ -128,21 +134,18 @@ object VideoIngest {
     * ops over the sampled (frame_idx, hash) list: "undecodable" (decode
     * failed), "no_informative_frames" (every sampled frame inside the
     * low-info band — a silent drop when ungated, an audited reject here),
-    * "mostly_low_info" (surviving fraction < `minInfoRatio` — ext115's
+    * "mostly_low_info" (surviving fraction < [[MinInfoRatio]] — ext115's
     * low_info_ratio rule evaluated on the sampled grid). A failing clip
     * rides one placeholder frame into a single
     * [[PerceptualIngest.QualityBand]] row, never fans out into frame band
     * state, and lands in rejects with its rule. */
   def writeDeduped(
       videos: DataFrame, table: String, checkpoint: String,
-      everyNth: Int = 2, maxDist: Int = 3, minOverlap: Double = 0.6,
       watermarkDelay: String = "10 minutes",
-      maxPerBucket: Int = 256,
-      qualityGate: Boolean = false,
-      minInfoRatio: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery = {
+      qualityGate: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
     val sampled = videos
       .select(col("vid_id").as("vid"), col("source"), col("ingest_ts"),
-        sampleUdf(everyNth)(col("gvid")).as("fs_all"), col("gvid").as("blob"))
+        sampleUdf(col("gvid")).as("fs_all"), col("gvid").as("blob"))
       .withColumn("fs", filter(col("fs_all"), f =>
         graft.operators.TemporalAlignment.informative(f.getField("_2"),
           VideoDedup.LowInfoMinBits, VideoDedup.LowInfoMaxBits)))
@@ -151,7 +154,7 @@ object VideoIngest {
         else when(col("fs_all").isNull, "undecodable")
           .when(size(col("fs")) === 0, "no_informative_frames")
           .when(size(col("fs")).cast("double") / size(col("fs_all"))
-            < minInfoRatio, "mostly_low_info"))
+            < MinInfoRatio, "mostly_low_info"))
     val frames = sampled
       .select(col("vid"), col("source"), col("ingest_ts"), col("blob"),
         col("reason"),
@@ -162,12 +165,13 @@ object VideoIngest {
         col("ingest_ts"), col("reason"), col("f._2").as("fp"),
         when(col("p") === 0, col("blob")).as("payload"))
     val bandRows = PerceptualIngest.bandRows[Long, Array[Byte]](frames,
-      ImageDedup.bandSlices(_, maxDist), watermarkDelay)
+      ImageDedup.bandSlices(_, MaxDist), watermarkDelay)
     PerceptualIngest.landAndReject(
       PerceptualIngest.verdicts(bandRows, PerceptualIngest.Hamming,
-        PerceptualIngest.ttlMillisOf(watermarkDelay), maxPerBucket,
+        PerceptualIngest.ttlMillisOf(watermarkDelay),
+        PerceptualIngest.MaxPerBucket,
         sameGroup = (a, b) => (a >> FrameBits) == (b >> FrameBits)),
-      table, checkpoint, rollup(_, maxDist, everyNth, minOverlap),
+      table, checkpoint, rollup,
       landDrop = Seq("matched_vid", "overlap_ratio"),
       rejectDrop = Seq("gvid"))
   }

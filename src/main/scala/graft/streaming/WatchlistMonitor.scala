@@ -14,7 +14,8 @@ import graft.operators.{AudioContainment, ContaminationGuard, TemporalAlignment,
   * [[VideoDedup.keptFrameHashes]]), broadcast, and every arriving item is
   * scored against it MAP-SIDE: one decode per item, the shared
   * [[TemporalAlignment]] alignment vote per (item, clip), a flag row when
-  * the best single alignment covers ≥ `minCoverage` of the shorter side.
+  * the best single alignment covers ≥ the batch path's coverage threshold
+  * of the shorter side.
   * No state store, no watermark, no shuffle — the monitor composes with
   * the existing suppressors without growing their state, and the same
   * transform runs unchanged over a batch frame or a stream (the parity
@@ -48,17 +49,16 @@ object WatchlistMonitor {
   /** Fingerprint a batch frame of watchlist audio: ext109's window
     * hashes, low-info windows dropped. Bounded collect (class doc). */
   def audioWatchlist(clips: DataFrame, audioCol: String, idCol: String,
-      windowSec: Double, hopSec: Double = 0.0): Seq[WatchClip] =
-    toClips(AudioContainment.windowHashes(clips, audioCol, idCol,
-      windowSec, hopSec)
+      windowSec: Double): Seq[WatchClip] =
+    toClips(AudioContainment.windowHashes(clips, audioCol, idCol, windowSec)
       .filter(TemporalAlignment.informative(col("whash")))
       .select(col("id"), col("win_idx").as("t"), col("whash").as("h")))
 
-  /** Fingerprint a batch frame of watchlist video: ext117's sampled
-    * mirror-canonical frame hashes, low-info frames dropped. */
-  def videoWatchlist(clips: DataFrame, videoCol: String, idCol: String,
-      everyNth: Int = 1): Seq[WatchClip] =
-    toClips(VideoDedup.keptFrameHashes(clips, videoCol, idCol, everyNth)
+  /** Fingerprint a batch frame of watchlist video: ext117's
+    * mirror-canonical hashes of every frame, low-info frames dropped. */
+  def videoWatchlist(clips: DataFrame, videoCol: String,
+      idCol: String): Seq[WatchClip] =
+    toClips(VideoDedup.keptFrameHashes(clips, videoCol, idCol, everyNth = 1)
       .select(col("id"), col("frame_idx").as("t"), col("phash").as("h")))
 
   private def toClips(units: DataFrame): Seq[WatchClip] =
@@ -73,17 +73,16 @@ object WatchlistMonitor {
     * `items` except the payload, plus (clip_id, offset_units,
     * offset_seconds, matched_units, aligned_units, coverage) — one row
     * per flagged (item, clip), nothing for clean items. Works on a
-    * stream or a batch frame identically. */
+    * stream or a batch frame identically. Windows do not overlap, as in
+    * ext109. */
   def flagAudio(items: DataFrame, audioCol: String,
-      watchlist: Seq[WatchClip], windowSec: Double, hopSec: Double = 0.0,
-      maxDist: Int = 2, minCoverage: Double = 0.8): DataFrame = {
-    val hop = if (hopSec > 0) hopSec else windowSec
+      watchlist: Seq[WatchClip], windowSec: Double): DataFrame = {
     val flagged = monitor(items, audioCol, watchlist,
       bytes => Option(bytes).flatMap(AudioOps.decodeWav)
-        .map(AudioOps.windowSpectralHashes(_, windowSec, hopSec)),
-      maxDist, jitter = 1, minCoverage)
+        .map(AudioOps.windowSpectralHashes(_, windowSec)),
+      AudioContainment.MaxDist, jitter = 1, AudioContainment.MinCoverage)
     flagged.withColumn("offset_seconds",
-      round(col("offset_units") * hop, 6))
+      round(col("offset_units") * windowSec, 6))
       // keep the column order stable: seconds right after units
       .select(flagged.columns.takeWhile(_ != "matched_units").map(col) ++
         (col("offset_seconds") +: flagged.columns
@@ -91,14 +90,13 @@ object WatchlistMonitor {
   }
 
   /** Flag arriving video against the watchlist — ext117's frame units
-    * (`everyNth` defaults to 1 like the batch path: localization wants
-    * every frame). */
+    * (every frame, like the batch path: localization wants every
+    * frame). */
   def flagVideo(items: DataFrame, videoCol: String,
-      watchlist: Seq[WatchClip], everyNth: Int = 1,
-      maxDist: Int = 3, minCoverage: Double = 0.8): DataFrame =
+      watchlist: Seq[WatchClip]): DataFrame =
     monitor(items, videoCol, watchlist,
-      bytes => VideoDedup.sampleFrameHashes(bytes, everyNth),
-      maxDist, jitter = everyNth, minCoverage)
+      bytes => VideoDedup.sampleFrameHashes(bytes, 1),
+      VideoDedup.MaxDist, jitter = 1, VideoDedup.MinCoverage)
 
   /** Fingerprint a batch frame of watchlist IMAGES — the known-bad-image
     * list shape (the PhotoDNA/industry hash-list pattern): whole-item
@@ -113,8 +111,8 @@ object WatchlistMonitor {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
 
-  /** Flag arriving images within Hamming `maxDist` of any watchlist
-    * entry — ext101's pair verdict (`bit_count(a XOR b) <= maxDist` on
+  /** Flag arriving images within Hamming [[ImageMaxDist]] of any
+    * watchlist entry — ext101's pair verdict (`bit_count(a XOR b) <= 3` on
     * the shared mirror-canonical fingerprint, so a mirrored or
     * re-encoded re-post of a watched image still flags) as a stateless
     * map-side broadcast probe: one fenced decode per item, a linear scan
@@ -123,7 +121,7 @@ object WatchlistMonitor {
     * `items` except the payload, plus (clip_id, distance) per flagged
     * (item, watch) pair; undecodable and clean items pass silently. */
   def flagImage(items: DataFrame, imageCol: String,
-      watchlist: Seq[(Long, Long)], maxDist: Int = 3): DataFrame = {
+      watchlist: Seq[(Long, Long)]): DataFrame = {
     val bc = items.sparkSession.sparkContext.broadcast(watchlist.toArray)
     val hitsUdf = udf { bytes: Array[Byte] =>
       Option(bytes).flatMap(graft.cv.ImageOps.decode) match {
@@ -132,7 +130,7 @@ object WatchlistMonitor {
           val h = graft.cv.ImageOps.pHash64MirrorCanonical(img)
           bc.value.flatMap { case (cid, wh) =>
             val d = java.lang.Long.bitCount(h ^ wh)
-            if (d <= maxDist) Some(ImageHit(cid, d)) else None
+            if (d <= ImageMaxDist) Some(ImageHit(cid, d)) else None
           }
       }
     }.asNondeterministic() // optimizer fence — one decode per item
@@ -143,8 +141,11 @@ object WatchlistMonitor {
   }
 
   /** One flagged (item, watched image) pair: Hamming distance between
-    * the two mirror-canonical fingerprints (<= the probe's maxDist). */
+    * the two mirror-canonical fingerprints (<= [[ImageMaxDist]]). */
   final case class ImageHit(clip_id: Long, distance: Int)
+
+  /** ext101's pair threshold on the image fingerprint. */
+  private val ImageMaxDist = 3
 
   /** Fingerprint a batch frame of watchlist TEXT — the
     * benchmark-contamination shape ([[ContaminationGuard]]): the
@@ -152,8 +153,8 @@ object WatchlistMonitor {
     * ride an ingest into the training corpus. Same bounded-collect
     * contract as the media watchlists. */
   def textWatchlist(bench: DataFrame, textCol: String, idCol: String,
-      window: Int = 64, hexPrefix: String = ""): ContaminationGuard.BenchIndex =
-    ContaminationGuard.benchmarkIndex(bench, textCol, idCol, window, hexPrefix)
+      window: Int = 64): ContaminationGuard.BenchIndex =
+    ContaminationGuard.benchmarkIndex(bench, textCol, idCol, window)
 
   /** Flag arriving text against the watchlist — [[ContaminationGuard.flag]]
     * keeping the item's envelope columns: every column of `items` except
@@ -173,16 +174,15 @@ object WatchlistMonitor {
     * frozen at deploy time; entries arrive (new claims) and leave
     * (resolved disputes) daily. `loadWatchlist` re-resolves the list
     * (e.g. [[audioWatchlist]] over a small parquet table — the same
-    * bounded-collect contract as the static paths) every `refreshEvery`
-    * micro-batches, driver-side between batches, and each micro-batch is
+    * bounded-collect contract as the static paths) at every
+    * micro-batch, driver-side between batches, and each micro-batch is
     * scored with `flag` against the list current at its epoch; flag rows
     * append to `out` (at-least-once on replay, like every landing sink
     * here — and a REPLAYED batch scores against the list current at
     * replay time, the probe-answers-from-the-current-store posture the
     * fingerprint store documents). The refresh costs one bounded
-    * watchlist fingerprint job; `refreshEvery` dials that against
-    * staleness — arrival-to-enforcement lag is at most refreshEvery
-    * epochs. Modality-generic: `W` is whatever the chosen flagger takes
+    * watchlist fingerprint job per micro-batch, so a list change is
+    * enforced from the next epoch on. Modality-generic: `W` is whatever the chosen flagger takes
     * ([[WatchClip]]s, image hash pairs, a
     * [[ContaminationGuard.BenchIndex]]).
     */
@@ -191,25 +191,16 @@ object WatchlistMonitor {
       loadWatchlist: () => W,
       flag: (DataFrame, W) => DataFrame,
       out: String, checkpoint: String,
-      refreshEvery: Int = 1,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(refreshEvery >= 1, s"refreshEvery must be >= 1, got $refreshEvery")
-    var cached: Option[W] = None // driver-side; foreachBatch runs on the driver
+      : org.apache.spark.sql.streaming.StreamingQuery =
     items.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val wl = cached match {
-          case Some(w) if batchId % refreshEvery != 0 => w
-          case _ =>
-            val w = loadWatchlist(); cached = Some(w); w
-        }
-        flag(batch, wl).write.mode("append").parquet(out)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        flag(batch, loadWatchlist()).write.mode("append").parquet(out)
       }
       .start()
-  }
 
   /** The RETROACTIVE half of enforcement — [[monitorStream]]'s refresh
     * scores a newly-watched clip against NEW arrivals only, but a

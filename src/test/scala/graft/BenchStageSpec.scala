@@ -40,6 +40,21 @@ class BenchStageSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  test("pair_build_sec: one key per staged source SF, no warm-up build") {
+    val warm = "word-setsim|/data/sf0.001|n=3|t=0.8"
+    val json = Bench.pairBuildSection(
+      Map("word-setsim|/tmp/bench-sf1|n=3|t=0.8" -> 3.45,
+        "word-setsim|/tmp/bench-sf12|n=3|t=0.8" -> 0.773,
+        warm -> 10.94),
+      stagedFrom = Map("/tmp/bench-sf1" -> "/data/sf0.1",
+        "/tmp/bench-sf12" -> "/data/sf0.01"),
+      warmup = Set(warm))
+    val keys = "\"([^\"]+)\":".r.findAllMatchIn(json).map(_.group(1)).toSeq
+    assert(keys == Seq("word-setsim|staged:/data/sf0.1|n=3|t=0.8",
+      "word-setsim|staged:/data/sf0.01|n=3|t=0.8"), json)
+    assert(keys.distinct == keys && !json.contains("sf0.001"), json)
+  }
+
   test("regression gate: flags only the slower-AND-more-shuffle conjunction, above floors, on the contention-normalized wall") {
     // the noise-robust conjunction (r10 verdict #5): wall-clock alone
     // swings 3x on this box, shuffle bytes are contention-free — a genuine

@@ -51,8 +51,7 @@ class AudioContainmentSpec extends AnyFunSuite with SparkTestSession {
     val ids = (0L until 20L).toDF("doc_id")
     val tracks = AudioCorpus.trackFor(ids, "doc_id")
     val got = AudioContainment.containmentPairs(
-      tracks, "wav", "doc_id", windowSec = WinSec,
-      maxDist = 2, minCoverage = 0.8)
+      tracks, "wav", "doc_id", windowSec = WinSec)
       .collect()
       .map(r => (r.getAs[Long]("clip_id"), r.getAs[Long]("track_id"),
         r.getAs[Int]("offset_windows").toLong, r.getAs[Double]("coverage")))
@@ -66,8 +65,7 @@ class AudioContainmentSpec extends AnyFunSuite with SparkTestSession {
     }
     // offset_seconds carries the window duration through
     val secs = AudioContainment.containmentPairs(
-      tracks, "wav", "doc_id", windowSec = WinSec,
-      maxDist = 2, minCoverage = 0.8)
+      tracks, "wav", "doc_id", windowSec = WinSec)
       .filter($"clip_id" === 0L).select("offset_seconds").as[Double].head()
     assert(math.abs(secs - 3 * WinSec) < 1e-9)
   }
@@ -79,8 +77,7 @@ class AudioContainmentSpec extends AnyFunSuite with SparkTestSession {
     val df = Seq((1L, inOrder), (2L, shuffled), (3L, inOrder))
       .toDF("doc_id", "wav")
     val pairs = AudioContainment.containmentPairs(
-        df, "wav", "doc_id", windowSec = WinSec,
-        maxDist = 2, minCoverage = 0.8)
+        df, "wav", "doc_id", windowSec = WinSec)
       .collect()
       .map(r => (r.getAs[Long]("clip_id"), r.getAs[Long]("track_id")))
       .toSet
@@ -108,8 +105,7 @@ class AudioContainmentSpec extends AnyFunSuite with SparkTestSession {
     assert(wh.filter($"id" === 1L).count() == 2,
       "silence windows were not dropped")
     val pairs = AudioContainment.containmentPairs(
-        df, "wav", "doc_id", windowSec = WinSec,
-        maxDist = 2, minCoverage = 0.8)
+        df, "wav", "doc_id", windowSec = WinSec)
       .collect()
     assert(pairs.length == 1 && pairs.head.getAs[Double]("coverage") >= 0.99,
       s"silence-padded containment not detected: ${pairs.mkString(", ")}")
@@ -130,12 +126,11 @@ class AudioContainmentSpec extends AnyFunSuite with SparkTestSession {
     val df = Seq((5L, AudioCorpus.renderTrack(0L)), (9L, composite))
       .toDF("doc_id", "wav")
     assert(AudioContainment.containmentPairs(
-      df, "wav", "doc_id", windowSec = WinSec,
-      maxDist = 2, minCoverage = 0.8).count() == 0,
+      df, "wav", "doc_id", windowSec = WinSec).count() == 0,
       "default non-overlapping grid should not see the misaligned insertion")
     val caught = AudioContainment.containmentPairs(
       df, "wav", "doc_id", windowSec = WinSec,
-      maxDist = 2, minCoverage = 0.8, hopSec = WinSec / 2)
+      hopSec = WinSec / 2)
       .collect()
     assert(caught.length == 1, s"got ${caught.mkString(", ")}")
     val r = caught.head

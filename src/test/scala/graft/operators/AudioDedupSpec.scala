@@ -88,7 +88,7 @@ class AudioDedupSpec extends AnyFunSuite with SparkTestSession {
   test("nearDupPairs catches exactly the family pairs; banded == brute force") {
     val ids = (0L until 30L).toDF("doc_id")
     val clips = AudioCorpus.forIds(ids, "doc_id")
-    val pairs = AudioDedup.nearDupPairs(clips, "wav", "doc_id", maxDist = 3)
+    val pairs = AudioDedup.nearDupPairs(clips, "wav", "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = (0L until 10L).flatMap { f =>
       val m = Seq(f * 3, f * 3 + 1, f * 3 + 2)

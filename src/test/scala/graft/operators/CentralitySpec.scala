@@ -42,7 +42,7 @@ class CentralitySpec extends AnyFunSuite with SparkTestSession {
   // d is dangling (no out-edges) → exercises the dangling-mass path.
 
   test("pageRank matches the independent reference to the last decimal digit") {
-    val got = Centrality.pageRank(edges.toDF("src", "dst"), 0.85, iters = 8)
+    val got = Centrality.pageRank(edges.toDF("src", "dst"))
       .collect().map(r => r.getString(0) -> BigDecimal(r.getDecimal(1))).toMap
     val want = referencePageRank(edges, 0.85, iters = 8)
     assert(got.keySet == want.keySet)
@@ -76,7 +76,7 @@ class CentralitySpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("rank mass is conserved and the hub outranks the dangling sink's peers") {
-    val got = Centrality.pageRank(edges.toDF("src", "dst"), 0.85, iters = 8)
+    val got = Centrality.pageRank(edges.toDF("src", "dst"))
       .collect().map(r => r.getString(0) -> BigDecimal(r.getDecimal(1))).toMap
     assert((got.values.sum - 1).abs < BigDecimal("1e-8"))
     // 'a' receives from b AND c; 'd' only from a's split — a must dominate d.
@@ -169,7 +169,7 @@ class CentralitySpec extends AnyFunSuite with SparkTestSession {
   test("a dangling-only graph degenerates to the uniform distribution") {
     // one edge x→y, then y dangles: mass cycles but symmetry across iters
     // keeps ranks strictly positive and summing to 1.
-    val got = Centrality.pageRank(Seq(("x", "y")).toDF("src", "dst"), 0.85, 8)
+    val got = Centrality.pageRank(Seq(("x", "y")).toDF("src", "dst"))
       .collect().map(r => r.getString(0) -> BigDecimal(r.getDecimal(1))).toMap
     assert(got.size == 2)
     assert((got.values.sum - 1).abs < BigDecimal("1e-8"))

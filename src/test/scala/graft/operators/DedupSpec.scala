@@ -149,10 +149,10 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
 
   test("minHashLsh rejects band configs that would degenerate to all-pairs") {
     intercept[IllegalArgumentException] {
-      Dedup.minHashLsh(docs, "text", "doc_id", perms = 64, bands = 100)
+      Dedup.minHashLsh(docs, "text", "doc_id", bands = 100)
     }
     intercept[IllegalArgumentException] {
-      Dedup.minHashLsh(docs, "text", "doc_id", perms = 64, bands = 7)
+      Dedup.minHashLsh(docs, "text", "doc_id", bands = 7)
     }
   }
 

@@ -39,7 +39,7 @@ class ImageDedupSpec extends AnyFunSuite with SparkTestSession {
   test("nearDupPairs catches exactly the family pairs on the synthetic corpus") {
     val ids = (0L until 30L).toDF("doc_id")
     val imgs = ImageCorpus.forIds(ids, "doc_id")
-    val pairs = ImageDedup.nearDupPairs(imgs, "png", "doc_id", maxDist = 3)
+    val pairs = ImageDedup.nearDupPairs(imgs, "png", "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = (0L until 10L).flatMap { f =>
       val m = Seq(f * 3, f * 3 + 1, f * 3 + 2)
@@ -58,7 +58,7 @@ class ImageDedupSpec extends AnyFunSuite with SparkTestSession {
       (ia, ha) <- hs; (ib, hb) <- hs
       if ia < ib && hamming(ha, hb) <= 3
     } yield (ia, ib, hamming(ha, hb).toLong)).toSet
-    val banded = ImageDedup.nearDupPairs(imgs, "png", "doc_id", maxDist = 3)
+    val banded = ImageDedup.nearDupPairs(imgs, "png", "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(banded == brute, s"banded join diverged from brute force: " +
       s"missing=${brute -- banded} spurious=${banded -- brute}")
@@ -280,7 +280,7 @@ class ImageDedupSpec extends AnyFunSuite with SparkTestSession {
     val hashes = ImageDedup.hashes(
       ImageCorpus.forIds(all.toDF("doc_id"), "doc_id"), "png", "doc_id")
     val out = ImageDedup.incrementalVerdicts(
-      hashes.filter($"id" >= 14L), hashes.filter($"id" < 14L), maxDist = 3)
+      hashes.filter($"id" >= 14L), hashes.filter($"id" < 14L))
       .collect().map(r => r.getLong(0) ->
         ((r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Long])))).toMap
     assert(out.keySet == Set(14L, 15L, 16L, 17L))
@@ -373,7 +373,7 @@ class ImageDedupSpec extends AnyFunSuite with SparkTestSession {
         }
       }.toMap
       val out = ImageDedup.incrementalVerdicts(
-        newSide.toDF("id", "phash"), oldSide.toDF("id", "phash"), maxDist = 3)
+        newSide.toDF("id", "phash"), oldSide.toDF("id", "phash"))
         .collect().map(r => r.getLong(0) ->
           ((r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Long])))).toMap
       assert(out == expected, s"seed=$seed: diff=${
@@ -388,7 +388,7 @@ class ImageDedupSpec extends AnyFunSuite with SparkTestSession {
     val far = Seq((100L, 0x0F0F0F0F0F0F0F0FL), (101L, 0xAAAA5555AAAA5555L))
     val out = ImageDedup.incrementalVerdicts(
       far.toDF("id", "phash"),
-      Seq((1L, 0x123456789ABCDEFL)).toDF("id", "phash"), maxDist = 3)
+      Seq((1L, 0x123456789ABCDEFL)).toDF("id", "phash"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out == Map(100L -> "kept", 101L -> "kept"))
   }
@@ -415,8 +415,7 @@ class ImageDedupSpec extends AnyFunSuite with SparkTestSession {
         org.apache.spark.sql.functions.col("id") % 7 === 3),
       hashes.filter(!(org.apache.spark.sql.functions.floor(
         org.apache.spark.sql.functions.col("id") / 3) % 5 === 4 ||
-        org.apache.spark.sql.functions.col("id") % 7 === 3)),
-      maxDist = 3)
+        org.apache.spark.sql.functions.col("id") % 7 === 3)))
       .collect().map(r => r.getAs[Long]("eval_id") ->
         (r.getAs[Boolean]("contaminated"),
           Option(r.getAs[java.lang.Long]("nearest_train_id")))).toMap

@@ -27,7 +27,7 @@ class LangIdNgramSpec extends AnyFunSuite with SparkTestSession {
   ).toDF("doc_id", "lang", "text")
 
   test("self-test accuracy is 100% when languages have distinct character signal") {
-    val res = LangIdNgram.selfTest(corpus, "text", "lang", "doc_id", n = 3, topK = 30)
+    val res = LangIdNgram.selfTest(corpus, "text", "lang", "doc_id", topK = 30)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     assert(res.length == 60)
     val wrong = res.filter { case (_, lang, pred) => lang != pred }
@@ -35,12 +35,12 @@ class LangIdNgramSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("classify with a held-out profile generalizes to unseen documents") {
-    val profiles = LangIdNgram.trainProfiles(corpus, "text", "lang", "doc_id", n = 3, topK = 30)
+    val profiles = LangIdNgram.trainProfiles(corpus, "text", "lang", "doc_id", topK = 30)
     val unseen = Seq(
       (100L, sent(enW.reverse, 3, 8)),
       (101L, sent(deW.reverse, 5, 8)),
       (102L, sent(elW.reverse, 1, 8))).toDF("doc_id", "text")
-    val pred = LangIdNgram.classify(unseen, profiles, "text", "doc_id", n = 3)
+    val pred = LangIdNgram.classify(unseen, profiles, "text", "doc_id")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(pred == Map(100L -> "en", 101L -> "de", 102L -> "el"))
   }

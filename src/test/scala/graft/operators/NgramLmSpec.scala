@@ -17,7 +17,7 @@ class NgramLmSpec extends AnyFunSuite with SparkTestSession {
     val docs = Seq((1L, "ababa"), (2L, "aba"), (3L, "xyz")).toDF("doc_id", "text")
     // model trigrams of "ababa": aba(×2), bab(×1) → V = 2
     // prefixes-as-trigram-starts: ab → 2, ba → 1
-    val got = NgramLm.score(docs, ref, "text", "doc_id", n = 3)
+    val got = NgramLm.score(docs, ref, "text", "doc_id")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     val pAba = math.log((2.0 + 1) / (2 + 2)) // c3=2, c2(ab)=2, V=2
     val pBab = math.log((1.0 + 1) / (1 + 2)) // c3=1, c2(ba)=1

@@ -14,7 +14,7 @@ class QualityClassifierSpec extends AnyFunSuite with SparkTestSession {
       (-2.0, 5.0, 0), (-1.5, 1.0, 0), (-1.0, 9.0, 0), (-0.5, 3.0, 0),
       (0.5, 2.0, 1), (1.0, 8.0, 1), (1.5, 4.0, 1), (2.0, 6.0, 1))
       .toDF("x", "noise", "y").withColumn("g", lit("all"))
-    val (w, _, _) = QualityClassifier.train(d, Seq("x", "noise"), "y", iters = 40, lr = 1.0)
+    val (w, _, _) = QualityClassifier.train(d, Seq("x", "noise"), "y", iters = 40)
     assert(w(1) > 0, s"separating weight must be positive, got ${w.mkString(",")}")
     assert(math.abs(w(1)) > math.abs(w(2)),
       "the informative feature must dominate the noise feature")

@@ -167,7 +167,7 @@ class SamplingSpec extends AnyFunSuite with SparkTestSession {
       .toDF("doc_id", "text")
     def splits(transitive: Boolean): Map[Long, String] =
       Sampling.leakageFreeSplit(chain, "text", "doc_id",
-        testPct = 10, simThreshold = 0.8, transitive = transitive)
+        simThreshold = 0.8, transitive = transitive)
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val direct = splits(transitive = false)
     assert(direct == Map(1L -> "train", 2L -> "dropped_leak",

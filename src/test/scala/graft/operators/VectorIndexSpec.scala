@@ -23,7 +23,7 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
 
     val q = emb.filter(col("vec_id") < 8)
     val fromIndex = VectorIndex.searchIvfPq(spark, dir, q, emb, "vec_id", "embedding",
-        k = 5, nProbe = 2, refineFactor = 4)
+        k = 5, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     val oneShot = Similarity.ivfPqTopK(q, emb, "vec_id", "embedding",
         k = 5, nLists = 8, nProbe = 2, m = 8, ksub = 16, refineFactor = 4)
@@ -48,7 +48,7 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
         emb, q, "vec_id", "embedding", model, k = 5, nProbe = 2, refineFactor = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     val got = VectorIndex.searchIvfPq(spark, dirA, q, emb, "vec_id", "embedding",
-        k = 5, nProbe = 2, refineFactor = 4)
+        k = 5, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     assert(got == expected)
     assert(got.nonEmpty)
@@ -87,7 +87,7 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
     // and the index still answers, without ever returning a victim
     val got = VectorIndex.searchIvfPq(spark, dir,
         emb.filter(col("vec_id") < 8), emb, "vec_id", "embedding",
-        k = 5, nProbe = 8, refineFactor = 4)
+        k = 5, nProbe = 8)
       .collect()
     assert(got.nonEmpty)
     assert(got.map(_.getLong(1)).toSet.intersect(victims.toSet).isEmpty,
@@ -157,7 +157,7 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
     val survivors = emb.filter(col("vec_id") % 7 =!= 3)
     val q = survivors.filter(col("vec_id") < 10)
     val approx = VectorIndex.searchIvfPq(spark, dir, q, survivors,
-      "vec_id", "embedding", k = 5, nProbe = 4, refineFactor = 4)
+      "vec_id", "embedding", k = 5, nProbe = 4)
     val victimIds = victims.collect().map(_.getLong(0)).toSet
     assert(approx.collect().map(_.getLong(1)).toSet.intersect(victimIds).isEmpty,
       "deleted ids surfaced from the mutated index")
@@ -221,7 +221,7 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
       nLists = 4, m = 4, ksub = 8, sampleSize = 256, seed = 7L)
     val q = fullC.filter(col("vec_id") >= 150 && col("vec_id") < 160)
     def results(d: String) = VectorIndex.searchIvfPq(spark, d, q, fullC,
-        "vec_id", "embedding", k = 5, nProbe = 2, refineFactor = 4)
+        "vec_id", "embedding", k = 5, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3))).toSet
     assert(results(dir) == results(fresh),
@@ -291,7 +291,7 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
       nLists = 2, m = 4, ksub = 8, sampleSize = 256, seed = 7L)
     val q = scaled.filter(col("vec_id") < 8)
     def results(d: String) = VectorIndex.searchIvfPq(spark, d, q, scaled,
-        "vec_id", "embedding", k = 5, nProbe = 2, refineFactor = 4)
+        "vec_id", "embedding", k = 5, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3))).toSet
     assert(results(dir) == results(fresh))
@@ -351,7 +351,7 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestSession {
   private def search(dir: String, corpus: org.apache.spark.sql.DataFrame) =
     VectorIndex.searchIvfPq(spark, dir,
         corpus.filter(col("vec_id") >= 140 && col("vec_id") < 160), corpus,
-        "vec_id", "embedding", k = 5, nProbe = 2, refineFactor = 4)
+        "vec_id", "embedding", k = 5, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3))).toSet
 

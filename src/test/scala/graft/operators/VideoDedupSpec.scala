@@ -293,7 +293,7 @@ class VideoDedupSpec extends AnyFunSuite with SparkTestSession {
       VideoCorpus.forIds(ids, "doc_id"), "gvid", "doc_id", everyNth = 2)
       .localCheckpoint(true)
     def pairs(segLen: Int) = VideoDedup.signatureCandidates(
-      fh, everyNth = 2, sigMaxDist = 10, segLen = segLen)
+      fh, everyNth = 2, segLen = segLen)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val whole = pairs(0)
     val seg = pairs(3)
@@ -324,8 +324,7 @@ class VideoDedupSpec extends AnyFunSuite with SparkTestSession {
       b.zipWithIndex.map { case (h, i) => (2L, i, h) })
       .toDF("id", "frame_idx", "phash").localCheckpoint(true)
     def cands(segHop: Int) = VideoDedup.signatureCandidates(
-      fh, everyNth = 1, sigMaxDist = 10, segLen = 4, segSigMaxDist = 4,
-      segHop = segHop)
+      fh, everyNth = 1, segLen = 4, segHop = segHop)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cands(0) == Set.empty,
       s"the aligned grid must MISS this constructed splice: ${cands(0)}")
@@ -346,8 +345,7 @@ class VideoDedupSpec extends AnyFunSuite with SparkTestSession {
     // above the raw 8/16 — the vote is conservative upward here, never
     // a false merge of unmatched frames)
     val refined = VideoDedup.refineCandidates(fh,
-      Seq((1L, 2L)).toDF("id_a", "id_b"), everyNth = 1, maxDist = 3,
-      minOverlap = 0.4).collect()
+      Seq((1L, 2L)).toDF("id_a", "id_b"), everyNth = 1, minOverlap = 0.4).collect()
     assert(refined.length == 1 &&
       refined.head.getAs[Double]("overlap_ratio") >= 0.5,
       s"refine on the hop-caught pair: ${refined.toSeq}")
@@ -464,8 +462,7 @@ class VideoDedupSpec extends AnyFunSuite with SparkTestSession {
       val fhRows = fa.map { case (i, h) => (1L, i, h, na) } ++
         fb.map { case (i, h) => (2L, i, h, nb) }
       val fh = fhRows.toDF("id", "frame_idx", "phash", "n_sampled")
-      val df = VideoDedup.nearDupPairsFromKept(fh, everyNth = 2,
-        maxDist = 3, minOverlap = 0.0)
+      val df = VideoDedup.nearDupPairsFromKept(fh, minOverlap = 0.0)
         .collect().map(r => (r.getAs[Long]("matched_frames"),
           r.getAs[Double]("overlap_ratio"))).headOption
       val kernel = VideoDedup.alignLists(fa, fb.toSeq, maxDist = 3, jitter = 2)

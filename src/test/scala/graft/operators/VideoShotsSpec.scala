@@ -18,8 +18,7 @@ class VideoShotsSpec extends AnyFunSuite with SparkTestSession {
   test("segmentation equals the constructed scene structure") {
     val ids = (0L until 10L).toDF("doc_id")
     val got = VideoShots.shots(
-      VideoCorpus.scenesFor(ids, "doc_id"), "gvid", "doc_id",
-      everyNth = 1, cutDist = 10)
+      VideoCorpus.scenesFor(ids, "doc_id"), "gvid", "doc_id", everyNth = 1)
       .collect()
       .groupBy(_.getAs[Long]("video_id"))
     (0L until 10L).foreach { id =>
@@ -44,7 +43,7 @@ class VideoShotsSpec extends AnyFunSuite with SparkTestSession {
     val vids = VideoCorpus.scenesFor(ids, "doc_id")
     // scene lengths are 4–7 frames, so every scene keeps >= 2 sampled
     // frames at stride 2 and every cut is still visible
-    val n2 = VideoShots.shots(vids, "gvid", "doc_id", everyNth = 2, cutDist = 10)
+    val n2 = VideoShots.shots(vids, "gvid", "doc_id", everyNth = 2)
       .groupBy("video_id").count().collect()
       .map(r => r.getAs[Long]("video_id") -> r.getAs[Long]("count")).toMap
     (0L until 6L).foreach { id =>
@@ -52,7 +51,7 @@ class VideoShotsSpec extends AnyFunSuite with SparkTestSession {
         s"video $id at stride 2: ${n2(id)} shots")
     }
     val summary = VideoShots.shotSummary(
-      Video.framesById(vids, "gvid", "doc_id"), everyNth = 1, cutDist = 10)
+      Video.framesById(vids, "gvid", "doc_id"))
       .collect().map(r => r.getAs[Long]("video_id") -> r).toMap
     (0L until 6L).foreach { id =>
       val lens = VideoCorpus.sceneLengths(id)
@@ -64,8 +63,7 @@ class VideoShotsSpec extends AnyFunSuite with SparkTestSession {
   test("keyframes: ceil-middle of every constructed scene, one per shot") {
     val ids = (0L until 8L).toDF("doc_id")
     val kf = VideoShots.keyframes(
-      Video.framesById(VideoCorpus.scenesFor(ids, "doc_id"), "gvid", "doc_id"),
-      everyNth = 1, cutDist = 10)
+      Video.framesById(VideoCorpus.scenesFor(ids, "doc_id"), "gvid", "doc_id"))
       .collect()
       .groupBy(_.getAs[Long]("video_id"))
     (0L until 8L).foreach { id =>

@@ -384,7 +384,7 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestSession {
     // 124k at sf0.01) while leaving room for corpus drift
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val docs = Tables.documents(spark, dir)
-      val n = Dedup.setSimCandidates(docs, "text", "doc_id", 3, 0.8).count()
+      val n = Dedup.setSimCandidates(docs, "text", "doc_id").count()
       assert(n <= 500, s"$dir: word-3-gram t=0.8 candidates=$n (expected ≤ 500)")
     }
     // ext87's char-4-gram t=0.4 substrate is template-dense, so its prefix

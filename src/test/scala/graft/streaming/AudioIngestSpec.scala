@@ -30,7 +30,7 @@ class AudioIngestSpec extends AnyFunSuite with SparkTestSession {
       // a NEW query per batch group: restart-resilience is part of the test
       AudioIngest.writeDeduped(
         stream.toDF().toDF("clip_id", "source", "ingest_ts", "wav"),
-        table, ckpt, maxDist = 3, watermarkDelay = delay)
+        table, ckpt, watermarkDelay = delay)
         .awaitTermination()
     }
   }
@@ -72,7 +72,7 @@ class AudioIngestSpec extends AnyFunSuite with SparkTestSession {
     def run(): Unit =
       AudioIngest.writeDeduped(
         stream.toDF().toDF("clip_id", "source", "ingest_ts", "wav"),
-        s"$base/t", s"$base/c", maxDist = 3, watermarkDelay = "10 minutes",
+        s"$base/t", s"$base/c", watermarkDelay = "10 minutes",
         qualityGate = true)
         .awaitTermination()
     stream.addData(
@@ -106,7 +106,7 @@ class AudioIngestSpec extends AnyFunSuite with SparkTestSession {
     val ids = 0L until 30L
     val batchPairs = graft.operators.AudioDedup.nearDupPairs(
       AudioCorpus.forIds(ids.toDF("doc_id"), "doc_id"),
-      "wav", "doc_id", maxDist = 3)
+      "wav", "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val expectedKeep = ids.toSet -- batchPairs.map(_._2).toSet
     val base = graft.ScratchDir.dir("audingest-parity")

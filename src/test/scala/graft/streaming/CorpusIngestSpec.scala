@@ -50,7 +50,7 @@ class CorpusIngestSpec extends AnyFunSuite with SparkTestSession {
       "not json at all")
     val q = CorpusIngest.writeCorpus(
       CorpusIngest.prepare(CorpusIngest.parse(source.toDF().toDF("value")),
-        minTokens = 5, minDistinctRatio = 0.2, watermarkDelay = "10 minutes"),
+        watermarkDelay = "10 minutes"),
       table, ckpt)
     q.awaitTermination()
     val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
@@ -68,7 +68,7 @@ class CorpusIngestSpec extends AnyFunSuite with SparkTestSession {
     val source = MemoryStream[String]
     val prepared = CorpusIngest.prepare(
       CorpusIngest.parse(source.toDF().toDF("value")),
-      minTokens = 5, minDistinctRatio = 0.2, watermarkDelay = "10 minutes")
+      watermarkDelay = "10 minutes")
     def runOnce(): Unit =
       CorpusIngest.writeCorpus(prepared, table, ckpt).awaitTermination()
 
@@ -528,7 +528,7 @@ class CorpusIngestSpec extends AnyFunSuite with SparkTestSession {
       (2L, "alpha beta gamma delta epsilon zeta", "b", java.sql.Timestamp.valueOf("2026-01-02 00:00:00")),
       (3L, "hi", "a", java.sql.Timestamp.valueOf("2026-01-03 00:00:00")))
       .toDF("doc_id", "text", "source", "ingest_ts")
-    val kept = CorpusIngest.prepare(batch, minTokens = 5, minDistinctRatio = 0.2)
+    val kept = CorpusIngest.prepare(batch)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept.size == 1 && (kept == Set(1L) || kept == Set(2L)))
   }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -42,26 +41,34 @@ class FrameProducerSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("topic routing reproduces the scaler's assignment math") {
+    def wireTopics(n: Int): Map[String, String] =
+      FrameProducer.toWire(FrameProducer.framesBatch(spark, n, 1, t0), n)
+        .select("key", "topic").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+    def routerTopics(n: Int): Map[String, String] = {
+      val r = new TopicRouter()
+      r.observe((0 until n).map(i => s"cam$i"))
+      r.assignments
+    }
     // 5 cameras, maxPerTopic=2 → required = ceil(5/2) = 3 topics;
     // cam0,1→0  cam2,3→1  cam4→min(2, 2)=2
-    val df = (0 until 5).map(i => s"cam$i").toDF("camId")
-    val topics = df.select(col("camId"),
-      FrameProducer.topicFor(col("camId"), nCameras = 5, maxPerTopic = 2, minTopics = 1).as("t"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(topics == Map(
+    assert(wireTopics(5) == Map(
       "cam0" -> "video-events-0", "cam1" -> "video-events-0",
       "cam2" -> "video-events-1", "cam3" -> "video-events-1",
       "cam4" -> "video-events-2"))
-    // minTopics floor: 1 camera but minTopics=2 → still assigned to topic 0
-    val one = Seq("cam0").toDF("camId").select(
-      FrameProducer.topicFor(col("camId"), 1, 4, 2).as("t")).head.getString(0)
-    assert(one == "video-events-0")
+    // 12 cameras: ids sort as strings, so cam10 has rank 2 and shares
+    // topic 1 with cam11 (a trailing-digit rule would send it to topic 5)
+    val twelve = wireTopics(12)
+    assert(twelve == routerTopics(12))
+    assert(twelve("cam10") == "video-events-1" &&
+      twelve("cam11") == "video-events-1" && twelve("cam2") == "video-events-2")
+    assert(twelve.values.toSet == (0 until 6).map(i => s"video-events-$i").toSet)
   }
 
   test("fpsByCamera counts frames per tumbling window") {
     // 10 fps for 1 s per camera → one 2 s window with n=10, fps=5.0
     val frames = FrameProducer.framesBatch(spark, 2, 10, t0, fps = 10.0)
-    val fps = FrameProducer.fpsByCamera(frames, windowSeconds = 2).collect()
+    val fps = FrameProducer.fpsByCamera(frames).collect()
     assert(fps.length == 2)
     fps.foreach { r =>
       assert(r.getAs[Long]("n_frames") == 10)

@@ -35,7 +35,7 @@ class ImageIngestSpec extends AnyFunSuite with SparkTestSession {
       // a NEW query per batch group: restart-resilience is part of the test
       ImageIngest.writeDeduped(
         stream.toDF().toDF("img_id", "source", "ingest_ts", "png"),
-        table, ckpt, maxDist = 3, watermarkDelay = delay)
+        table, ckpt, watermarkDelay = delay)
         .awaitTermination()
     }
   }
@@ -75,7 +75,7 @@ class ImageIngestSpec extends AnyFunSuite with SparkTestSession {
       (11L, "camB", ts(t0), ImageCorpus.render(30L))) // fresh family → land
     ImageIngest.writeDeduped(
       stream.toDF().toDF("img_id", "source", "ingest_ts", "png"),
-      s"$base/t", s"$base/c", maxDist = 3, watermarkDelay = "10 minutes",
+      s"$base/t", s"$base/c", watermarkDelay = "10 minutes",
       bootstrapFrom = Some((storeHashes, t0 * 1000)))
       .awaitTermination()
     val kept = spark.read.parquet(s"$base/t").select("img_id")
@@ -90,7 +90,7 @@ class ImageIngestSpec extends AnyFunSuite with SparkTestSession {
     stream.addData((12L, "camA", ts(t0 + 60), ImageCorpus.render(2L)))
     ImageIngest.writeDeduped(
       stream.toDF().toDF("img_id", "source", "ingest_ts", "png"),
-      s"$base/t", s"$base/c", maxDist = 3, watermarkDelay = "10 minutes",
+      s"$base/t", s"$base/c", watermarkDelay = "10 minutes",
       bootstrapFrom = Some((storeHashes, t0 * 1000)))
       .awaitTermination()
     val rej2 = spark.read.parquet(s"$base/t_rejects").collect()
@@ -127,7 +127,7 @@ class ImageIngestSpec extends AnyFunSuite with SparkTestSession {
       (102L, "camB", ts(t0), ImageCorpus.render(30L))) // fresh family → land
     ImageIngest.writeDeduped(
       stream.toDF().toDF("img_id", "source", "ingest_ts", "png"),
-      s"$base/t", s"$base/c", maxDist = 3, watermarkDelay = "10 minutes",
+      s"$base/t", s"$base/c", watermarkDelay = "10 minutes",
       bootstrapFrom = Some((FingerprintStore.read(spark, dir), t0 * 1000)))
       .awaitTermination()
     val kept = spark.read.parquet(s"$base/t").select("img_id")
@@ -235,7 +235,7 @@ class ImageIngestSpec extends AnyFunSuite with SparkTestSession {
     val ids = 0L until 30L
     val batchPairs = graft.operators.ImageDedup.nearDupPairs(
       ImageCorpus.forIds(ids.toDF("doc_id"), "doc_id"),
-      "png", "doc_id", maxDist = 3)
+      "png", "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val expectedKeep = ids.toSet -- batchPairs.map(_._2).toSet
     val base = graft.ScratchDir.dir("imgingest-parity")
@@ -258,7 +258,7 @@ class ImageIngestSpec extends AnyFunSuite with SparkTestSession {
       stream.addData(b: _*)
       ImageIngest.writeDeduped(
         stream.toDF().toDF("img_id", "source", "ingest_ts", "png"),
-        table, ckpt, maxDist = 3, watermarkDelay = "10 minutes",
+        table, ckpt, watermarkDelay = "10 minutes",
         qualityGate = true)
         .awaitTermination()
     }
@@ -329,7 +329,7 @@ class ImageIngestSpec extends AnyFunSuite with SparkTestSession {
       (72L, "camB", ts(t0), ImageCorpus.render(30L))) // fresh → land
     ImageIngest.writeDeduped(
       stream.toDF().toDF("img_id", "source", "ingest_ts", "png"),
-      s"$base/t", s"$base/c", maxDist = 3, watermarkDelay = "10 minutes",
+      s"$base/t", s"$base/c", watermarkDelay = "10 minutes",
       bootstrapFrom = Some((storeHashes, t0 * 1000)),
       qualityGate = true)
       .awaitTermination()
@@ -397,7 +397,7 @@ class ImageIngestSpec extends AnyFunSuite with SparkTestSession {
     def runOnce(): Unit =
       ImageIngest.writeDeduped(
         stream.toDF().toDF("img_id", "source", "ingest_ts", "png"),
-        s"$base/t", s"$base/c", maxDist = 3, watermarkDelay = "10 minutes",
+        s"$base/t", s"$base/c", watermarkDelay = "10 minutes",
         writeBackTo = Some(store)).awaitTermination()
     runOnce()
     val expected = graft.operators.ImageDedup.hashes(
@@ -433,7 +433,7 @@ class ImageIngestSpec extends AnyFunSuite with SparkTestSession {
       (3L, "camB", ts(t0), ImageCorpus.render(30L)))
     ImageIngest.writeDeduped(
       s1.toDF().toDF("img_id", "source", "ingest_ts", "png"),
-      s"$base/t1", s"$base/c1", maxDist = 3, watermarkDelay = "10 minutes",
+      s"$base/t1", s"$base/c1", watermarkDelay = "10 minutes",
       writeBackTo = Some(store)).awaitTermination()
     // second run: NEW checkpoint + NEW stream — state is gone; only the
     // store carries the first run's landings
@@ -443,7 +443,7 @@ class ImageIngestSpec extends AnyFunSuite with SparkTestSession {
       (6L, "camB", ts(t0 + 60), ImageCorpus.render(60L))) // fresh → lands
     ImageIngest.writeDeduped(
       s2.toDF().toDF("img_id", "source", "ingest_ts", "png"),
-      s"$base/t2", s"$base/c2", maxDist = 3, watermarkDelay = "10 minutes",
+      s"$base/t2", s"$base/c2", watermarkDelay = "10 minutes",
       bootstrapFrom = Some((
         graft.operators.FingerprintStore.read(spark, store), (t0 + 60) * 1000)),
       writeBackTo = Some(store)).awaitTermination()
@@ -474,7 +474,7 @@ class ImageIngestSpec extends AnyFunSuite with SparkTestSession {
     def runOnce(): Unit =
       ImageIngest.writeDeduped(
         stream.toDF().toDF("img_id", "source", "ingest_ts", "png"),
-        s"$base/t", s"$base/c", maxDist = 3, watermarkDelay = "10 minutes",
+        s"$base/t", s"$base/c", watermarkDelay = "10 minutes",
         writeBackTo = Some(store),
         writeBackCompactEvery = 2, writeBackKeepRecent = 1)
         .awaitTermination()
@@ -522,7 +522,7 @@ class ImageIngestSpec extends AnyFunSuite with SparkTestSession {
     s2.addData((9L, "camB", ts(t0 + 600), ImageCorpus.render(1L))) // variant of seed 0 = img 1
     ImageIngest.writeDeduped(
       s2.toDF().toDF("img_id", "source", "ingest_ts", "png"),
-      s"$base/t2", s"$base/c2", maxDist = 3, watermarkDelay = "10 minutes",
+      s"$base/t2", s"$base/c2", watermarkDelay = "10 minutes",
       bootstrapFrom = Some((
         graft.operators.FingerprintStore.read(spark, store), (t0 + 600) * 1000)))
       .awaitTermination()
@@ -551,7 +551,7 @@ class ImageIngestSpec extends AnyFunSuite with SparkTestSession {
     PerceptualIngest.writeDeduped(
       stream.toDF().toDF("img_id", "source", "ingest_ts", "png"),
       graft.operators.ImageDedup.fingerprint, "img_id", "png",
-      s"$base/t", s"$base/c", maxDist = 3, watermarkDelay = "10 minutes",
+      s"$base/t", s"$base/c", watermarkDelay = "10 minutes",
       gateFingerprint = Some(c => ImageIngestSpec.countingGate(c)))
       .awaitTermination()
     assert(ImageIngestSpec.gateEvals.get == 3L,

@@ -43,7 +43,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestSession {
     val stream = MemoryStream[String]
     val rows = runQuery(
       stream,
-      ds => StreamOps.framesPerWindow(ds, "10 seconds", "5 seconds"),
+      ds => StreamOps.framesPerWindow(ds, "5 seconds"),
       OutputMode.Append(),
       Seq(
         // batch 1: 3 frames in window [t0, t0+10s) + 1 in the next window
@@ -69,7 +69,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestSession {
     val stream = MemoryStream[String]
     val rows = runQuery(
       stream,
-      ds => StreamOps.slidingFps(ds, windowSeconds = 10, slideSeconds = 5),
+      ds => StreamOps.slidingFps(ds),
       OutputMode.Append(),
       Seq(
         Seq(frame("camA", t0 + 1000), frame("camA", t0 + 2000)), // in 2 windows each
@@ -86,7 +86,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestSession {
     val stream = MemoryStream[String]
     val rows = runQuery(
       stream,
-      ds => StreamOps.cameraSessions(ds, gap = "30 seconds"),
+      ds => StreamOps.cameraSessions(ds),
       OutputMode.Append(),
       Seq(
         // burst 1: 3 frames 10 s apart (within gap) … then 100 s silence …
@@ -107,7 +107,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestSession {
 
     val stream = MemoryStream[StreamEv]
     val sink = s"sink_${System.nanoTime()}"
-    val q = StreamOps.streamConversions(stream.toDF(), horizonSeconds = 3600)
+    val q = StreamOps.streamConversions(stream.toDF())
       .writeStream.format("memory").queryName(sink)
       .outputMode(OutputMode.Append()).start()
 
@@ -137,7 +137,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestSession {
     val sink = s"sink_${System.nanoTime()}"
     // short watermark delay so the test can advance past err_ts + horizon
     val q = StreamOps.streamConversionsOuter(stream.toDF(),
-        horizonSeconds = 3600, watermarkDelay = "1 minutes")
+        watermarkDelay = "1 minutes")
       .writeStream.format("memory").queryName(sink)
       .outputMode(OutputMode.Append()).start()
     def rows() = spark.table(sink).collect()
@@ -301,7 +301,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestSession {
     val stream = MemoryStream[String]
     val sink = s"sink_${System.nanoTime()}"
     val q = StreamOps.framesPerWindow(
-      MotionPipeline.parseFrames(stream.toDF().toDF("value")), "10 seconds", "5 seconds")
+      MotionPipeline.parseFrames(stream.toDF().toDF("value")), "5 seconds")
       .writeStream.format("memory").queryName(sink)
       .outputMode(OutputMode.Update()).start()
     stream.addData(frame("camU", t0))

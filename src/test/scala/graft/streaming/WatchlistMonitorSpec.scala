@@ -60,7 +60,7 @@ class WatchlistMonitorSpec extends AnyFunSuite with SparkTestSession {
     val b = graft.operators.AudioContainment.containmentPairs(
       Seq((0L, AudioCorpus.renderTrack(0L)), (3L, AudioCorpus.renderTrack(3L)))
         .toDF("doc_id", "wav"),
-      "wav", "doc_id", windowSec = winSec, maxDist = 2, minCoverage = 0.8)
+      "wav", "doc_id", windowSec = winSec)
       .collect()
     assert(b.length == 1 && b.head.getAs[Long]("clip_id") == 0L &&
       b.head.getAs[Long]("track_id") == 3L)
@@ -75,7 +75,7 @@ class WatchlistMonitorSpec extends AnyFunSuite with SparkTestSession {
   test("video: a planted embed flags at the EmbedOffset; montage-shaped and unwatched footage passes; verdict == ext117 batch") {
     val watch = WatchlistMonitor.videoWatchlist(
       Seq((0L, VideoCorpus.renderClipTrack(0L))).toDF("doc_id", "gvid"),
-      "gvid", "doc_id", everyNth = 1)
+      "gvid", "doc_id")
     assert(watch.map(_.clip_id) == Seq(0L))
     val base = graft.ScratchDir.dir("watchmon-video")
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -86,7 +86,7 @@ class WatchlistMonitorSpec extends AnyFunSuite with SparkTestSession {
     runStream(
       WatchlistMonitor.flagVideo(
         stream.toDF().toDF("vid_id", "source", "ingest_ts", "gvid"),
-        "gvid", watch, everyNth = 1),
+        "gvid", watch),
       s"$base/flags", s"$base/ckpt")
     val flags = spark.read.parquet(s"$base/flags").collect()
     assert(flags.length == 1, s"exactly the planted embed flags: ${flags.toSeq}")
@@ -144,7 +144,7 @@ class WatchlistMonitorSpec extends AnyFunSuite with SparkTestSession {
     // distance parity with the ext101 batch pair arithmetic
     val b = graft.operators.ImageDedup.nearDupPairs(
       Seq((0L, ImageCorpus.render(0L)), (1L, ImageCorpus.render(1L)))
-        .toDF("doc_id", "png"), "png", "doc_id", maxDist = 3).collect()
+        .toDF("doc_id", "png"), "png", "doc_id").collect()
     assert(b.length == 1 &&
       flags.find(_._1 == 1L).get._3.toLong == b.head.getAs[Long]("dist"))
   }
